@@ -53,7 +53,9 @@ object Sampling {
     * absent from it are their own representative, so the assignment
     * degrades to the plain [[splitLabel]] exactly where no duplicate
     * exists. One join against the skinny cluster map — O(clustered
-    * docs), broadcastable when dup rates are sane.
+    * docs). When the pair graph fits the broadcast threshold the map
+    * is a local relation from the driver-side union-find, so the join
+    * broadcasts it; bigger graphs give the distributed labels.
     */
   def leakageSafeSplit(
       docs: DataFrame,

@@ -144,11 +144,12 @@ object PipelineQueries {
     NearDup.dupClusters(pairs, "a_id", "b_id").orderBy("id")
   }
 
-  /** P18 scale path: the SAME near-dup pair graph labeled by the
-    * alternating large-star/small-star contraction
-    * ([[graft.operators.ConnectedComponents]]) — identical contract
-    * to [[qDupClusters]] (the oracle is the same recursive CTE), but
-    * O(log n) rounds independent of graph diameter.
+  /** P18: the SAME near-dup pair graph labeled by calling
+    * [[graft.operators.ConnectedComponents]] directly — identical
+    * contract to [[qDupClusters]] (the oracle is the same recursive
+    * CTE). A graph within the broadcast threshold is labelled by one
+    * driver-side union-find; a bigger one by large-star/small-star
+    * contraction in O(log n) rounds independent of graph diameter.
     */
   def qCcLabels(s: SparkSession, dir: String): DataFrame = {
     val pairs = NearDup.minhashPairs(

@@ -68,8 +68,9 @@ object Tables {
     // 0.93 → 1.36 s same-window A/B) — stats there disturb plans the
     // operators already pin
     if (!TpchTables.contains(name)) return None
-    val db = "graft_stats_" +
-      java.lang.Integer.toHexString(dir.hashCode).replace('-', 'n')
+    // md5 of the full path: a 32-bit hashCode lets two dirs collide
+    val db = "graft_stats_" + java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val key = (graft.tables.SchemaCache.sessionId(spark), dir + "#" + name)
     if (!statsReady.containsKey(key)) synchronized {
       if (!statsReady.containsKey(key)) {

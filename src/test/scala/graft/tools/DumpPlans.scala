@@ -14,7 +14,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * (default queries: the headline set). Each file carries the
   * formatted plan AND the AQE-final executed plan after one run, so
   * Exchange counts / join strategies / PushedFilters are checkable
-  * without running Spark. Session confs mirror Bench exactly.
+  * without running Spark, plus the number of Spark jobs building and
+  * running the query launched (operators such as dupClusters run jobs
+  * while the plan is built). Session confs mirror Bench exactly.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -39,12 +41,27 @@ object DumpPlans {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
+    val sc = spark.sparkContext
+    // jobs by group; the listener bus is FIFO, so once a sentinel job
+    // lands every job the query launched has been counted
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    })
     names.foreach { n =>
+      sc.setJobGroup(n, "dump")
       val df = QueryCatalog.queries(n)(spark, sfDir)
       val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       df.write.format("noop").mode("overwrite").save() // AQE finalizes
       val finalPlan = df.queryExecution.executedPlan.toString
-      val text = s"==== $n ($tag) — explain(formatted) ====\n$formatted\n" +
+      sc.setJobGroup(s"$n-sentinel", "sentinel")
+      spark.range(1).count()
+      while (!jobs.containsKey(s"$n-sentinel")) Thread.sleep(10)
+      sc.clearJobGroup()
+      val text = s"==== $n ($tag) — jobs to build and run: ${jobs.getOrDefault(n, 0)} ====\n" +
+        s"==== $n ($tag) — explain(formatted) ====\n$formatted\n" +
         s"==== $n ($tag) — AQE-final executed plan ====\n$finalPlan\n"
       Files.write(Paths.get(outDir, s"${n}_$tag.txt"),
         text.getBytes(StandardCharsets.UTF_8))
