@@ -122,9 +122,24 @@ case class ShingleHashSet(child: Expression, k: Int)
   * dispatch + boxed results per row inside the pipeline's hottest
   * stage (guide: prefer whole-stage-codegen-friendly expressions in
   * the hot path).
+  *
+  * `minRatio` > 0 turns the walk into a bounded verify: the result is
+  * the count when `count ≥ minRatio · min(|a|, |b|)` and -1 otherwise.
+  * The walk stops as soon as the count plus the shorter remainder —
+  * the most it can still reach — falls below that need, so a candidate
+  * that misses a containment threshold usually costs a prefix of the
+  * walk (most blocked candidates share one rare shingle and fail
+  * early). `minRatio` ≤ 0 (the default) is the plain walk.
+  *
+  * The generated step is branch-free (both cursors advance by
+  * comparison results, the bound is re-checked every step): on hashed
+  * sets `x < y` is a coin flip, and the mispredicted branch of an
+  * if/else walk cost about a third more CPU in the verify stage.
   */
-case class SortedIntersectCount(left: Expression, right: Expression)
+case class SortedIntersectCount(left: Expression, right: Expression, minRatio: Double = 0.0)
     extends BinaryExpression {
+
+  require(!minRatio.isNaN && !minRatio.isInfinite, s"minRatio must be finite, got $minRatio")
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "graft_sorted_intersect_count"
@@ -134,13 +149,16 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     val ys = b.asInstanceOf[ArrayData]
     var i = 0; var j = 0; var n = 0
     val xn = xs.numElements(); val yn = ys.numElements()
-    while (i < xn && j < yn) {
+    val need = if (minRatio <= 0) 0 else math.ceil(minRatio * math.min(xn, yn)).toInt
+    var reach = math.min(xn, yn) // n + the shorter remainder
+    while (i < xn && j < yn && reach >= need) {
       val x = xs.getLong(i); val y = ys.getLong(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
+      if (x <= y) i += 1
+      if (y <= x) j += 1
+      if (x == y) n += 1
+      reach = n + math.min(xn - i, yn - j)
     }
-    n
+    if (reach < need) -1 else n
   }
 
   override protected def doGenCode(
@@ -155,17 +173,22 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       val yn = ctx.freshName("yn")
       val x = ctx.freshName("x")
       val y = ctx.freshName("y")
+      val need = ctx.freshName("need")
+      val reach = ctx.freshName("reach")
       s"""
          |int $i = 0, $j = 0, $n = 0;
          |final int $xn = $a.numElements(), $yn = $b.numElements();
-         |while ($i < $xn && $j < $yn) {
+         |final int $need = ${if (minRatio <= 0) "0" else s"(int) Math.ceil(${minRatio}d * Math.min($xn, $yn))"};
+         |int $reach = Math.min($xn, $yn);
+         |while ($i < $xn && $j < $yn && $reach >= $need) {
          |  final long $x = $a.getLong($i);
          |  final long $y = $b.getLong($j);
-         |  if ($x == $y) { $n++; $i++; $j++; }
-         |  else if ($x < $y) $i++;
-         |  else $j++;
+         |  $i += $x <= $y ? 1 : 0;
+         |  $j += $y <= $x ? 1 : 0;
+         |  $n += $x == $y ? 1 : 0;
+         |  $reach = $n + Math.min($xn - $i, $yn - $j);
          |}
-         |${ev.value} = $n;
+         |${ev.value} = $reach < $need ? -1 : $n;
        """.stripMargin
     })
 
@@ -406,8 +429,11 @@ object TextHashExpressions {
   def shingleHashSet(text: Column, k: Int): Column =
     Bridge.column(ShingleHashSet(Bridge.expression(text), k))
 
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b)))
+  /** See [[SortedIntersectCount]]: with `minRatio` > 0, -1 for a count
+    * below `minRatio · min(|a|, |b|)`.
+    */
+  def sortedIntersectCount(a: Column, b: Column, minRatio: Double = 0.0): Column =
+    Bridge.column(SortedIntersectCount(Bridge.expression(a), Bridge.expression(b), minRatio))
 
   def wordGramHashes(text: Column, n: Int): Column =
     Bridge.column(WordGramHashes(Bridge.expression(text), n))

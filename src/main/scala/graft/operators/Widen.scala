@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Scale-adaptive parallelism repair for CPU-heavy stages fed by
   * narrow scans.
@@ -29,7 +30,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * single-core bottleneck — and skipped otherwise.
   *
   * Narrowness is derived STATICALLY from the logical plan (scan file
-  * bytes vs `maxPartitionBytes`, explicit repartition counts): the r15
+  * bytes and count, split the way Spark's `FilePartition` sizes
+  * splits; explicit repartition counts): the r15
   * implementation read `df.rdd.getNumPartitions`, which under AQE
   * builds the *executed* plan at query-construction time — a full
   * analysis+planning pass per call, and on a shuffle- or
@@ -60,10 +62,17 @@ object Widen {
     val par = spark.sparkContext.defaultParallelism.toLong
 
     def splitsOf(bytes: BigInt, nFiles: Int): Long = {
-      // mirrors FilePartition packing: each file charged openCostInBytes
-      val maxSplit = BigInt(conf.filesMaxPartitionBytes)
-      val padded = bytes + BigInt(conf.filesOpenCostInBytes) * math.max(nFiles, 1)
-      ((padded + maxSplit - 1) / maxSplit).max(1).toLong
+      // mirrors FilePartition packing: each file charged openCostInBytes,
+      // splits sized like FilePartition.maxSplitBytes — small inputs
+      // split by bytes per core, not by maxPartitionBytes
+      val openCost = BigInt(conf.filesOpenCostInBytes)
+      val padded = bytes + openCost * math.max(nFiles, 1)
+      val minParts = conf.filesMinPartitionNum.getOrElse(
+        conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM).getOrElse(par.toInt))
+      val maxSplit = BigInt(conf.filesMaxPartitionBytes).min(openCost.max(padded / minParts)).max(1)
+      // a split holding no row-group midpoint reads nothing, and a file
+      // may be a single row group: never plan more partitions than files
+      ((padded + maxSplit - 1) / maxSplit).min(math.max(nFiles, 1)).max(1).toLong
     }
 
     plan match {
@@ -79,11 +88,13 @@ object Widen {
         (Some(math.min(math.max(loc.data.length, 1).toLong, par)), None)
       case r: Range =>
         (Some(r.numSlices.getOrElse(spark.sparkContext.defaultParallelism).toLong), None)
-      case Repartition(n, _, child) =>
-        // partition count is pinned; bytes still flow from the child
-        // (a coalesce(1) of a large scan is the narrow-but-OVERSIZED
-        // shape the byte bound exists for)
-        (Some(n.toLong), plannedLayout(spark, child)._2)
+      case Repartition(n, shuffle, child) =>
+        // partition count is pinned (a coalesce never raises its
+        // child's); bytes still flow from the child (a coalesce(1) of a
+        // large scan is the narrow-but-OVERSIZED shape the byte bound
+        // exists for)
+        val (childParts, childBytes) = plannedLayout(spark, child)
+        (Some(if (shuffle) n.toLong else childParts.fold(n.toLong)(math.min(n.toLong, _))), childBytes)
       case r: RepartitionByExpression =>
         (Some(r.optNumPartitions.getOrElse(conf.numShufflePartitions).toLong),
           plannedLayout(spark, r.child)._2)

@@ -67,6 +67,36 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
+  property("bounded sorted intersect count: exact at or above the ratio, -1 only below, codegen = interpreted") = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // b mostly overlaps a, so counts land on both sides of the ratio and
+    // on it; the ratio is compiled into the generated code, so a fixed
+    // set of ratios keeps the code cache warm across 50 cases per run
+    val pair = for {
+      a <- Gen.listOf(Gen.chooseNum(0L, 60L)).map(_.distinct.sorted)
+      keep <- Gen.listOfN(a.size, Gen.oneOf(true, true, true, false))
+      extra <- Gen.listOf(Gen.chooseNum(0L, 60L))
+    } yield (a, (a.zip(keep).collect { case (x, true) => x } ++ extra).distinct.sorted)
+    val ratio = Gen.oneOf(0.0, 0.3, 0.5, 0.75, 0.7999, 0.8, 0.9, 1.0, 1.5)
+    val arr = ArrayType(LongType, containsNull = false)
+    forAll(Gen.listOfN(50, Gen.zip(pair, ratio))) { cases =>
+      cases.forall { case ((a, b), r) =>
+        val expr = graft.functions.SortedIntersectCount(
+          BoundReference(0, arr, nullable = false), BoundReference(1, arr, nullable = false), r)
+        val row = InternalRow(new GenericArrayData(a.toArray), new GenericArrayData(b.toArray))
+        val interpreted = expr.eval(row).asInstanceOf[Int]
+        val generated = GenerateUnsafeProjection.generate(Seq(expr)).apply(row).getInt(0)
+        val count = (a.toSet & b.toSet).size
+        val below = count < r * math.min(a.size, b.size)
+        interpreted == generated && interpreted == (if (below) -1 else count)
+      }
+    }
+  }
+
   property("split labels cover every row exactly once for any weight mix") =
     forAll(Gen.chooseNum(0.1, 0.9)) { (w: Double) =>
       val splits = Seq("a" -> w, "b" -> (1.0 - w))

@@ -128,6 +128,36 @@ class WidenSpec extends SparkSpec {
     } finally spark.conf.set(key, saved)
   }
 
+  test("splits sized like Spark's: several small files plan wide, one file plans narrow") {
+    val dir = tempDir("widen-splits").toString
+    val par = spark.sparkContext.defaultParallelism
+    spark.range(400).selectExpr("id as k").repartition(par)
+      .write.mode("overwrite").parquet(s"$dir/many.parquet")
+    spark.range(400).selectExpr("id as k").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/one.parquet")
+    // small files pack by bytes per core, not by maxPartitionBytes: the
+    // scan already runs at full width, so no round-robin exchange
+    val many = spark.read.parquet(s"$dir/many.parquet")
+    assert(many.rdd.getNumPartitions >= par)
+    assert(Widen.toParallelism(many) eq many)
+    // one file may be one row group: at most one partition reads rows
+    val one = spark.read.parquet(s"$dir/one.parquet")
+    assert(Widen.toParallelism(one).rdd.getNumPartitions == par)
+  }
+
+  test("a coalesce never plans more partitions than its input") {
+    val dir = tempDir("widen-coalesce").toString
+    val par = spark.sparkContext.defaultParallelism
+    spark.range(400).selectExpr("id as k").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/one.parquet")
+    val coalesced = spark.read.parquet(s"$dir/one.parquet").coalesce(par)
+    assert(coalesced.rdd.getNumPartitions == 1)
+    assert(Widen.toParallelism(coalesced).rdd.getNumPartitions == par)
+    // a shuffling repartition keeps its own count
+    val shuffled = spark.read.parquet(s"$dir/one.parquet").repartition(par)
+    assert(Widen.toParallelism(shuffled) eq shuffled)
+  }
+
   test("spreadPairs width: defaultParallelism floor at bench scale, scan-byte scaling above") {
     val dir = tempDir("spread").toString
     spark.range(500).selectExpr("id as a_id", "id + 1 as b_id")
