@@ -2,7 +2,7 @@ package graft.export
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import graft.tables.{DeltaLog, DvDeleted, IcebergMeta, IcebergWrite, RoaringBitmapArray}
+import graft.tables.{DeltaLog, DvDeleted, IcebergMeta, IcebergWrite, LakeFiles, RoaringBitmapArray}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.{Schema => AvroSchema}
@@ -358,7 +358,7 @@ object IcebergUniform {
     var metaVersion = math.max(snap.version + 1,
       IcebergWrite.latestVersionByScan(fs, metaDir).map(_.toLong + 1L).getOrElse(0L))
     var publishAttempts = 0
-    while (!IcebergWrite.publishIfAbsent(
+    while (!LakeFiles.putIfAbsent(
         fs, new Path(metaDir, s"v$metaVersion.metadata.json"), bytes)) {
       publishAttempts += 1
       require(publishAttempts < 1000,

@@ -78,7 +78,7 @@ object DeltaConvert {
     val sizes = listParquet(fs, new Path(dir)).toMap
     val adds = files.map { f =>
       val p = new Path(f.path)
-      val rel = DeltaWrite.relativize(new Path(dir), p)
+      val rel = LakeFiles.relativize(new Path(dir), p)
       // typed rendering: Iceberg manifests store DATE partitions as
       // epoch-day ints; Delta partitionValues want the yyyy-MM-dd
       // string its reader casts back (a raw "18262" would cast NULL)
@@ -221,7 +221,7 @@ object DeltaConvert {
       val s = it.next()
       val p = s.getPath
       if (s.isFile && p.getName.endsWith(".parquet")) {
-        val rel = DeltaWrite.relativize(dir, p)
+        val rel = LakeFiles.relativize(dir, p)
         if (!rel.split('/').exists(seg => seg.startsWith("_") || seg.startsWith(".")))
           buf += ((rel, s.getLen))
       }

@@ -38,91 +38,35 @@ object DeltaWrite {
   final class ConcurrentWriteException(msg: String)
       extends RuntimeException(msg)
 
-  // serializes the local-FS put-if-absent window for in-process writers
-  private val commitFileLock = new Object
-
   private val mapper = new ObjectMapper()
 
   final case class CommitResult(version: Long, filesAdded: Int, filesRemoved: Int)
 
-  /** Atomically create commit file `version` with `actions` (one JSON
-    * action per line). Returns false if the version already exists
-    * (caller lost an optimistic-concurrency race and should re-read
-    * and retry). Shared by the DDL surface ([[DeltaDdl]]).
+  /** Put-if-absent of commit file `version` with `actions` (one JSON
+    * action per line; [[LakeFiles.putIfAbsent]] makes the content
+    * atomic). Returns false if the version already exists: the caller
+    * lost an optimistic-concurrency race and should re-read and
+    * retry. Shared by the DDL surface ([[DeltaDdl]]).
     */
   private[tables] def writeCommitFile(
       spark: SparkSession,
       tablePath: String,
       version: Long,
       actions: Seq[String]
-  ): Boolean =
-    try {
-      putCommitAtomically(spark, tablePath, version,
-        (actions.mkString("\n") + "\n").getBytes("UTF-8"))
-      true
-    } catch { case _: java.io.IOException => false }
-
-  /** Put-if-absent of a commit file with ATOMIC CONTENT: the actions
-    * are written to a dot-temp file and renamed into place, so a
-    * concurrent reader can never list a partially-written commit
-    * (replaying truncated actions — e.g. a missing domainMetadata —
-    * would silently corrupt derived state like the row-id high-water
-    * mark). Rename is atomic on POSIX; the JVM-wide lock additionally
-    * serializes the exists-check + rename window for in-process
-    * writers (local[n] — this test/deploy shape). Throws IOException
-    * when the version already exists (the caller's retry signal).
-    */
-  private def putCommitAtomically(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      bytes: Array[Byte]
-  ): Unit = {
+  ): Boolean = {
     val logDir = DeltaLog.logDir(tablePath)
-    val fs = logDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commitPath = new Path(logDir, f"$version%020d.json")
-    val tmp = new Path(logDir,
-      s"._commit_${java.util.UUID.randomUUID().toString.take(8)}.json.tmp")
-    commitFileLock.synchronized {
-      if (fs.exists(commitPath))
-        throw new java.io.IOException(s"commit $commitPath already exists")
-      try {
-        val out = fs.create(tmp, false)
-        try out.write(bytes)
-        finally out.close()
-        val localDest = localFile(fs, commitPath)
-        val localTmp = localFile(fs, tmp)
-        (localDest, localTmp) match {
-          case (Some(dest), Some(t)) =>
-            // local FS: link(2) is BOTH content-atomic and put-if-
-            // absent ACROSS processes — it fails loudly if the dest
-            // exists, unlike rename(2), which would silently replace
-            // a racing process's commit
-            try java.nio.file.Files.createLink(dest.toPath, t.toPath)
-            catch {
-              case e: java.nio.file.FileAlreadyExistsException =>
-                throw new java.io.IOException(
-                  s"lost the commit race for $commitPath", e)
-            }
-          case _ =>
-            // non-local FS: rename is content-atomic; cross-process
-            // put-if-absent remains best-effort without a LogStore
-            if (!fs.rename(tmp, commitPath))
-              throw new java.io.IOException(s"lost the rename race for $commitPath")
-        }
-      } finally fs.delete(tmp, false) // harmless if already renamed away
-    }
+    LakeFiles.putIfAbsent(logDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new Path(logDir, f"$version%020d.json"),
+      actions.map(_ + "\n").mkString.getBytes("UTF-8"))
   }
 
-  /** The java.io.File behind `p` when `fs` is a local filesystem. */
-  private def localFile(
-      fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[java.io.File] =
-    fs match {
-      case _: org.apache.hadoop.fs.LocalFileSystem |
-           _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        Some(new java.io.File(p.toUri.getPath))
-      case _ => None
-    }
+  /** The next attempt number after a lost commit race, or the
+    * failure once the retries are used up.
+    */
+  private def lostRace(tablePath: String, attempt: Int): Int =
+    if (attempt < 10) attempt + 1
+    else throw new java.io.IOException(
+      s"could not commit to $tablePath: lost ${attempt + 1} commit races in a row")
 
   /** Append `df` to (or create) the delta table at `tablePath`.
     * `txn` (appId → transaction version) commits a SetTransaction
@@ -1632,7 +1576,6 @@ object DeltaWrite {
       throw new IllegalArgumentException(
         s"cannot UNSET $k: column-mapping configuration is load-bearing " +
           "for every read of a mapped table"))
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     var attempt = 0
     while (true) {
       val snap = DeltaLog.snapshot(spark, tablePath)
@@ -1641,7 +1584,7 @@ object DeltaWrite {
       if (newConf == meta.configuration) return CommitResult(snap.version, 0, 0)
       val version = snap.version + 1
 
-      val sb = new StringBuilder
+      val actions = Seq.newBuilder[String]
       // in-commit timestamps: enabling (or having enabled) the feature
       // stamps this commit; enablement also records the provenance
       // configs the protocol requires so readers know where the
@@ -1654,7 +1597,7 @@ object DeltaWrite {
         ci.put("operation", "SET TBLPROPERTIES")
         ci.put("inCommitTimestamp", ict)
         ci.put("timestamp", ict)
-        sb.append(s"""{"commitInfo":${mapper.writeValueAsString(ci)}}""").append('\n')
+        actions += s"""{"commitInfo":${mapper.writeValueAsString(ci)}}"""
         if (enablingIct) {
           newConf += ("delta.inCommitTimestampEnablementVersion" -> version.toString)
           newConf += ("delta.inCommitTimestampEnablementTimestamp" -> ict.toString)
@@ -1666,9 +1609,9 @@ object DeltaWrite {
           if (!wf.contains("inCommitTimestamp")) {
             val rf = pr.readerFeatures
               .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-            sb.append(s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
+            actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
               s""""minWriterVersion":7$rf,""" +
-              s""""writerFeatures":${quoted(wf :+ "inCommitTimestamp")}}}""").append('\n')
+              s""""writerFeatures":${quoted(wf :+ "inCommitTimestamp")}}}"""
           }
         }
       }
@@ -1680,13 +1623,13 @@ object DeltaWrite {
           if (!pr.writerFeatures.exists(_.contains("changeDataFeed"))) {
             val rf = pr.readerFeatures
               .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-            sb.append(s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
+            actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
               s""""minWriterVersion":${pr.minWriterVersion}$rf,""" +
-              s""""writerFeatures":${quoted(wf)}}}""").append('\n')
+              s""""writerFeatures":${quoted(wf)}}}"""
           }
         } else if (pr.minWriterVersion < 4) {
-          sb.append(s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
-            s""""minWriterVersion":4}}""").append('\n')
+          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
+            s""""minWriterVersion":4}}"""
         }
       }
       if (props.get("delta.enableRowTracking").contains("true")) {
@@ -1711,9 +1654,9 @@ object DeltaWrite {
         if (want != have || pr.minWriterVersion < 7) {
           val rf = pr.readerFeatures
             .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-          sb.append(s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
+          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
             s""""minWriterVersion":7$rf,""" +
-            s""""writerFeatures":${quoted(want)}}}""").append('\n')
+            s""""writerFeatures":${quoted(want)}}}"""
         }
       }
       val m = mapper.createObjectNode()
@@ -1726,19 +1669,11 @@ object DeltaWrite {
       val confNode = m.putObject("configuration")
       newConf.foreach { case (k, v) => confNode.put(k, v) }
       m.put("createdTime", meta.createdTime.getOrElse(System.currentTimeMillis()))
-      sb.append(s"""{"metaData":${mapper.writeValueAsString(m)}}""").append('\n')
+      actions += s"""{"metaData":${mapper.writeValueAsString(m)}}"""
 
-      try {
-        // put-if-absent with ATOMIC CONTENT (temp file + rename): a
-        // concurrent reader must never replay a half-written commit.
-        // Cross-process local-FS writers remain best-effort, as in
-        // every Delta implementation without a locking LogStore.
-        putCommitAtomically(spark, tablePath, version, sb.toString.getBytes("UTF-8"))
+      if (writeCommitFile(spark, tablePath, version, actions.result()))
         return CommitResult(version, 0, 0)
-      } catch {
-        case _: java.io.IOException if attempt < 10 =>
-          attempt += 1 // lost the race — re-read and retry
-      }
+      attempt = lostRace(tablePath, attempt) // re-read and retry
     }
     throw new IllegalStateException("unreachable")
   }
@@ -2132,7 +2067,7 @@ object DeltaWrite {
     writer.mode(SaveMode.Overwrite).parquet(staging.toString)
 
     // an all-rows-deleted rewrite stages zero files
-    val staged = listFilesRecursively(fs, staging)
+    val staged = LakeFiles.listByExt(fs, staging)
 
     // per-file stats (partition columns excluded — their values live in
     // partitionValues, not stats; change-data files carry none)
@@ -2143,7 +2078,7 @@ object DeltaWrite {
       else computeStats(spark, Seq(staging.toString), statsCols)
 
     val adds = staged.map { file =>
-      val rel = relativize(staging, file)
+      val rel = LakeFiles.relativize(staging, file)
       val dest = new Path(table, destPrefix + rel)
       fs.mkdirs(dest.getParent)
       if (!fs.rename(file, dest))
@@ -2184,7 +2119,6 @@ object DeltaWrite {
       // every other caller carries the current configuration forward
       configOverride: Option[Map[String, String]] = None
   ): CommitResult = {
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     var attempt = 0
     while (true) {
       val hinted = if (attempt == 0) snapHint else None
@@ -2219,10 +2153,10 @@ object DeltaWrite {
         if (overwrite) snapOpt.map(_.files).getOrElse(Seq.empty)
         else explicitRemoves
 
-      val sb = new StringBuilder
+      val actions = Seq.newBuilder[String]
       // in-commit timestamp rides first, when the table enables it
       ictAction(spark, tablePath, snapOpt.map(_.metadata), current, "WRITE")
-        .foreach(a => sb.append(a).append('\n'))
+        .foreach(actions += _)
       // type-derived table features (public protocol feature table):
       // VARIANT columns require `variantType`, TIMESTAMP WITHOUT TIME
       // ZONE requires `timestampNtz` — both reader+writer features, so
@@ -2233,17 +2167,17 @@ object DeltaWrite {
       def quotedF(fs: Seq[String]) = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
       if (current.isEmpty) {
         if (typeFeatures.isEmpty && writerOnly.isEmpty)
-          sb.append("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""").append('\n')
+          actions += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
         else if (typeFeatures.isEmpty) {
           // writer-only features (collations): readers stay at v1
           val wf = (DeltaDdl.legacyWriterFeatures(2) ++ writerOnly).distinct
-          sb.append(s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
-            s""""writerFeatures":${quotedF(wf)}}}""").append('\n')
+          actions += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
+            s""""writerFeatures":${quotedF(wf)}}}"""
         } else {
           val wf = (DeltaDdl.legacyWriterFeatures(2) ++ typeFeatures ++ writerOnly).distinct
-          sb.append(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+          actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
             s""""readerFeatures":${quotedF(typeFeatures)},""" +
-            s""""writerFeatures":${quotedF(wf)}}}""").append('\n')
+            s""""writerFeatures":${quotedF(wf)}}}"""
         }
       } else if (needMeta && (typeFeatures.nonEmpty || writerOnly.nonEmpty)) {
         // schema evolution introduced a feature-gated type onto an
@@ -2260,20 +2194,20 @@ object DeltaWrite {
         val needWriterUpgrade =
           !(typeFeatures ++ writerOnly).forall(haveW.contains)
         if (needReaderUpgrade) {
-          sb.append(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+          actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
             s""""readerFeatures":${quotedF((haveR ++ typeFeatures).distinct)},""" +
-            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}""").append('\n')
+            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}"""
         } else if (needWriterUpgrade) {
           // writer-only upgrade: the reader protocol is NOT raised
           val rPart =
             if (pr.minReaderVersion >= 3) s""""readerFeatures":${quotedF(haveR)},"""
             else ""
-          sb.append(s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},"minWriterVersion":7,""" +
+          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},"minWriterVersion":7,""" +
             rPart +
-            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}""").append('\n')
+            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}"""
         }
       }
-      extraActions.foreach(a => sb.append(a).append('\n'))
+      actions ++= extraActions
       if (needMeta) {
         // a schema change is still the SAME table: carry the existing
         // id, configuration and createdTime forward — a fresh metaData
@@ -2291,7 +2225,7 @@ object DeltaWrite {
           .foreach { case (k, v) => confNode.put(k, v) }
         m.put("createdTime",
           prev.flatMap(_.createdTime).getOrElse(System.currentTimeMillis()))
-        sb.append(s"""{"metaData":${mapper.writeValueAsString(m)}}""").append('\n')
+        actions += s"""{"metaData":${mapper.writeValueAsString(m)}}"""
       }
       // row tracking: fresh files get contiguous base row ids above
       // the table's high-water mark; the bumped mark commits in the
@@ -2322,13 +2256,12 @@ object DeltaWrite {
             dn.put("domain", DeltaLog.RowTrackingDomain)
             dn.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
             dn.put("removed", false)
-            sb.append(s"""{"domainMetadata":${mapper.writeValueAsString(dn)}}""")
-              .append('\n')
+            actions += s"""{"domainMetadata":${mapper.writeValueAsString(dn)}}"""
           }
           assigned
         }
 
-      removes.foreach(f => sb.append(removeJson(f, dataChange)).append('\n'))
+      actions ++= removes.map(removeJson(_, dataChange))
       rowAdds.foreach { add =>
         val a = mapper.createObjectNode()
         a.put("path", DeltaLog.encodePath(add.rel))
@@ -2354,15 +2287,10 @@ object DeltaWrite {
         }
         add.baseRowId.foreach(b => a.put("baseRowId", b))
         add.defaultRowCommitVersion.foreach(v => a.put("defaultRowCommitVersion", v))
-        sb.append(s"""{"add":${mapper.writeValueAsString(a)}}""").append('\n')
+        actions += s"""{"add":${mapper.writeValueAsString(a)}}"""
       }
 
-      try {
-        // put-if-absent with ATOMIC CONTENT (temp file + rename): a
-        // concurrent reader must never replay a half-written commit.
-        // Cross-process local-FS writers remain best-effort, as in
-        // every Delta implementation without a locking LogStore.
-        putCommitAtomically(spark, tablePath, version, sb.toString.getBytes("UTF-8"))
+      if (writeCommitFile(spark, tablePath, version, actions.result())) {
         // delta.checkpointInterval (when the table sets it): write a
         // checkpoint every N commits so log replay stays O(interval)
         // and the JSON prefix becomes cleanable. A checkpoint failure
@@ -2388,10 +2316,8 @@ object DeltaWrite {
         // footer schema for this location stale — purge before returning
         SchemaCache.invalidate(tablePath)
         return CommitResult(version, adds.size, removes.size)
-      } catch {
-        case _: java.io.IOException if attempt < 10 =>
-          attempt += 1 // lost the race: recompute version and retry
       }
+      attempt = lostRace(tablePath, attempt) // recompute version and retry
     }
     throw new IllegalStateException("unreachable")
   }
@@ -2550,15 +2476,7 @@ object DeltaWrite {
       }
 
     groups.zip(destPaths).zipWithIndex.foreach { case ((group, cpPath), i) =>
-      val tmp = new Path(DeltaLog.logDir(tablePath), s"_cp_tmp_${snap.version}_$i")
-      group.toDS().repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val part = listFilesRecursively(fs, tmp)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("checkpoint write produced no parquet file"))
-      fs.delete(cpPath, false)
-      if (!fs.rename(part, cpPath))
-        throw new IllegalStateException(s"could not move checkpoint into place at $cpPath")
-      fs.delete(tmp, true)
+      writeSingleParquet(spark, group.toDS(), cpPath, s"_cp_tmp_${snap.version}_$i")
     }
 
     val partsField = if (parts <= 1) "" else s""","parts":$parts"""
@@ -2729,7 +2647,7 @@ object DeltaWrite {
       s"_scd_tmp_${java.util.UUID.randomUUID().toString.take(8)}_${snap.version}")
     combined.repartition(math.max(1, sidecars))
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val parts = listFilesRecursively(fs, tmp).filter(_.getName.endsWith(".parquet"))
+    val parts = LakeFiles.listByExt(fs, tmp)
     val sidecarRefs = parts.map { p =>
       val name = s"${java.util.UUID.randomUUID()}.parquet"
       val dest = new Path(DeltaLog.sidecarDir(tablePath), name)
@@ -2784,7 +2702,7 @@ object DeltaWrite {
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(dest.getParent, tmpName)
     ds.repartition(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val part = listFilesRecursively(fs, tmp).find(_.getName.endsWith(".parquet"))
+    val part = LakeFiles.listByExt(fs, tmp).headOption
       .getOrElse(throw new IllegalStateException(s"write produced no parquet file for $dest"))
     fs.delete(dest, false)
     if (!fs.rename(part, dest))
@@ -2916,23 +2834,6 @@ object DeltaWrite {
     case d: java.math.BigDecimal => node.put(f.name, d)
     case b: Boolean           => node.put(f.name, b)
     case other                => node.put(f.name, other.toString) // string/date/timestamp
-  }
-
-  private def listFilesRecursively(fs: FileSystem, dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.Buffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) buf += s.getPath
-    }
-    buf.toSeq
-  }
-
-  private[tables] def relativize(base: Path, file: Path): String = {
-    val b = base.toUri.getPath.stripSuffix("/")
-    val f = file.toUri.getPath
-    require(f.startsWith(b + "/"), s"$file not under $base")
-    f.drop(b.length + 1)
   }
 
   /** Hive-style `col=value` segments → partitionValues; the

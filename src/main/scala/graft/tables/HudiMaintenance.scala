@@ -38,7 +38,7 @@ object HudiMaintenance {
     require(HudiWrite.completedInstants(fs, tablePath, None).exists(_._1 == instant),
       s"instant $instant is not a completed commit of $tablePath")
     val p = new Path(new Path(tablePath, ".hoodie"), s"$instant.savepoint")
-    require(IcebergWrite.publishIfAbsent(fs, p,
+    require(LakeFiles.putIfAbsent(fs, p,
       s"""{"savepointedAt":${System.currentTimeMillis()}}""".getBytes("UTF-8")),
       s"instant $instant is already savepointed")
   }

@@ -911,7 +911,7 @@ object HudiWrite {
               ranges))
         }.toMap
 
-    val files = listParquetFiles(fs, staging)
+    val files = LakeFiles.listByExt(fs, staging)
     // a staged file absent from `counts` holds zero rows (every row
     // maps to some file_path): do NOT mint a file group for it — an
     // empty, rangeless group would join every future upsert's index
@@ -920,7 +920,7 @@ object HudiWrite {
     // from counts") fail loudly instead of silently dropping data.
     val out = files.flatMap { f =>
       counts.get(DvDeleted.normalizePath(f.toString)).map { case (n, range, ranges) =>
-        val rel = DeltaWrite.relativize(staging, f)
+        val rel = LakeFiles.relativize(staging, f)
         val segs = rel.split('/').toSeq
         val (partSegs, fileId) =
           if (freshGroupPerLeaf)
@@ -948,16 +948,6 @@ object HudiWrite {
           s"and ${files.headOption.map(f => DvDeleted.normalizePath(f.toString))}")
     fs.delete(staging, true)
     out
-  }
-
-  private def listParquetFiles(fs: FileSystem, dir: Path): Seq[Path] = {
-    val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.Buffer.empty[Path]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(".parquet")) buf += s.getPath
-    }
-    buf.toSeq
   }
 
   /** Upstream marker names: `<instant>.<action>.requested` for every
@@ -990,7 +980,7 @@ object HudiWrite {
     while (true) {
       attempt += 1
       val instant = fmt.format(new java.util.Date())
-      if (IcebergWrite.publishIfAbsent(fs,
+      if (LakeFiles.putIfAbsent(fs,
         requestedMarker(hoodieDir, instant, action), Array.emptyByteArray)) {
         // uniqueness must hold ACROSS action spellings: a cluster
         // (replacecommit.requested) and an ingest (commit.requested)
@@ -1101,7 +1091,7 @@ object HudiWrite {
       TimelineActions.filter(_ != action)
         .find(a => fs.exists(requestedMarker(hoodieDir, instant, a)))
         .foreach { other =>
-          IcebergWrite.publishIfAbsent(fs,
+          LakeFiles.putIfAbsent(fs,
             requestedMarker(hoodieDir, instant, action), Array.emptyByteArray)
           fs.create(inflightMarker(hoodieDir, instant, action), true).close()
           fs.delete(requestedMarker(hoodieDir, instant, other), false)
@@ -1109,7 +1099,7 @@ object HudiWrite {
         }
     }
     val target = new Path(new Path(tablePath, ".hoodie"), s"$instant.$action")
-    require(IcebergWrite.publishIfAbsent(fs, target,
+    require(LakeFiles.putIfAbsent(fs, target,
       mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root)),
       s"instant $instant already completed under $tablePath")
     // committed (possibly schema-evolving) write: purge any cached

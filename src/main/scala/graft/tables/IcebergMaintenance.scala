@@ -40,7 +40,6 @@ import org.apache.spark.sql.SparkSession
 object IcebergMaintenance {
 
   private val mapper = new ObjectMapper()
-  private val MaxAttempts = 10
 
   private def intOf(r: org.apache.avro.generic.GenericRecord, f: String, d: Int): Int =
     Option(r.get(f)).map(_.asInstanceOf[Number].intValue()).getOrElse(d)
@@ -143,120 +142,104 @@ object IcebergMaintenance {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val metaDir = new Path(table, "metadata")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val baseV = IcebergWrite.latestVersionByScan(fs, metaDir)
+    IcebergWrite.publishLoop(fs, metaDir, tablePath, "rewriteManifests") { (_, baseRoot) =>
+      val root = baseRoot
         .getOrElse(throw new IllegalArgumentException(s"no Iceberg metadata under $metaDir"))
-      val root = IcebergWrite.readRoot(fs, metaDir, baseV)
       val meta = IcebergMeta.parse(root, tablePath)
-      val snap = meta.currentSnapshotId
-        .flatMap(id => meta.snapshots.find(_.id == id))
-        .getOrElse(return None)
-      val listEntries = IcebergMeta.readAvro(fs, new Path(snap.manifestList))
-      val (dataManifests, deleteManifests) =
-        listEntries.partition(m => intOf(m, "content", 0) == 0)
-      if (dataManifests.size <= 1) return None
+      val current = meta.currentSnapshotId.flatMap(id => meta.snapshots.find(_.id == id))
+      val (dataManifests, deleteManifests) = current.toSeq
+        .flatMap(s => IcebergMeta.readAvro(fs, new Path(s.manifestList)))
+        .partition(m => intOf(m, "content", 0) == 0)
+      // one data manifest (or none) is already consolidated: no commit
+      current.filter(_ => dataManifests.size > 1).map { snap =>
+        val uuid = java.util.UUID.randomUUID().toString
+        val nowMs = System.currentTimeMillis()
+        val snapshotId = meta.snapshots.map(_.id).maxOption.getOrElse(0L) + 1
+        val seq = root.path("last-sequence-number").asLong(0L) + 1
+        val specsNode = root.path("partition-specs")
 
-      val uuid = java.util.UUID.randomUUID().toString
-      val nowMs = System.currentTimeMillis()
-      val snapshotId = meta.snapshots.map(_.id).maxOption.getOrElse(0L) + 1
-      val seq = root.path("last-sequence-number").asLong(0L) + 1
-      val specsNode = root.path("partition-specs")
-
-      // one consolidated manifest per spec id
-      val bySpec = dataManifests.groupBy(m => intOf(m, "partition_spec_id", 0))
-      val newManifests = bySpec.toSeq.sortBy(_._1).map { case (specId, group) =>
-        val spec = meta.specs.getOrElse(specId, throw new IllegalArgumentException(
-          s"manifest references unknown partition spec $specId in $tablePath"))
-        val partFields = spec.map { sf =>
-          val srcName = meta.schemaFieldIds.getOrElse(sf.sourceId,
-            throw new IllegalArgumentException(
-              s"spec $specId field ${sf.name} references dropped column id ${sf.sourceId}"))
-          val srcType = meta.schema.fields.find(_.name == srcName).map(_.dataType)
-            .getOrElse(throw new IllegalArgumentException(
-              s"spec $specId source column $srcName missing from the current schema"))
-          org.apache.spark.sql.types.StructField(sf.name,
-            IcebergWrite.transformResultType(sf.transform, srcType))
-        }
-        val specJson = IcebergMeta.elements(specsNode)
-          .find(_.path("spec-id").asInt(0) == specId)
-          .map(sn => mapper.writeValueAsString(sn.path("fields")))
-          .getOrElse("[]")
-        val entrySchema = graft.export.IcebergUniform.manifestEntrySchema(
-          partFields, spec.map(_.fieldId))
-        val outPath = new Path(metaDir, s"manifest-rw-$snapshotId-$specId-$uuid.avro")
-        val w = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[
-            org.apache.avro.generic.GenericRecord](entrySchema))
-        w.setMeta("schema", mapper.writeValueAsString(
-          IcebergMeta.elements(root.path("schemas")).find(
-            _.path("schema-id").asInt(-1) == root.path("current-schema-id").asInt(0))
-            .getOrElse(root.path("schemas").get(0))))
-        w.setMeta("partition-spec", specJson)
-        w.setMeta("partition-spec-id", specId.toString)
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "data")
-        w.create(entrySchema, fs.create(outPath, true))
-        var files = 0L
-        var rows = 0L
-        var minSeq = Long.MaxValue
-        try {
-          group.foreach { m =>
-            val mPath = m.get("manifest_path").toString
-            val mSeq = longOf(m, "sequence_number").getOrElse(0L)
-            IcebergMeta.readAvro(fs, new Path(mPath)).foreach { e =>
-              if (intOf(e, "status", 0) != 2) {
-                val (eSeq, rc) = writeExistingEntry(w, entrySchema, e, mSeq, snap.id)
-                minSeq = math.min(minSeq, eSeq)
-                files += 1
-                rows += rc
+        // one consolidated manifest per spec id
+        val bySpec = dataManifests.groupBy(m => intOf(m, "partition_spec_id", 0))
+        val newManifests = bySpec.toSeq.sortBy(_._1).map { case (specId, group) =>
+          val spec = meta.specs.getOrElse(specId, throw new IllegalArgumentException(
+            s"manifest references unknown partition spec $specId in $tablePath"))
+          val partFields = spec.map { sf =>
+            val srcName = meta.schemaFieldIds.getOrElse(sf.sourceId,
+              throw new IllegalArgumentException(
+                s"spec $specId field ${sf.name} references dropped column id ${sf.sourceId}"))
+            val srcType = meta.schema.fields.find(_.name == srcName).map(_.dataType)
+              .getOrElse(throw new IllegalArgumentException(
+                s"spec $specId source column $srcName missing from the current schema"))
+            org.apache.spark.sql.types.StructField(sf.name,
+              IcebergWrite.transformResultType(sf.transform, srcType))
+          }
+          val specJson = IcebergMeta.elements(specsNode)
+            .find(_.path("spec-id").asInt(0) == specId)
+            .map(sn => mapper.writeValueAsString(sn.path("fields")))
+            .getOrElse("[]")
+          val entrySchema = graft.export.IcebergUniform.manifestEntrySchema(
+            partFields, spec.map(_.fieldId))
+          val outPath = new Path(metaDir, s"manifest-rw-$snapshotId-$specId-$uuid.avro")
+          val w = new org.apache.avro.file.DataFileWriter(
+            new org.apache.avro.generic.GenericDatumWriter[
+              org.apache.avro.generic.GenericRecord](entrySchema))
+          w.setMeta("schema", mapper.writeValueAsString(
+            IcebergMeta.elements(root.path("schemas")).find(
+              _.path("schema-id").asInt(-1) == root.path("current-schema-id").asInt(0))
+              .getOrElse(root.path("schemas").get(0))))
+          w.setMeta("partition-spec", specJson)
+          w.setMeta("partition-spec-id", specId.toString)
+          w.setMeta("format-version", "2")
+          w.setMeta("content", "data")
+          w.create(entrySchema, fs.create(outPath, true))
+          var files = 0L
+          var rows = 0L
+          var minSeq = Long.MaxValue
+          try {
+            group.foreach { m =>
+              val mPath = m.get("manifest_path").toString
+              val mSeq = longOf(m, "sequence_number").getOrElse(0L)
+              IcebergMeta.readAvro(fs, new Path(mPath)).foreach { e =>
+                if (intOf(e, "status", 0) != 2) {
+                  val (eSeq, rc) = writeExistingEntry(w, entrySchema, e, mSeq, snap.id)
+                  minSeq = math.min(minSeq, eSeq)
+                  files += 1
+                  rows += rc
+                }
               }
             }
-          }
-        } finally w.close()
-        (outPath, fs.getFileStatus(outPath).getLen, specId,
-          if (minSeq == Long.MaxValue) seq else minSeq, files, rows)
-      }
+          } finally w.close()
+          (outPath, fs.getFileStatus(outPath).getLen, specId,
+            if (minSeq == Long.MaxValue) seq else minSeq, files, rows)
+        }
 
-      // manifest list: consolidated data manifests + delete manifests
-      val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      locally {
-        val ls = graft.export.IcebergUniform.manifestFileSchema
-        val w = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[
-            org.apache.avro.generic.GenericRecord](ls)).create(ls, fs.create(listPath, true))
-        try {
-          newManifests.foreach { case (p, len, specId, minSeq, files, rows) =>
-            w.append(dataListRecord(ls, p, len, specId, seq, minSeq, snapshotId,
-              addedFiles = 0, existingFiles = files.toInt,
-              addedRows = 0L, existingRows = rows))
-          }
-          deleteManifests.foreach(prev => w.append(copyListRecord(ls, prev)))
-        } finally w.close()
-      }
+        // manifest list: consolidated data manifests + delete manifests
+        val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
+        locally {
+          val ls = graft.export.IcebergUniform.manifestFileSchema
+          val w = new org.apache.avro.file.DataFileWriter(
+            new org.apache.avro.generic.GenericDatumWriter[
+              org.apache.avro.generic.GenericRecord](ls)).create(ls, fs.create(listPath, true))
+          try {
+            newManifests.foreach { case (p, len, specId, minSeq, files, rows) =>
+              w.append(dataListRecord(ls, p, len, specId, seq, minSeq, snapshotId,
+                addedFiles = 0, existingFiles = files.toInt,
+                addedRows = 0L, existingRows = rows))
+            }
+            deleteManifests.foreach(prev => w.append(copyListRecord(ls, prev)))
+          } finally w.close()
+        }
 
-      val root2 = root.deepCopy[ObjectNode]()
-      IcebergWrite.appendSnapshotToRoot(root2, snapshotId, seq, nowMs, listPath,
-        operation = "replace",
-        summaryExtras = Seq(
-          "manifests-replaced" -> dataManifests.size.toString,
-          "manifests-created" -> newManifests.size.toString),
-        parentId = Option(root.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      val target = new Path(metaDir, s"v${baseV + 1}.metadata.json")
-      if (IcebergWrite.publishIfAbsent(fs, target,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))) {
-        val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-        try hint.write((baseV + 1).toString.getBytes("UTF-8")) finally hint.close()
-        return Some(snapshotId)
+        val root2 = root.deepCopy[ObjectNode]()
+        IcebergWrite.appendSnapshotToRoot(root2, snapshotId, seq, nowMs, listPath,
+          operation = "replace",
+          summaryExtras = Seq(
+            "manifests-replaced" -> dataManifests.size.toString,
+            "manifests-created" -> newManifests.size.toString),
+          parentId = Option(root.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
+        (root2, newManifests.map(_._1) :+ listPath, snapshotId)
       }
-      newManifests.foreach(m => fs.delete(m._1, false))
-      fs.delete(listPath, false)
-      if (attempt >= MaxAttempts)
-        throw new java.util.ConcurrentModificationException(
-          s"could not commit rewriteManifests to $tablePath after $MaxAttempts attempts")
     }
-    None
   }
 
   /** METADATA a snapshot set pins — manifest lists and manifest
@@ -472,7 +455,7 @@ object IcebergMaintenance {
       what = "the scoped rewrite")
   }
 
-  /** The shared REPLACE-commit loop behind [[scopedRewrite]] and
+  /** The shared REPLACE commit behind [[scopedRewrite]] and
     * [[IcebergWrite.updateWhere]]: one snapshot that drops
     * `scopePaths` and adds `staged` — untouched manifests carry
     * verbatim into the new manifest list (delete manifests always
@@ -480,8 +463,8 @@ object IcebergMaintenance {
     * that lose files are rewritten with kept entries as EXISTING
     * (per-entry sequence numbers preserved), and the staged files land
     * as ADDED entries of one fresh manifest at the new sequence
-    * number. Each optimistic attempt re-validates against the
-    * freshest base: the built-in spec-stability check plus the
+    * number. Each optimistic attempt of [[IcebergWrite.publishLoop]]
+    * re-validates against the freshest base: the built-in spec-stability check plus the
     * caller's `validateBase` (Some(reason) aborts loudly — never a
     * silent no-op).
     */
@@ -499,13 +482,10 @@ object IcebergMaintenance {
       summaryExtras: Seq[(String, String)],
       validateBase: (IcebergMeta.TableMeta, Seq[IcebergMeta.ContentFile]) => Option[String],
       what: String
-  ): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val baseV = IcebergWrite.latestVersionByScan(fs, metaDir)
+  ): Long =
+    try IcebergWrite.publishLoop(fs, metaDir, tablePath, what) { (_, baseRoot) =>
+      val root = baseRoot
         .getOrElse(throw new IllegalArgumentException(s"no Iceberg metadata under $metaDir"))
-      val root = IcebergWrite.readRoot(fs, metaDir, baseV)
       val meta = IcebergMeta.parse(root, tablePath)
       val snap = meta.currentSnapshotId
         .flatMap(id => meta.snapshots.find(_.id == id))
@@ -515,12 +495,10 @@ object IcebergMaintenance {
       // them with a new default-spec-id would bind partition tuples
       // to the wrong spec
       val cur = IcebergMeta.planFiles(fs, snap)
-      def abortStale(why: String): Nothing = {
-        staged.foreach(sf => fs.delete(new Path(sf.path), false))
+      def abortStale(why: String): Nothing =
         throw new java.util.ConcurrentModificationException(
           s"a concurrent commit invalidated $what on $tablePath ($why); " +
             "replan against the new snapshot")
-      }
       if (meta.defaultSpecId != specId0 ||
         meta.specs.getOrElse(meta.defaultSpecId, Seq.empty) != spec0)
         abortStale("the partition spec evolved")
@@ -644,22 +622,15 @@ object IcebergMaintenance {
         operation = operation,
         summaryExtras = summaryExtras,
         parentId = Option(root.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      val target = new Path(metaDir, s"v${baseV + 1}.metadata.json")
-      if (IcebergWrite.publishIfAbsent(fs, target,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root2))) {
-        val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-        try hint.write((baseV + 1).toString.getBytes("UTF-8")) finally hint.close()
-        return snapshotId
-      }
-      created.foreach(p => fs.delete(p, false))
-      if (attempt >= MaxAttempts) {
+      Some((root2, created.toSeq, snapshotId))
+    }.get
+    catch {
+      // a stale plan or lost retries: the staged files will never be
+      // referenced
+      case e: java.util.ConcurrentModificationException =>
         staged.foreach(sf => fs.delete(new Path(sf.path), false))
-        throw new java.util.ConcurrentModificationException(
-          s"could not commit $what to $tablePath after $MaxAttempts attempts")
-      }
+        throw e
     }
-    -1L // unreachable
-  }
 
   /** Time-based retention (the upstream `expireOlderThan` shape):
     * retire snapshots whose commit timestamp is before `olderThanMs`,
@@ -686,12 +657,10 @@ object IcebergMaintenance {
     val metaDir = new Path(table, "metadata")
     val deltaOwned = fs.exists(new Path(table, "_delta_log"))
 
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val baseV = IcebergWrite.latestVersionByScan(fs, metaDir)
+    IcebergWrite.publishLoop(fs, metaDir, tablePath, "expire") { (_, baseRoot) =>
+      val root = baseRoot
         .getOrElse(throw new IllegalArgumentException(s"no Iceberg metadata under $metaDir"))
-      val root = IcebergWrite.readRoot(fs, metaDir, baseV).deepCopy[ObjectNode]()
+        .deepCopy[ObjectNode]()
       val meta = IcebergMeta.parse(root, tablePath)
 
       val ordered = meta.snapshots.sortBy(s => (s.timestampMs, s.id))
@@ -699,61 +668,50 @@ object IcebergMaintenance {
       // the retention count — a tag IS the request to keep it
       val keepIds = (ordered.takeRight(keepLast).map(_.id) ++
         meta.currentSnapshotId ++ meta.refs.values.map(_.snapshotId)).toSet
-      val expired = ordered.filterNot(s => keepIds.contains(s.id))
-      if (expired.isEmpty) return Seq.empty
-      val retained = ordered.filter(s => keepIds.contains(s.id))
-
-      val expiredIds = expired.map(_.id).toSet
-      def prune(field: String, idField: String): Unit = root.path(field) match {
-        case arr: ArrayNode =>
-          val kept = IcebergMeta.elements(arr)
-            .filterNot(n => expiredIds.contains(n.path(idField).asLong()))
-          arr.removeAll()
-          kept.foreach(arr.add)
-        case _ => ()
-      }
-      prune("snapshots", "snapshot-id")
-      prune("snapshot-log", "snapshot-id")
-      root.put("last-updated-ms", System.currentTimeMillis())
-
-      val target = new Path(metaDir, s"v${baseV + 1}.metadata.json")
-      if (IcebergWrite.publishIfAbsent(fs, target,
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))) {
-        val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
-        try hint.write((baseV + 1).toString.getBytes("UTF-8")) finally hint.close()
-
-        // ---- physical cleanup: only what NO retained snapshot pins.
-        // Shared files are the norm (append carries manifests forward)
-        // — the set difference, not the expired set, is what deletes.
-        val live = metaReachable(fs, retained)
-        val dead = metaReachable(fs, expired)
-        val deadLists = (dead.manifestLists -- live.manifestLists).toSeq
-        val deadManifests = (dead.manifests -- live.manifests).toSeq
-        if (!deltaOwned) { // Delta VACUUM owns a Delta-owned table's data
-          // content diff runs distributed end-to-end: a manifest the
-          // live side shares contributes nothing (all its files are
-          // live), so only dead-ONLY manifests are even read; the
-          // anti-diff against every live manifest's files catches
-          // file-level sharing across rewritten manifests. Content
-          // deletes MUST land before the manifests they were read
-          // from are deleted (except is lazy until foreachPartition).
-          val conf = new org.apache.spark.util.SerializableConfiguration(
-            spark.sparkContext.hadoopConfiguration)
-          contentPaths(spark, deadManifests)
-            .except(contentPaths(spark, live.manifests.toSeq))
-            .foreachPartition { (it: Iterator[String]) =>
-              val dfs = new Path(tablePath).getFileSystem(conf.value)
-              it.foreach(p => dfs.delete(new Path(p), false))
-            }
+      val (retained, expired) = ordered.partition(s => keepIds.contains(s.id))
+      Option.when(expired.nonEmpty) {
+        val expiredIds = expired.map(_.id).toSet
+        def prune(field: String, idField: String): Unit = root.path(field) match {
+          case arr: ArrayNode =>
+            val kept = IcebergMeta.elements(arr)
+              .filterNot(n => expiredIds.contains(n.path(idField).asLong()))
+            arr.removeAll()
+            kept.foreach(arr.add)
+          case _ => ()
         }
-        distributedDelete(spark, tablePath, deadLists ++ deadManifests)
-        return expired.map(_.id)
+        prune("snapshots", "snapshot-id")
+        prune("snapshot-log", "snapshot-id")
+        root.put("last-updated-ms", System.currentTimeMillis())
+        (root, Nil, (retained, expired))
       }
-      if (attempt >= MaxAttempts)
-        throw new java.io.IOException(
-          s"could not commit expire to $tablePath after $MaxAttempts attempts")
+    }.fold(Seq.empty[Long]) { case (retained, expired) =>
+      // ---- physical cleanup: only what NO retained snapshot pins.
+      // Shared files are the norm (append carries manifests forward)
+      // — the set difference, not the expired set, is what deletes.
+      val live = metaReachable(fs, retained)
+      val dead = metaReachable(fs, expired)
+      val deadLists = (dead.manifestLists -- live.manifestLists).toSeq
+      val deadManifests = (dead.manifests -- live.manifests).toSeq
+      if (!deltaOwned) { // Delta VACUUM owns a Delta-owned table's data
+        // content diff runs distributed end-to-end: a manifest the
+        // live side shares contributes nothing (all its files are
+        // live), so only dead-ONLY manifests are even read; the
+        // anti-diff against every live manifest's files catches
+        // file-level sharing across rewritten manifests. Content
+        // deletes MUST land before the manifests they were read
+        // from are deleted (except is lazy until foreachPartition).
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sparkContext.hadoopConfiguration)
+        contentPaths(spark, deadManifests)
+          .except(contentPaths(spark, live.manifests.toSeq))
+          .foreachPartition { (it: Iterator[String]) =>
+            val dfs = new Path(tablePath).getFileSystem(conf.value)
+            it.foreach(p => dfs.delete(new Path(p), false))
+          }
+      }
+      distributedDelete(spark, tablePath, deadLists ++ deadManifests)
+      expired.map(_.id)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Delete files under the table location that no snapshot of the

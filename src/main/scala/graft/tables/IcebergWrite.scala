@@ -103,8 +103,8 @@ object IcebergWrite {
     // skip hidden/_-prefixed segments (_temporary leftovers, _SUCCESS
     // dirs): the format reader excludes them from the counts job, so
     // importing them would stage phantom files with record_count 0
-    val files = listByExt(fs, src, "." + fmt.toLowerCase).filter { f =>
-      val rel = DeltaWrite.relativize(src, f)
+    val files = LakeFiles.listByExt(fs, src, "." + fmt.toLowerCase).filter { f =>
+      val rel = LakeFiles.relativize(src, f)
       rel.split('/').forall(seg => !seg.startsWith("_") && !seg.startsWith("."))
     }
     require(files.nonEmpty, s"no ${fmt.toLowerCase} files under $srcDir")
@@ -120,7 +120,7 @@ object IcebergWrite {
           (total, IcebergStats.statsOfRow(r, dataFields, total))
       }.toMap
     val staged = files.map { f =>
-      val rel = DeltaWrite.relativize(src, f)
+      val rel = LakeFiles.relativize(src, f)
       val (n, cs) = stats.getOrElse(
         DvDeleted.normalizePath(f.toString), (0L, Map.empty[String, IcebergStats.ColStat]))
       StagedFile(
@@ -476,8 +476,8 @@ object IcebergWrite {
           "added-delete-files" -> staged.size.toString,
           "added-position-deletes" -> staged.map(_.recordCount).sum.toString),
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      (root, Seq(manifestPath, listPath), snapshotId)
-    }
+      Some((root, Seq(manifestPath, listPath), snapshotId))
+    }.get
   }
 
   /** Row-level DELETE as Iceberg v3 PUFFIN DELETION VECTORS — the
@@ -808,9 +808,9 @@ object IcebergWrite {
           "added-dvs" -> targets.size.toString,
           "added-position-deletes" -> targets.map(_._2.cardinality).sum.toString),
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      (root, Seq(puffinPath, manifestPath, listPath) ++
-        rewritten.values.map(_.path), snapshotId)
-    }
+      Some((root, Seq(puffinPath, manifestPath, listPath) ++
+        rewritten.values.map(_.path), snapshotId))
+    }.get
   }
 
   /** Row-level DELETE as EQUALITY DELETE files (Iceberg v2
@@ -913,8 +913,8 @@ object IcebergWrite {
           txn.toSeq.flatMap { case (app, id) => Seq(
             TxnAppKey -> app, TxnBatchKey -> id.toString) },
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      (root, Seq(manifestPath, listPath), snapshotId)
-    }
+      Some((root, Seq(manifestPath, listPath), snapshotId))
+    }.get
   }
 
   /** Atomic Iceberg UPSERT — the streaming-sink shape (e.g. the
@@ -1097,8 +1097,8 @@ object IcebergWrite {
       entry.put("type", refType)
       refsNode.set[ObjectNode](name, entry)
       root.put("last-updated-ms", System.currentTimeMillis())
-      (root, Seq.empty, id)
-    }
+      Some((root, Seq.empty, id))
+    }.get
   }
 
   /** Append `df` to a named BRANCH (write-audit-publish staging):
@@ -1167,8 +1167,8 @@ object IcebergWrite {
         root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
           .add(logEntry)
       }
-      (root, Seq.empty, target)
-    }
+      Some((root, Seq.empty, target))
+    }.get
   }
 
   /** RENAME a top-level column — a METADATA-ONLY schema-evolution
@@ -1233,7 +1233,7 @@ object IcebergWrite {
       schemas.add(copy)
       root.put("current-schema-id", newSid)
       root.put("last-updated-ms", System.currentTimeMillis())
-      (root, Seq.empty, root.path("current-snapshot-id").asLong(-1L))
+      Some((root, Seq.empty, root.path("current-snapshot-id").asLong(-1L)))
     }
     ()
   }
@@ -1314,8 +1314,8 @@ object IcebergWrite {
         case _ => ()
       }
       root.put("last-updated-ms", System.currentTimeMillis())
-      (root, Seq.empty, ref.snapshotId)
-    }
+      Some((root, Seq.empty, ref.snapshotId))
+    }.get
   }
 
   /** Manifest partition value → the string Spark's partitionBy
@@ -1833,30 +1833,35 @@ object IcebergWrite {
             TxnAppKey -> app, TxnBatchKey -> id.toString) },
         branch = branch,
         parentId = baseRoot.map(r => headIdFor(r, branch)).filter(_ >= 0))
-      (root, eqManifest.map(_._1).toSeq ++ Seq(manifestPath, listPath), snapshotId)
-    }
+      Some((root, eqManifest.map(_._1).toSeq ++ Seq(manifestPath, listPath), snapshotId))
+    }.get
   }
 
-  /** The optimistic Hadoop-catalog publish loop shared by every
-    * snapshot-producing commit (append/overwrite and deleteWhere):
-    * each attempt re-reads the latest committed metadata by scan,
-    * asks `attemptFn` to build the new root (plus the temp manifest
-    * files to discard on a lost race), and publishes put-if-absent at
-    * scanMax+1. `attemptFn` may throw to abort the whole commit (e.g.
-    * rebase validation).
+  /** The optimistic Hadoop-catalog publish loop behind every Iceberg
+    * metadata commit (writes, deletes, ref and schema changes, and
+    * [[IcebergMaintenance]]'s rewrites and expiry): each attempt
+    * re-reads the latest committed metadata by scan and asks
+    * `attemptFn` for the new root, the temp files to discard on a lost
+    * race and the attempt's result; the root is published
+    * put-if-absent at scanMax+1. `attemptFn` returns None when there
+    * is nothing to commit, and may throw to abort the whole commit
+    * (e.g. rebase validation). Returns the winning attempt's result;
+    * `MaxAttempts` lost races throw ConcurrentModificationException.
     */
-  private def publishLoop(
+  private[tables] def publishLoop[A](
       fs: FileSystem,
       metaDir: Path,
       tablePath: String,
       what: String
-  )(attemptFn: (Option[Int], Option[JsonNode]) => (ObjectNode, Seq[Path], Long)): Long = {
+  )(attemptFn: (Option[Int], Option[JsonNode]) => Option[(ObjectNode, Seq[Path], A)]): Option[A] = {
     var attempt = 0
     while (true) {
       attempt += 1
       val baseV = latestVersionByScan(fs, metaDir)
       val baseRoot = baseV.map(v => readRoot(fs, metaDir, v))
-      val (root, temps, snapshotId) = attemptFn(baseV, baseRoot)
+      val next = attemptFn(baseV, baseRoot)
+      if (next.isEmpty) return None
+      val (root, temps, result) = next.get
       val newV = baseV.getOrElse(0) + 1
       // metadata-log: record the PREVIOUS metadata file per the spec
       // (foreign readers use it for metadata-version time travel)
@@ -1872,18 +1877,18 @@ object IcebergWrite {
           .add(entry)
       }
       val target = new Path(metaDir, s"v$newV.metadata.json")
-      if (publishIfAbsent(fs, target,
+      if (LakeFiles.putIfAbsent(fs, target,
         mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))) {
         val hint = fs.create(new Path(metaDir, "version-hint.text"), true)
         try hint.write(newV.toString.getBytes("UTF-8")) finally hint.close()
         // committed (possibly schema-evolving) write: purge any cached
         // footer schema covering this location
         SchemaCache.invalidate(tablePath)
-        return snapshotId
+        return Some(result)
       }
       temps.foreach(fs.delete(_, false))
       if (attempt >= MaxAttempts)
-        throw new java.io.IOException(
+        throw new java.util.ConcurrentModificationException(
           s"could not commit $what to $tablePath after $MaxAttempts attempts")
     }
     throw new IllegalStateException("unreachable")
@@ -2147,7 +2152,7 @@ object IcebergWrite {
     val writer = if (partCols.nonEmpty) df.write.partitionBy(partCols: _*) else df.write
     writer.mode(SaveMode.Overwrite).parquet(staging.toString)
 
-    val files = listParquet(fs, staging)
+    val files = LakeFiles.listByExt(fs, staging)
     // ONE grouped job per staging dir computes record counts AND the
     // per-column min/max/null-counts that become the manifest's
     // bounds (IcebergStats) — the reader's file-skipping evidence at
@@ -2172,12 +2177,7 @@ object IcebergWrite {
       }
 
     val out = files.map { f =>
-      // URI-path relativize, NOT string stripPrefix: listFiles returns
-      // scheme-qualified paths ("file:/...") while `staging` is usually
-      // unqualified, so a raw prefix strip never matches and the
-      // qualified path would leak into the data/ layout (and ':' is
-      // rejected outright in HDFS path components).
-      val rel = DeltaWrite.relativize(staging, f)
+      val rel = LakeFiles.relativize(staging, f)
       val dest = new Path(table, s"data/$rel")
       fs.mkdirs(dest.getParent)
       if (!fs.rename(f, dest))
@@ -2206,19 +2206,6 @@ object IcebergWrite {
       }
     }.toMap
     partCols.map(c => c -> fromPath.getOrElse(c, None)).toMap
-  }
-
-  private def listParquet(fs: FileSystem, dir: Path): Seq[Path] =
-    listByExt(fs, dir, ".parquet")
-
-  private def listByExt(fs: FileSystem, dir: Path, ext: String): Seq[Path] = {
-    val b = Seq.newBuilder[Path]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && s.getPath.getName.endsWith(ext)) b += s.getPath
-    }
-    b.result()
   }
 
   /** Highest v<N>.metadata.json by DIRECTORY SCAN — the commit loop
@@ -2267,32 +2254,5 @@ object IcebergWrite {
         e.path("snapshot-id").asLong()
       case _ => cur
     }
-  }
-
-  /** PUT-IF-ABSENT publish: local FS uses link(2) (content-atomic AND
-    * exclusive across processes); other FSes fall back to rename.
-    * Returns false on a lost race.
-    */
-  private[graft] def publishIfAbsent(fs: FileSystem, target: Path, bytes: Array[Byte]): Boolean = {
-    if (fs.exists(target)) return false
-    val tmp = new Path(target.getParent,
-      s"._commit_${java.util.UUID.randomUUID().toString.take(8)}.json.tmp")
-    try {
-      val out = fs.create(tmp, false)
-      try out.write(bytes) finally out.close()
-      fs match {
-        case _: org.apache.hadoop.fs.LocalFileSystem |
-             _: org.apache.hadoop.fs.RawLocalFileSystem =>
-          try {
-            java.nio.file.Files.createLink(
-              new java.io.File(target.toUri.getPath).toPath,
-              new java.io.File(tmp.toUri.getPath).toPath)
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        case _ => fs.rename(tmp, target)
-      }
-    } finally { fs.delete(tmp, false); () }
   }
 }

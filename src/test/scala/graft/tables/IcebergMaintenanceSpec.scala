@@ -204,6 +204,31 @@ class IcebergMaintenanceSpec extends SparkSpec {
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("metadata-log stays continuous across rewrites, UPDATE and expiry") {
+    import graft.core.{Filter, Filters}
+    import IcebergMaintenanceSpec.assertMetadataLogContinuous
+    val dir = tempDir("icem-mlog").toString + "/t"
+    (1 to 2).foreach { i =>
+      IcebergWrite.append(spark,
+        Seq((i.toLong, "a"), (i + 10L, "b")).toDF("id", "p"), dir, Seq("p"))
+    }
+    val fs = fsOf(dir)
+    assertMetadataLogContinuous(fs, dir)
+    IcebergMaintenance.rewriteDataFiles(spark, dir,
+      where = Filters.normalize(Seq(Filter("p", "=", "a"))))
+    assertMetadataLogContinuous(fs, dir)
+    IcebergWrite.updateWhere(spark, dir,
+      Filters.normalize(Seq(Filter("id", "=", 11L))), Seq("id" -> "id + 100"))
+    assertMetadataLogContinuous(fs, dir)
+    IcebergMaintenance.rewriteDataFiles(spark, dir)
+    assertMetadataLogContinuous(fs, dir)
+    assert(IcebergMaintenance.expireSnapshots(spark, dir, keepLast = 1).nonEmpty)
+    assertMetadataLogContinuous(fs, dir)
+    assert(IcebergMeta.currentVersion(fs, dir) == 6)
+    assert(new IcebergTable("t", dir)(spark, ReadArgs.empty)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 12L, 111L))
+  }
+
   test("removeOrphanFiles deletes only unreferenced files older than the cutoff") {
     val dir = tempDir("icem-orph").toString + "/t"
     IcebergWrite.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), dir)
@@ -256,5 +281,22 @@ class IcebergMaintenanceSpec extends SparkSpec {
       IcebergMaintenance.removeOrphanFiles(spark, dir, Long.MaxValue)
     }
     assert(e.getMessage.contains("Delta-owned"))
+  }
+}
+
+object IcebergMaintenanceSpec {
+  import org.scalatest.Assertions._
+
+  /** The current metadata's `metadata-log` names every earlier metadata
+    * file in order, v1 to v(N-1): the spec's record for
+    * metadata-version time travel, which every commit must extend.
+    */
+  def assertMetadataLogContinuous(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
+    val v = IcebergMeta.currentVersion(fs, dir)
+    val root = IcebergWrite.readRoot(fs, new Path(dir, "metadata"), v)
+    val files = IcebergMeta.elements(root.path("metadata-log"))
+      .map(e => new Path(e.path("metadata-file").asText()).getName)
+    assert(files == (1 until v).map(i => s"v$i.metadata.json"),
+      s"metadata-log of v$v: ${files.mkString(", ")}")
   }
 }

@@ -73,6 +73,17 @@ class IcebergRewriteManifestsSpec extends SparkSpec {
       Seq(1L, 3L, 4L, 5L))
   }
 
+  test("the rewrite commit extends metadata-log like every writer commit") {
+    val root = tempDir("ice-rw-mlog").toString + "/t"
+    (1 to 3).foreach(i => IcebergWrite.append(spark, Seq((i.toLong, "x")).toDF("id", "v"), root))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(IcebergMaintenance.rewriteManifests(spark, root).nonEmpty)
+    assert(IcebergMeta.currentVersion(fs, root) == 4)
+    IcebergMaintenanceSpec.assertMetadataLogContinuous(fs, root)
+    IcebergWrite.append(spark, Seq((4L, "y")).toDF("id", "v"), root)
+    IcebergMaintenanceSpec.assertMetadataLogContinuous(fs, root)
+  }
+
   test("multi-spec tables consolidate per spec and keep per-generation pruning") {
     val root = tempDir("ice-rw-spec").toString + "/t"
     def tsDf(rows: Seq[(Long, String, String)]) =

@@ -265,6 +265,88 @@ class IcebergWriteSpec extends SparkSpec {
     assert(meta.snapshots.map(_.sequenceNumber).sorted == Seq(1L, 2L, 3L))
   }
 
+  /** Runs `maintain` on the table at `dir` while an append of `rows`
+    * commits from another thread in between: after the maintenance
+    * commit has read its base metadata and before it publishes (the
+    * table is opened through [[PausingLocalFs]], whose first metadata
+    * read waits for the append). The maintenance attempt so loses the
+    * race to the append and must retry on top of it. Checks that both
+    * commits land as two new, contiguous metadata versions, that no
+    * metadata file committed before the maintenance publish changed,
+    * and that metadata-log stays continuous. Returns the maintenance
+    * result and the table's path through the pausing filesystem.
+    */
+  private def raceMaintenance[A](dir: String, rows: Seq[(Long, String)])(
+      maintain: String => A): (A, String) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.pausefs.impl", classOf[PausingLocalFs].getName)
+    val paused = "pausefs://" + dir
+    val fs = new Path(paused).getFileSystem(conf)
+    val metaDir = new Path(paused, "metadata")
+    val base = IcebergWrite.latestVersionByScan(fs, metaDir).get
+    def metadataBytes(): Map[String, Seq[Byte]] =
+      fs.listStatus(metaDir).map(_.getPath).filter(_.getName.endsWith(".metadata.json"))
+        .map { p =>
+          val in = fs.open(p)
+          p.getName -> (try in.readAllBytes().toSeq finally in.close())
+        }.toMap
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val appender = new Thread(() =>
+      try IcebergWrite.append(spark, rows.toDF("id", "v"), dir)
+      catch { case t: Throwable => errors.add(t) })
+    var beforePublish = Map.empty[String, Seq[Byte]]
+    PausingLocalFs.onMetadataRead.set { () =>
+      appender.start()
+      appender.join()
+      beforePublish = metadataBytes()
+    }
+    val result = try maintain(paused) finally PausingLocalFs.onMetadataRead.set(null)
+    assert(errors.isEmpty, s"racing append failed: ${errors.peek()}")
+    assert(beforePublish.size == base + 1, "the append did not commit inside the race window")
+    val after = metadataBytes()
+    assert(after.keySet == (1 to base + 2).map(v => s"v$v.metadata.json").toSet,
+      s"metadata versions: ${after.keys.toSeq.sorted}")
+    beforePublish.foreach { case (name, bytes) =>
+      assert(after(name) == bytes, s"$name was overwritten")
+    }
+    IcebergMaintenanceSpec.assertMetadataLogContinuous(fs, paused)
+    (result, paused)
+  }
+
+  test("an append racing expireSnapshots: both commit, the expiry replans") {
+    val dir = tempDir("icew-race-exp").toString + "/t"
+    val seeded = (1 to 3).map(i => IcebergWrite.append(spark, Seq((i.toLong, s"s$i")).toDF("id", "v"), dir))
+    val (expired, paused) = raceMaintenance(dir, Seq((10L, "w"))) { t =>
+      IcebergMaintenance.expireSnapshots(spark, t, keepLast = 1)
+    }
+    // the first attempt planned against v3 (expiring s1, s2); the
+    // retry sees the append's snapshot as current and expires s3 too
+    assert(expired == seeded)
+    val fs = new Path(paused).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = IcebergMeta.load(fs, paused)
+    assert(meta.snapshots.size == 1 && !seeded.contains(meta.currentSnapshotId.get))
+    assert(new IcebergTable("t", paused)(spark, ReadArgs.empty)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 10L))
+  }
+
+  test("an append racing rewriteManifests: both commit, the rewrite replans") {
+    val dir = tempDir("icew-race-rwm").toString + "/t"
+    (1 to 3).foreach(i => IcebergWrite.append(spark, Seq((i.toLong, s"s$i")).toDF("id", "v"), dir))
+    val (rewritten, paused) = raceMaintenance(dir, Seq((10L, "w"))) { t =>
+      IcebergMaintenance.rewriteManifests(spark, t)
+    }
+    val fs = new Path(paused).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val meta = IcebergMeta.load(fs, paused)
+    assert(rewritten.nonEmpty && meta.currentSnapshotId == rewritten)
+    // the retry consolidated the append's manifest too
+    val snap = meta.snapshots.find(s => rewritten.contains(s.id)).get
+    assert(IcebergMeta.readAvro(fs, new Path(snap.manifestList)).size == 1)
+    assert(IcebergMeta.parse(IcebergWrite.readRoot(fs, new Path(paused, "metadata"), 5), paused)
+      .snapshots.size == 5)
+    assert(new IcebergTable("t", paused)(spark, ReadArgs.empty)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 10L))
+  }
+
   test("a UniForm-exported table stays Delta-owned: IcebergWrite refuses") {
     val dir = tempDir("icew-dv").toString + "/t"
     // single-writer-per-format invariant: the Delta log is the source
@@ -277,4 +359,23 @@ class IcebergWriteSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("Delta table"))
   }
+}
+
+/** The local filesystem under its own `pausefs` scheme, whose first
+  * open of a `*.metadata.json` file after a test arms
+  * [[PausingLocalFs.onMetadataRead]] runs that callback first: the
+  * point where an Iceberg commit has found its base version and not
+  * yet published the next one.
+  */
+class PausingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("pausefs:///")
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".metadata.json"))
+      Option(PausingLocalFs.onMetadataRead.getAndSet(null)).foreach(_.run())
+    super.open(f, bufferSize)
+  }
+}
+
+object PausingLocalFs {
+  val onMetadataRead = new java.util.concurrent.atomic.AtomicReference[Runnable]()
 }

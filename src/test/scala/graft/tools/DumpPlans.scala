@@ -5,7 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import graft.queries.QueryCatalog
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev tool: write `.explain("formatted")` for named queries to files
   * (the r15 optimization round's plan evidence — plans/r15/<q>_<tag>.txt).
@@ -50,16 +53,29 @@ object DumpPlans {
         Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
     })
+    // the noop write runs its own QueryExecution, so `df`'s executed
+    // plan never finalizes: take the plan the write ran. The execution
+    // listener bus shares the job listener's FIFO queue, so the write
+    // is recorded by the time the sentinel job is seen.
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) writes.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     names.foreach { n =>
       sc.setJobGroup(n, "dump")
       val df = QueryCatalog.queries(n)(spark, sfDir)
       val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       df.write.format("noop").mode("overwrite").save() // AQE finalizes
-      val finalPlan = df.queryExecution.executedPlan.toString
       sc.setJobGroup(s"$n-sentinel", "sentinel")
       spark.range(1).count()
       while (!jobs.containsKey(s"$n-sentinel")) Thread.sleep(10)
       sc.clearJobGroup()
+      val written = Option(writes.poll())
+        .getOrElse(sys.error(s"no noop write of $n was recorded")).executedPlan
+      val finalPlan = written.collectFirst { case a: AdaptiveSparkPlanExec => a }
+        .getOrElse(written).toString
       val text = s"==== $n ($tag) — jobs to build and run: ${jobs.getOrDefault(n, 0)} ====\n" +
         s"==== $n ($tag) — explain(formatted) ====\n$formatted\n" +
         s"==== $n ($tag) — AQE-final executed plan ====\n$finalPlan\n"
