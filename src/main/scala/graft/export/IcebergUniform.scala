@@ -2,10 +2,8 @@ package graft.export
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import graft.tables.{DeltaLog, DvDeleted, IcebergMeta, IcebergWrite, LakeFiles, RoaringBitmapArray}
-import org.apache.avro.file.DataFileWriter
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
-import org.apache.avro.{Schema => AvroSchema}
+import graft.tables.{DeltaLog, IcebergManifests, IcebergMeta, IcebergWrite, LakeFiles, RoaringBitmapArray}
+import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -123,63 +121,38 @@ object IcebergUniform {
           s"partition column $c missing from schema of $tablePath")))
 
     // ---- manifest (one Avro file, all live data files) -------------
-    val manifestPath = new Path(metaDir, s"manifest-$snapshotId-$uuid.avro")
     val specFieldsJson = partFields.zipWithIndex.map { case (pf, i) =>
       s"""{"name":${q(pf.name)},"transform":"identity","source-id":${ids.idOf(pf.name)},"field-id":${1000 + i}}"""
     }.mkString("[", ",", "]")
-    val entrySchema = manifestEntrySchema(partFields)
-    locally {
-      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-      // Iceberg's ManifestReader requires these file-level properties
-      // to bind the partition struct to the spec
-      w.setMeta("schema", schemaJson)
-      w.setMeta("partition-spec", specFieldsJson)
-      w.setMeta("partition-spec-id", "0")
-      w.setMeta("format-version", "2")
-      w.setMeta("content", "data")
-      w.create(entrySchema, fs.create(manifestPath, true))
-      try {
-        val dfSchema = entrySchema.getField("data_file").schema()
-        val pSchema = dfSchema.getField("partition").schema()
-        snap.files.zip(counts).foreach { case (f, n) =>
-          val p = new GenericData.Record(pSchema)
-          partFields.foreach { pf =>
-            val v: Option[String] = f.partitionValues
-              .get(snap.metadata.physicalName(pf.name)).flatten
-              .orElse(f.partitionValues.get(pf.name).flatten)
-            p.put(pf.name, partitionValue(pf.dataType, v))
-          }
-          val df = new GenericData.Record(dfSchema)
-          df.put("content", 0)
-          df.put("file_path", DeltaLog.resolvePath(tablePath, f.path))
-          df.put("file_format", "PARQUET")
-          df.put("partition", p)
-          df.put("record_count", n)
-          df.put("file_size_in_bytes", f.size)
+    val entrySchema = IcebergManifests.manifestEntrySchema(partFields)
+    val format = IcebergManifests.Format(schemaJson, 0, specFieldsJson)
+    def partition(pv: Map[String, Option[String]]): Seq[Any] = partFields.map { pf =>
+      IcebergManifests.partitionValue(pf.dataType, pv
+        .get(snap.metadata.physicalName(pf.name)).flatten
+        .orElse(pv.get(pf.name).flatten))
+    }
+    val manifest = IcebergManifests.write(fs,
+      new Path(metaDir, s"manifest-$snapshotId-$uuid.avro"), entrySchema, format,
+      deletes = false, snapshotId, seqNum) { w =>
+      snap.files.zip(counts).foreach { case (f, n) =>
+        w.add(0, DeltaLog.resolvePath(tablePath, f.path), "PARQUET",
+          partition(f.partitionValues), n, f.size) { df =>
           // Delta per-file stats → Iceberg column bounds: the
           // exported table prunes non-partition predicates exactly
           // like a natively written one
-          graft.tables.IcebergStats.putDeltaStatsFields(df, dfSchema,
+          graft.tables.IcebergStats.putDeltaStatsFields(df, df.getSchema,
             f.stats, snap.metadata.schema,
             snap.metadata.physicalName, c => ids.idOf(c))
-          val e = new GenericData.Record(entrySchema)
-          e.put("status", 1) // ADDED in this snapshot
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", seqNum)
-          e.put("file_sequence_number", seqNum)
-          e.put("data_file", df)
-          w.append(e)
         }
-      } finally w.close()
+      }
     }
-    val manifestLen = fs.getFileStatus(manifestPath).getLen
 
     // ---- deletion vectors → position delete files ------------------
     // Each DV bitmap becomes (file_path, pos) parquet rows, one delete
     // file per partition tuple, expanded EXECUTOR-side (the driver
     // ships compressed bitmap bytes, never positions).
     val dvFiles = snap.files.filter(_.dv.exists(_.cardinality > 0))
-    val deleteManifest: Option[(Path, Long, Int, Long)] =
+    val deleteManifest: Option[IcebergManifests.Written] =
       if (dvFiles.isEmpty) None
       else {
         import spark.implicits._
@@ -204,86 +177,19 @@ object IcebergUniform {
               (pv, pf.getPath.toUri.getPath, pf.getLen,
                 group.map(_.dv.get.cardinality).sum)
           }
-        val delManifestPath = new Path(metaDir, s"delete-manifest-$snapshotId-$uuid.avro")
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-        w.setMeta("schema", schemaJson)
-        w.setMeta("partition-spec", specFieldsJson)
-        w.setMeta("partition-spec-id", "0")
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "deletes")
-        w.create(entrySchema, fs.create(delManifestPath, true))
-        try {
-          val dfSchema = entrySchema.getField("data_file").schema()
-          val pSchema = dfSchema.getField("partition").schema()
+        Some(IcebergManifests.write(fs,
+          new Path(metaDir, s"delete-manifest-$snapshotId-$uuid.avro"), entrySchema, format,
+          deletes = true, snapshotId, seqNum) { w =>
           written.foreach { case (pv, path, len, rows) =>
-            val p = new GenericData.Record(pSchema)
-            partFields.foreach { pf =>
-              val v: Option[String] = pv
-                .get(snap.metadata.physicalName(pf.name)).flatten
-                .orElse(pv.get(pf.name).flatten)
-              p.put(pf.name, partitionValue(pf.dataType, v))
-            }
-            val df = new GenericData.Record(dfSchema)
-            df.put("content", 1) // position deletes
-            df.put("file_path", path)
-            df.put("file_format", "PARQUET")
-            df.put("partition", p)
-            df.put("record_count", rows)
-            df.put("file_size_in_bytes", len)
-            val e = new GenericData.Record(entrySchema)
-            e.put("status", 1)
-            e.put("snapshot_id", snapshotId)
-            e.put("sequence_number", seqNum)
-            e.put("file_sequence_number", seqNum)
-            e.put("data_file", df)
-            w.append(e)
+            w.add(1, path, "PARQUET", partition(pv), rows, len)(_ => ()) // position deletes
           }
-        } finally w.close()
-        Some((delManifestPath, fs.getFileStatus(delManifestPath).getLen,
-          written.size, written.map(_._4).sum))
+        })
       }
 
     // ---- manifest list ---------------------------------------------
     val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-    locally {
-      val s = manifestFileSchema
-      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
-        .create(s, fs.create(listPath, true))
-      try {
-        val r = new GenericData.Record(s)
-        r.put("manifest_path", manifestPath.toString)
-        r.put("manifest_length", manifestLen)
-        r.put("partition_spec_id", 0)
-        r.put("content", 0) // data
-        r.put("sequence_number", seqNum)
-        r.put("min_sequence_number", seqNum)
-        r.put("added_snapshot_id", snapshotId)
-        r.put("added_files_count", snap.files.size)
-        r.put("existing_files_count", 0)
-        r.put("deleted_files_count", 0)
-        r.put("added_rows_count", counts.sum)
-        r.put("existing_rows_count", 0L)
-        r.put("deleted_rows_count", 0L)
-        w.append(r)
-        deleteManifest.foreach { case (p, len, nFiles, nRows) =>
-          val d = new GenericData.Record(s)
-          d.put("manifest_path", p.toString)
-          d.put("manifest_length", len)
-          d.put("partition_spec_id", 0)
-          d.put("content", 1) // deletes
-          d.put("sequence_number", seqNum)
-          d.put("min_sequence_number", seqNum)
-          d.put("added_snapshot_id", snapshotId)
-          d.put("added_files_count", nFiles)
-          d.put("existing_files_count", 0)
-          d.put("deleted_files_count", 0)
-          d.put("added_rows_count", nRows)
-          d.put("existing_rows_count", 0L)
-          d.put("deleted_rows_count", 0L)
-          w.append(d)
-        }
-      } finally w.close()
-    }
+    IcebergManifests.writeList(fs, listPath,
+      (manifest +: deleteManifest.toSeq).map(IcebergManifests.listRow))
 
     // ---- table metadata JSON ---------------------------------------
     val root = mapper.createObjectNode()
@@ -327,9 +233,9 @@ object IcebergUniform {
     sn.put("schema-id", 0)
     val summary = mapper.createObjectNode()
     summary.put("operation", "append")
-    deleteManifest.foreach { case (_, _, nFiles, nRows) =>
-      summary.put("added-delete-files", nFiles.toString)
-      summary.put("added-position-deletes", nRows.toString)
+    deleteManifest.foreach { m =>
+      summary.put("added-delete-files", m.addedFiles.toString)
+      summary.put("added-position-deletes", m.addedRows.toString)
     }
     sn.set[ObjectNode]("summary", summary)
     // snapshot history carries forward across exports (dedup by id)
@@ -368,7 +274,7 @@ object IcebergUniform {
     val metaPath = new Path(metaDir, s"v$metaVersion.metadata.json")
     writeString(fs, new Path(metaDir, "version-hint.text"), metaVersion.toString)
 
-    Exported(metaPath.toString, listPath.toString, manifestPath.toString, snapshotId)
+    Exported(metaPath.toString, listPath.toString, manifest.path.toString, snapshotId)
   }
 
   /** Replay exported Iceberg metadata back to its file set —
@@ -438,171 +344,6 @@ object IcebergUniform {
     try new String(in.readAllBytes(), "UTF-8")
     finally in.close()
   }
-
-  /** Iceberg value for an identity-transform partition field, parsed
-    * from Delta's string-encoded partitionValues.
-    */
-  private[graft] def partitionValue(dt: DataType, v: Option[String]): Any = v match {
-    case None => null
-    case Some(s) => dt match {
-      case IntegerType | ShortType | ByteType => s.toInt
-      case LongType                           => s.toLong
-      case StringType                         => s
-      case BooleanType                        => s.toBoolean
-      case DateType => java.time.LocalDate.parse(s).toEpochDay.toInt
-      case other => throw new IllegalArgumentException(
-        s"unsupported Iceberg partition type $other")
-    }
-  }
-
-  private def avroPartitionType(dt: DataType): String = dt match {
-    case IntegerType | ShortType | ByteType | DateType => "int"
-    case LongType                                      => "long"
-    case StringType                                    => "string"
-    case BooleanType                                   => "boolean"
-    case other => throw new IllegalArgumentException(
-      s"unsupported Iceberg partition type $other")
-  }
-
-  /** Avro schema of one manifest entry, with Iceberg's spec field-ids
-    * and a table-specific r102 partition record. Partition-struct
-    * field ids are the PARTITION-SPEC ids (1000+i) — the ids an
-    * Iceberg reader binds partition data by — not the source column
-    * ids (those appear only as the spec's source-id).
-    */
-  private[graft] def manifestEntrySchema(partFields: Seq[StructField]): AvroSchema =
-    manifestEntrySchema(partFields, partFields.indices.map(1000 + _))
-
-  /** Variant for evolved partition specs, whose field ids continue
-    * from `last-partition-id` instead of restarting at 1000.
-    */
-  private[graft] def manifestEntrySchema(
-      partFields: Seq[StructField], fieldIds: Seq[Int]): AvroSchema =
-    manifestEntrySchema(partFields, fieldIds, withDvFields = false)
-
-  /** `withDvFields` appends the v3 deletion-vector data_file fields
-    * (143 referenced_data_file, 144 content_offset, 145
-    * content_size_in_bytes) — used only for DV delete manifests
-    * ([[graft.tables.IcebergWrite.deleteWhereDv]]); v2 manifests keep
-    * the v2 field set.
-    */
-  private[graft] def manifestEntrySchema(
-      partFields: Seq[StructField], fieldIds: Seq[Int],
-      withDvFields: Boolean): AvroSchema = {
-    require(fieldIds.size == partFields.size,
-      s"${fieldIds.size} field ids for ${partFields.size} partition fields")
-    val pFields = partFields.zip(fieldIds).map { case (f, id) =>
-      s"""{"name":${q(f.name)},"type":["null","${avroPartitionType(f.dataType)}"],
-         |"default":null,"field-id":$id}""".stripMargin
-    }.mkString(",")
-    val dvFields =
-      if (!withDvFields) ""
-      else
-        """,{"name":"referenced_data_file","type":["null","string"],"default":null,"field-id":143},
-          |{"name":"content_offset","type":["null","long"],"default":null,"field-id":144},
-          |{"name":"content_size_in_bytes","type":["null","long"],"default":null,"field-id":145}""".stripMargin
-    val json =
-      s"""{"type":"record","name":"manifest_entry","fields":[
-         |{"name":"status","type":"int","field-id":0},
-         |{"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
-         |{"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
-         |{"name":"file_sequence_number","type":["null","long"],"default":null,"field-id":4},
-         |{"name":"data_file","field-id":2,"type":{"type":"record","name":"r2","fields":[
-         |{"name":"content","type":"int","field-id":134},
-         |{"name":"file_path","type":"string","field-id":100},
-         |{"name":"file_format","type":"string","field-id":101},
-         |{"name":"partition","field-id":102,"type":{"type":"record","name":"r102","fields":[$pFields]}},
-         |{"name":"record_count","type":"long","field-id":103},
-         |{"name":"file_size_in_bytes","type":"long","field-id":104},
-         |${graft.tables.IcebergStats.manifestFieldsJson},
-         |{"name":"equality_ids","type":["null",{"type":"array","items":"int"}],"default":null,"field-id":135}$dvFields
-         |]}}]}""".stripMargin
-    new AvroSchema.Parser().parse(json)
-  }
-
-  private[graft] val manifestFileSchema: AvroSchema = new AvroSchema.Parser().parse(
-    """{"type":"record","name":"manifest_file","fields":[
-      |{"name":"manifest_path","type":"string","field-id":500},
-      |{"name":"manifest_length","type":"long","field-id":501},
-      |{"name":"partition_spec_id","type":"int","field-id":502},
-      |{"name":"content","type":"int","field-id":517},
-      |{"name":"sequence_number","type":"long","field-id":515},
-      |{"name":"min_sequence_number","type":"long","field-id":516},
-      |{"name":"added_snapshot_id","type":"long","field-id":503},
-      |{"name":"added_files_count","type":"int","field-id":504},
-      |{"name":"existing_files_count","type":"int","field-id":505},
-      |{"name":"deleted_files_count","type":"int","field-id":506},
-      |{"name":"added_rows_count","type":"long","field-id":512},
-      |{"name":"existing_rows_count","type":"long","field-id":513},
-      |{"name":"deleted_rows_count","type":"long","field-id":514},
-      |{"name":"partitions","type":["null",{"type":"array","element-id":508,"items":{"type":"record","name":"r508","fields":[
-      |{"name":"contains_null","type":"boolean","field-id":509},
-      |{"name":"contains_nan","type":["null","boolean"],"default":null,"field-id":518},
-      |{"name":"lower_bound","type":["null","bytes"],"default":null,"field-id":510},
-      |{"name":"upper_bound","type":["null","bytes"],"default":null,"field-id":511}
-      |]}}],"default":null,"field-id":507}
-      |]}""".stripMargin)
-
-  /** Carry one manifest-list row into graft's list schema, field by
-    * NAME. The `partitions` summaries are REBUILT record-by-record
-    * against graft's r508 element schema (also by name, optional
-    * fields defaulting) — Avro serializes nested generic records by
-    * the WRITER schema's field POSITIONS, so carrying a foreign
-    * writer's field_summary records verbatim (e.g. without the
-    * optional contains_nan) would crash the append. Unreadable
-    * summary shapes drop to null (fail-open pruning).
-    */
-  private[graft] def copyListRecord(
-      ls: AvroSchema,
-      prev: GenericRecord): GenericRecord = {
-    val c = new GenericData.Record(ls)
-    ls.getFields.forEach { f =>
-      val v =
-        if (prev.getSchema.getField(f.name()) == null)
-          // v1 lists lack content/sequence_number etc.: their v2
-          // semantics are 0 (data manifest, unassigned seq) — a null
-          // would crash serialization of the required int/long fields
-          f.schema().getType match {
-            case org.apache.avro.Schema.Type.INT  => Integer.valueOf(0)
-            case org.apache.avro.Schema.Type.LONG => java.lang.Long.valueOf(0L)
-            case _                                => null
-          }
-        else if (f.name() == "partitions") rebuildSummaries(ls, prev.get("partitions"))
-        else prev.get(f.name())
-      c.put(f.name(), v)
-    }
-    c
-  }
-
-  private def rebuildSummaries(ls: AvroSchema, src: Any): AnyRef =
-    try src match {
-      case l: java.util.List[_] =>
-        val elem = ls.getField("partitions").schema().getTypes.get(1).getElementType
-        val out = new java.util.ArrayList[GenericData.Record](l.size())
-        l.forEach {
-          case r: GenericRecord =>
-            def opt(n: String): Any =
-              if (r.getSchema.getField(n) == null) null else r.get(n)
-            val n = new GenericData.Record(elem)
-            n.put("contains_null", opt("contains_null") == true)
-            n.put("contains_nan", opt("contains_nan") match {
-              case b: java.lang.Boolean => b
-              case _ => null
-            })
-            n.put("lower_bound", opt("lower_bound") match {
-              case b: java.nio.ByteBuffer => b
-              case _ => null
-            })
-            n.put("upper_bound", opt("upper_bound") match {
-              case b: java.nio.ByteBuffer => b
-              case _ => null
-            })
-            out.add(n)
-          case _ => return null
-        }
-        out
-      case _ => null
-    } catch { case _: Exception => null }
 
   private def q(s: String): String = "\"" + s.replace("\"", "\\\"") + "\""
 

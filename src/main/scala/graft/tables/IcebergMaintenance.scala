@@ -1,6 +1,5 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -39,91 +38,10 @@ import org.apache.spark.sql.SparkSession
   */
 object IcebergMaintenance {
 
-  private val mapper = new ObjectMapper()
-
   private def intOf(r: org.apache.avro.generic.GenericRecord, f: String, d: Int): Int =
     Option(r.get(f)).map(_.asInstanceOf[Number].intValue()).getOrElse(d)
   private def longOf(r: org.apache.avro.generic.GenericRecord, f: String): Option[Long] =
     Option(r.get(f)).map(_.asInstanceOf[Number].longValue())
-
-  /** Copy one live source entry into `w` as status=EXISTING with its
-    * v2 sequence numbers MATERIALIZED (an inherited seq is pinned
-    * before the manifest it inherited from disappears). Shared by
-    * [[rewriteManifests]] and the scoped rewrite — the trickiest
-    * metadata logic in the file lives exactly once. Returns the
-    * entry's (data sequence number, record count) for the list row.
-    */
-  private def writeExistingEntry(
-      w: org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord],
-      entrySchema: org.apache.avro.Schema,
-      e: org.apache.avro.generic.GenericRecord,
-      manifestSeq: Long,
-      fallbackSnapshotId: Long): (Long, Long) = {
-    val dfSchema = entrySchema.getField("data_file").schema()
-    val pSchema = dfSchema.getField("partition").schema()
-    val df = e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
-    val eSeq = longOf(e, "sequence_number").getOrElse(manifestSeq)
-    val fSeq = longOf(e, "file_sequence_number").getOrElse(eSeq)
-    val part = new org.apache.avro.generic.GenericData.Record(pSchema)
-    Option(df.get("partition")) match {
-      case Some(src: org.apache.avro.generic.GenericRecord) =>
-        pSchema.getFields.forEach { f =>
-          if (src.getSchema.getField(f.name()) != null)
-            part.put(f.name(), src.get(f.name()))
-        }
-      case _ => ()
-    }
-    val dfr = new org.apache.avro.generic.GenericData.Record(dfSchema)
-    dfr.put("content", 0)
-    dfr.put("file_path", df.get("file_path").toString)
-    dfr.put("file_format",
-      Option(df.get("file_format")).map(_.toString).getOrElse("PARQUET"))
-    dfr.put("partition", part)
-    dfr.put("record_count", longOf(df, "record_count").getOrElse(0L))
-    dfr.put("file_size_in_bytes", longOf(df, "file_size_in_bytes").getOrElse(0L))
-    // column bounds survive manifest rewrites — dropping them would
-    // silently disable file skipping for every rewritten file
-    IcebergStats.copyStatsFields(df, dfr, dfSchema)
-    val ne = new org.apache.avro.generic.GenericData.Record(entrySchema)
-    ne.put("status", 0) // EXISTING
-    ne.put("snapshot_id", longOf(e, "snapshot_id").getOrElse(fallbackSnapshotId))
-    ne.put("sequence_number", eSeq)
-    ne.put("file_sequence_number", fSeq)
-    ne.put("data_file", dfr)
-    w.append(ne)
-    (eSeq, longOf(df, "record_count").getOrElse(0L))
-  }
-
-  /** One content=0 manifest-list row. */
-  private def dataListRecord(
-      ls: org.apache.avro.Schema, path: Path, len: Long, specId: Int,
-      seq: Long, minSeq: Long, snapshotId: Long,
-      addedFiles: Int, existingFiles: Int,
-      addedRows: Long, existingRows: Long): org.apache.avro.generic.GenericRecord = {
-    val n = new org.apache.avro.generic.GenericData.Record(ls)
-    n.put("manifest_path", path.toString)
-    n.put("manifest_length", len)
-    n.put("partition_spec_id", specId)
-    n.put("content", 0)
-    n.put("sequence_number", seq)
-    n.put("min_sequence_number", minSeq)
-    n.put("added_snapshot_id", snapshotId)
-    n.put("added_files_count", addedFiles)
-    n.put("existing_files_count", existingFiles)
-    n.put("deleted_files_count", 0)
-    n.put("added_rows_count", addedRows)
-    n.put("existing_rows_count", existingRows)
-    n.put("deleted_rows_count", 0L)
-    n
-  }
-
-  /** Carry a manifest-list row (by-name copy; foreign summaries are
-    * rebuilt against graft's schema — see IcebergUniform).
-    */
-  private def copyListRecord(
-      ls: org.apache.avro.Schema,
-      prev: org.apache.avro.generic.GenericRecord): org.apache.avro.generic.GenericRecord =
-    graft.export.IcebergUniform.copyListRecord(ls, prev)
 
   /** REWRITE MANIFESTS (the public `rewrite_manifests` maintenance
     * action): consolidate the current snapshot's DATA manifests into
@@ -156,7 +74,6 @@ object IcebergMaintenance {
         val nowMs = System.currentTimeMillis()
         val snapshotId = meta.snapshots.map(_.id).maxOption.getOrElse(0L) + 1
         val seq = root.path("last-sequence-number").asLong(0L) + 1
-        val specsNode = root.path("partition-specs")
 
         // one consolidated manifest per spec id
         val bySpec = dataManifests.groupBy(m => intOf(m, "partition_spec_id", 0))
@@ -173,62 +90,25 @@ object IcebergMaintenance {
             org.apache.spark.sql.types.StructField(sf.name,
               IcebergWrite.transformResultType(sf.transform, srcType))
           }
-          val specJson = IcebergMeta.elements(specsNode)
-            .find(_.path("spec-id").asInt(0) == specId)
-            .map(sn => mapper.writeValueAsString(sn.path("fields")))
-            .getOrElse("[]")
-          val entrySchema = graft.export.IcebergUniform.manifestEntrySchema(
-            partFields, spec.map(_.fieldId))
-          val outPath = new Path(metaDir, s"manifest-rw-$snapshotId-$specId-$uuid.avro")
-          val w = new org.apache.avro.file.DataFileWriter(
-            new org.apache.avro.generic.GenericDatumWriter[
-              org.apache.avro.generic.GenericRecord](entrySchema))
-          w.setMeta("schema", mapper.writeValueAsString(
-            IcebergMeta.elements(root.path("schemas")).find(
-              _.path("schema-id").asInt(-1) == root.path("current-schema-id").asInt(0))
-              .getOrElse(root.path("schemas").get(0))))
-          w.setMeta("partition-spec", specJson)
-          w.setMeta("partition-spec-id", specId.toString)
-          w.setMeta("format-version", "2")
-          w.setMeta("content", "data")
-          w.create(entrySchema, fs.create(outPath, true))
-          var files = 0L
-          var rows = 0L
-          var minSeq = Long.MaxValue
-          try {
+          IcebergManifests.write(fs,
+            new Path(metaDir, s"manifest-rw-$snapshotId-$specId-$uuid.avro"),
+            IcebergManifests.manifestEntrySchema(partFields, spec.map(_.fieldId)),
+            IcebergManifests.formatOf(root, Some(specId)),
+            deletes = false, snapshotId, seq) { w =>
             group.foreach { m =>
-              val mPath = m.get("manifest_path").toString
               val mSeq = longOf(m, "sequence_number").getOrElse(0L)
-              IcebergMeta.readAvro(fs, new Path(mPath)).foreach { e =>
-                if (intOf(e, "status", 0) != 2) {
-                  val (eSeq, rc) = writeExistingEntry(w, entrySchema, e, mSeq, snap.id)
-                  minSeq = math.min(minSeq, eSeq)
-                  files += 1
-                  rows += rc
-                }
+              IcebergMeta.readAvro(fs, new Path(m.get("manifest_path").toString)).foreach { e =>
+                if (intOf(e, "status", 0) != 2) w.addExisting(e, mSeq, snap.id)
               }
             }
-          } finally w.close()
-          (outPath, fs.getFileStatus(outPath).getLen, specId,
-            if (minSeq == Long.MaxValue) seq else minSeq, files, rows)
+          }
         }
 
         // manifest list: consolidated data manifests + delete manifests
         val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-        locally {
-          val ls = graft.export.IcebergUniform.manifestFileSchema
-          val w = new org.apache.avro.file.DataFileWriter(
-            new org.apache.avro.generic.GenericDatumWriter[
-              org.apache.avro.generic.GenericRecord](ls)).create(ls, fs.create(listPath, true))
-          try {
-            newManifests.foreach { case (p, len, specId, minSeq, files, rows) =>
-              w.append(dataListRecord(ls, p, len, specId, seq, minSeq, snapshotId,
-                addedFiles = 0, existingFiles = files.toInt,
-                addedRows = 0L, existingRows = rows))
-            }
-            deleteManifests.foreach(prev => w.append(copyListRecord(ls, prev)))
-          } finally w.close()
-        }
+        IcebergManifests.writeList(fs, listPath,
+          newManifests.map(IcebergManifests.listRow) ++
+            deleteManifests.map(IcebergManifests.copyListRecord))
 
         val root2 = root.deepCopy[ObjectNode]()
         IcebergWrite.appendSnapshotToRoot(root2, snapshotId, seq, nowMs, listPath,
@@ -237,7 +117,7 @@ object IcebergMaintenance {
             "manifests-replaced" -> dataManifests.size.toString,
             "manifests-created" -> newManifests.size.toString),
           parentId = Option(root.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-        (root2, newManifests.map(_._1) :+ listPath, snapshotId)
+        (root2, newManifests.map(_.path) :+ listPath, snapshotId)
       }
     }
   }
@@ -508,121 +388,48 @@ object IcebergMaintenance {
       val nowMs = System.currentTimeMillis()
       val snapshotId = meta.snapshots.map(_.id).maxOption.getOrElse(0L) + 1
       val seq = root.path("last-sequence-number").asLong(0L) + 1
-      val schemaJson = mapper.writeValueAsString(
-        IcebergMeta.elements(root.path("schemas")).find(
-          _.path("schema-id").asInt(-1) == root.path("current-schema-id").asInt(0))
-          .getOrElse(root.path("schemas").get(0)))
-      val specJson = IcebergMeta.elements(root.path("partition-specs"))
-        .find(_.path("spec-id").asInt(0) == meta.defaultSpecId)
-        .map(sn => mapper.writeValueAsString(sn.path("fields")))
-        .getOrElse("[]")
-      val entrySchema = graft.export.IcebergUniform.manifestEntrySchema(
+      val entrySchema = IcebergManifests.manifestEntrySchema(
         entryPartFields, spec0.map(_.fieldId))
-      val created = scala.collection.mutable.ListBuffer.empty[Path]
-
-      def newWriter(out: Path) = {
-        val w = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[
-            org.apache.avro.generic.GenericRecord](entrySchema))
-        w.setMeta("schema", schemaJson)
-        w.setMeta("partition-spec", specJson)
-        w.setMeta("partition-spec-id", meta.defaultSpecId.toString)
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "data")
-        w.create(entrySchema, fs.create(out, true))
-        created += out
-        w
-      }
-      val dfSchema = entrySchema.getField("data_file").schema()
-      val pSchema = dfSchema.getField("partition").schema()
-      val (committedSchema, _) =
-        IcebergMeta.schemaFromJson(mapper.readTree(schemaJson))
-      // top-level metadata ids only (see IcebergWrite's bounds note)
-      val fieldIdByName = committedSchema.fields.flatMap { f =>
-        if (f.metadata.contains(DeltaLog.FieldIdKey))
-          Some(f.name -> f.metadata.getLong(DeltaLog.FieldIdKey).toInt)
-        else None
-      }.toMap
-      val typeByName = committedSchema.fields.map(f => f.name -> f.dataType).toMap
+      val format = IcebergManifests.formatOf(root)
+      def writeManifest(name: String)(body: IcebergManifests.ManifestWriter => Unit) =
+        IcebergManifests.write(fs, new Path(metaDir, name), entrySchema, format,
+          deletes = false, snapshotId, seq)(body)
 
       // the compacted rows: one fresh ADDED manifest
-      val addPath = new Path(metaDir, s"manifest-cp-$snapshotId-$uuid.avro")
-      locally {
-        val w = newWriter(addPath)
-        try staged.foreach { sf =>
-          val p = new org.apache.avro.generic.GenericData.Record(pSchema)
-          partFields.foreach(pf => p.put(pf.name,
-            graft.export.IcebergUniform.partitionValue(pf.dataType, sf.partitionValues(pf.name))))
-          val dfr = new org.apache.avro.generic.GenericData.Record(dfSchema)
-          dfr.put("content", 0)
-          dfr.put("file_path", sf.path)
-          dfr.put("file_format", "PARQUET")
-          dfr.put("partition", p)
-          dfr.put("record_count", sf.recordCount)
-          dfr.put("file_size_in_bytes", sf.size)
-          IcebergStats.putStatsFields(dfr, dfSchema, sf.colStats,
-            fieldIdByName, typeByName, sf.recordCount)
-          val e = new org.apache.avro.generic.GenericData.Record(entrySchema)
-          e.put("status", 1) // ADDED
-          e.put("snapshot_id", snapshotId)
-          e.put("sequence_number", seq)
-          e.put("file_sequence_number", seq)
-          e.put("data_file", dfr)
-          w.append(e)
-        } finally w.close()
+      val added = writeManifest(s"manifest-cp-$snapshotId-$uuid.avro") { w =>
+        staged.foreach(w.addStaged(_, partFields))
       }
 
       // carried list rows: untouched manifests verbatim; manifests
       // losing files rewritten with kept entries as EXISTING
-      val listEntries = IcebergMeta.readAvro(fs, new Path(snap.manifestList))
-      val ls = graft.export.IcebergUniform.manifestFileSchema
-      val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      val lw = new org.apache.avro.file.DataFileWriter(
-        new org.apache.avro.generic.GenericDatumWriter[
-          org.apache.avro.generic.GenericRecord](ls)).create(ls, fs.create(listPath, true))
-      created += listPath
-      try {
-        // the new manifest first
-        lw.append(dataListRecord(ls, addPath, fs.getFileStatus(addPath).getLen,
-          meta.defaultSpecId, seq, minSeq = seq, snapshotId,
-          addedFiles = staged.size, existingFiles = 0,
-          addedRows = staged.map(_.recordCount).sum, existingRows = 0L))
-        listEntries.foreach { m =>
-          val mPath = m.get("manifest_path").toString
+      val carried: Seq[(org.apache.avro.generic.GenericRecord, Option[Path])] =
+        IcebergMeta.readAvro(fs, new Path(snap.manifestList)).zipWithIndex.flatMap { case (m, i) =>
           val mSeq = longOf(m, "sequence_number").getOrElse(0L)
-          val entries = IcebergMeta.readAvro(fs, new Path(mPath))
+          val entries = IcebergMeta.readAvro(fs, new Path(m.get("manifest_path").toString))
             .filter(e => intOf(e, "status", 0) != 2)
           val (dropped, kept) = entries.partition { e =>
             val df = e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
             scopePaths.contains(df.get("file_path").toString)
           }
-          if (dropped.isEmpty) { // untouched: carry verbatim
-            lw.append(copyListRecord(ls, m))
-          } else if (kept.nonEmpty) { // rewrite with survivors
-            val outPath = new Path(metaDir, s"manifest-cp-keep-$snapshotId-$uuid-${created.size}.avro")
-            val w = newWriter(outPath)
-            var files = 0L; var rowCount = 0L; var minSeq = Long.MaxValue
-            try kept.foreach { e =>
-              val (eSeq, rc) = writeExistingEntry(w, entrySchema, e, mSeq, snap.id)
-              minSeq = math.min(minSeq, eSeq)
-              files += 1
-              rowCount += rc
-            } finally w.close()
-            lw.append(dataListRecord(ls, outPath, fs.getFileStatus(outPath).getLen,
-              meta.defaultSpecId, seq,
-              minSeq = if (minSeq == Long.MaxValue) seq else minSeq, snapshotId,
-              addedFiles = 0, existingFiles = files.toInt,
-              addedRows = 0L, existingRows = rowCount))
-          } // fully-rewritten manifest: simply not carried
+          if (dropped.isEmpty) // untouched: carry verbatim
+            Some((IcebergManifests.copyListRecord(m), None))
+          else if (kept.nonEmpty) { // rewrite with survivors
+            val rw = writeManifest(s"manifest-cp-keep-$snapshotId-$uuid-$i.avro") { w =>
+              kept.foreach(w.addExisting(_, mSeq, snap.id))
+            }
+            Some((IcebergManifests.listRow(rw), Some(rw.path)))
+          } else None // fully-rewritten manifest: simply not carried
         }
-      } finally lw.close()
+      val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
+      IcebergManifests.writeList(fs, listPath,
+        IcebergManifests.listRow(added) +: carried.map(_._1))
 
       val root2 = root.deepCopy[ObjectNode]()
       IcebergWrite.appendSnapshotToRoot(root2, snapshotId, seq, nowMs, listPath,
         operation = operation,
         summaryExtras = summaryExtras,
         parentId = Option(root.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      Some((root2, created.toSeq, snapshotId))
+      Some((root2, (added.path +: carried.flatMap(_._2)) :+ listPath, snapshotId))
     }.get
     catch {
       // a stale plan or lost retries: the staged files will never be

@@ -275,7 +275,7 @@ object IcebergStats {
   // -------------------------------------------- manifest plumbing
 
   /** The four optional stats fields appended to the `data_file` Avro
-    * record ([[graft.export.IcebergUniform.manifestEntrySchema]]),
+    * record ([[IcebergManifests.manifestEntrySchema]]),
     * with the spec's field ids and required k-v array encoding for
     * non-string-keyed maps.
     */

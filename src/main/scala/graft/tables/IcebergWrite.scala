@@ -3,8 +3,7 @@ package graft.tables
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.export.IcebergUniform
-import org.apache.avro.file.DataFileWriter
-import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, element_at, lit, regexp_replace, typedLit}
@@ -391,83 +390,17 @@ object IcebergWrite {
             "candidate file(s); replan against the new snapshot")
       }
 
-      val schemas = baseRoot.path("schemas")
-      val cur = baseRoot.path("current-schema-id").asInt(0)
-      val schemaJson = mapper.writeValueAsString(
-        IcebergMeta.elements(schemas).find(_.path("schema-id").asInt(-1) == cur)
-          .getOrElse(schemas.get(0)))
-      val specs = baseRoot.path("partition-specs")
-      val specNode = IcebergMeta.elements(specs)
-        .find(_.path("spec-id").asInt(0) == baseRoot.path("default-spec-id").asInt(0))
-        .getOrElse(specs.get(0))
-      val specFieldsJson = mapper.writeValueAsString(specNode.path("fields"))
-      val specId = specNode.path("spec-id").asInt(0)
-
-      val entrySchema = IcebergUniform.manifestEntrySchema(partFields,
-        IcebergMeta.elements(specNode.path("fields")).map(_.path("field-id").asInt()))
-      val manifestPath = new Path(metaDir, s"delete-manifest-$snapshotId-$uuid.avro")
-      locally {
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-        w.setMeta("schema", schemaJson)
-        w.setMeta("partition-spec", specFieldsJson)
-        w.setMeta("partition-spec-id", specId.toString)
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "deletes")
-        w.create(entrySchema, fs.create(manifestPath, true))
-        try {
-          val dfSchema = entrySchema.getField("data_file").schema()
-          val pSchema = dfSchema.getField("partition").schema()
-          staged.foreach { sf =>
-            val p = new GenericData.Record(pSchema)
-            partFields.foreach { pf =>
-              p.put(pf.name,
-                IcebergUniform.partitionValue(pf.dataType, sf.partitionValues(pf.name)))
-            }
-            val dfr = new GenericData.Record(dfSchema)
-            dfr.put("content", 1) // position deletes
-            dfr.put("file_path", sf.path)
-            dfr.put("file_format", "PARQUET")
-            dfr.put("partition", p)
-            dfr.put("record_count", sf.recordCount)
-            dfr.put("file_size_in_bytes", sf.size)
-            val e = new GenericData.Record(entrySchema)
-            e.put("status", 1) // ADDED
-            e.put("snapshot_id", snapshotId)
-            e.put("sequence_number", seq)
-            e.put("file_sequence_number", seq)
-            e.put("data_file", dfr)
-            w.append(e)
-          }
-        } finally w.close()
+      val format = IcebergManifests.formatOf(baseRoot)
+      val manifest = IcebergManifests.write(fs,
+        new Path(metaDir, s"delete-manifest-$snapshotId-$uuid.avro"),
+        IcebergManifests.manifestEntrySchema(partFields, format.specFieldIds),
+        format, deletes = true, snapshotId, seq) { w =>
+        staged.foreach(w.addStaged(_, partFields, content = 1)) // position deletes
       }
-      val manifestLen = fs.getFileStatus(manifestPath).getLen
-
       val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      locally {
-        val ls = IcebergUniform.manifestFileSchema
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ls))
-          .create(ls, fs.create(listPath, true))
-        try {
-          currentManifestList(fs, baseRoot).foreach { prev =>
-            w.append(IcebergUniform.copyListRecord(ls, prev))
-          }
-          val n = new GenericData.Record(ls)
-          n.put("manifest_path", manifestPath.toString)
-          n.put("manifest_length", manifestLen)
-          n.put("partition_spec_id", specId)
-          n.put("content", 1) // deletes
-          n.put("sequence_number", seq)
-          n.put("min_sequence_number", seq)
-          n.put("added_snapshot_id", snapshotId)
-          n.put("added_files_count", staged.size)
-          n.put("existing_files_count", 0)
-          n.put("deleted_files_count", 0)
-          n.put("added_rows_count", staged.map(_.recordCount).sum)
-          n.put("existing_rows_count", 0L)
-          n.put("deleted_rows_count", 0L)
-          w.append(n)
-        } finally w.close()
-      }
+      IcebergManifests.writeList(fs, listPath,
+        currentManifestList(fs, baseRoot).map(IcebergManifests.copyListRecord) :+
+          IcebergManifests.listRow(manifest))
 
       val root = baseRoot.deepCopy[ObjectNode]()
       appendSnapshotToRoot(root, snapshotId, seq, nowMs, listPath,
@@ -476,7 +409,7 @@ object IcebergWrite {
           "added-delete-files" -> staged.size.toString,
           "added-position-deletes" -> staged.map(_.recordCount).sum.toString),
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      Some((root, Seq(manifestPath, listPath), snapshotId))
+      Some((root, Seq(manifest.path, listPath), snapshotId))
     }.get
   }
 
@@ -644,161 +577,82 @@ object IcebergWrite {
         targets.map { case (f, bm) => f.path -> bm }, snapshotId, seq)
       val puffinLen = fs.getFileStatus(puffinPath).getLen
 
-      val schemas = baseRoot.path("schemas")
-      val cur = baseRoot.path("current-schema-id").asInt(0)
-      val schemaJson = mapper.writeValueAsString(
-        IcebergMeta.elements(schemas).find(_.path("schema-id").asInt(-1) == cur)
-          .getOrElse(schemas.get(0)))
-      val specs = baseRoot.path("partition-specs")
-      val specNode = IcebergMeta.elements(specs)
-        .find(_.path("spec-id").asInt(0) == baseRoot.path("default-spec-id").asInt(0))
-        .getOrElse(specs.get(0))
-      val specFieldsJson = mapper.writeValueAsString(specNode.path("fields"))
-      val specId = specNode.path("spec-id").asInt(0)
-
-      val entrySchema = IcebergUniform.manifestEntrySchema(partFields,
-        IcebergMeta.elements(specNode.path("fields")).map(_.path("field-id").asInt()),
-        withDvFields = true)
-      val manifestPath = new Path(metaDir, s"dv-manifest-$snapshotId-$uuid.avro")
-      locally {
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-        w.setMeta("schema", schemaJson)
-        w.setMeta("partition-spec", specFieldsJson)
-        w.setMeta("partition-spec-id", specId.toString)
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "deletes")
-        w.create(entrySchema, fs.create(manifestPath, true))
-        try {
-          val dfSchema = entrySchema.getField("data_file").schema()
-          val pSchema = dfSchema.getField("partition").schema()
-          targets.foreach { case (f, bm) =>
-            val p = new GenericData.Record(pSchema)
-            partFields.foreach { pf =>
-              p.put(pf.name, IcebergUniform.partitionValue(pf.dataType,
-                Option(renderPartition(pf.dataType, f.partition.get(pf.name).orNull))))
-            }
-            val (off, size) = offs(f.path)
-            val dfr = new GenericData.Record(dfSchema)
-            dfr.put("content", 1) // DVs are position deletes by reference
-            dfr.put("file_path", puffinPath.toString)
-            dfr.put("file_format", "PUFFIN")
-            dfr.put("partition", p)
-            dfr.put("record_count", bm.cardinality)
-            dfr.put("file_size_in_bytes", puffinLen)
-            dfr.put("referenced_data_file", f.path)
-            dfr.put("content_offset", off)
-            dfr.put("content_size_in_bytes", size)
-            val e = new GenericData.Record(entrySchema)
-            e.put("status", 1) // ADDED
-            e.put("snapshot_id", snapshotId)
-            e.put("sequence_number", seq)
-            e.put("file_sequence_number", seq)
-            e.put("data_file", dfr)
-            w.append(e)
+      val format = IcebergManifests.formatOf(baseRoot)
+      val manifest = IcebergManifests.write(fs,
+        new Path(metaDir, s"dv-manifest-$snapshotId-$uuid.avro"),
+        IcebergManifests.manifestEntrySchema(partFields, format.specFieldIds,
+          withDvFields = true),
+        format, deletes = true, snapshotId, seq) { w =>
+        targets.foreach { case (f, bm) =>
+          val (off, size) = offs(f.path)
+          // DVs are position deletes by reference
+          w.add(1, puffinPath.toString, "PUFFIN",
+            partFields.map(pf => IcebergManifests.partitionValue(pf.dataType,
+              Option(renderPartition(pf.dataType, f.partition.get(pf.name).orNull)))),
+            bm.cardinality, puffinLen) { df =>
+            df.put("referenced_data_file", f.path)
+            df.put("content_offset", off)
+            df.put("content_size_in_bytes", size)
           }
-        } finally w.close()
+        }
       }
-      val manifestLen = fs.getFileStatus(manifestPath).getLen
 
       // superseded DVs drop in the same commit: rewrite every delete
       // manifest carrying a DV for a targeted file (kept entries ride
       // as EXISTING with explicit sequence numbers, superseded ones
       // recorded DELETED)
-      final case class RewrittenManifest(path: Path, len: Long,
-          kept: Int, dropped: Int, keptRows: Long, droppedRows: Long)
-      def rowsOf(es: Seq[GenericRecord]): Long = es.map { e =>
-        Option(e.get("data_file").asInstanceOf[GenericRecord].get("record_count"))
-          .map(_.asInstanceOf[Number].longValue).getOrElse(0L)
-      }.sum
-      val rewritten: Map[String, RewrittenManifest] =
-        IcebergMeta.manifestInfos(fs, baseSnap).filter(_.content == 1).flatMap { mi =>
-          val raws = IcebergMeta.readAvro(fs, new Path(mi.path))
-          def refOf(e: GenericRecord): Option[String] = {
-            val df = e.get("data_file").asInstanceOf[GenericRecord]
-            if (df.getSchema.getField("referenced_data_file") == null) None
-            else Option(df.get("referenced_data_file")).map(_.toString)
-          }
-          def statusOf(e: GenericRecord): Int =
-            Option(e.get("status")).map(_.asInstanceOf[Number].intValue).getOrElse(0)
+      def refOf(e: GenericRecord): Option[String] = {
+        val df = e.get("data_file").asInstanceOf[GenericRecord]
+        if (df.getSchema.getField("referenced_data_file") == null) None
+        else Option(df.get("referenced_data_file")).map(_.toString)
+      }
+      def statusOf(e: GenericRecord): Int =
+        Option(e.get("status")).map(_.asInstanceOf[Number].intValue).getOrElse(0)
+      val carried: Seq[(GenericRecord, Option[Path])] =
+        currentManifestList(fs, baseRoot).map { prev =>
+          val row = IcebergManifests.copyListRecord(prev)
+          val mPath = row.get("manifest_path").toString
+          val raws =
+            if (row.get("content") == 1) IcebergMeta.readAvro(fs, new Path(mPath))
+            else Seq.empty
           val (drop, keep) = raws.partition(e => statusOf(e) != 2 &&
             refOf(e).exists(r => targetKeys(PathNorm.normalize(r))))
-          if (drop.isEmpty) None
+          if (drop.isEmpty) (row, None)
           else {
-            val keepLive = keep.filter(e => statusOf(e) != 2)
-            val es = raws.head.getSchema
-            val p = new Path(metaDir, s"rw-manifest-$snapshotId-$uuid-${mi.path.hashCode.toHexString}.avro")
-            val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](es))
-            w.setMeta("schema", schemaJson)
-            w.setMeta("partition-spec", specFieldsJson)
-            w.setMeta("partition-spec-id", mi.specId.toString)
-            w.setMeta("format-version", "2")
-            w.setMeta("content", "deletes")
-            w.create(es, fs.create(p, true))
-            try {
-              // explicit sequence numbers first: EXISTING/DELETED
-              // entries don't inherit the rewritten manifest's — and
-              // the spec permits a null file_sequence_number only on
-              // ADDED entries, so the inherited value (the sequence
-              // number of the manifest that added the file) must be
-              // materialized here too or a conforming foreign reader
-              // would re-inherit the NEW snapshot's
-              def fixSeq(e: GenericRecord): Unit = {
-                if (e.get("sequence_number") == null)
-                  e.put("sequence_number", mi.sequenceNumber)
-                if (e.get("file_sequence_number") == null)
-                  e.put("file_sequence_number", mi.sequenceNumber)
+            val mSeq = row.get("sequence_number").asInstanceOf[Long]
+            // explicit sequence numbers first: EXISTING/DELETED
+            // entries don't inherit the rewritten manifest's — and
+            // the spec permits a null file_sequence_number only on
+            // ADDED entries, so the inherited value (the sequence
+            // number of the manifest that added the file) must be
+            // materialized here too or a conforming foreign reader
+            // would re-inherit the NEW snapshot's
+            def fixSeq(e: GenericRecord): Unit = {
+              if (e.get("sequence_number") == null) e.put("sequence_number", mSeq)
+              if (e.get("file_sequence_number") == null) e.put("file_sequence_number", mSeq)
+            }
+            // the rewritten manifest keeps the list row's spec, added
+            // snapshot and sequence number
+            val m = IcebergManifests.write(fs,
+              new Path(metaDir, s"rw-manifest-$snapshotId-$uuid-${mPath.hashCode.toHexString}.avro"),
+              raws.head.getSchema,
+              format.copy(specId = row.get("partition_spec_id").asInstanceOf[Int]),
+              deletes = true, row.get("added_snapshot_id").asInstanceOf[Long], mSeq) { w =>
+              keep.filter(statusOf(_) != 2).foreach { e =>
+                fixSeq(e); e.put("status", 0); w.append(e)
               }
-              keepLive.foreach { e => fixSeq(e); e.put("status", 0); w.append(e) }
               drop.foreach { e =>
                 fixSeq(e); e.put("status", 2)
                 e.put("snapshot_id", snapshotId) // the deleting snapshot
                 w.append(e)
               }
-            } finally w.close()
-            Some(mi.path -> RewrittenManifest(p, fs.getFileStatus(p).getLen,
-              keepLive.size, drop.size, rowsOf(keepLive), rowsOf(drop)))
-          }
-        }.toMap
-
-      val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      locally {
-        val ls = IcebergUniform.manifestFileSchema
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ls))
-          .create(ls, fs.create(listPath, true))
-        try {
-          currentManifestList(fs, baseRoot).foreach { prev =>
-            rewritten.get(prev.get("manifest_path").toString) match {
-              case None => w.append(IcebergUniform.copyListRecord(ls, prev))
-              case Some(rw) =>
-                val n = IcebergUniform.copyListRecord(ls, prev)
-                n.put("manifest_path", rw.path.toString)
-                n.put("manifest_length", rw.len)
-                n.put("added_files_count", 0)
-                n.put("existing_files_count", rw.kept)
-                n.put("deleted_files_count", rw.dropped)
-                n.put("added_rows_count", 0L)
-                n.put("existing_rows_count", rw.keptRows)
-                n.put("deleted_rows_count", rw.droppedRows)
-                w.append(n)
             }
+            (IcebergManifests.listRow(m), Some(m.path))
           }
-          val n = new GenericData.Record(ls)
-          n.put("manifest_path", manifestPath.toString)
-          n.put("manifest_length", manifestLen)
-          n.put("partition_spec_id", specId)
-          n.put("content", 1) // deletes
-          n.put("sequence_number", seq)
-          n.put("min_sequence_number", seq)
-          n.put("added_snapshot_id", snapshotId)
-          n.put("added_files_count", targets.size)
-          n.put("existing_files_count", 0)
-          n.put("deleted_files_count", 0)
-          n.put("added_rows_count", targets.map(_._2.cardinality).sum)
-          n.put("existing_rows_count", 0L)
-          n.put("deleted_rows_count", 0L)
-          w.append(n)
-        } finally w.close()
-      }
+        }
+      val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
+      IcebergManifests.writeList(fs, listPath,
+        carried.map(_._1) :+ IcebergManifests.listRow(manifest))
 
       val root = baseRoot.deepCopy[ObjectNode]()
       root.put("format-version", 3) // DVs are an Iceberg v3 feature
@@ -808,8 +662,8 @@ object IcebergWrite {
           "added-dvs" -> targets.size.toString,
           "added-position-deletes" -> targets.map(_._2.cardinality).sum.toString),
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      Some((root, Seq(puffinPath, manifestPath, listPath) ++
-        rewritten.values.map(_.path), snapshotId))
+      Some((root, Seq(puffinPath, manifest.path, listPath) ++
+        carried.flatMap(_._2), snapshotId))
     }.get
   }
 
@@ -872,39 +726,15 @@ object IcebergWrite {
       val snapshotId = prevSnapshots.map(_.path("snapshot-id").asLong()).maxOption.getOrElse(0L) + 1
       val seq = baseRoot.path("last-sequence-number").asLong(0L) + 1
 
-      val (manifestPath, manifestLen, specId, newSpecMinted) =
-        writeEqualityManifest(fs, metaDir, baseRoot, tablePath,
-          snapshotId, seq, uuid, keyCols, staged)
-
+      val (manifest, newSpecMinted) = writeEqualityManifest(fs, metaDir, baseRoot,
+        tablePath, snapshotId, seq, uuid, keyCols, staged)
       val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      locally {
-        val ls = IcebergUniform.manifestFileSchema
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ls))
-          .create(ls, fs.create(listPath, true))
-        try {
-          currentManifestList(fs, baseRoot).foreach { prev =>
-            w.append(IcebergUniform.copyListRecord(ls, prev))
-          }
-          val n = new GenericData.Record(ls)
-          n.put("manifest_path", manifestPath.toString)
-          n.put("manifest_length", manifestLen)
-          n.put("partition_spec_id", specId)
-          n.put("content", 1) // deletes
-          n.put("sequence_number", seq)
-          n.put("min_sequence_number", seq)
-          n.put("added_snapshot_id", snapshotId)
-          n.put("added_files_count", staged.size)
-          n.put("existing_files_count", 0)
-          n.put("deleted_files_count", 0)
-          n.put("added_rows_count", staged.map(_.recordCount).sum)
-          n.put("existing_rows_count", 0L)
-          n.put("deleted_rows_count", 0L)
-          w.append(n)
-        } finally w.close()
-      }
+      IcebergManifests.writeList(fs, listPath,
+        currentManifestList(fs, baseRoot).map(IcebergManifests.copyListRecord) :+
+          IcebergManifests.listRow(manifest))
 
       val root = baseRoot.deepCopy[ObjectNode]()
-      if (newSpecMinted) appendEmptySpec(root, specId)
+      if (newSpecMinted) appendEmptySpec(root, manifest.specId)
       appendSnapshotToRoot(root, snapshotId, seq, nowMs, listPath,
         operation = "delete",
         summaryExtras = Seq(
@@ -913,7 +743,7 @@ object IcebergWrite {
           txn.toSeq.flatMap { case (app, id) => Seq(
             TxnAppKey -> app, TxnBatchKey -> id.toString) },
         parentId = Option(baseRoot.path("current-snapshot-id").asLong(-1L)).filter(_ >= 0))
-      Some((root, Seq(manifestPath, listPath), snapshotId))
+      Some((root, Seq(manifest.path, listPath), snapshotId))
     }.get
   }
 
@@ -989,8 +819,8 @@ object IcebergWrite {
     * under an unpartitioned spec resolved against `baseRoot` (reused
     * when one exists, otherwise a fresh id the CALLER must append via
     * [[appendEmptySpec]]). Field ids resolve by name against the
-    * attempt's current schema. Returns (path, length, specId,
-    * newSpecMinted).
+    * attempt's current schema. Returns the manifest and whether its
+    * spec was newly minted.
     */
   private def writeEqualityManifest(
       fs: FileSystem,
@@ -1002,13 +832,8 @@ object IcebergWrite {
       uuid: String,
       keyCols: Seq[String],
       staged: Seq[StagedFile]
-  ): (Path, Long, Int, Boolean) = {
-    val schemas = baseRoot.path("schemas")
-    val cur = baseRoot.path("current-schema-id").asInt(0)
-    val sj = IcebergMeta.elements(schemas)
-      .find(_.path("schema-id").asInt(-1) == cur).getOrElse(schemas.get(0))
-    val schemaJson = mapper.writeValueAsString(sj)
-    val idsByName = IcebergMeta.elements(sj.path("fields"))
+  ): (IcebergManifests.Written, Boolean) = {
+    val idsByName = IcebergMeta.elements(IcebergManifests.currentSchema(baseRoot).path("fields"))
       .map(f => f.path("name").asText() -> f.path("id").asInt()).toMap
     val eqIds = keyCols.map(c => idsByName.getOrElse(c,
       throw new IllegalArgumentException(
@@ -1020,39 +845,14 @@ object IcebergWrite {
     val specId = emptySpec.map(_.path("spec-id").asInt(0)).getOrElse(
       IcebergMeta.elements(specs).map(_.path("spec-id").asInt(0)).maxOption.getOrElse(-1) + 1)
 
-    val entrySchema = IcebergUniform.manifestEntrySchema(Seq.empty, Seq.empty)
-    val manifestPath = new Path(metaDir, s"eq-delete-manifest-$snapshotId-$uuid.avro")
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-    w.setMeta("schema", schemaJson)
-    w.setMeta("partition-spec", "[]")
-    w.setMeta("partition-spec-id", specId.toString)
-    w.setMeta("format-version", "2")
-    w.setMeta("content", "deletes")
-    w.create(entrySchema, fs.create(manifestPath, true))
-    try {
-      val dfSchema = entrySchema.getField("data_file").schema()
-      val pSchema = dfSchema.getField("partition").schema()
-      staged.foreach { sf =>
-        val dfr = new GenericData.Record(dfSchema)
-        dfr.put("content", 2) // equality deletes
-        dfr.put("file_path", sf.path)
-        dfr.put("file_format", "PARQUET")
-        dfr.put("partition", new GenericData.Record(pSchema))
-        dfr.put("record_count", sf.recordCount)
-        dfr.put("file_size_in_bytes", sf.size)
-        val ids = new java.util.ArrayList[Integer]()
-        eqIds.foreach(i => ids.add(i))
-        dfr.put("equality_ids", ids)
-        val e = new GenericData.Record(entrySchema)
-        e.put("status", 1) // ADDED
-        e.put("snapshot_id", snapshotId)
-        e.put("sequence_number", seq)
-        e.put("file_sequence_number", seq)
-        e.put("data_file", dfr)
-        w.append(e)
-      }
-    } finally w.close()
-    (manifestPath, fs.getFileStatus(manifestPath).getLen, specId, emptySpec.isEmpty)
+    val manifest = IcebergManifests.write(fs,
+      new Path(metaDir, s"eq-delete-manifest-$snapshotId-$uuid.avro"),
+      IcebergManifests.manifestEntrySchema(Seq.empty),
+      IcebergManifests.formatOf(baseRoot, Some(specId)),
+      deletes = true, snapshotId, seq) { w =>
+      staged.foreach(w.addStaged(_, Seq.empty, content = 2, equalityIds = eqIds))
+    }
+    (manifest, emptySpec.isEmpty)
   }
 
   /** Create or move a named snapshot REF (the public spec's `refs`
@@ -1529,10 +1329,7 @@ object IcebergWrite {
         baseRoot match {
           case Some(r) =>
             val schemas = r.path("schemas")
-            val cur = r.path("current-schema-id").asInt(0)
-            val sj = IcebergMeta.elements(schemas)
-              .find(_.path("schema-id").asInt(-1) == cur)
-              .getOrElse(schemas.get(0))
+            val sj = IcebergManifests.currentSchema(r)
             val specs = r.path("partition-specs")
             val baseLast = r.path("last-column-id").asInt()
             // the added/widened diff is recomputed HERE, against the
@@ -1647,114 +1444,29 @@ object IcebergWrite {
       }
 
       // new data manifest (uuid-named: attempts never collide)
-      val entrySchema = IcebergUniform.manifestEntrySchema(partFields, manifestFieldIds)
-      val manifestPath = new Path(metaDir, s"manifest-$snapshotId-$uuid.avro")
-      locally {
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
-        w.setMeta("schema", schemaJson)
-        w.setMeta("partition-spec", specFieldsJson)
-        w.setMeta("partition-spec-id", specId.toString)
-        w.setMeta("format-version", "2")
-        w.setMeta("content", "data")
-        w.create(entrySchema, fs.create(manifestPath, true))
-        try {
-          val dfSchema = entrySchema.getField("data_file").schema()
-          val pSchema = dfSchema.getField("partition").schema()
-          // column ids/types from the COMMITTED schema JSON (covers
-          // both fresh and evolved schemas) for the bounds maps —
-          // TOP-LEVEL metadata ids only, never an idToName inversion
-          // (nested leaves sharing a top-level name would misattribute
-          // bounds)
-          val (committedSchema, _) =
-            IcebergMeta.schemaFromJson(mapper.readTree(schemaJson))
-          val fieldIdByName = committedSchema.fields.flatMap { f =>
-            if (f.metadata.contains(DeltaLog.FieldIdKey))
-              Some(f.name -> f.metadata.getLong(DeltaLog.FieldIdKey).toInt)
-            else None
-          }.toMap
-          val typeByName = committedSchema.fields.map(f => f.name -> f.dataType).toMap
-          staged.foreach { sf =>
-            val p = new GenericData.Record(pSchema)
-            partFields.foreach { pf =>
-              p.put(pf.name,
-                IcebergUniform.partitionValue(pf.dataType, sf.partitionValues(pf.name)))
-            }
-            val dfr = new GenericData.Record(dfSchema)
-            dfr.put("content", 0)
-            dfr.put("file_path", sf.path)
-            dfr.put("file_format", sf.fileFormat)
-            dfr.put("partition", p)
-            dfr.put("record_count", sf.recordCount)
-            dfr.put("file_size_in_bytes", sf.size)
-            IcebergStats.putStatsFields(dfr, dfSchema, sf.colStats,
-              fieldIdByName, typeByName, sf.recordCount)
-            val e = new GenericData.Record(entrySchema)
-            e.put("status", 1) // ADDED
-            e.put("snapshot_id", snapshotId)
-            e.put("sequence_number", seq)
-            e.put("file_sequence_number", seq)
-            e.put("data_file", dfr)
-            w.append(e)
-          }
-        } finally w.close()
+      val manifest = IcebergManifests.write(fs,
+        new Path(metaDir, s"manifest-$snapshotId-$uuid.avro"),
+        IcebergManifests.manifestEntrySchema(partFields, manifestFieldIds),
+        IcebergManifests.Format(schemaJson, specId, specFieldsJson),
+        deletes = false, snapshotId, seq) { w =>
+        staged.foreach(w.addStaged(_, partFields))
       }
-      val manifestLen = fs.getFileStatus(manifestPath).getLen
-
-      val eqManifest: Option[(Path, Long, Int, Boolean)] =
+      val eqManifest: Option[(IcebergManifests.Written, Boolean)] =
         if (eqStaged.isEmpty) None
         else Some(writeEqualityManifest(fs, metaDir, baseRoot.get, tablePath,
           snapshotId, seq, uuid, eqDeleteKeys.get, eqStaged))
 
       // manifest list: the base snapshot's manifests carried verbatim
-      // + the new one
+      // + the new ones; an append bases on the BRANCH head when
+      // writing to a branch (a missing branch forks from the current
+      // head)
+      val carried =
+        if (!carryBase) Seq.empty
+        else baseRoot.toSeq.flatMap(r => manifestListOf(fs, r, headIdFor(r, branch)))
       val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
-      locally {
-        val s = IcebergUniform.manifestFileSchema
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
-          .create(s, fs.create(listPath, true))
-        try {
-          // an append bases on the BRANCH head when writing to a
-          // branch (a missing branch forks from the current head)
-          if (carryBase) baseRoot.foreach { r =>
-            manifestListOf(fs, r, headIdFor(r, branch)).foreach { prev =>
-              w.append(IcebergUniform.copyListRecord(s, prev))
-            }
-          }
-          val n = new GenericData.Record(s)
-          n.put("manifest_path", manifestPath.toString)
-          n.put("manifest_length", manifestLen)
-          n.put("partition_spec_id", specId)
-          n.put("content", 0)
-          n.put("sequence_number", seq)
-          n.put("min_sequence_number", seq)
-          n.put("added_snapshot_id", snapshotId)
-          n.put("added_files_count", staged.size)
-          n.put("existing_files_count", 0)
-          n.put("deleted_files_count", 0)
-          n.put("added_rows_count", staged.map(_.recordCount).sum)
-          n.put("existing_rows_count", 0L)
-          n.put("deleted_rows_count", 0L)
-          n.put("partitions", partitionSummariesList(s, partFields, staged))
-          w.append(n)
-          eqManifest.foreach { case (p, len, sid, _) =>
-            val d = new GenericData.Record(s)
-            d.put("manifest_path", p.toString)
-            d.put("manifest_length", len)
-            d.put("partition_spec_id", sid)
-            d.put("content", 1) // deletes
-            d.put("sequence_number", seq)
-            d.put("min_sequence_number", seq)
-            d.put("added_snapshot_id", snapshotId)
-            d.put("added_files_count", eqStaged.size)
-            d.put("existing_files_count", 0)
-            d.put("deleted_files_count", 0)
-            d.put("added_rows_count", eqStaged.map(_.recordCount).sum)
-            d.put("existing_rows_count", 0L)
-            d.put("deleted_rows_count", 0L)
-            w.append(d)
-          }
-        } finally w.close()
-      }
+      IcebergManifests.writeList(fs, listPath,
+        carried.map(IcebergManifests.copyListRecord) ++
+          (manifest +: eqManifest.map(_._1).toSeq).map(IcebergManifests.listRow))
 
       // metadata JSON: mutate a copy of the base (preserves schemas,
       // specs, history from ANY previous writer) or build fresh
@@ -1781,8 +1493,8 @@ object IcebergWrite {
           }
           if (c.path("default-spec-id").asInt(0) != specId)
             c.put("default-spec-id", specId)
-          eqManifest.foreach { case (_, _, sid, minted) =>
-            if (minted) appendEmptySpec(c, sid)
+          eqManifest.foreach { case (m, minted) =>
+            if (minted) appendEmptySpec(c, m.specId)
           }
           c
         case None =>
@@ -1833,7 +1545,7 @@ object IcebergWrite {
             TxnAppKey -> app, TxnBatchKey -> id.toString) },
         branch = branch,
         parentId = baseRoot.map(r => headIdFor(r, branch)).filter(_ >= 0))
-      Some((root, eqManifest.map(_._1).toSeq ++ Seq(manifestPath, listPath), snapshotId))
+      Some((root, eqManifest.map(_._1.path).toSeq ++ Seq(manifest.path, listPath), snapshotId))
     }.get
   }
 
@@ -2098,46 +1810,6 @@ object IcebergWrite {
       case (t, dt) => throw new UnsupportedOperationException(
         s"partition transform $t is unsupported for ${dt.simpleString} column ${src.name} on write")
     }
-  }
-
-  /** Manifest-list `partitions` summaries (field 507) for one new
-    * data manifest: per spec field, contains_null + [lower, upper]
-    * over the staged partition tuples — what lets a reader SKIP this
-    * manifest without opening it. Null when there is nothing to
-    * summarize (unpartitioned, or no files).
-    */
-  private[tables] def partitionSummariesList(
-      listSchema: org.apache.avro.Schema,
-      partFields: Seq[org.apache.spark.sql.types.StructField],
-      staged: Seq[StagedFile]): AnyRef = {
-    val field = listSchema.getField("partitions")
-    if (field == null || partFields.isEmpty || staged.isEmpty) return null
-    val elem = field.schema().getTypes.get(1).getElementType
-    val recs = partFields.map { pf =>
-      val values = staged.map(sf =>
-        IcebergUniform.partitionValue(pf.dataType, sf.partitionValues(pf.name)))
-      val nonNull = values.filter(_ != null)
-      val r = new GenericData.Record(elem)
-      r.put("contains_null", nonNull.size != values.size)
-      // supported partition tuple types (int/long/string/boolean/
-      // epoch-day date) can never be NaN — recording it lets readers
-      // prune null-only summaries
-      r.put("contains_nan", java.lang.Boolean.FALSE)
-      if (nonNull.nonEmpty) {
-        val lo = nonNull.reduce((a, b) =>
-          if (IcebergStats.comparePartitionValues(a, b).exists(_ <= 0)) a else b)
-        val hi = nonNull.reduce((a, b) =>
-          if (IcebergStats.comparePartitionValues(a, b).exists(_ >= 0)) a else b)
-        IcebergStats.encodePartitionBound(lo)
-          .foreach(b => r.put("lower_bound", java.nio.ByteBuffer.wrap(b)))
-        IcebergStats.encodePartitionBound(hi)
-          .foreach(b => r.put("upper_bound", java.nio.ByteBuffer.wrap(b)))
-      }
-      r
-    }
-    val out = new java.util.ArrayList[GenericData.Record](recs.size)
-    recs.foreach(out.add)
-    out
   }
 
   private[tables] def stage(

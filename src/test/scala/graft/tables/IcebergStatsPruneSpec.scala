@@ -2,7 +2,6 @@ package graft.tables
 
 import graft.SparkSpec
 import graft.core.{Filter, Filters}
-import graft.export.IcebergUniform
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
@@ -149,6 +148,59 @@ class IcebergStatsPruneSpec extends SparkSpec {
     }
   }
 
+  test("rewriteManifests and scoped rewriteDataFiles record exact partition summaries (proof by corruption)") {
+    // appends with p in {0, 1}, {0, 1} and {2}: three manifests
+    def table(name: String): String = {
+      val dir = tempDir(name).toString + "/t"
+      IcebergWrite.append(spark, Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "v", "p"), dir, Seq("p"))
+      IcebergWrite.append(spark, Seq((3L, "c", 0), (4L, "d", 1)).toDF("id", "v", "p"), dir, Seq("p"))
+      IcebergWrite.append(spark, Seq((5L, "e", 2), (6L, "f", 2)).toDF("id", "v", "p"), dir, Seq("p"))
+      dir
+    }
+    def read(dir: String, f: Filter): Seq[Long] =
+      new IcebergTable("t", dir)(spark, ReadArgs.where(f)).collect().map(_.getLong(0)).sorted.toSeq
+    val probes = Seq(Filter("p", "=", 0), Filter("p", "=", 1), Filter("p", "=", 2), Filter("p", ">", 0))
+    val fsys = new Path(tempDir("ice-msum-fs").toString)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // every data manifest's summary is [min, max] of its live tuples
+    def exactSummaries(dir: String): Seq[(IcebergMeta.ManifestInfo, Seq[Int])] = {
+      val snap = IcebergMeta.selectSnapshot(IcebergMeta.load(fsys, dir), None, None)
+      IcebergMeta.manifestInfos(fsys, snap).filter(_.content == 0).map { mi =>
+        val ps = IcebergMeta.contentFilesOfManifest(fsys, mi).map(_.partition("p").asInstanceOf[Int])
+        val sum = mi.summaries.getOrElse(fail(s"${mi.path} has no partition summaries"))
+        def bound(b: Option[Array[Byte]]) = b.flatMap(IcebergStats.decodeSingle(IntegerType, _))
+        assert(sum.size == 1 && !sum.head.containsNull, mi.path)
+        assert(bound(sum.head.lower).contains(ps.min) && bound(sum.head.upper).contains(ps.max),
+          s"${mi.path}: summary is not [${ps.min}, ${ps.max}]")
+        mi -> ps
+      }
+    }
+
+    val consolidated = table("ice-msum-rwm")
+    val before = probes.map(read(consolidated, _))
+    assert(IcebergMaintenance.rewriteManifests(spark, consolidated).isDefined)
+    val Seq((only, _)) = exactSummaries(consolidated)
+    assert(probes.map(read(consolidated, _)) == before)
+    // DESTROY the one manifest: a probe outside [0, 2] must skip it
+    fsys.delete(new Path(only.path), false)
+    assert(read(consolidated, Filter("p", "=", 5)).isEmpty)
+    intercept[Exception](read(consolidated, Filter("p", "=", 1)))
+
+    val scoped = table("ice-msum-rwd")
+    assert(probes.map(read(scoped, _)) == before)
+    IcebergMaintenance.rewriteDataFiles(spark, scoped, Filters.normalize(Seq(Filter("p", "=", 0))))
+    val manifests = exactSummaries(scoped)
+    // the compacted p=0 manifest, two rewritten p=1 survivors, and
+    // the untouched p=2 manifest
+    assert(manifests.map(_._2.distinct).sortBy(_.head) == Seq(Seq(0), Seq(1), Seq(1), Seq(2)))
+    assert(probes.map(read(scoped, _)) == before)
+    // DESTROY every manifest the rewrite wrote: a p=2 probe must
+    // never open them
+    manifests.filterNot(_._2.contains(2)).foreach(m => fsys.delete(new Path(m._1.path), false))
+    assert(read(scoped, Filter("p", "=", 2)) == Seq(5L, 6L))
+    intercept[Exception](read(scoped, Filter("p", "=", 1)))
+  }
+
   test("foreign field_summary shapes carry by NAME (no positional re-serialization crash)") {
     // an Iceberg <= 0.10-era summary record: no contains_nan, and the
     // bounds ordered differently — carrying it verbatim would
@@ -175,8 +227,8 @@ class IcebergStatsPruneSpec extends SparkSpec {
     prev.put("partition_spec_id", 0)
     prev.put("partitions", java.util.Collections.singletonList(sum))
 
-    val ls = IcebergUniform.manifestFileSchema
-    val copied = IcebergUniform.copyListRecord(ls, prev)
+    val ls = IcebergManifests.manifestFileSchema
+    val copied = IcebergManifests.copyListRecord(prev)
     // serializing through graft's schema must succeed end-to-end
     val bos = new java.io.ByteArrayOutputStream()
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](ls))
@@ -206,7 +258,7 @@ class IcebergStatsPruneSpec extends SparkSpec {
 
     def longLe(v: Long): ByteBuffer =
       ByteBuffer.wrap(ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN).putLong(v).array())
-    val entrySchema = IcebergUniform.manifestEntrySchema(Seq.empty)
+    val entrySchema = IcebergManifests.manifestEntrySchema(Seq.empty)
     val dfSchema = entrySchema.getField("data_file").schema()
     def kv(field: String, k: Int, v: Any): java.util.List[GenericData.Record] = {
       val is = dfSchema.getField(field).schema().getTypes.get(1).getElementType
@@ -248,7 +300,7 @@ class IcebergStatsPruneSpec extends SparkSpec {
     }
     val listPath = new Path(metaDir, "snap-1.avro")
     locally {
-      val s = IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
         .create(s, fs.create(listPath, true))
       val r = new GenericData.Record(s)

@@ -117,7 +117,7 @@ class IcebergTableSpec extends SparkSpec {
     // seq 1 == data seq: NOT strictly newer, must not apply
     val (del1Path, del1Len) = oneParquet(root + "/del1", Seq(Option(1L)).toDF("id"))
 
-    val entrySchema = IcebergUniform.manifestEntrySchema(Seq.empty)
+    val entrySchema = IcebergManifests.manifestEntrySchema(Seq.empty)
     def writeManifest(name: String, content: String,
         entries: Seq[(String, Long, Long, Int, Long)]): (String, Long) = {
       val p = new Path(metaDir, name)
@@ -155,7 +155,7 @@ class IcebergTableSpec extends SparkSpec {
 
     val listPath = new Path(metaDir, "snap-1.avro")
     locally {
-      val s = IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
         .create(s, fs.create(listPath, true))
       try Seq((dataManifest, dataManifestLen, 0), (delManifest, delManifestLen, 1))

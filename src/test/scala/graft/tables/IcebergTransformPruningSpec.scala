@@ -2,7 +2,6 @@ package graft.tables
 
 import graft.SparkSpec
 import graft.core.{Filter, Filters}
-import graft.export.IcebergUniform
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
@@ -77,7 +76,7 @@ class IcebergTransformPruningSpec extends SparkSpec {
       (f.getPath.toUri.getPath, f.getLen, df.count())
     }
 
-    val entrySchema = IcebergUniform.manifestEntrySchema(partFields)
+    val entrySchema = IcebergManifests.manifestEntrySchema(partFields)
     val manifestPath = new Path(metaDir, "m-data.avro")
     val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](entrySchema))
     w.setMeta("format-version", "2")
@@ -107,7 +106,7 @@ class IcebergTransformPruningSpec extends SparkSpec {
 
     val listPath = new Path(metaDir, "snap-1.avro")
     locally {
-      val s = IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val lw = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
         .create(s, fs.create(listPath, true))
       try {

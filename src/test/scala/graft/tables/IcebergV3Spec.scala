@@ -1,7 +1,6 @@
 package graft.tables
 
 import graft.SparkSpec
-import graft.export.IcebergUniform
 import org.apache.avro.{Schema => AvroSchema}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
@@ -114,7 +113,7 @@ class IcebergV3Spec extends SparkSpec {
     }
     val listPath = new Path(metaDir, "snap-1.avro")
     locally {
-      val s = IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
         .create(s, fs.create(listPath, true))
       val r = new GenericData.Record(s)
@@ -201,7 +200,7 @@ class IcebergV3Spec extends SparkSpec {
     }
     def writeList(name: String, manifests: Seq[(Path, Int, Long)]): Path = {
       val p = new Path(metaDir, name)
-      val s = IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
         .create(s, fs.create(p, true))
       try manifests.foreach { case (mp, content, seq) =>

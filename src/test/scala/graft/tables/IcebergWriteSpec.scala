@@ -105,7 +105,7 @@ class IcebergWriteSpec extends SparkSpec {
       .find(_.getPath.getName.endsWith(".parquet")).get
     val qualified = "file:" + st.getPath.toUri.getPath // the foreign spelling
 
-    val entrySchema = graft.export.IcebergUniform.manifestEntrySchema(Seq.empty)
+    val entrySchema = IcebergManifests.manifestEntrySchema(Seq.empty)
     val manifestPath = new Path(metaDir, "m-data.avro")
     locally {
       val w = new org.apache.avro.file.DataFileWriter(
@@ -131,7 +131,7 @@ class IcebergWriteSpec extends SparkSpec {
     }
     val listPath = new Path(metaDir, "snap-1.avro")
     locally {
-      val s = graft.export.IcebergUniform.manifestFileSchema
+      val s = IcebergManifests.manifestFileSchema
       val w = new org.apache.avro.file.DataFileWriter(
         new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](s))
         .create(s, fs.create(listPath, true))
