@@ -1,6 +1,5 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode}
@@ -151,14 +150,6 @@ object DeletionVectors {
         } finally in.close()
     }
   }
-
-  def parseDescriptor(d: JsonNode): DvDescriptor =
-    DvDescriptor(
-      d.get("storageType").asText(),
-      d.get("pathOrInlineDv").asText(),
-      Option(d.get("offset")).filterNot(_.isNull).map(_.asLong()),
-      d.get("sizeInBytes").asInt(),
-      d.get("cardinality").asLong())
 
   /** Write one DV file holding a bitmap per (parquet file); returns
     * the descriptor for each input key. One file per commit — the

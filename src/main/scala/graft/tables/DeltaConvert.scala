@@ -1,6 +1,5 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -31,8 +30,6 @@ import org.apache.spark.sql.functions._
   * until cutover completes).
   */
 object DeltaConvert {
-
-  private val mapper = new ObjectMapper()
 
   /** Convert a parquet directory (hive-partitioned or flat). Returns
     * the created Delta version (always 0).
@@ -165,43 +162,26 @@ object DeltaConvert {
     val stats: Map[String, String] = DeltaWrite.computeStats(
       spark, adds.map(a => s"$dir/${a._1}"), statsCols)
 
-    val sb = new StringBuilder
-    sb.append("""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""").append('\n')
-    val m = mapper.createObjectNode()
-    m.put("id", java.util.UUID.randomUUID().toString)
-    m.putObject("format").put("provider", "parquet").putObject("options")
-    m.put("schemaString", schemaJson)
-    val pc = m.putArray("partitionColumns")
-    partCols.foreach(pc.add)
-    m.putObject("configuration")
-    m.put("createdTime", System.currentTimeMillis())
-    sb.append(s"""{"metaData":${mapper.writeValueAsString(m)}}""").append('\n')
-    adds.foreach { case (rel, pv, size) =>
-      val a = mapper.createObjectNode()
-      a.put("path", DeltaLog.encodePath(rel))
-      val pvNode = a.putObject("partitionValues")
-      pv.foreach { case (k, v) =>
-        v match { case Some(s) => pvNode.put(k, s); case None => pvNode.putNull(k) }
-      }
-      a.put("size", size)
-      a.put("modificationTime", System.currentTimeMillis())
-      a.put("dataChange", true)
+    val now = System.currentTimeMillis()
+    val addActions = adds.map { case (rel, pv, size) =>
       // zero-row files emit no stats row from the grouped job but
       // numRecords must still be present (export + row tracking
       // require it on every AddFile). A miss is ONLY legal for a
       // genuinely empty file — re-probe and fail loudly otherwise,
       // because committing numRecords:0 for live rows corrupts every
       // stats consumer downstream
-      a.put("stats", stats.getOrElse(DvDeleted.normalizePath(s"$dir/$rel"), {
+      val st = stats.getOrElse(DvDeleted.normalizePath(s"$dir/$rel"), {
         val probed = spark.read.parquet(s"$dir/$rel").count()
         require(probed == 0L,
           s"stats lookup missed non-empty file $rel ($probed rows) — path-key bug")
         """{"numRecords":0}"""
-      }))
-      sb.append(s"""{"add":${mapper.writeValueAsString(a)}}""").append('\n')
+      })
+      DeltaActions.Add(DeltaLog.AddFile(rel, pv, size, Some(st)), now, dataChange = true)
     }
-    require(DeltaWrite.writeCommitFile(spark, dir,
-      0L, Seq(sb.toString.stripSuffix("\n"))),
+    require(DeltaWrite.writeCommitFile(spark, dir, 0L,
+      Seq(DeltaLog.Protocol.Base,
+        DeltaLog.Metadata(schemaJson, partCols, Map.empty,
+          java.util.UUID.randomUUID().toString, Some(now))) ++ addActions),
       s"lost the commit race creating _delta_log at $dir")
     0L
   }

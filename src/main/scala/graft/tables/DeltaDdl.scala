@@ -19,75 +19,25 @@ object DeltaDdl {
 
   private val mapper = new ObjectMapper()
 
-  /** Writer-feature names implied by a legacy writer version, per the
-    * protocol's feature table — needed when upgrading a legacy-
-    * versioned table to the versioned-feature form (writer v7).
-    */
-  private[tables] def legacyWriterFeatures(v: Int): Seq[String] = {
-    val ladder = Seq(
-      2 -> Seq("appendOnly", "invariants"),
-      3 -> Seq("checkConstraints"),
-      4 -> Seq("changeDataFeed", "generatedColumns"),
-      5 -> Seq("columnMapping"),
-      6 -> Seq("identityColumns"))
-    ladder.filter(_._1 <= v).flatMap(_._2)
-  }
-
-  private def protocolJson(p: DeltaLog.Protocol): String = {
-    val n = mapper.createObjectNode()
-    n.put("minReaderVersion", p.minReaderVersion)
-    n.put("minWriterVersion", p.minWriterVersion)
-    p.readerFeatures.foreach { fs =>
-      val a = n.putArray("readerFeatures"); fs.foreach(a.add)
-    }
-    p.writerFeatures.foreach { fs =>
-      val a = n.putArray("writerFeatures"); fs.foreach(a.add)
-    }
-    s"""{"protocol":${mapper.writeValueAsString(n)}}"""
-  }
-
-  private def metadataJson(
-      schemaString: String,
-      partitionColumns: Seq[String],
-      configuration: Map[String, String],
-      id: String,
-      createdTime: Long
-  ): String = {
-    val m = mapper.createObjectNode()
-    m.put("id", id)
-    m.putObject("format").put("provider", "parquet").putObject("options")
-    m.put("schemaString", schemaString)
-    val pc = m.putArray("partitionColumns")
-    partitionColumns.foreach(pc.add)
-    val confNode = m.putObject("configuration")
-    configuration.foreach { case (k, v) => confNode.put(k, v) }
-    m.put("createdTime", createdTime)
-    s"""{"metaData":${mapper.writeValueAsString(m)}}"""
-  }
-
-  /** The writer protocol a table with this schema/configuration needs,
-    * in legacy-version form (per the protocol's feature table).
+  /** The protocol a table with this schema/configuration needs, per
+    * the protocol's feature table.
     */
   private def requiredProtocol(
       schema: StructType, configuration: Map[String, String]): DeltaLog.Protocol = {
-    val hasConstraints = configuration.keys.exists(_.startsWith(DeltaPolicy.ConstraintPrefix))
-    val hasGenerated = schema.fields.exists(_.metadata.contains(DeltaPolicy.GenerationExpressionKey))
-    val hasCdf = configuration.get("delta.enableChangeDataFeed").contains("true")
     val mapped = configuration.get("delta.columnMapping.mode").exists(m => m != "none" && m.nonEmpty)
-    val hasIdentity = schema.fields.exists(_.metadata.contains(DeltaPolicy.IdentityStartKey))
     val writer = Seq(
-      2,
-      if (hasConstraints) 3 else 2,
-      if (hasGenerated || hasCdf) 4 else 2,
-      if (mapped) 5 else 2,
-      if (hasIdentity) 6 else 2).max
-    val reader = if (mapped) 2 else 1
-    // in-commit timestamps exist only as a versioned writer feature:
-    // enabling it at creation puts the protocol in v7 feature form
-    if (configuration.get(DeltaWrite.IctKey).contains("true"))
-      DeltaLog.Protocol(reader, 7, None,
-        Some(legacyWriterFeatures(writer) :+ "inCommitTimestamp"))
-    else DeltaLog.Protocol(reader, writer, None, None)
+      "checkConstraints" ->
+        configuration.keys.exists(_.startsWith(DeltaPolicy.ConstraintPrefix)),
+      "generatedColumns" ->
+        schema.fields.exists(_.metadata.contains(DeltaPolicy.GenerationExpressionKey)),
+      "changeDataFeed" -> configuration.get("delta.enableChangeDataFeed").contains("true"),
+      "columnMapping" -> mapped,
+      "identityColumns" -> schema.fields.exists(_.metadata.contains(DeltaPolicy.IdentityStartKey)),
+      // in-commit timestamps exist only as a versioned writer feature:
+      // enabling it at creation puts the protocol in v7 feature form
+      "inCommitTimestamp" -> configuration.get(DeltaWrite.IctKey).contains("true")
+    ).collect { case (f, true) => f }
+    DeltaLog.Protocol.Base.withFeatures(if (mapped) Seq("columnMapping") else Seq.empty, writer)
   }
 
   /** CREATE TABLE: a metadata-only version-0 commit declaring schema,
@@ -139,20 +89,14 @@ object DeltaDdl {
       require(!partitionBy.contains(f.name),
         s"identity column ${f.name} cannot be a partition column")
     }
+    val now = System.currentTimeMillis()
     val ict =
       if (!configuration.get(DeltaWrite.IctKey).contains("true")) Seq.empty
-      else {
-        val t = System.currentTimeMillis()
-        val ci = mapper.createObjectNode()
-        ci.put("operation", "CREATE TABLE")
-        ci.put("inCommitTimestamp", t)
-        ci.put("timestamp", t)
-        Seq(s"""{"commitInfo":${mapper.writeValueAsString(ci)}}""")
-      }
+      else Seq(DeltaActions.CommitInfo("CREATE TABLE", now, Some(now)))
     val actions = ict ++ Seq(
-      protocolJson(requiredProtocol(schema, configuration)),
-      metadataJson(schema.json, partitionBy, configuration,
-        java.util.UUID.randomUUID().toString, System.currentTimeMillis()))
+      requiredProtocol(schema, configuration),
+      DeltaLog.Metadata(schema.json, partitionBy, configuration,
+        java.util.UUID.randomUUID().toString, Some(now)))
     require(DeltaWrite.writeCommitFile(spark, tablePath, 0L, actions),
       s"lost the version-0 race creating $tablePath")
     CommitResult(0L, 0, 0)
@@ -160,27 +104,29 @@ object DeltaDdl {
 
   /** Metadata-update retry loop shared by the ALTER operations:
     * `change` maps the current snapshot to (new metadata fields,
-    * optional protocol action); None aborts as a no-op.
+    * protocol, extra actions); None aborts as a no-op. A protocol equal
+    * to the snapshot's is not restated.
     */
   private def alter(
       spark: SparkSession,
       tablePath: String
-  )(change: DeltaLog.Snapshot => Option[(String, Seq[String], Map[String, String], Seq[String])])
+  )(change: DeltaLog.Snapshot => Option[
+      (String, Seq[String], Map[String, String], DeltaLog.Protocol, Seq[DeltaActions.Action])])
   : CommitResult = {
     var attempt = 0
     while (attempt < 10) {
       val snap = DeltaLog.snapshot(spark, tablePath)
       change(snap) match {
         case None => return CommitResult(snap.version, 0, 0)
-        case Some((schemaString, partCols, conf, protocolActions)) =>
+        case Some((schemaString, partCols, conf, protocol, extra)) =>
           val meta = snap.metadata
           val actions = DeltaWrite.ictAction(spark, tablePath, Some(meta),
             Some(snap.version), "ALTER TABLE").toSeq ++
-            protocolActions :+ metadataJson(
+            Some(protocol).filter(_ != snap.protocol) ++ extra :+ DeltaLog.Metadata(
             schemaString, partCols, conf,
             Option(meta.id).filter(_.nonEmpty)
               .getOrElse(java.util.UUID.randomUUID().toString),
-            meta.createdTime.getOrElse(System.currentTimeMillis()))
+            meta.createdTime.orElse(Some(System.currentTimeMillis())))
           if (DeltaWrite.writeCommitFile(spark, tablePath, snap.version + 1, actions))
             return CommitResult(snap.version + 1, 0, 0)
           attempt += 1 // lost the race: re-read and retry
@@ -216,17 +162,8 @@ object DeltaDdl {
       val meta = snap.metadata
       require(!meta.configuration.contains(key),
         s"constraint $name already exists on $tablePath")
-      val pr = snap.protocol
-      val protocolActions =
-        if (pr.minWriterVersion >= 7) {
-          val wf = pr.writerFeatures.getOrElse(Seq.empty)
-          if (wf.contains("checkConstraints")) Seq.empty
-          else Seq(protocolJson(pr.copy(writerFeatures = Some(wf :+ "checkConstraints"))))
-        } else if (pr.minWriterVersion < 3)
-          Seq(protocolJson(pr.copy(minWriterVersion = 3)))
-        else Seq.empty
-      Some((meta.schemaString, meta.partitionColumns,
-        meta.configuration + (key -> sql), protocolActions))
+      Some((meta.schemaString, meta.partitionColumns, meta.configuration + (key -> sql),
+        snap.protocol.withFeatures(Seq.empty, Seq("checkConstraints")), Seq.empty))
     }
   }
 
@@ -241,7 +178,7 @@ object DeltaDdl {
     val key = DeltaPolicy.ConstraintPrefix + name
     if (!snap.metadata.configuration.contains(key)) None
     else Some((snap.metadata.schemaString, snap.metadata.partitionColumns,
-      snap.metadata.configuration - key, Seq.empty))
+      snap.metadata.configuration - key, snap.protocol, Seq.empty))
   }
 
   /** Clustered tables (the `clustering` writer feature + the
@@ -280,22 +217,9 @@ object DeltaDdl {
       val conf = mapper.writeValueAsString(confNode)
       if (snap.domains.get(ClusteringDomain).contains(conf)) None
       else {
-        val pr = snap.protocol
-        val have =
-          if (pr.minWriterVersion >= 7) pr.writerFeatures.getOrElse(Seq.empty)
-          else legacyWriterFeatures(pr.minWriterVersion)
-        val want = (have ++ Seq("clustering", "domainMetadata")).distinct
-        val protocolActions =
-          if (pr.minWriterVersion >= 7 && want.toSet == have.toSet) Seq.empty
-          else Seq(protocolJson(DeltaLog.Protocol(pr.minReaderVersion, 7,
-            pr.readerFeatures, Some(want))))
-        val dn = mapper.createObjectNode()
-        dn.put("domain", ClusteringDomain)
-        dn.put("configuration", conf)
-        dn.put("removed", false)
-        val domainAction = s"""{"domainMetadata":${mapper.writeValueAsString(dn)}}"""
         Some((meta.schemaString, meta.partitionColumns, meta.configuration,
-          protocolActions :+ domainAction))
+          snap.protocol.withFeatures(Seq.empty, Seq("clustering", "domainMetadata")),
+          Seq(DeltaActions.DomainMetadata(ClusteringDomain, conf))))
       }
     }
   }
@@ -363,7 +287,7 @@ object DeltaDdl {
     if (!meta.isColumnMapped) {
       val newSchema = StructType(
         meta.schema.fields ++ columns.map(_.copy(nullable = true)))
-      Some((newSchema.json, meta.partitionColumns, meta.configuration, Seq.empty))
+      Some((newSchema.json, meta.partitionColumns, meta.configuration, snap.protocol, Seq.empty))
     } else {
       // column-mapped tables: every new field mints a FRESH field id
       // above the table's maxColumnId and a UUID physical name (the
@@ -417,7 +341,7 @@ object DeltaDdl {
       val newSchema = StructType(meta.schema.fields ++ mappedCols)
       Some((newSchema.json, meta.partitionColumns,
         meta.configuration + ("delta.columnMapping.maxColumnId" -> nextId.toString),
-        Seq.empty))
+        snap.protocol, Seq.empty))
     }
   }
 
@@ -461,26 +385,10 @@ object DeltaDdl {
     val conf = meta.configuration +
       ("delta.columnMapping.mode" -> "name") +
       ("delta.columnMapping.maxColumnId" -> nextId.toString)
-    val p = snap.protocol
-    val protoActs: Seq[String] =
-      if (p.minWriterVersion >= 7) {
-        val wf = p.writerFeatures.getOrElse(Seq.empty)
-        if (wf.contains("columnMapping")) Seq.empty
-        else {
-          // columnMapping is a reader-writer feature: on feature-form
-          // protocols it must appear in readerFeatures when the reader
-          // version is 3 (feature-listing form)
-          val rf =
-            if (p.minReaderVersion >= 3)
-              Some(p.readerFeatures.getOrElse(Seq.empty) :+ "columnMapping")
-            else p.readerFeatures
-          Seq(protocolJson(DeltaLog.Protocol(
-            math.max(p.minReaderVersion, 2), 7, rf, Some(wf :+ "columnMapping"))))
-        }
-      } else if (p.minReaderVersion >= 2 && p.minWriterVersion >= 5) Seq.empty
-      else Seq(protocolJson(DeltaLog.Protocol(
-        math.max(p.minReaderVersion, 2), math.max(p.minWriterVersion, 5), None, None)))
-    Some((newSchema.json, meta.partitionColumns, conf, protoActs))
+    // columnMapping is a reader-writer feature (legacy reader 2 /
+    // writer 5, or listed on feature-form protocols)
+    Some((newSchema.json, meta.partitionColumns, conf,
+      snap.protocol.withFeatures(Seq("columnMapping"), Seq("columnMapping")), Seq.empty))
   }
 
   /** ALTER TABLE RENAME COLUMN — metadata-only, column mapping
@@ -508,7 +416,7 @@ object DeltaDdl {
       if (f.name == from) f.copy(name = to) else f
     })
     val newParts = meta.partitionColumns.map(c => if (c == from) to else c)
-    Some((newSchema.json, newParts, meta.configuration, Seq.empty))
+    Some((newSchema.json, newParts, meta.configuration, snap.protocol, Seq.empty))
   }
 
   /** ALTER TABLE DROP COLUMN — metadata-only under column mapping:
@@ -533,7 +441,7 @@ object DeltaDdl {
     require(refs.isEmpty,
       s"cannot drop $name: referenced by ${refs.mkString(", ")}")
     val newSchema = StructType(schema.fields.filterNot(_.name == name))
-    Some((newSchema.json, meta.partitionColumns, meta.configuration, Seq.empty))
+    Some((newSchema.json, meta.partitionColumns, meta.configuration, snap.protocol, Seq.empty))
   }
 
   /** The widening matrix ALTER COLUMN TYPE accepts: the public
@@ -623,21 +531,8 @@ object DeltaDdl {
         .putMetadataArray("delta.typeChanges", prior :+ entry).build())
     val newSchema = StructType(schema.fields.updated(idx, widened))
 
-    val pr = snap.protocol
-    val hasFeature = pr.minReaderVersion >= 3 &&
-      pr.readerFeatures.exists(_.contains("typeWidening"))
-    val protocolActions =
-      if (hasFeature) Seq.empty
-      else {
-        val rf = (if (pr.minReaderVersion >= 3) pr.readerFeatures.getOrElse(Seq.empty)
-                  else if (pr.minReaderVersion == 2) Seq("columnMapping")
-                  else Seq.empty) :+ "typeWidening"
-        val wf = (if (pr.minWriterVersion >= 7) pr.writerFeatures.getOrElse(Seq.empty)
-                  else legacyWriterFeatures(pr.minWriterVersion)) :+ "typeWidening"
-        Seq(protocolJson(DeltaLog.Protocol(3, 7,
-          Some(rf.distinct), Some(wf.distinct))))
-      }
-    Some((newSchema.json, meta.partitionColumns, meta.configuration, protocolActions))
+    Some((newSchema.json, meta.partitionColumns, meta.configuration,
+      snap.protocol.withFeatures(Seq("typeWidening"), Seq("typeWidening")), Seq.empty))
     }
   }
 
@@ -663,56 +558,24 @@ object DeltaDdl {
     val fs = srcBase.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val absBase = fs.makeQualified(srcBase).toUri.getPath
 
+    val now = System.currentTimeMillis()
     val adds = snap.files.map { f =>
-      val a = mapper.createObjectNode()
-      a.put("path", DeltaLog.encodePath(DeltaLog.resolvePath(absBase, f.path)))
-      val pvNode = a.putObject("partitionValues")
-      f.partitionValues.foreach { case (k, v) =>
-        v match { case Some(s) => pvNode.put(k, s); case None => pvNode.putNull(k) }
-      }
-      a.put("size", f.size)
-      a.put("modificationTime", System.currentTimeMillis())
-      a.put("dataChange", true)
-      f.stats.foreach(s => a.put("stats", s))
-      f.dv.foreach { d =>
-        val dn = a.putObject("deletionVector")
-        d.storageType match {
-          case "i" => // inline: travels with the descriptor
-            dn.put("storageType", "i")
-            dn.put("pathOrInlineDv", d.pathOrInlineDv)
-          case _ => // u/p: pin to the absolute on-disk location
-            dn.put("storageType", "p")
-            dn.put("pathOrInlineDv", d.filePath(absBase).get.toString)
-            d.offset.foreach(o => dn.put("offset", o))
-        }
-        if (d.storageType == "i") d.offset.foreach(o => dn.put("offset", o))
-        dn.put("sizeInBytes", d.sizeInBytes)
-        dn.put("cardinality", d.cardinality)
-      }
-      // row-tracking ids travel with the files (the clone keeps the
-      // source's domains too, so its high-water mark stays correct)
-      f.baseRowId.foreach(b => a.put("baseRowId", b))
-      f.defaultRowCommitVersion.foreach(v => a.put("defaultRowCommitVersion", v))
-      s"""{"add":${mapper.writeValueAsString(a)}}"""
-    }
-    val ci = mapper.createObjectNode()
-    ci.put("operation", "CLONE")
-    ci.put("timestamp", System.currentTimeMillis())
-    ci.putObject("operationParameters").put("source", absBase)
-    val domainActions = snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-      val dn = mapper.createObjectNode()
-      dn.put("domain", d)
-      dn.put("configuration", c)
-      dn.put("removed", false)
-      s"""{"domainMetadata":${mapper.writeValueAsString(dn)}}"""
+      // DVs: inline ones travel with the descriptor; u/p ones are
+      // pinned to their absolute on-disk location. Row-tracking ids
+      // travel with the files (the clone keeps the source's domains
+      // too, so its high-water mark stays correct); tags do not.
+      val dv = f.dv.map(d =>
+        if (d.storageType == "i") d
+        else d.copy(storageType = "p", pathOrInlineDv = d.filePath(absBase).get.toString))
+      DeltaActions.Add(f.copy(path = DeltaLog.resolvePath(absBase, f.path), dv = dv,
+        tags = Map.empty), now, dataChange = true)
     }
     val actions =
-      Seq(protocolJson(snap.protocol),
-        metadataJson(snap.metadata.schemaString, snap.metadata.partitionColumns,
-          snap.metadata.configuration, java.util.UUID.randomUUID().toString,
-          System.currentTimeMillis()),
-        s"""{"commitInfo":${mapper.writeValueAsString(ci)}}""") ++
-        domainActions ++ adds
+      Seq(snap.protocol,
+        snap.metadata.copy(id = java.util.UUID.randomUUID().toString, createdTime = Some(now)),
+        DeltaActions.CommitInfo("CLONE", now, operationParameters = Map("source" -> absBase))) ++
+        snap.domains.toSeq.sortBy(_._1).map { case (d, c) => DeltaActions.DomainMetadata(d, c) } ++
+        adds
     require(DeltaWrite.writeCommitFile(spark, targetPath, 0L, actions),
       s"lost the version-0 race cloning into $targetPath")
     CommitResult(0L, adds.size, 0)

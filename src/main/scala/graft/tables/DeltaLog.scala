@@ -1,6 +1,6 @@
 package graft.tables
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
@@ -87,9 +87,62 @@ object DeltaLog {
       minWriterVersion: Int,
       readerFeatures: Option[Seq[String]],
       writerFeatures: Option[Seq[String]])
+      extends DeltaActions.Action {
+
+    /** This protocol upgraded to also support the `reader`
+      * (reader+writer) and `writer` table features — the one rule
+      * every protocol upgrade follows, per the public protocol's
+      * feature table. Per side: a feature-listing protocol (reader 3,
+      * writer 7) gains the names; a legacy one bumps to the lowest
+      * legacy version implying them, and failing that converts to the
+      * feature-listing form with the features its (bumped) legacy
+      * version implied spelled out. A feature-listing reader needs a
+      * feature-listing writer. Equal to `this` when nothing is
+      * missing.
+      */
+    def withFeatures(reader: Seq[String], writer: Seq[String]): Protocol = {
+      val (rv, rf) = Protocol.upgrade(Protocol.LegacyReader, 3,
+        minReaderVersion, readerFeatures, reader, toFeatureForm = false)
+      val (wv, wf) = Protocol.upgrade(Protocol.LegacyWriter, 7,
+        minWriterVersion, writerFeatures, writer, toFeatureForm = rv >= 3)
+      Protocol(rv, wv, rf, wf)
+    }
+  }
 
   object Protocol {
     val Base: Protocol = Protocol(1, 2, None, None)
+
+    /** The features each legacy version introduces (a version implies
+      * its own and every lower version's).
+      */
+    private val LegacyReader = Seq(2 -> Seq("columnMapping"))
+    private val LegacyWriter = Seq(
+      2 -> Seq("appendOnly", "invariants"),
+      3 -> Seq("checkConstraints"),
+      4 -> Seq("changeDataFeed", "generatedColumns"),
+      5 -> Seq("columnMapping"),
+      6 -> Seq("identityColumns"))
+
+    private def upgrade(
+        legacy: Seq[(Int, Seq[String])],
+        featureForm: Int,
+        version: Int,
+        listed: Option[Seq[String]],
+        want: Seq[String],
+        toFeatureForm: Boolean
+    ): (Int, Option[Seq[String]]) =
+      if (version >= featureForm) {
+        val have = listed.getOrElse(Seq.empty)
+        val missing = want.distinct.filterNot(have.contains)
+        (version, if (missing.isEmpty) listed else Some(have ++ missing))
+      } else {
+        val bumped = (version +: want.flatMap(f =>
+          legacy.collectFirst { case (v, fs) if fs.contains(f) => v })).max
+        val have = legacy.filter(_._1 <= bumped).flatMap(_._2)
+        val missing = want.distinct.filterNot(have.contains)
+        if (missing.isEmpty && !toFeatureForm) (bumped, listed)
+        else (featureForm, Some(have ++ missing))
+      }
   }
 
   final case class Metadata(
@@ -98,7 +151,7 @@ object DeltaLog {
       configuration: Map[String, String] = Map.empty,
       id: String = "",
       createdTime: Option[Long] = None
-  ) {
+  ) extends DeltaActions.Action {
     lazy val schema: StructType = DataType.fromJson(schemaString).asInstanceOf[StructType]
 
     /** `delta.columnMapping.mode`: "none" (physical = logical),
@@ -239,10 +292,15 @@ object DeltaLog {
     else (1 to parts).map(i =>
       new Path(logDir(tablePath), f"$version%020d.checkpoint.$i%010d.$parts%010d.parquet"))
 
-  /** `_last_checkpoint` hint: (version, parts). Invalid/corrupt files
-    * degrade to a directory listing, never to an error.
+  /** The `_last_checkpoint` hint: checkpoint version, part count and
+    * action count (0 when unrecorded).
     */
-  private def readLastCheckpoint(fs: FileSystem, tablePath: String): Option[(Long, Int)] = {
+  private final case class LastCheckpoint(version: Long, parts: Int, size: Long)
+
+  /** Invalid/corrupt hints degrade to a directory listing, never to an
+    * error.
+    */
+  private def readLastCheckpoint(fs: FileSystem, tablePath: String): Option[LastCheckpoint] = {
     val p = new Path(logDir(tablePath), "_last_checkpoint")
     try {
       if (!fs.exists(p)) None
@@ -252,8 +310,9 @@ object DeltaLog {
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
         val node = mapper.readTree(text)
-        Some((node.get("version").asLong(),
-          Option(node.get("parts")).filterNot(_.isNull).map(_.asInt()).getOrElse(1)))
+        def opt(f: String) = Option(node.get(f)).filterNot(_.isNull)
+        Some(LastCheckpoint(node.get("version").asLong(),
+          opt("parts").map(_.asInt()).getOrElse(1), opt("size").map(_.asLong()).getOrElse(0L)))
       }
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -297,7 +356,7 @@ object DeltaLog {
     // the estimate is weaker, not wrong — the JSON tail since the
     // checkpoint still bounds post-checkpoint adds)
     val cpActions: Long = cpV.map { v =>
-      readLastCheckpointSize(fs, tablePath).filter(_._1 == v).map(_._2).getOrElse(0L)
+      readLastCheckpoint(fs, tablePath).filter(_.version == v).map(_.size).getOrElse(0L)
     }.getOrElse(0L)
     val tailFrom = cpV.map(_ + 1L).getOrElse(0L)
     val tailBytes = jsonSizes.collect {
@@ -306,23 +365,6 @@ object DeltaLog {
     // an add action with stats serializes to well over 150 bytes; the
     // floor makes the division an over-count (the safe direction)
     cpActions + tailBytes / 150
-  }
-
-  private def readLastCheckpointSize(
-      fs: FileSystem, tablePath: String): Option[(Long, Long)] = {
-    val p = new Path(logDir(tablePath), "_last_checkpoint")
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val node = mapper.readTree(text)
-        Some((node.get("version").asLong(),
-          Option(node.get("size")).filterNot(_.isNull).map(_.asLong()).getOrElse(0L)))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   def isDeltaTable(spark: SparkSession, tablePath: String): Boolean = {
@@ -344,18 +386,10 @@ object DeltaLog {
   /** `commitInfo.inCommitTimestamp` of a commit JSON, when the commit
     * carries one (tables with `delta.enableInCommitTimestamps`).
     */
-  def inCommitTimestampOf(fs: FileSystem, jsonPath: Path): Option[Long] = {
-    val in = fs.open(jsonPath)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.linesIterator.flatMap { line =>
-      val node = mapper.readTree(line)
-      Option(node.get("commitInfo"))
-        .flatMap(ci => Option(ci.get("inCommitTimestamp")))
-        .map(_.asLong())
-    }.nextOption()
-  }
+  def inCommitTimestampOf(fs: FileSystem, jsonPath: Path): Option[Long] =
+    DeltaActions.read(fs, jsonPath, _ == "commitInfo").collectFirst {
+      case DeltaActions.CommitInfo(_, _, Some(ict), _) => ict
+    }
 
   /** The next monotonic in-commit timestamp for a commit at
     * `prevVersion + 1`: wall clock, but never ≤ the previous commit's
@@ -437,8 +471,9 @@ object DeltaLog {
       // unusable" (e.g. a multi-part set missing parts after the JSON
       // prefix was aged out)
       readLastCheckpoint(fs, tablePath) match {
-        case Some((v, parts)) => throw new IllegalArgumentException(
-          s"$tablePath: _last_checkpoint names checkpoint version $v ($parts part(s)) " +
+        case Some(lc) => throw new IllegalArgumentException(
+          s"$tablePath: _last_checkpoint names checkpoint version ${lc.version} " +
+            s"(${lc.parts} part(s)) " +
             "but its files are missing or incomplete, and no JSON commits remain")
         case None => throw new IllegalArgumentException(s"$tablePath has no Delta log")
       }
@@ -460,131 +495,42 @@ object DeltaLog {
       checkpointChoice(fs, tablePath, cps, target)
 
     val cpVersion = cpChoice.map(_._1)
-    // one JSON action (commit line or v2 JSON-manifest line)
-    def applyJsonAction(node: JsonNode): Unit = {
-      if (node.has("protocol")) {
-        val pr = node.get("protocol")
-        val minReader = pr.path("minReaderVersion").asInt(1)
+    val sidecars = Seq.newBuilder[String]
+    // the metadata-only replay skips file actions undecoded
+    val wanted: String => Boolean = k => withFiles || (k != "add" && k != "remove")
+    def apply(a: DeltaActions.Action): Unit = a match {
+      case p: Protocol =>
         // reader versions 1-2 are plain parquet + log; version 3
         // gates on explicit table features — read only when every
         // listed feature is implemented, refuse otherwise rather
         // than silently return wrong rows.
-        def featureSeq(field: String): Option[Seq[String]] =
-          Option(pr.get(field)).filterNot(_.isNull)
-            .map(_.elements().asScala.map(_.asText()).toSeq)
-        if (minReader >= 3) {
-          require(minReader == 3,
-            s"unsupported Delta reader protocol version $minReader in $tablePath: $pr")
-          val features = featureSeq("readerFeatures").map(_.toSet).getOrElse(Set.empty)
-          val unsupported = features -- SupportedReaderFeatures
+        if (p.minReaderVersion >= 3) {
+          require(p.minReaderVersion == 3,
+            s"unsupported Delta reader protocol version ${p.minReaderVersion} in $tablePath: $p")
+          val unsupported = p.readerFeatures.getOrElse(Seq.empty).toSet -- SupportedReaderFeatures
           require(unsupported.isEmpty,
             s"unsupported Delta reader features $unsupported in $tablePath")
         }
-        protocol = Protocol(
-          minReader, pr.path("minWriterVersion").asInt(2),
-          featureSeq("readerFeatures"), featureSeq("writerFeatures"))
-      }
-      if (node.has("metaData")) {
-        val m = node.get("metaData")
-        val conf = Option(m.get("configuration")).map { o =>
-          o.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-        }.getOrElse(Map.empty[String, String])
-        val parts = Option(m.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
-        val md = Metadata(
-          m.get("schemaString").asText(), parts, conf,
-          id = Option(m.get("id")).filterNot(_.isNull).map(_.asText()).getOrElse(""),
-          createdTime =
-            Option(m.get("createdTime")).filterNot(_.isNull).map(_.asLong()))
-        require(Seq("none", "name", "id").contains(md.columnMappingMode),
-          s"Delta column mapping mode '${md.columnMappingMode}' is not supported in $tablePath")
-        meta = Some(md)
-      }
-      if (withFiles && node.has("add")) {
-        val a = node.get("add")
-        val pv = Option(a.get("partitionValues")).map { o =>
-          o.fields().asScala.map { e =>
-            e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-          }.toMap
-        }.getOrElse(Map.empty[String, Option[String]])
-        val dv = Option(a.get("deletionVector")).filterNot(_.isNull)
-          .map(DeletionVectors.parseDescriptor)
-        val tags = Option(a.get("tags")).filterNot(_.isNull).map { o =>
-          o.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-        }.getOrElse(Map.empty[String, String])
-        val add = AddFile(
-          decodePath(a.get("path").asText()), pv,
-          Option(a.get("size")).map(_.asLong()).getOrElse(0L),
-          Option(a.get("stats")).filterNot(_.isNull).map(_.asText()),
-          dv, tags,
-          baseRowId = Option(a.get("baseRowId")).filterNot(_.isNull).map(_.asLong()),
-          defaultRowCommitVersion =
-            Option(a.get("defaultRowCommitVersion")).filterNot(_.isNull).map(_.asLong()))
-        active += add.path -> add
-      }
-      if (withFiles && node.has("remove")) {
-        active -= decodePath(node.get("remove").get("path").asText())
-      }
-      if (node.has("txn")) {
-        val t = node.get("txn")
-        val appId = t.get("appId").asText()
-        val v = t.get("version").asLong()
+        protocol = p
+      case m: Metadata =>
+        require(Seq("none", "name", "id").contains(m.columnMappingMode),
+          s"Delta column mapping mode '${m.columnMappingMode}' is not supported in $tablePath")
+        meta = Some(m)
+      case DeltaActions.Add(f, _, _) => active += f.path -> f
+      case r: DeltaActions.Remove    => active -= r.path
+      case DeltaActions.Txn(appId, v, _) =>
         txns(appId) = math.max(txns.getOrElse(appId, Long.MinValue), v)
-      }
-      if (node.has("domainMetadata")) {
-        val d = node.get("domainMetadata")
-        val domain = d.get("domain").asText()
-        if (d.path("removed").asBoolean(false)) domains -= domain
-        else domains(domain) = d.path("configuration").asText("")
-      }
+      case d: DeltaActions.DomainMetadata =>
+        if (d.removed) domains -= d.domain else domains(d.domain) = d.configuration
+      case DeltaActions.CheckpointMetadata(v) =>
+        require(cpVersion.contains(v),
+          s"v2 checkpoint in $tablePath declares version $v, expected ${cpVersion.getOrElse(-1L)}")
+      case s: DeltaActions.Sidecar => sidecars += s.path
+      case _                       => ()
     }
 
-    def applyProtocolRow(p: org.apache.spark.sql.Row): Unit = {
-      val names = p.schema.fieldNames
-      def featureSeq(field: String): Option[Seq[String]] =
-        if (!names.contains(field)) None
-        else Option(p.getAs[scala.collection.Seq[String]](field)).map(_.toSeq)
-      val minReader = p.getAs[Int]("minReaderVersion")
-      if (minReader >= 3) {
-        require(minReader == 3,
-          s"unsupported Delta reader protocol version $minReader in $tablePath checkpoint")
-        val features = featureSeq("readerFeatures").map(_.toSet).getOrElse(Set.empty)
-        val unsupported = features -- SupportedReaderFeatures
-        require(unsupported.isEmpty,
-          s"unsupported Delta reader features $unsupported in $tablePath checkpoint")
-      }
-      protocol = Protocol(
-        minReader,
-        if (names.contains("minWriterVersion")) p.getAs[Int]("minWriterVersion") else 2,
-        featureSeq("readerFeatures"), featureSeq("writerFeatures"))
-    }
-
-    def applyMetadataRow(m: org.apache.spark.sql.Row): Unit = {
-      val names = m.schema.fieldNames
-      val conf =
-        if (!names.contains("configuration")) Map.empty[String, String]
-        else Option(m.getAs[scala.collection.Map[String, String]]("configuration"))
-          .map(_.toMap).getOrElse(Map.empty[String, String])
-      val md = Metadata(
-        m.getAs[String]("schemaString"),
-        Option(m.getAs[scala.collection.Seq[String]]("partitionColumns"))
-          .map(_.toSeq).getOrElse(Seq.empty),
-        conf,
-        id = if (names.contains("id")) Option(m.getAs[String]("id")).getOrElse("") else "",
-        createdTime =
-          if (!names.contains("createdTime")) None
-          else Option(m.getAs[Any]("createdTime")).map {
-            case l: Long => l
-            case i: Int  => i.toLong
-          })
-      require(Seq("none", "name", "id").contains(md.columnMappingMode),
-        s"Delta column mapping mode '${md.columnMappingMode}' is not supported in $tablePath")
-      meta = Some(md)
-    }
-
-    // apply the protocol/metaData/add columns of a checkpoint (or
-    // sidecar) dataframe; returns sidecar file names a v2 manifest
-    // defers its file actions to.
+    // apply a checkpoint (or sidecar) dataframe; its removes are
+    // vacuum tombstones, not active state.
     //
     // Metadata is folded in ONE aggregation job: `collect_list` (which
     // skips null rows) gathers the ≤1-per-checkpoint protocol /
@@ -595,105 +541,37 @@ object DeltaLog {
     // + domains + sidecars) regardless of table file count or commit
     // count (this was the last per-action driver loop on the
     // checkpoint path).
-    def applyCheckpointDf(cp: org.apache.spark.sql.DataFrame, cpV: Long): Seq[String] = {
+    def applyCheckpointDf(cp: org.apache.spark.sql.DataFrame): Unit = {
       import org.apache.spark.sql.functions.{col => fcol, collect_list}
       val cols = cp.columns.toSet
       val metaCols = Seq("protocol", "metaData", "txn", "domainMetadata",
         "checkpointMetadata", "sidecar").filter(cols.contains)
-      val folded: Map[String, Seq[org.apache.spark.sql.Row]] =
-        if (metaCols.isEmpty) Map.empty
-        else {
-          checkpointMetaJobs.incrementAndGet()
-          val aggs = metaCols.map(n => collect_list(fcol(n)).as(n))
-          val row = cp.agg(aggs.head, aggs.tail: _*).collect()(0)
-          metaCols.map(n =>
-            n -> row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](n).toSeq).toMap
-        }
-      def rowsOf(n: String): Seq[org.apache.spark.sql.Row] =
-        folded.getOrElse(n, Seq.empty)
-
-      rowsOf("protocol").foreach(applyProtocolRow)
-      rowsOf("metaData").foreach(applyMetadataRow)
-      if (withFiles && cols.contains("add")) {
-        cp.select("add").where("add IS NOT NULL").collect().foreach { r =>
-          val a = r.getStruct(0)
-          val pv = Option(a.getAs[scala.collection.Map[String, String]]("partitionValues"))
-            .map(_.toMap.map { case (k, v) => k -> Option(v) }).getOrElse(Map.empty[String, Option[String]])
-          val dv =
-            if (!a.schema.fieldNames.contains("deletionVector")) None
-            else Option(a.getAs[org.apache.spark.sql.Row]("deletionVector")).map(dvFromRow)
-          val tags =
-            if (!a.schema.fieldNames.contains("tags")) Map.empty[String, String]
-            else Option(a.getAs[scala.collection.Map[String, String]]("tags"))
-              .map(_.toMap).getOrElse(Map.empty[String, String])
-          def optLong(field: String): Option[Long] =
-            if (!a.schema.fieldNames.contains(field)) None
-            else Option(a.getAs[Any](field)).map {
-              case l: Long => l
-              case i: Int  => i.toLong
-            }
-          val add = AddFile(
-            decodePath(a.getAs[String]("path")), pv, a.getAs[Long]("size"),
-            if (a.schema.fieldNames.contains("stats")) Option(a.getAs[String]("stats")) else None,
-            dv, tags,
-            baseRowId = optLong("baseRowId"),
-            defaultRowCommitVersion = optLong("defaultRowCommitVersion"))
-          active += add.path -> add
-        }
+      if (metaCols.nonEmpty) {
+        checkpointMetaJobs.incrementAndGet()
+        val aggs = metaCols.map(n => collect_list(fcol(n)).as(n))
+        val row = cp.agg(aggs.head, aggs.tail: _*).collect()(0)
+        metaCols.foreach(n => row.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](n)
+          .foreach(r => DeltaActions.fromRow(n, r).foreach(apply)))
       }
-      rowsOf("domainMetadata").foreach { d =>
-        // checkpoints only carry live domains (removed ones are
-        // dropped at write, like expired tombstones) but tolerate
-        // a `removed` column written by other engines
-        val removed = d.schema.fieldNames.contains("removed") &&
-          Option(d.getAs[Any]("removed")).exists(_ == true)
-        if (!removed)
-          domains(d.getAs[String]("domain")) =
-            Option(d.getAs[String]("configuration")).getOrElse("")
-      }
-      // removes in a checkpoint are vacuum tombstones — not active state
-      rowsOf("txn").foreach { t =>
-        val appId = t.getAs[String]("appId")
-        val v = t.getAs[Long]("version")
-        txns(appId) = math.max(txns.getOrElse(appId, Long.MinValue), v)
-      }
-      rowsOf("checkpointMetadata").foreach { m =>
-        val v = m.getAs[Long]("version")
-        require(v == cpV,
-          s"v2 checkpoint in $tablePath declares version $v, expected $cpV")
-      }
-      rowsOf("sidecar").map(_.getAs[String]("path"))
+      if (withFiles && cols.contains("add"))
+        cp.select("add").where("add IS NOT NULL").collect()
+          .foreach(r => DeltaActions.fromRow("add", r.getStruct(0)).foreach(apply))
     }
 
-    cpChoice.foreach { case (cpV, paths) =>
-      val sidecarNames: Seq[String] =
-        if (paths.size == 1 && paths.head.getName.endsWith(".json")) {
-          // v2 JSON-lines manifest (UUID-named); file actions may be
-          // inline or deferred to sidecars
-          val in = fs.open(paths.head)
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-            finally in.close()
-          val sc = Seq.newBuilder[String]
-          lines.filter(_.nonEmpty).foreach { line =>
-            val node = mapper.readTree(line)
-            if (node.has("checkpointMetadata")) {
-              val v = node.get("checkpointMetadata").path("version").asLong(-1L)
-              require(v == cpV,
-                s"v2 checkpoint in $tablePath declares version $v, expected $cpV")
-            }
-            if (node.has("sidecar")) sc += node.get("sidecar").get("path").asText()
-            applyJsonAction(node)
-          }
-          sc.result()
-        } else applyCheckpointDf(spark.read.parquet(paths.map(_.toString): _*), cpV)
+    cpChoice.foreach { case (_, paths) =>
+      // a v2 JSON-lines manifest (UUID-named) or parquet; file actions
+      // may be inline or deferred to sidecars
+      if (paths.size == 1 && paths.head.getName.endsWith(".json"))
+        DeltaActions.read(fs, paths.head, wanted).foreach(apply)
+      else applyCheckpointDf(spark.read.parquet(paths.map(_.toString): _*))
       // sidecars carry only file actions (per the v2 protocol), so the
       // metadata-only replay never opens them
+      val sidecarNames = sidecars.result()
       if (withFiles && sidecarNames.nonEmpty) {
         val scPaths = sidecarNames.map(n => new Path(sidecarDir(tablePath), n))
         scPaths.foreach(p => require(fs.exists(p),
           s"v2 checkpoint of $tablePath references a missing sidecar file: $p"))
-        applyCheckpointDf(spark.read.parquet(scPaths.map(_.toString): _*), cpV)
+        applyCheckpointDf(spark.read.parquet(scPaths.map(_.toString): _*))
       }
     }
 
@@ -708,32 +586,12 @@ object DeltaLog {
       s"Delta log of $tablePath has no commits for versions " +
         s"${missing.mkString(", ")} and no complete checkpoint covers them " +
         "(aged-out prefix or incomplete multi-part checkpoint)")
-    (replayFrom to target).foreach { v =>
-      jsons.get(v).foreach { p =>
-        val in = fs.open(p)
-        val lines =
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        lines.filter(_.nonEmpty).foreach(line => applyJsonAction(mapper.readTree(line)))
-      }
-    }
+    (replayFrom to target).foreach(v => DeltaActions.read(fs, jsons(v), wanted).foreach(apply))
 
     val m = meta.getOrElse(
       throw new IllegalStateException(s"no metaData action found in the log of $tablePath"))
     Snapshot(target, m, active.values.toSeq, protocol, txns.toMap, domains.toMap)
   }
-
-  /** `deletionVector` struct of a checkpoint add/remove row. */
-  private def dvFromRow(d: org.apache.spark.sql.Row): DeletionVectors.DvDescriptor =
-    DeletionVectors.DvDescriptor(
-      d.getAs[String]("storageType"),
-      d.getAs[String]("pathOrInlineDv"),
-      Option(d.getAs[Any]("offset")).map {
-        case l: Long => l
-        case i: Int  => i.toLong
-      },
-      d.getAs[Int]("sizeInBytes"),
-      d.getAs[Long]("cardinality"))
 
   /** All vacuum tombstones visible in the log: remove actions from the
     * surviving JSON commits plus the tombstone rows of the newest
@@ -758,88 +616,41 @@ object DeltaLog {
     val jsons = versionAsOf.fold(jsonsAll)(v => jsonsAll.filter(_._1 <= v))
     val cps = versionAsOf.fold(cpsAll)(v => cpsAll.filter(_._1 <= v))
     val out = mutable.Map.empty[(String, Option[DeletionVectors.DvDescriptor]), Long]
-    def record(path: String, dv: Option[DeletionVectors.DvDescriptor], ts: Long): Unit = {
-      val k = (path, dv)
-      out(k) = math.max(out.getOrElse(k, Long.MinValue), ts)
+    val sidecars = Seq.newBuilder[String]
+    // a missing deletionTimestamp must NOT make the tombstone
+    // instantly vacuum-eligible (0L would) — the file it came from
+    // bounds the removal time
+    def record(fallbackTs: => Long)(a: DeltaActions.Action): Unit = a match {
+      case r: DeltaActions.Remove =>
+        val k = (r.path, r.dv)
+        out(k) = math.max(out.getOrElse(k, Long.MinValue), r.deletionTimestamp.getOrElse(fallbackTs))
+      case s: DeltaActions.Sidecar => sidecars += s.path
+      case _                       => ()
     }
-
-    def recordRemovesOf(cp: org.apache.spark.sql.DataFrame, fallbackTs: Long): Seq[String] = {
-      if (cp.columns.contains("remove")) {
-        cp.select("remove").where("remove IS NOT NULL").collect().foreach { r =>
-          val rm = r.getStruct(0)
-          val names = rm.schema.fieldNames
-          // deletionTimestamp is optional in the protocol; a missing
-          // one must NOT make the tombstone instantly vacuum-eligible
-          // (0L would) — the checkpoint's own mtime is a safe upper
-          // bound of the removal time
-          val ts =
-            if (!names.contains("deletionTimestamp")) fallbackTs
-            else Option(rm.getAs[Any]("deletionTimestamp")).map {
-              case l: Long => l
-              case i: Int  => i.toLong
-            }.getOrElse(fallbackTs)
-          val dv =
-            if (!names.contains("deletionVector")) None
-            else Option(rm.getAs[org.apache.spark.sql.Row]("deletionVector")).map(dvFromRow)
-          record(decodePath(rm.getAs[String]("path")), dv, ts)
-        }
+    def recordRows(cp: org.apache.spark.sql.DataFrame, fallbackTs: Long): Unit =
+      Seq("remove", "sidecar").filter(cp.columns.contains).foreach { c =>
+        cp.select(c).where(s"$c IS NOT NULL").collect()
+          .foreach(r => DeltaActions.fromRow(c, r.getStruct(0)).foreach(record(fallbackTs)))
       }
-      if (!cp.columns.contains("sidecar")) Seq.empty
-      else cp.select("sidecar").where("sidecar IS NOT NULL").collect().toSeq
-        .map(_.getStruct(0).getAs[String]("path"))
-    }
 
     cps.toSeq.maxByOption(_._1).foreach { case (_, paths) =>
       val cpMtime = paths.map(p => fs.getFileStatus(p).getModificationTime).max
-      val sidecarNames: Seq[String] =
-        if (paths.size == 1 && paths.head.getName.endsWith(".json")) {
-          // v2 JSON manifest: removes/sidecars from the JSON lines
-          val in = fs.open(paths.head)
-          val lines =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-            finally in.close()
-          val sc = Seq.newBuilder[String]
-          lines.filter(_.nonEmpty).foreach { line =>
-            val node = mapper.readTree(line)
-            if (node.has("sidecar")) sc += node.get("sidecar").get("path").asText()
-            if (node.has("remove")) {
-              val rm = node.get("remove")
-              val ts = Option(rm.get("deletionTimestamp")).filterNot(_.isNull)
-                .map(_.asLong()).getOrElse(cpMtime)
-              val dv = Option(rm.get("deletionVector")).filterNot(_.isNull)
-                .map(DeletionVectors.parseDescriptor)
-              record(decodePath(rm.get("path").asText()), dv, ts)
-            }
-          }
-          sc.result()
-        } else recordRemovesOf(spark.read.parquet(paths.map(_.toString): _*), cpMtime)
-      val scPaths = sidecarNames.map(n => new Path(sidecarDir(tablePath), n))
+      if (paths.size == 1 && paths.head.getName.endsWith(".json"))
+        DeltaActions.read(fs, paths.head, Set("remove", "sidecar")).foreach(record(cpMtime))
+      else recordRows(spark.read.parquet(paths.map(_.toString): _*), cpMtime)
+      val scPaths = sidecars.result().map(n => new Path(sidecarDir(tablePath), n))
       // vacuum decides what to DELETE from this list — a silently
       // dropped sidecar would hide tombstones and delete live files,
       // so refuse exactly like snapshot() does
       scPaths.foreach(p => require(fs.exists(p),
         s"v2 checkpoint of $tablePath references a missing sidecar file: $p"))
       if (scPaths.nonEmpty)
-        recordRemovesOf(spark.read.parquet(scPaths.map(_.toString): _*), cpMtime)
+        recordRows(spark.read.parquet(scPaths.map(_.toString): _*), cpMtime)
     }
 
     jsons.toSeq.sortBy(_._1).foreach { case (_, p) =>
       lazy val mtime = fs.getFileStatus(p).getModificationTime
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      lines.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("remove")) {
-          val rm = node.get("remove")
-          val ts = Option(rm.get("deletionTimestamp")).filterNot(_.isNull)
-            .map(_.asLong()).getOrElse(mtime)
-          val dv = Option(rm.get("deletionVector")).filterNot(_.isNull)
-            .map(DeletionVectors.parseDescriptor)
-          record(decodePath(rm.get("path").asText()), dv, ts)
-        }
-      }
+      DeltaActions.read(fs, p, _ == "remove").foreach(record(mtime))
     }
     out.toSeq.map { case ((path, dv), ts) => Tombstone(path, ts, dv) }
   }
@@ -901,79 +712,21 @@ object DeltaLog {
       s"change data feed of $tablePath cannot replay versions " +
         s"${missing.mkString(", ")}: their JSON commits are gone (aged-out log)")
 
-    def pvOf(n: JsonNode): Map[String, Option[String]] =
-      Option(n.get("partitionValues")).map { o =>
-        o.fields().asScala.map { e =>
-          e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-        }.toMap
-      }.getOrElse(Map.empty)
-
     (fromVersion to toVersion).iterator.map { v =>
       val p = jsons(v)
       val ts = fs.getFileStatus(p).getModificationTime
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
       val cdc = Seq.newBuilder[CdcFile]
       val adds = Seq.newBuilder[AddFile]
       val removes = Seq.newBuilder[AddFile]
-      lines.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("cdc")) {
-          val c = node.get("cdc")
-          cdc += CdcFile(decodePath(c.get("path").asText()), pvOf(c),
-            Option(c.get("size")).map(_.asLong()).getOrElse(0L))
-        }
-        if (node.has("add")) {
-          val a = node.get("add")
-          if (a.path("dataChange").asBoolean(true))
-            adds += AddFile(
-              decodePath(a.get("path").asText()), pvOf(a),
-              Option(a.get("size")).map(_.asLong()).getOrElse(0L),
-              Option(a.get("stats")).filterNot(_.isNull).map(_.asText()),
-              Option(a.get("deletionVector")).filterNot(_.isNull)
-                .map(DeletionVectors.parseDescriptor))
-        }
-        if (node.has("remove")) {
-          val r = node.get("remove")
-          if (r.path("dataChange").asBoolean(true))
-            removes += AddFile(
-              decodePath(r.get("path").asText()), pvOf(r),
-              Option(r.get("size")).map(_.asLong()).getOrElse(0L),
-              None,
-              Option(r.get("deletionVector")).filterNot(_.isNull)
-                .map(DeletionVectors.parseDescriptor))
-        }
+      DeltaActions.read(fs, p, Set("cdc", "add", "remove")).foreach {
+        case DeltaActions.Cdc(c)          => cdc += c
+        case DeltaActions.Add(f, _, true) => adds += f
+        case r: DeltaActions.Remove if r.dataChange =>
+          removes += AddFile(r.path, r.partitionValues, r.size, None, r.dv)
+        case _ => ()
       }
       VersionChanges(v, ts, cdc.result(), adds.result(), removes.result())
     }
-  }
-
-  /** add/remove paths are percent-encoded relative URIs per the
-    * protocol.
-    */
-  private def decodePath(p: String): String =
-    try java.net.URI.create(p).getPath
-    catch { case _: IllegalArgumentException => p }
-
-  /** [[decodePath]]'s exact inverse, applied at EVERY action write
-    * site (commits, cdc, checkpoints): RFC 3986 pchar set kept
-    * literal except ':' (a colon in a relative URI's first segment
-    * would parse as a scheme) — everything else, '%' included,
-    * percent-encodes its UTF-8 bytes. Without this, a Hive-escaped
-    * partition dir like `part=x%3Ay` written raw would DECODE on read
-    * to `part=x:y` and miss the file.
-    */
-  private[tables] def encodePath(p: String): String = {
-    val sb = new StringBuilder(p.length + 8)
-    p.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach { b =>
-      val c = (b & 0xff).toChar
-      val keep = (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z') ||
-        (c >= '0' && c <= '9') || "-._~!$&'()*+,;=@/".indexOf(c.toInt) >= 0
-      if (keep) sb.append(c) else sb.append(f"%%${b & 0xff}%02X")
-    }
-    sb.toString
   }
 
   /** The newest usable checkpoint at or below `target`: the newer of
@@ -987,9 +740,9 @@ object DeltaLog {
       target: Long
   ): Option[(Long, Seq[Path])] = {
     val lcChoice: Option[(Long, Seq[Path])] =
-      readLastCheckpoint(fs, tablePath).flatMap { case (v, parts) =>
-        val paths = checkpointPaths(tablePath, v, parts)
-        if (v <= target && paths.forall(fs.exists)) Some(v -> paths) else None
+      readLastCheckpoint(fs, tablePath).flatMap { lc =>
+        val paths = checkpointPaths(tablePath, lc.version, lc.parts)
+        if (lc.version <= target && paths.forall(fs.exists)) Some(lc.version -> paths) else None
       }
     val listChoice: Option[(Long, Seq[Path])] =
       cps.view.filterKeys(_ <= target).toSeq.maxByOption(_._1)
@@ -1036,12 +789,5 @@ object DeltaLog {
     // the same version (either is valid; one file is one read)
     val cps = completeMultis ++ v2s ++ singles.map { case (v, p) => v -> Seq(p) }
     (jsons, cps)
-  }
-
-  private implicit class IteratorAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
   }
 }

@@ -52,12 +52,12 @@ object DeltaWrite {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      actions: Seq[String]
+      actions: Seq[DeltaActions.Action]
   ): Boolean = {
     val logDir = DeltaLog.logDir(tablePath)
     LakeFiles.putIfAbsent(logDir.getFileSystem(spark.sparkContext.hadoopConfiguration),
       new Path(logDir, f"$version%020d.json"),
-      actions.map(_ + "\n").mkString.getBytes("UTF-8"))
+      actions.map(DeltaActions.json(_) + "\n").mkString.getBytes("UTF-8"))
   }
 
   /** The next attempt number after a lost commit race, or the
@@ -101,13 +101,10 @@ object DeltaWrite {
   ): CommitResult =
     commit(spark, df, tablePath, partitionBy, overwrite = true, txn, requireBase)
 
-  private def txnJson(appId: String, version: Long): String = {
-    val t = mapper.createObjectNode()
-    t.put("appId", appId)
-    t.put("version", version)
-    t.put("lastUpdated", System.currentTimeMillis())
-    s"""{"txn":${mapper.writeValueAsString(t)}}"""
-  }
+  private def txnAction(txn: Option[(String, Long)]): Seq[DeltaActions.Action] =
+    txn.map { case (appId, v) =>
+      DeltaActions.Txn(appId, v, Some(System.currentTimeMillis()))
+    }.toSeq
 
   /** Format-level DELETE: files that cannot contain matching rows are
     * untouched; files that may are rewritten without the matching rows
@@ -349,7 +346,7 @@ object DeltaWrite {
         val post = t.where(matched).select(updatedCols(t): _*)
           .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
         stageFilesFor(spark, pre.unionByName(post), tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcJson)
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
 
     val matEx: Set[String] =
@@ -469,14 +466,13 @@ object DeltaWrite {
         val post = hit.select(updatedCols(hit): _*)
           .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
         stageFilesFor(spark, pre.unionByName(post), tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcJson)
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
 
     val descriptors = DeletionVectors.writeDvFile(fs, base, bitmaps)
     val dvAdds = bitmaps.map { case (key, _) =>
       val f = byPath(key)
-      StagedAdd(f.path, f.partitionValues, f.size, f.stats, Some(descriptors(key)),
-        f.tags, f.baseRowId, f.defaultRowCommitVersion)
+      f.copy(dv = Some(descriptors(key)))
     }
     val matEx: Set[String] =
       if (tracked) Set(meta.configuration(MatRowIdKey), meta.configuration(MatRcvKey))
@@ -485,7 +481,7 @@ object DeltaWrite {
     commitLoop(spark, tablePath, newAdds ++ dvAdds,
       bitmaps.map { case (key, _) => byPath(key) },
       meta.schemaString, partCols, overwrite = false,
-      extraActions = Seq(DvProtocolAction) ++ cdcActions,
+      extraActions = DvProtocol +: cdcActions,
       allowMapped = true, requireBase = Some(snap.version))
   }
 
@@ -543,7 +539,7 @@ object DeltaWrite {
 
     val newAdds = stageFilesFor(spark, prepared, tablePath, meta)
     val stagedNew = DeltaRead.readFiles(spark, tablePath, meta,
-      newAdds.map(a => DeltaLog.AddFile(a.rel, a.pv, a.size, a.stats)))
+      newAdds)
     val outside = stagedNew.filter(!coalesce(predicate, lit(false))).limit(1).count()
     require(outside == 0L,
       s"replaceWhere into $tablePath: incoming rows fall outside the predicate; " +
@@ -567,7 +563,7 @@ object DeltaWrite {
           else stageCdcDeletes(spark, tablePath, snap, candidates, predicate)
         val inserts = stagedNew.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
         deletes ++ stageFilesFor(spark, inserts, tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcJson)
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
 
     val schemaJson = bumpIdentityHwm(meta.schemaString, idSpecs, newAdds,
@@ -587,7 +583,7 @@ object DeltaWrite {
       txn: Option[(String, Long)] = None,
       callerBase: Option[Long] = None
   ): CommitResult = {
-    val txnActions = txn.map { case (a, v) => txnJson(a, v) }.toSeq
+    val txnActions = txnAction(txn)
     // partition values live in directory names and partitionValues
     // strings, compared byte-wise by prefix pushdown and file
     // skipping — collation-aware equality cannot reach them, so a
@@ -667,7 +663,7 @@ object DeltaWrite {
             val inserted =
               if (!minted) prepared
               else DeltaRead.readFiles(spark, tablePath, snap.metadata,
-                adds.map(a => DeltaLog.AddFile(a.rel, a.pv, a.size, a.stats)))
+                adds)
             val newRows = inserted.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
             val changes =
               if (snap.files.isEmpty) newRows
@@ -680,7 +676,7 @@ object DeltaWrite {
                   .unionByName(newRows)
               }
             stageFiles(spark, changes, tablePath, partitionBy,
-              destPrefix = "_change_data/", withStats = false).map(cdcJson)
+              destPrefix = "_change_data/", withStats = false).map(cdcAction)
           case _ => Seq.empty
         }
         // same logical shape as the declared schema → carry the stored
@@ -783,7 +779,7 @@ object DeltaWrite {
   private def bumpIdentityHwm(
       schemaJson: String,
       specs: Seq[DeltaPolicy.IdentitySpec],
-      adds: Seq[StagedAdd],
+      adds: Seq[DeltaLog.AddFile],
       // stats are keyed by PHYSICAL column name under column mapping;
       // identity on unmapped tables passes the identity function
       statsName: String => String = identity
@@ -830,7 +826,7 @@ object DeltaWrite {
       snap: DeltaLog.Snapshot,
       partitionBy: Seq[String],
       overwrite: Boolean,
-      extraActions: Seq[String] = Seq.empty,
+      extraActions: Seq[DeltaActions.Action] = Seq.empty,
       requireBase: Option[Long] = None
   ): CommitResult = {
     val meta = snap.metadata
@@ -907,7 +903,7 @@ object DeltaWrite {
       destPrefix: String = "",
       withStats: Boolean = true,
       statsExclude: Set[String] = Set.empty
-  ): Seq[StagedAdd] =
+  ): Seq[DeltaLog.AddFile] =
     if (!meta.isColumnMapped)
       stageFiles(spark, df, tablePath, meta.partitionColumns,
         destPrefix, withStats, statsExclude)
@@ -919,46 +915,6 @@ object DeltaWrite {
         meta.partitionColumns.map(meta.physicalName),
         destPrefix, withStats, statsExclude)
     }
-
-  /** Serialize a remove action for `f` (extended file metadata so
-    * readers see partitionValues/size, and the entry's deletion vector
-    * so the DV file inherits the tombstone's retention clock).
-    */
-  private def removeJson(f: DeltaLog.AddFile, dataChange: Boolean): String = {
-    val r = mapper.createObjectNode()
-    r.put("path", DeltaLog.encodePath(f.path))
-    r.put("deletionTimestamp", System.currentTimeMillis())
-    r.put("dataChange", dataChange)
-    r.put("extendedFileMetadata", true)
-    val pvNode = r.putObject("partitionValues")
-    f.partitionValues.foreach { case (k, v) =>
-      v match { case Some(s) => pvNode.put(k, s); case None => pvNode.putNull(k) }
-    }
-    r.put("size", f.size)
-    f.dv.foreach { d =>
-      val dn = r.putObject("deletionVector")
-      dn.put("storageType", d.storageType)
-      dn.put("pathOrInlineDv", d.pathOrInlineDv)
-      d.offset.foreach(o => dn.put("offset", o))
-      dn.put("sizeInBytes", d.sizeInBytes)
-      dn.put("cardinality", d.cardinality)
-    }
-    s"""{"remove":${mapper.writeValueAsString(r)}}"""
-  }
-
-  private final case class StagedAdd(
-      rel: String,
-      pv: Map[String, Option[String]],
-      size: Long,
-      stats: Option[String],
-      dv: Option[DeletionVectors.DvDescriptor] = None,
-      tags: Map[String, String] = Map.empty,
-      /** Preserved row-tracking ids (re-adds of existing files: DV
-        * deletes, restore). Fresh files get theirs assigned inside
-        * commitLoop, under the commit race.
-        */
-      baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
 
   /** `delta.enableRowTracking`: stable per-row ids. Appends and DV
     * deletes preserve them via the per-file `baseRowId`; file
@@ -1000,28 +956,15 @@ object DeltaWrite {
       metaOpt: Option[DeltaLog.Metadata],
       prevVersion: Option[Long],
       operation: String
-  ): Option[String] =
+  ): Option[DeltaActions.Action] =
     metaOpt.filter(_.configuration.get(IctKey).contains("true")).map { _ =>
       val ict = DeltaLog.nextInCommitTimestamp(spark, tablePath, prevVersion)
-      val ci = mapper.createObjectNode()
-      ci.put("operation", operation)
-      ci.put("inCommitTimestamp", ict)
-      ci.put("timestamp", ict)
-      s"""{"commitInfo":${mapper.writeValueAsString(ci)}}"""
+      DeltaActions.CommitInfo(operation, ict, Some(ict))
     }
 
-  /** Serialize a staged change-data file as a `cdc` action. */
-  private def cdcJson(add: StagedAdd): String = {
-    val c = mapper.createObjectNode()
-    c.put("path", DeltaLog.encodePath(add.rel))
-    val pvNode = c.putObject("partitionValues")
-    add.pv.foreach { case (k, v) =>
-      v match { case Some(s) => pvNode.put(k, s); case None => pvNode.putNull(k) }
-    }
-    c.put("size", add.size)
-    c.put("dataChange", false)
-    s"""{"cdc":${mapper.writeValueAsString(c)}}"""
-  }
+  /** A staged change-data file as a `cdc` action. */
+  private def cdcAction(f: DeltaLog.AddFile): DeltaActions.Action =
+    DeltaActions.Cdc(DeltaLog.CdcFile(f.path, f.partitionValues, f.size))
 
   /** Stage the predicate-matched (visible) rows of `candidates` as
     * change-data files under `_change_data/` and return the cdc
@@ -1035,13 +978,13 @@ object DeltaWrite {
       snap: DeltaLog.Snapshot,
       candidates: Seq[DeltaLog.AddFile],
       predicate: org.apache.spark.sql.Column
-  ): Seq[String] = {
+  ): Seq[DeltaActions.Action] = {
     val deleted = DeltaRead.readFiles(spark, tablePath, snap.metadata, candidates)
       .filter(coalesce(predicate, lit(false)))
       .withColumn(DeltaChanges.ChangeTypeCol, lit("delete"))
     stageFilesFor(spark, deleted, tablePath, snap.metadata,
       destPrefix = "_change_data/", withStats = false)
-      .map(cdcJson)
+      .map(cdcAction)
   }
 
   /** Merge-on-read DELETE: instead of rewriting files, write a
@@ -1112,8 +1055,7 @@ object DeltaWrite {
       val f = byPath(key)
       // DV deletes keep row ids stable: the file (and its baseRowId)
       // survives, only the bitmap changes
-      StagedAdd(f.path, f.partitionValues, f.size, f.stats, Some(descriptors(key)),
-        f.tags, f.baseRowId, f.defaultRowCommitVersion)
+      f.copy(dv = Some(descriptors(key)))
     }
     // CDF rows are the VISIBLE matched rows (existing DVs applied) —
     // staged before the new DVs take effect
@@ -1127,7 +1069,7 @@ object DeltaWrite {
     // replaced DV file gets its own tombstone for vacuum retention
     commitLoop(spark, tablePath, adds, bitmaps.map { case (key, _) => byPath(key) },
       snap.metadata.schemaString, partCols, overwrite = false,
-      extraActions = Seq(DvProtocolAction) ++ cdcActions,
+      extraActions = DvProtocol +: cdcActions,
       allowMapped = true, requireBase = Some(snap.version))
   }
 
@@ -1325,7 +1267,7 @@ object DeltaWrite {
             writeSrc.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
         }
         stageFilesFor(spark, changeRows, tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcJson)
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
 
     val matEx: Set[String] =
@@ -1337,7 +1279,7 @@ object DeltaWrite {
       bumpIdentityHwm(meta.schemaString, DeltaPolicy.identityColumns(meta), adds,
         meta.physicalName),
       partCols, overwrite = false,
-      extraActions = txn.map { case (a, v) => txnJson(a, v) }.toSeq ++ cdcActions,
+      extraActions = txnAction(txn) ++ cdcActions,
       allowMapped = true, requireBase = Some(snap.version))
   }
 
@@ -1512,7 +1454,7 @@ object DeltaWrite {
             writeSrc.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
         }
         stageFilesFor(spark, changeRows, tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcJson)
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
 
     val matEx: Set[String] =
@@ -1521,7 +1463,7 @@ object DeltaWrite {
       else Set.empty
     val newAdds = stageFilesFor(spark, content, tablePath, meta, statsExclude = matEx)
     val (dvAdds, dvRemoves) =
-      if (dvUpdated.isEmpty) (Seq.empty[StagedAdd], Seq.empty[DeltaLog.AddFile])
+      if (dvUpdated.isEmpty) (Seq.empty[DeltaLog.AddFile], Seq.empty[DeltaLog.AddFile])
       else {
         val base = tablePath.stripSuffix("/")
         val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1530,8 +1472,7 @@ object DeltaWrite {
         val descriptors = DeletionVectors.writeDvFile(fs, base, dvUpdated)
         val adds = dvUpdated.map { case (key, _) =>
           val f = byPath(key)
-          StagedAdd(f.path, f.partitionValues, f.size, f.stats, Some(descriptors(key)),
-            f.tags, f.baseRowId, f.defaultRowCommitVersion)
+          f.copy(dv = Some(descriptors(key)))
         }
         (adds, dvUpdated.map { case (key, _) => byPath(key) })
       }
@@ -1545,14 +1486,16 @@ object DeltaWrite {
       bumpIdentityHwm(meta.schemaString, DeltaPolicy.identityColumns(meta), newAdds,
         meta.physicalName),
       partCols, overwrite = false,
-      extraActions = Seq(DvProtocolAction) ++
-        txn.map { case (a, v) => txnJson(a, v) }.toSeq ++ cdcActions,
+      extraActions = DvProtocol +: (txnAction(txn) ++ cdcActions),
       allowMapped = true, requireBase = Some(snap.version))
   }
 
-  private val DvProtocolAction =
-    """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-      """"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}"""
+  /** The protocol every DV-writing commit restates: the DV
+    * reader+writer feature alone (the table's other features are not
+    * carried over).
+    */
+  private val DvProtocol =
+    DeltaLog.Protocol(3, 7, Some(Seq("deletionVectors")), Some(Seq("deletionVectors")))
 
   /** ALTER TABLE SET TBLPROPERTIES: a metadata-only commit merging
     * `props` into the table configuration (schema, partitioning and
@@ -1584,7 +1527,8 @@ object DeltaWrite {
       if (newConf == meta.configuration) return CommitResult(snap.version, 0, 0)
       val version = snap.version + 1
 
-      val actions = Seq.newBuilder[String]
+      val actions = Seq.newBuilder[DeltaActions.Action]
+      var protocol = snap.protocol
       // in-commit timestamps: enabling (or having enabled) the feature
       // stamps this commit; enablement also records the provenance
       // configs the protocol requires so readers know where the
@@ -1593,45 +1537,15 @@ object DeltaWrite {
         !meta.configuration.get(IctKey).contains("true")
       if (enablingIct || meta.configuration.get(IctKey).contains("true")) {
         val ict = DeltaLog.nextInCommitTimestamp(spark, tablePath, Some(snap.version))
-        val ci = mapper.createObjectNode()
-        ci.put("operation", "SET TBLPROPERTIES")
-        ci.put("inCommitTimestamp", ict)
-        ci.put("timestamp", ict)
-        actions += s"""{"commitInfo":${mapper.writeValueAsString(ci)}}"""
+        actions += DeltaActions.CommitInfo("SET TBLPROPERTIES", ict, Some(ict))
         if (enablingIct) {
           newConf += ("delta.inCommitTimestampEnablementVersion" -> version.toString)
           newConf += ("delta.inCommitTimestampEnablementTimestamp" -> ict.toString)
-          val pr = snap.protocol
-          def quoted(fs: Seq[String]) = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
-          val wf =
-            if (pr.minWriterVersion >= 7) pr.writerFeatures.getOrElse(Seq.empty)
-            else DeltaDdl.legacyWriterFeatures(pr.minWriterVersion)
-          if (!wf.contains("inCommitTimestamp")) {
-            val rf = pr.readerFeatures
-              .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-            actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
-              s""""minWriterVersion":7$rf,""" +
-              s""""writerFeatures":${quoted(wf :+ "inCommitTimestamp")}}}"""
-          }
+          protocol = protocol.withFeatures(Seq.empty, Seq("inCommitTimestamp"))
         }
       }
-      if (props.get("delta.enableChangeDataFeed").contains("true")) {
-        val pr = snap.protocol
-        def quoted(fs: Seq[String]) = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
-        if (pr.minWriterVersion >= 7) {
-          val wf = (pr.writerFeatures.getOrElse(Seq.empty) :+ "changeDataFeed").distinct
-          if (!pr.writerFeatures.exists(_.contains("changeDataFeed"))) {
-            val rf = pr.readerFeatures
-              .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-            actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
-              s""""minWriterVersion":${pr.minWriterVersion}$rf,""" +
-              s""""writerFeatures":${quoted(wf)}}}"""
-          }
-        } else if (pr.minWriterVersion < 4) {
-          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
-            s""""minWriterVersion":4}}"""
-        }
-      }
+      if (props.get("delta.enableChangeDataFeed").contains("true"))
+        protocol = protocol.withFeatures(Seq.empty, Seq("changeDataFeed"))
       if (props.get("delta.enableRowTracking").contains("true")) {
         // enablement also names the materialized-row-id columns file
         // rewrites preserve ids through (random suffix so they can
@@ -1645,31 +1559,12 @@ object DeltaWrite {
         // rowTracking + its domainMetadata dependency are writer
         // features (feature protocol only — no legacy version encodes
         // them); readers ignore them, so minReaderVersion is untouched
-        val pr = snap.protocol
-        def quoted(fs: Seq[String]) = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
-        val have =
-          if (pr.minWriterVersion >= 7) pr.writerFeatures.getOrElse(Seq.empty)
-          else DeltaDdl.legacyWriterFeatures(pr.minWriterVersion)
-        val want = (have ++ Seq("rowTracking", "domainMetadata")).distinct
-        if (want != have || pr.minWriterVersion < 7) {
-          val rf = pr.readerFeatures
-            .map(f => s""","readerFeatures":${quoted(f)}""").getOrElse("")
-          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},""" +
-            s""""minWriterVersion":7$rf,""" +
-            s""""writerFeatures":${quoted(want)}}}"""
-        }
+        protocol = protocol.withFeatures(Seq.empty, Seq("rowTracking", "domainMetadata"))
       }
-      val m = mapper.createObjectNode()
-      m.put("id", Option(meta.id).filter(_.nonEmpty)
-        .getOrElse(java.util.UUID.randomUUID().toString))
-      m.putObject("format").put("provider", "parquet").putObject("options")
-      m.put("schemaString", meta.schemaString)
-      val pc = m.putArray("partitionColumns")
-      meta.partitionColumns.foreach(pc.add)
-      val confNode = m.putObject("configuration")
-      newConf.foreach { case (k, v) => confNode.put(k, v) }
-      m.put("createdTime", meta.createdTime.getOrElse(System.currentTimeMillis()))
-      actions += s"""{"metaData":${mapper.writeValueAsString(m)}}"""
+      if (protocol != snap.protocol) actions += protocol
+      actions += meta.copy(configuration = newConf,
+        id = Option(meta.id).filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString),
+        createdTime = meta.createdTime.orElse(Some(System.currentTimeMillis())))
 
       if (writeCommitFile(spark, tablePath, version, actions.result()))
         return CommitResult(version, 0, 0)
@@ -1703,14 +1598,12 @@ object DeltaWrite {
     // re-add anything whose content differs (path present in old but
     // absent now, or same path with a different DV)
     val adds = old.files.filter(f => !curByPath.get(f.path).contains(f))
-      .map(f => StagedAdd(f.path, f.partitionValues, f.size, f.stats, f.dv, f.tags,
-        f.baseRowId, f.defaultRowCommitVersion))
     val removes = cur.files.filterNot(f => oldByPath.contains(f.path))
     if (adds.isEmpty && removes.isEmpty && cur.metadata == old.metadata)
       return CommitResult(cur.version, 0, 0)
     // DV-bearing re-adds need the feature protocol in case the table
     // was created before DVs appeared
-    val extra = if (adds.exists(_.dv.isDefined)) Seq(DvProtocolAction) else Seq.empty
+    val extra = if (adds.exists(_.dv.isDefined)) Seq(DvProtocol) else Seq.empty
     commitLoop(spark, tablePath, adds, removes,
       old.metadata.schemaString, old.metadata.partitionColumns,
       overwrite = false, extraActions = extra,
@@ -2055,7 +1948,7 @@ object DeltaWrite {
       // hidden materialized row-id columns: written to the files but
       // kept out of the stats JSON (they are not part of the schema)
       statsExclude: Set[String] = Set.empty
-  ): Seq[StagedAdd] = {
+  ): Seq[DeltaLog.AddFile] = {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(DeltaLog.logDir(tablePath))
@@ -2085,7 +1978,7 @@ object DeltaWrite {
         throw new IllegalStateException(s"could not move staged file $file to $dest")
       val pv = partitionValuesFromPath(rel, partitionBy)
       val size = fs.getFileStatus(dest).getLen
-      StagedAdd(destPrefix + rel, pv, size,
+      DeltaLog.AddFile(destPrefix + rel, pv, size,
         statsByFile.get(DvDeleted.normalizePath(s"${staging.toString}/$rel")))
     }
     fs.delete(staging, true)
@@ -2095,12 +1988,12 @@ object DeltaWrite {
   private def commitLoop(
       spark: SparkSession,
       tablePath: String,
-      adds: Seq[StagedAdd],
+      adds: Seq[DeltaLog.AddFile],
       explicitRemoves: Seq[DeltaLog.AddFile],
       schemaJson: String,
       partitionBy: Seq[String],
       overwrite: Boolean,
-      extraActions: Seq[String] = Seq.empty,
+      extraActions: Seq[DeltaActions.Action] = Seq.empty,
       allowMapped: Boolean = false,
       // false for pure rewrites (OPTIMIZE/ZORDER): per the protocol,
       // readers deriving a change feed skip dataChange=false actions
@@ -2153,7 +2046,7 @@ object DeltaWrite {
         if (overwrite) snapOpt.map(_.files).getOrElse(Seq.empty)
         else explicitRemoves
 
-      val actions = Seq.newBuilder[String]
+      val actions = Seq.newBuilder[DeltaActions.Action]
       // in-commit timestamp rides first, when the table enables it
       ictAction(spark, tablePath, snapOpt.map(_.metadata), current, "WRITE")
         .foreach(actions += _)
@@ -2161,78 +2054,32 @@ object DeltaWrite {
       // VARIANT columns require `variantType`, TIMESTAMP WITHOUT TIME
       // ZONE requires `timestampNtz` — both reader+writer features, so
       // a foreign reader that cannot decode the physical encoding
-      // refuses instead of misreading
+      // refuses instead of misreading; writer-only features
+      // (collations) leave the reader protocol alone. A new table
+      // states its protocol; schema evolution that introduces a
+      // feature-gated type upgrades it in the SAME commit.
       val typeFeatures = schemaTypeFeatures(schemaJson)
       val writerOnly = schemaWriterOnlyFeatures(schemaJson)
-      def quotedF(fs: Seq[String]) = fs.map("\"" + _ + "\"").mkString("[", ",", "]")
-      if (current.isEmpty) {
-        if (typeFeatures.isEmpty && writerOnly.isEmpty)
-          actions += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-        else if (typeFeatures.isEmpty) {
-          // writer-only features (collations): readers stay at v1
-          val wf = (DeltaDdl.legacyWriterFeatures(2) ++ writerOnly).distinct
-          actions += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
-            s""""writerFeatures":${quotedF(wf)}}}"""
-        } else {
-          val wf = (DeltaDdl.legacyWriterFeatures(2) ++ typeFeatures ++ writerOnly).distinct
-          actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${quotedF(typeFeatures)},""" +
-            s""""writerFeatures":${quotedF(wf)}}}"""
-        }
-      } else if (needMeta && (typeFeatures.nonEmpty || writerOnly.nonEmpty)) {
-        // schema evolution introduced a feature-gated type onto an
-        // existing table: upgrade the protocol in the SAME commit
-        val pr = snapOpt.get.protocol
-        val haveR =
-          if (pr.minReaderVersion >= 3) pr.readerFeatures.getOrElse(Seq.empty)
-          else if (pr.minReaderVersion >= 2) Seq("columnMapping")
-          else Seq.empty
-        val haveW =
-          if (pr.minWriterVersion >= 7) pr.writerFeatures.getOrElse(Seq.empty)
-          else DeltaDdl.legacyWriterFeatures(pr.minWriterVersion)
-        val needReaderUpgrade = !typeFeatures.forall(haveR.contains)
-        val needWriterUpgrade =
-          !(typeFeatures ++ writerOnly).forall(haveW.contains)
-        if (needReaderUpgrade) {
-          actions += s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${quotedF((haveR ++ typeFeatures).distinct)},""" +
-            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}"""
-        } else if (needWriterUpgrade) {
-          // writer-only upgrade: the reader protocol is NOT raised
-          val rPart =
-            if (pr.minReaderVersion >= 3) s""""readerFeatures":${quotedF(haveR)},"""
-            else ""
-          actions += s"""{"protocol":{"minReaderVersion":${pr.minReaderVersion},"minWriterVersion":7,""" +
-            rPart +
-            s""""writerFeatures":${quotedF((haveW ++ typeFeatures ++ writerOnly).distinct)}}}"""
-        }
-      }
+      val base = snapOpt.map(_.protocol).getOrElse(DeltaLog.Protocol.Base)
+      val protocol = base.withFeatures(typeFeatures, typeFeatures ++ writerOnly)
+      if (current.isEmpty || (needMeta && protocol != base)) actions += protocol
       actions ++= extraActions
       if (needMeta) {
         // a schema change is still the SAME table: carry the existing
         // id, configuration and createdTime forward — a fresh metaData
         // must not wipe table identity or configuration
         val prev = snapOpt.map(_.metadata)
-        val m = mapper.createObjectNode()
-        m.put("id", prev.map(_.id).filter(_.nonEmpty)
-          .getOrElse(java.util.UUID.randomUUID().toString))
-        m.putObject("format").put("provider", "parquet").putObject("options")
-        m.put("schemaString", schemaJson)
-        val pc = m.putArray("partitionColumns")
-        partitionBy.foreach(pc.add)
-        val confNode = m.putObject("configuration")
-        configOverride.orElse(prev.map(_.configuration)).getOrElse(Map.empty)
-          .foreach { case (k, v) => confNode.put(k, v) }
-        m.put("createdTime",
-          prev.flatMap(_.createdTime).getOrElse(System.currentTimeMillis()))
-        actions += s"""{"metaData":${mapper.writeValueAsString(m)}}"""
+        actions += DeltaLog.Metadata(schemaJson, partitionBy,
+          configOverride.orElse(prev.map(_.configuration)).getOrElse(Map.empty),
+          prev.map(_.id).filter(_.nonEmpty).getOrElse(java.util.UUID.randomUUID().toString),
+          prev.flatMap(_.createdTime).orElse(Some(System.currentTimeMillis())))
       }
       // row tracking: fresh files get contiguous base row ids above
       // the table's high-water mark; the bumped mark commits in the
       // SAME version as a domainMetadata action. Runs inside the
       // commit race — a lost race re-reads the mark and re-assigns.
       val tracked = snapOpt.exists(s => rowTrackingEnabled(s.metadata))
-      val rowAdds: Seq[StagedAdd] =
+      val rowAdds: Seq[DeltaLog.AddFile] =
         if (!tracked) adds
         else {
           val hwm0 = snapOpt.map(_.rowIdHighWaterMark).getOrElse(-1L)
@@ -2251,44 +2098,16 @@ object DeltaWrite {
               add.copy(baseRowId = Some(base), defaultRowCommitVersion = Some(version))
             }
           }
-          if (hwm != hwm0) {
-            val dn = mapper.createObjectNode()
-            dn.put("domain", DeltaLog.RowTrackingDomain)
-            dn.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
-            dn.put("removed", false)
-            actions += s"""{"domainMetadata":${mapper.writeValueAsString(dn)}}"""
-          }
+          if (hwm != hwm0)
+            actions += DeltaActions.DomainMetadata(
+              DeltaLog.RowTrackingDomain, s"""{"rowIdHighWaterMark":$hwm}""")
           assigned
         }
 
-      actions ++= removes.map(removeJson(_, dataChange))
-      rowAdds.foreach { add =>
-        val a = mapper.createObjectNode()
-        a.put("path", DeltaLog.encodePath(add.rel))
-        val pvNode = a.putObject("partitionValues")
-        add.pv.foreach { case (k, v) =>
-          v match { case Some(s) => pvNode.put(k, s); case None => pvNode.putNull(k) }
-        }
-        a.put("size", add.size)
-        a.put("modificationTime", System.currentTimeMillis())
-        a.put("dataChange", dataChange)
-        add.stats.foreach(s => a.put("stats", s))
-        if (add.tags.nonEmpty) {
-          val tn = a.putObject("tags")
-          add.tags.foreach { case (k, v) => tn.put(k, v) }
-        }
-        add.dv.foreach { d =>
-          val dn = a.putObject("deletionVector")
-          dn.put("storageType", d.storageType)
-          dn.put("pathOrInlineDv", d.pathOrInlineDv)
-          d.offset.foreach(o => dn.put("offset", o))
-          dn.put("sizeInBytes", d.sizeInBytes)
-          dn.put("cardinality", d.cardinality)
-        }
-        add.baseRowId.foreach(b => a.put("baseRowId", b))
-        add.defaultRowCommitVersion.foreach(v => a.put("defaultRowCommitVersion", v))
-        actions += s"""{"add":${mapper.writeValueAsString(a)}}"""
-      }
+      val now = System.currentTimeMillis()
+      actions ++= removes.map(f => DeltaActions.Remove(
+        f.path, Some(now), dataChange, f.partitionValues, f.size, f.dv))
+      actions ++= rowAdds.map(DeltaActions.Add(_, now, dataChange))
 
       if (writeCommitFile(spark, tablePath, version, actions.result())) {
         // delta.checkpointInterval (when the table sets it): write a
@@ -2396,7 +2215,6 @@ object DeltaWrite {
   def checkpoint(spark: SparkSession, tablePath: String, parts: Int = 1): Long = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
-    val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // preserve the table's ACTUAL latest protocol action — a
     // column-mapped or timestampNtz table must not be downgraded to
@@ -2405,87 +2223,84 @@ object DeltaWrite {
     // DV-bearing file somehow exists under a pre-feature protocol,
     // checkpointing reader v1 would be silently wrong, so add the
     // feature.
-    val hasDv = snap.files.exists(_.dv.isDefined)
-    val sp = snap.protocol
-    val protocol =
-      if (hasDv && !(sp.minReaderVersion >= 3 &&
-          sp.readerFeatures.exists(_.contains("deletionVectors"))))
-        CpProtocol(3, 7,
-          Some((sp.readerFeatures.getOrElse(Seq.empty) :+ "deletionVectors").distinct),
-          Some((sp.writerFeatures.getOrElse(Seq.empty) :+ "deletionVectors").distinct))
-      else CpProtocol(sp.minReaderVersion, sp.minWriterVersion,
-        sp.readerFeatures, sp.writerFeatures)
-
-    // carry unexpired tombstones forward: once the JSON prefix is
-    // cleaned up, the checkpoint is the only place vacuum can learn
-    // WHEN a file was removed. Expired ones are dropped (vacuum may
-    // reclaim them at any time; keeping them would grow checkpoints
-    // without bound).
-    val tombstoneCutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
-    val tombstoneRows = DeltaLog.tombstones(spark, tablePath)
-      .filter(_.deletionTimestamp > tombstoneCutoff)
-      .map(t => CpRow(remove = Some(CpRemove(
-        DeltaLog.encodePath(t.path), t.deletionTimestamp, dataChange = false,
-        t.dv.map(d => CpDv(
-          d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality))))))
-
-    val rows: Seq[CpRow] =
-      CpRow(protocol = Some(protocol)) +:
-        CpRow(metaData = Some(CpMeta(
-          // the checkpoint restates the same table: same id, same
-          // createdTime (a random id here would change table identity
-          // for every reader replaying from the checkpoint)
-          if (snap.metadata.id.nonEmpty) snap.metadata.id
-          else java.util.UUID.randomUUID().toString,
-          CpFormat("parquet", Map.empty),
-          snap.metadata.schemaString, snap.metadata.partitionColumns,
-          // carry table configuration (column mapping mode etc.)
-          // through the checkpoint, or replay-from-checkpoint would
-          // misread a mapped table as unmapped
-          snap.metadata.configuration,
-          snap.metadata.createdTime))) +:
-        (snap.files.map(f => CpRow(add = Some(CpAdd(
-          DeltaLog.encodePath(f.path),
-          // protocol: null partition value → null map value
-          f.partitionValues.map { case (k, v) => k -> v.orNull },
-          f.size, 0L, dataChange = false, f.stats.orNull,
-          f.dv.map(d => CpDv(
-            d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)),
-          Option(f.tags).filter(_.nonEmpty),
-          f.baseRowId, f.defaultRowCommitVersion)))) ++
-          tombstoneRows ++
-          // txn high-water marks survive log cleanup, or idempotent
-          // writers would re-commit old batches after a checkpoint
-          snap.txns.toSeq.sortBy(_._1).map { case (appId, v) =>
-            CpRow(txn = Some(CpTxn(appId, v)))
-          } ++
-          // live domains (row-id high-water mark etc.) must survive
-          // log cleanup like txn marks do; removed domains are gone
-          // from the snapshot and stay gone
-          snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-            CpRow(domainMetadata = Some(CpDomain(d, c)))
-          })
+    val dv = if (snap.files.exists(_.dv.isDefined)) Seq("deletionVectors") else Seq.empty
+    val rows: Seq[DeltaActions.ActionRow] =
+      (Seq(snap.protocol.withFeatures(dv, dv), checkpointMeta(snap.metadata)) ++
+        snap.files.map(checkpointAdd) ++ liveTombstones(spark, tablePath, None) ++
+        checkpointTxns(snap) ++ checkpointDomains(snap)).map(DeltaActions.row)
 
     val destPaths = DeltaLog.checkpointPaths(tablePath, snap.version, parts)
-    val groups: Seq[Seq[CpRow]] =
+    val groups: Seq[Seq[DeltaActions.ActionRow]] =
       if (parts <= 1) Seq(rows)
       else {
-        val g = Array.fill(parts)(Seq.newBuilder[CpRow])
+        val g = Array.fill(parts)(Seq.newBuilder[DeltaActions.ActionRow])
         rows.zipWithIndex.foreach { case (r, i) => g(i % parts) += r }
         g.toSeq.map(_.result())
       }
 
     groups.zip(destPaths).zipWithIndex.foreach { case ((group, cpPath), i) =>
-      writeSingleParquet(spark, group.toDS(), cpPath, s"_cp_tmp_${snap.version}_$i")
+      writeSingleParquet(spark, layout(group.toDS(), DeltaActions.ClassicCheckpoint), cpPath,
+        s"_cp_tmp_${snap.version}_$i")
     }
+    writeLastCheckpoint(spark, tablePath, snap.version, rows.size, parts)
+  }
 
-    val partsField = if (parts <= 1) "" else s""","parts":$parts"""
+  /** The metaData a checkpoint restates: the same table — same id,
+    * same createdTime (a random id here would change table identity
+    * for every reader replaying from the checkpoint) — configuration
+    * included (column mapping mode etc.), or replay-from-checkpoint
+    * would misread a mapped table as unmapped.
+    */
+  private def checkpointMeta(m: DeltaLog.Metadata): DeltaLog.Metadata =
+    if (m.id.nonEmpty) m else m.copy(id = java.util.UUID.randomUUID().toString)
+
+  private def checkpointAdd(f: DeltaLog.AddFile): DeltaActions.Action =
+    DeltaActions.Add(f, modificationTime = 0L, dataChange = false)
+
+  /** txn high-water marks survive log cleanup, or idempotent writers
+    * would re-commit old batches after a checkpoint.
+    */
+  private def checkpointTxns(snap: DeltaLog.Snapshot): Seq[DeltaActions.Action] =
+    snap.txns.toSeq.sortBy(_._1).map { case (appId, v) => DeltaActions.Txn(appId, v) }
+
+  /** Live domains (row-id high-water mark etc.) must survive log
+    * cleanup like txn marks do; removed domains are gone from the
+    * snapshot and stay gone.
+    */
+  private def checkpointDomains(snap: DeltaLog.Snapshot): Seq[DeltaActions.Action] =
+    snap.domains.toSeq.sortBy(_._1).map { case (d, c) => DeltaActions.DomainMetadata(d, c) }
+
+  /** Unexpired tombstones, carried forward: once the JSON prefix is
+    * cleaned up, the checkpoint is the only place vacuum can learn
+    * WHEN a file was removed. Expired ones are dropped (vacuum may
+    * reclaim them at any time; keeping them would grow checkpoints
+    * without bound).
+    */
+  private def liveTombstones(
+      spark: SparkSession, tablePath: String, versionAsOf: Option[Long]): Seq[DeltaActions.Action] = {
+    val cutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
+    DeltaLog.tombstones(spark, tablePath, versionAsOf).filter(_.deletionTimestamp > cutoff)
+      .map(t => DeltaActions.Remove(t.path, Some(t.deletionTimestamp), dataChange = false, dv = t.dv))
+  }
+
+  /** A checkpoint file's columns: the layout's subset of the action
+    * rows, in the layout's order.
+    */
+  private def layout(
+      rows: org.apache.spark.sql.Dataset[DeltaActions.ActionRow], columns: Seq[String]): DataFrame =
+    rows.select(columns.map(col): _*)
+
+  /** Point `_last_checkpoint` at the checkpoint of `version`
+    * (`size` actions in `parts` files); returns the version.
+    */
+  private def writeLastCheckpoint(
+      spark: SparkSession, tablePath: String, version: Long, size: Long, parts: Int = 1): Long = {
     val lc = new Path(DeltaLog.logDir(tablePath), "_last_checkpoint")
-    val out = fs.create(lc, true)
-    try out.write(
-      s"""{"version":${snap.version},"size":${rows.size}$partsField}""".getBytes("UTF-8"))
+    val partsField = if (parts <= 1) "" else s""","parts":$parts"""
+    val out = lc.getFileSystem(spark.sparkContext.hadoopConfiguration).create(lc, true)
+    try out.write(s"""{"version":$version,"size":$size$partsField}""".getBytes("UTF-8"))
     finally out.close()
-    snap.version
+    version
   }
 
   /** Write a V2 checkpoint (`v2Checkpoints` table feature): a
@@ -2494,90 +2309,60 @@ object DeltaWrite {
     * references, with the file actions split across `sidecars` parquet
     * files under `_delta_log/_sidecars/` — the shape huge tables use
     * so no single checkpoint file becomes a read/write bottleneck and
-    * racing writers never clobber each other (unique names). The
-    * manifest's protocol row is widened with the `v2Checkpoints`
-    * reader/writer feature (plus any feature the table already
-    * declares), since replaying from this checkpoint requires it.
+    * racing writers never clobber each other (unique names).
     */
   def checkpointV2(spark: SparkSession, tablePath: String, sidecars: Int = 2): Long = {
     import spark.implicits._
     val snap = DeltaLog.snapshot(spark, tablePath)
     val fs = DeltaLog.logDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-    val sp = snap.protocol
-    val hasDv = snap.files.exists(_.dv.isDefined)
-    val needed = Seq("v2Checkpoints") ++
-      (if (hasDv) Seq("deletionVectors") else Seq.empty) ++
-      // legacy reader-2 capability becomes an explicit feature once
-      // the protocol is feature-versioned
-      (if (sp.minReaderVersion == 2) Seq("columnMapping") else Seq.empty)
-    val protocol = CpProtocol(
-      math.max(3, sp.minReaderVersion), math.max(7, sp.minWriterVersion),
-      Some((sp.readerFeatures.getOrElse(Seq.empty) ++ needed).distinct),
-      Some((sp.writerFeatures.getOrElse(Seq.empty) ++ needed).distinct))
-
-    val tombstoneCutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
-    val fileRows: Seq[SidecarFileRow] =
-      snap.files.map(f => SidecarFileRow(add = Some(CpAdd(
-        DeltaLog.encodePath(f.path),
-        f.partitionValues.map { case (k, v) => k -> v.orNull },
-        f.size, 0L, dataChange = false, f.stats.orNull,
-        f.dv.map(d => CpDv(
-          d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)),
-        Option(f.tags).filter(_.nonEmpty),
-        f.baseRowId, f.defaultRowCommitVersion)))) ++
-        DeltaLog.tombstones(spark, tablePath)
-          .filter(_.deletionTimestamp > tombstoneCutoff)
-          .map(t => SidecarFileRow(remove = Some(CpRemove(
-            DeltaLog.encodePath(t.path), t.deletionTimestamp, dataChange = false,
-            t.dv.map(d => CpDv(
-              d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality))))))
-
+    val fileRows = (snap.files.map(checkpointAdd) ++ liveTombstones(spark, tablePath, None))
+      .map(DeltaActions.row)
     val n = math.max(1, sidecars)
-    val groups = Array.fill(n)(Seq.newBuilder[SidecarFileRow])
+    val groups = Array.fill(n)(Seq.newBuilder[DeltaActions.ActionRow])
     fileRows.zipWithIndex.foreach { case (r, i) => groups(i % n) += r }
     fs.mkdirs(DeltaLog.sidecarDir(tablePath))
     val sidecarRefs = groups.toSeq.map(_.result()).filter(_.nonEmpty).zipWithIndex
       .map { case (g, i) =>
         val name = s"${java.util.UUID.randomUUID()}.parquet"
         val dest = new Path(DeltaLog.sidecarDir(tablePath), name)
-        writeSingleParquet(spark, g.toDS(), dest, s"_sc_tmp_${java.util.UUID.randomUUID().toString.take(8)}_${snap.version}_$i")
+        writeSingleParquet(spark, layout(g.toDS(), DeltaActions.V2Sidecar), dest,
+          s"_sc_tmp_${java.util.UUID.randomUUID().toString.take(8)}_${snap.version}_$i")
         val st = fs.getFileStatus(dest)
-        CpSidecar(name, st.getLen, st.getModificationTime)
+        DeltaActions.Sidecar(name, st.getLen, st.getModificationTime)
       }
+    writeV2Manifest(spark, tablePath, snap, snap.files.exists(_.dv.isDefined),
+      sidecarRefs, fileRows.size)
+  }
 
-    val manifest: Seq[V2ManifestRow] =
-      V2ManifestRow(protocol = Some(protocol)) +:
-        V2ManifestRow(metaData = Some(CpMeta(
-          if (snap.metadata.id.nonEmpty) snap.metadata.id
-          else java.util.UUID.randomUUID().toString,
-          CpFormat("parquet", Map.empty), snap.metadata.schemaString,
-          snap.metadata.partitionColumns, snap.metadata.configuration,
-          snap.metadata.createdTime))) +:
-        V2ManifestRow(checkpointMetadata = Some(CpCkptMeta(snap.version))) +:
-        // non-file actions live in the manifest per the v2 layout
-        // (incl. txn marks — without them a v2 checkpoint after log
-        // cleanup would let idempotent writers re-commit old batches)
-        (snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-          V2ManifestRow(domainMetadata = Some(CpDomain(d, c)))
-        } ++
-          snap.txns.toSeq.sortBy(_._1).map { case (appId, v) =>
-            V2ManifestRow(txn = Some(CpTxn(appId, v)))
-          } ++
-          sidecarRefs.map(s => V2ManifestRow(sidecar = Some(s))))
-
-    val cpName = f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-    writeSingleParquet(spark, manifest.toDS(),
-      new Path(DeltaLog.logDir(tablePath), cpName),
-      s"_cp2_tmp_${java.util.UUID.randomUUID().toString.take(8)}_${snap.version}")
-
-    val lc = new Path(DeltaLog.logDir(tablePath), "_last_checkpoint")
-    val out = fs.create(lc, true)
-    try out.write(
-      s"""{"version":${snap.version},"size":${manifest.size + fileRows.size}}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    snap.version
+  /** The manifest of a v2 checkpoint of `snap`, referencing `sidecars`
+    * (which hold `fileActions` file actions), and `_last_checkpoint`
+    * pointing at it. Non-file actions live in the manifest per the v2
+    * layout (incl. txn marks — without them a v2 checkpoint after log
+    * cleanup would let idempotent writers re-commit old batches). Its
+    * protocol gains the `v2Checkpoints` feature (and
+    * `deletionVectors` when files carry DVs), since replaying from
+    * this checkpoint requires it.
+    */
+  private def writeV2Manifest(
+      spark: SparkSession,
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      hasDv: Boolean,
+      sidecars: Seq[DeltaActions.Sidecar],
+      fileActions: Long
+  ): Long = {
+    import spark.implicits._
+    val needed = "v2Checkpoints" +: (if (hasDv) Seq("deletionVectors") else Seq.empty)
+    val manifest: Seq[DeltaActions.Action] =
+      Seq(snap.protocol.withFeatures(needed, needed), checkpointMeta(snap.metadata),
+        DeltaActions.CheckpointMetadata(snap.version)) ++
+        checkpointDomains(snap) ++ checkpointTxns(snap) ++ sidecars
+    val uuid = java.util.UUID.randomUUID().toString
+    writeSingleParquet(spark, layout(manifest.map(DeltaActions.row).toDS(), DeltaActions.V2Manifest),
+      new Path(DeltaLog.logDir(tablePath), f"${snap.version}%020d.checkpoint.$uuid.parquet"),
+      s"_cp2_tmp_${uuid.take(8)}_${snap.version}")
+    writeLastCheckpoint(spark, tablePath, snap.version, manifest.size + fileActions)
   }
 
   /** Distributed V2 checkpoint — the 10⁷-file shape of
@@ -2603,42 +2388,11 @@ object DeltaWrite {
     // these re-listings would otherwise produce a checkpoint whose
     // manifest claims version N while the sidecars carry N+1's files
     val files = DeltaFilesDataset.filesDataset(spark, tablePath, versionAsOf = Some(snap.version))
-
-    val sp = snap.protocol
     // one scalar job instead of a driver scan of the file list
     val hasDv = !files.where(col("deletionVector").isNotNull).isEmpty
-    val needed = Seq("v2Checkpoints") ++
-      (if (hasDv) Seq("deletionVectors") else Seq.empty) ++
-      (if (sp.minReaderVersion == 2) Seq("columnMapping") else Seq.empty)
-    val protocol = CpProtocol(
-      math.max(3, sp.minReaderVersion), math.max(7, sp.minWriterVersion),
-      Some((sp.readerFeatures.getOrElse(Seq.empty) ++ needed).distinct),
-      Some((sp.writerFeatures.getOrElse(Seq.empty) ++ needed).distinct))
-
-    val addRows: org.apache.spark.sql.Dataset[SidecarFileRow] = files.map { r =>
-      def optLong(f: String): Option[Long] =
-        if (r.isNullAt(r.fieldIndex(f))) None else Some(r.getAs[Long](f))
-      val dv = Option(r.getAs[org.apache.spark.sql.Row]("deletionVector")).map(d =>
-        CpDv(d.getAs[String]("storageType"), d.getAs[String]("pathOrInlineDv"),
-          Option(d.getAs[Any]("offset")).map(_.asInstanceOf[Long]),
-          d.getAs[Long]("sizeInBytes").toInt, d.getAs[Long]("cardinality")))
-      SidecarFileRow(add = Some(CpAdd(
-        DeltaLog.encodePath(r.getAs[String]("path")),
-        Option(r.getAs[Map[String, String]]("partitionValues"))
-          .map(_.toMap).getOrElse(Map.empty),
-        r.getAs[Long]("size"), 0L, dataChange = false,
-        r.getAs[String]("stats"), dv,
-        Option(r.getAs[Map[String, String]]("tags")).map(_.toMap).filter(_.nonEmpty),
-        optLong("baseRowId"), optLong("defaultRowCommitVersion"))))
-    }
-    val tombstoneCutoff = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
-    val tombRows = DeltaLog.tombstones(spark, tablePath, versionAsOf = Some(snap.version))
-      .filter(_.deletionTimestamp > tombstoneCutoff)
-      .map(t => SidecarFileRow(remove = Some(CpRemove(
-        DeltaLog.encodePath(t.path), t.deletionTimestamp, dataChange = false,
-        t.dv.map(d => CpDv(
-          d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality))))))
-    val combined = addRows.union(tombRows.toDS())
+    val addRows = files.map(r => DeltaActions.row(checkpointAdd(DeltaActions.fileOfRow(r))))
+    val tombRows = liveTombstones(spark, tablePath, Some(snap.version)).map(DeltaActions.row)
+    val combined = layout(addRows.union(tombRows.toDS()), DeltaActions.V2Sidecar)
 
     // executors write the sidecar parts; the driver renames them into
     // uuid sidecar names (O(sidecars) metadata work)
@@ -2654,40 +2408,10 @@ object DeltaWrite {
       if (!fs.rename(p, dest))
         throw new IllegalStateException(s"could not move sidecar into place at $dest")
       val st = fs.getFileStatus(dest)
-      CpSidecar(name, st.getLen, st.getModificationTime)
+      DeltaActions.Sidecar(name, st.getLen, st.getModificationTime)
     }
     fs.delete(tmp, true)
-    val nActions = combined.count()
-
-    val manifest: Seq[V2ManifestRow] =
-      V2ManifestRow(protocol = Some(protocol)) +:
-        V2ManifestRow(metaData = Some(CpMeta(
-          if (snap.metadata.id.nonEmpty) snap.metadata.id
-          else java.util.UUID.randomUUID().toString,
-          CpFormat("parquet", Map.empty), snap.metadata.schemaString,
-          snap.metadata.partitionColumns, snap.metadata.configuration,
-          snap.metadata.createdTime))) +:
-        V2ManifestRow(checkpointMetadata = Some(CpCkptMeta(snap.version))) +:
-        (snap.domains.toSeq.sortBy(_._1).map { case (d, c) =>
-          V2ManifestRow(domainMetadata = Some(CpDomain(d, c)))
-        } ++
-          snap.txns.toSeq.sortBy(_._1).map { case (appId, v) =>
-            V2ManifestRow(txn = Some(CpTxn(appId, v)))
-          } ++
-          sidecarRefs.map(s => V2ManifestRow(sidecar = Some(s))))
-
-    val cpName = f"${snap.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
-    writeSingleParquet(spark, manifest.toDS(),
-      new Path(DeltaLog.logDir(tablePath), cpName),
-      s"_cp2d_tmp_${java.util.UUID.randomUUID().toString.take(8)}_${snap.version}")
-
-    val lc = new Path(DeltaLog.logDir(tablePath), "_last_checkpoint")
-    val out = fs.create(lc, true)
-    try out.write(
-      s"""{"version":${snap.version},"size":${manifest.size + nActions}}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    snap.version
+    writeV2Manifest(spark, tablePath, snap, hasDv, sidecarRefs, combined.count())
   }
 
   /** Write `ds` as exactly one parquet file at `dest` (tmp dir +
@@ -2856,68 +2580,3 @@ object DeltaWrite {
     partitionBy.map(c => c -> fromPath.getOrElse(c, None)).toMap
   }
 }
-
-// Minimal checkpoint action rows (the columns every reader needs).
-private[tables] final case class CpProtocol(
-    minReaderVersion: Int,
-    minWriterVersion: Int,
-    readerFeatures: Option[Seq[String]],
-    writerFeatures: Option[Seq[String]])
-private[tables] final case class CpFormat(provider: String, options: Map[String, String])
-private[tables] final case class CpMeta(
-    id: String,
-    format: CpFormat,
-    schemaString: String,
-    partitionColumns: Seq[String],
-    configuration: Map[String, String],
-    createdTime: Option[Long] = None)
-private[tables] final case class CpDv(
-    storageType: String,
-    pathOrInlineDv: String,
-    offset: Option[Long],
-    sizeInBytes: Int,
-    cardinality: Long)
-private[tables] final case class CpAdd(
-    path: String,
-    partitionValues: Map[String, String],
-    size: Long,
-    modificationTime: Long,
-    dataChange: Boolean,
-    stats: String,
-    deletionVector: Option[CpDv] = None,
-    tags: Option[Map[String, String]] = None,
-    baseRowId: Option[Long] = None,
-    defaultRowCommitVersion: Option[Long] = None)
-private[tables] final case class CpDomain(
-    domain: String,
-    configuration: String,
-    removed: Boolean = false)
-private[tables] final case class CpRemove(
-    path: String,
-    deletionTimestamp: Long,
-    dataChange: Boolean,
-    deletionVector: Option[CpDv] = None)
-// V2 checkpoint shapes: UUID-named manifest rows + sidecar file rows.
-private[tables] final case class CpCkptMeta(version: Long)
-private[tables] final case class CpSidecar(
-    path: String,
-    sizeInBytes: Long,
-    modificationTime: Long)
-private[tables] final case class V2ManifestRow(
-    protocol: Option[CpProtocol] = None,
-    metaData: Option[CpMeta] = None,
-    checkpointMetadata: Option[CpCkptMeta] = None,
-    sidecar: Option[CpSidecar] = None,
-    domainMetadata: Option[CpDomain] = None,
-    txn: Option[CpTxn] = None)
-private[tables] final case class SidecarFileRow(
-    add: Option[CpAdd] = None,
-    remove: Option[CpRemove] = None)
-private[tables] final case class CpTxn(appId: String, version: Long)
-private[tables] final case class CpRow(
-    add: Option[CpAdd] = None,
-    metaData: Option[CpMeta] = None,
-    protocol: Option[CpProtocol] = None,
-    remove: Option[CpRemove] = None,
-    txn: Option[CpTxn] = None,
-    domainMetadata: Option[CpDomain] = None)

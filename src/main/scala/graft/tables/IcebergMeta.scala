@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core.{Filter, Filters}
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.types._
 
@@ -682,19 +683,12 @@ object IcebergMeta {
   // ---------------------------------------------------- avro
 
   def readAvro(fs: FileSystem, p: Path): Seq[GenericRecord] = {
-    val local = java.io.File.createTempFile("iceberg-avro", ".avro")
+    val r = new DataFileReader(new FsInput(p, fs), new GenericDatumReader[GenericRecord]())
     try {
-      val in = fs.open(p)
-      try java.nio.file.Files.copy(in, local.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      finally in.close()
-      val r = new DataFileReader(local, new GenericDatumReader[GenericRecord]())
-      try {
-        val b = Seq.newBuilder[GenericRecord]
-        while (r.hasNext) b += r.next()
-        b.result()
-      } finally r.close()
-    } finally { local.delete(); () }
+      val b = Seq.newBuilder[GenericRecord]
+      while (r.hasNext) b += r.next()
+      b.result()
+    } finally r.close()
   }
 
   private[tables] def avroValue(v: Any): Any = v match {

@@ -727,7 +727,7 @@ object IcebergWrite {
       val seq = baseRoot.path("last-sequence-number").asLong(0L) + 1
 
       val (manifest, newSpecMinted) = writeEqualityManifest(fs, metaDir, baseRoot,
-        tablePath, snapshotId, seq, uuid, keyCols, staged)
+        IcebergManifests.currentSchema(baseRoot), tablePath, snapshotId, seq, uuid, keyCols, staged)
       val listPath = new Path(metaDir, s"snap-$snapshotId-$uuid.avro")
       IcebergManifests.writeList(fs, listPath,
         currentManifestList(fs, baseRoot).map(IcebergManifests.copyListRecord) :+
@@ -818,14 +818,16 @@ object IcebergWrite {
   /** Write a content=2 equality-delete manifest for staged key files
     * under an unpartitioned spec resolved against `baseRoot` (reused
     * when one exists, otherwise a fresh id the CALLER must append via
-    * [[appendEmptySpec]]). Field ids resolve by name against the
-    * attempt's current schema. Returns the manifest and whether its
-    * spec was newly minted.
+    * [[appendEmptySpec]]). The manifest binds `schema`, the schema the
+    * commit makes current (an upsert that adds columns commits a new
+    * one), and field ids resolve by name against it. Returns the
+    * manifest and whether its spec was newly minted.
     */
   private def writeEqualityManifest(
       fs: FileSystem,
       metaDir: Path,
       baseRoot: JsonNode,
+      schema: JsonNode,
       tablePath: String,
       snapshotId: Long,
       seq: Long,
@@ -833,7 +835,7 @@ object IcebergWrite {
       keyCols: Seq[String],
       staged: Seq[StagedFile]
   ): (IcebergManifests.Written, Boolean) = {
-    val idsByName = IcebergMeta.elements(IcebergManifests.currentSchema(baseRoot).path("fields"))
+    val idsByName = IcebergMeta.elements(schema.path("fields"))
       .map(f => f.path("name").asText() -> f.path("id").asInt()).toMap
     val eqIds = keyCols.map(c => idsByName.getOrElse(c,
       throw new IllegalArgumentException(
@@ -848,7 +850,7 @@ object IcebergWrite {
     val manifest = IcebergManifests.write(fs,
       new Path(metaDir, s"eq-delete-manifest-$snapshotId-$uuid.avro"),
       IcebergManifests.manifestEntrySchema(Seq.empty),
-      IcebergManifests.formatOf(baseRoot, Some(specId)),
+      IcebergManifests.Format(mapper.writeValueAsString(schema), specId, "[]"),
       deletes = true, snapshotId, seq) { w =>
       staged.foreach(w.addStaged(_, Seq.empty, content = 2, equalityIds = eqIds))
     }
@@ -1453,8 +1455,8 @@ object IcebergWrite {
       }
       val eqManifest: Option[(IcebergManifests.Written, Boolean)] =
         if (eqStaged.isEmpty) None
-        else Some(writeEqualityManifest(fs, metaDir, baseRoot.get, tablePath,
-          snapshotId, seq, uuid, eqDeleteKeys.get, eqStaged))
+        else Some(writeEqualityManifest(fs, metaDir, baseRoot.get, mapper.readTree(schemaJson),
+          tablePath, snapshotId, seq, uuid, eqDeleteKeys.get, eqStaged))
 
       // manifest list: the base snapshot's manifests carried verbatim
       // + the new ones; an append bases on the BRANCH head when

@@ -698,4 +698,60 @@ object GraftProperties extends Properties("graft") {
         lower.codePointCount(0, lower.length) <= IcebergStats.TruncateWidth
     }
   }
+
+  property("Delta log actions round-trip through JSON lines and checkpoint rows") = {
+    import graft.tables.{DeletionVectors, DeltaActions => A, DeltaLog}
+    // text that needs percent-encoding in a path: space, '%', ':' and
+    // non-ASCII (valid UTF-16 only, so UTF-8 round-trips)
+    val text = Gen.frequency(
+      4 -> Gen.asciiPrintableStr.map(_.take(12)),
+      1 -> Gen.oneOf("a b", "100%", "x%3Ay", "ünï", "中文", "k:v", "\u2603", ""))
+    val segment = Gen.frequency(3 -> Gen.alphaNumStr.suchThat(_.nonEmpty).map(_.take(8)),
+      1 -> text.suchThat(_.nonEmpty))
+    val path = Gen.nonEmptyListOf(segment).map(_.take(4).mkString("/"))
+    val long = Gen.chooseNum(0L, Long.MaxValue)
+    val values = Gen.mapOf(Gen.zip(Gen.oneOf("p", "q", "d t", "ü"), Gen.option(text)))
+    val strings = Gen.mapOf(Gen.zip(Gen.alphaStr.map(_.take(6)), text))
+    val dv = for {
+      st <- Gen.oneOf("u", "i", "p"); pod <- text; off <- Gen.option(long)
+      size <- Gen.chooseNum(0, Int.MaxValue); card <- long
+    } yield DeletionVectors.DvDescriptor(st, pod, off, size, card)
+    val file = for {
+      p <- path; pv <- values; size <- long; stats <- Gen.option(text)
+      d <- Gen.option(dv); tags <- strings; base <- Gen.option(long); rcv <- Gen.option(long)
+    } yield DeltaLog.AddFile(p, pv, size, stats, d, tags, base, rcv)
+    val features = Gen.option(Gen.listOf(Gen.oneOf(
+      "deletionVectors", "columnMapping", "v2Checkpoints", "appendOnly", "rowTracking")))
+    // actions a checkpoint row holds in full (a tombstone row keeps
+    // path, timestamp and DV; a txn row drops lastUpdated)
+    val rowAction: Gen[A.Action] = Gen.oneOf(
+      for (f <- file; t <- long; dc <- Gen.oneOf(true, false)) yield A.Add(f, t, dc),
+      for (p <- path; t <- long; d <- Gen.option(dv)) yield
+        A.Remove(p, Some(t), dataChange = false, dv = d),
+      for {
+        schema <- text; parts <- Gen.listOf(text); conf <- strings; id <- text
+        created <- Gen.option(long)
+      } yield DeltaLog.Metadata(schema, parts, conf, id, created),
+      for (r <- Gen.chooseNum(1, 3); w <- Gen.chooseNum(1, 7); rf <- features; wf <- features)
+        yield DeltaLog.Protocol(r, w, rf, wf),
+      for (app <- text; v <- long) yield A.Txn(app, v),
+      for (d <- text; c <- text; rm <- Gen.oneOf(true, false)) yield A.DomainMetadata(d, c, rm),
+      long.map(A.CheckpointMetadata(_)),
+      for (p <- text; n <- long; t <- long) yield A.Sidecar(p, n, t))
+    val lineOnly: Gen[A.Action] = Gen.oneOf(
+      for (p <- path; t <- Gen.option(long); dc <- Gen.oneOf(true, false); pv <- values;
+           size <- long; d <- Gen.option(dv)) yield A.Remove(p, t, dc, pv, size, d),
+      for (p <- path; pv <- values; size <- long) yield A.Cdc(DeltaLog.CdcFile(p, pv, size)),
+      for (op <- text; t <- long; ict <- Gen.option(long); params <- strings)
+        yield A.CommitInfo(op, t, ict, params),
+      for (app <- text; v <- long; u <- Gen.option(long)) yield A.Txn(app, v, u))
+    forAll(Gen.listOfN(6, rowAction), Gen.listOfN(4, lineOnly)) { (rowForm, other) =>
+      val linesOk = (rowForm ++ other).forall(a => A.parseLine(A.json(a)) == Seq(a))
+      val rows = spark.createDataset(rowForm.map(A.row)).toDF().collect().toSeq
+      val fromRows = rows.map(r => r.schema.fieldNames.indices.collectFirst {
+        case i if !r.isNullAt(i) => A.fromRow(r.schema.fieldNames(i), r.getStruct(i))
+      }.flatten)
+      linesOk && fromRows == rowForm.map(a => A.parseLine(A.json(a)).headOption)
+    }
+  }
 }

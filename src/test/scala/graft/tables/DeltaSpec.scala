@@ -542,6 +542,21 @@ class DeltaSpec extends SparkSpec {
     assert(e.getMessage.contains("sidecar"))
   }
 
+  test("a v2 checkpoint of a legacy writer-4 table keeps the legacy writer features") {
+    val dir = tempDir("delta-v2legacy").toString + "/t"
+    DeltaWrite.append(spark, (1 to 5).map(i => (i.toLong, s"v$i")).toDF("id", "v"), dir)
+    DeltaWrite.setTableProperties(spark, dir, Map("delta.enableChangeDataFeed" -> "true"))
+    assert(DeltaLog.snapshot(spark, dir).protocol == DeltaLog.Protocol(1, 4, None, None))
+    val cpV = DeltaWrite.checkpointV2(spark, dir)
+    val snap = DeltaLog.snapshot(spark, dir)
+    assert(snap.version == cpV)
+    val pr = snap.protocol
+    assert(pr.minReaderVersion == 3 && pr.minWriterVersion == 7, pr)
+    assert(pr.readerFeatures.contains(Seq("v2Checkpoints")), pr)
+    assert(pr.writerFeatures.map(_.toSet).contains(Set("appendOnly", "invariants",
+      "checkConstraints", "changeDataFeed", "generatedColumns", "v2Checkpoints")), pr)
+  }
+
   test("v2 JSON-lines manifest with inline actions reads") {
     val dir = tempDir("delta-v2json").toString + "/t"
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))

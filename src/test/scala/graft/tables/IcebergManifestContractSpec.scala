@@ -128,6 +128,39 @@ class IcebergManifestContractSpec extends SparkSpec {
     assert(ids(dir) == Seq(1L, 3L, 5L, 6L, 7L))
   }
 
+  test("an upsertEquality that adds a column binds its manifests to the new schema") {
+    val dir = tempDir("mc-eq-evolve").toString + "/t"
+    IcebergWrite.append(spark, (1L to 4L).map(i => (i, s"v$i")).toDF("id", "v"), dir)
+    IcebergWrite.upsertEquality(spark,
+      Seq((2L, "new2", "x"), (5L, "v5", "y")).toDF("id", "v", "extra"), dir, Seq("id"))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val metaDir = new Path(dir, "metadata")
+    val root = IcebergWrite.readRoot(fs, metaDir,
+      IcebergWrite.latestVersionByScan(fs, metaDir).get)
+    val schemaId = root.path("current-schema-id").asInt(0)
+    assert(schemaId > 0, "the upsert must have evolved the schema")
+    val schema = IcebergMeta.elements(root.path("schemas"))
+      .find(_.path("schema-id").asInt(-1) == schemaId).get
+    val snapId = root.path("current-snapshot-id").asLong()
+    val snap = IcebergMeta.elements(root.path("snapshots"))
+      .find(_.path("snapshot-id").asLong() == snapId).get
+    // the manifests this commit wrote (the first append's carried
+    // manifest keeps the schema it was written under)
+    val added = IcebergMeta.readAvro(fs, new Path(snap.path("manifest-list").asText()))
+      .filter(_.get("added_snapshot_id").asInstanceOf[Long] == snapId)
+    assert(contents(added).sorted == Seq(0, 1))
+    added.foreach { row =>
+      val path = row.get("manifest_path").toString
+      val r = new DataFileReader(
+        new FsInput(new Path(path), spark.sparkContext.hadoopConfiguration),
+        new GenericDatumReader[GenericRecord]())
+      try assert(mapper.readTree(r.getMetaString("schema")) == schema,
+        s"$path: schema key is not the committed schema")
+      finally r.close()
+    }
+    assert(ids(dir) == (1L to 5L))
+  }
+
   test("rewriteManifests, scoped rewriteDataFiles and updateWhere") {
     val dir = tempDir("mc-maint").toString + "/t"
     (0 until 3).foreach { k =>
