@@ -481,7 +481,7 @@ object DeltaWrite {
     commitLoop(spark, tablePath, newAdds ++ dvAdds,
       bitmaps.map { case (key, _) => byPath(key) },
       meta.schemaString, partCols, overwrite = false,
-      extraActions = DvProtocol +: cdcActions,
+      extraActions = dvProtocol(snap) +: cdcActions,
       allowMapped = true, requireBase = Some(snap.version))
   }
 
@@ -578,12 +578,27 @@ object DeltaWrite {
       spark: SparkSession,
       df: DataFrame,
       tablePath: String,
-      partitionBy: Seq[String],
+      requestedPartitionBy: Seq[String],
       overwrite: Boolean,
       txn: Option[(String, Long)] = None,
       callerBase: Option[Long] = None
   ): CommitResult = {
     val txnActions = txnAction(txn)
+    val snapOpt = DeltaLog.latestVersion(spark, tablePath)
+      .map(_ => DeltaLog.snapshot(spark, tablePath))
+    // an append keeps the table's partitioning: no partitionBy means
+    // "as the table is", and a different one is refused, as delta-spark
+    // refuses it (re-partitioning the metadata would make every earlier
+    // file's partition column read null)
+    val partitionBy = snapOpt match {
+      case Some(snap) if !overwrite =>
+        val tableParts = snap.metadata.partitionColumns
+        require(requestedPartitionBy.isEmpty || requestedPartitionBy == tableParts,
+          s"append to $tablePath cannot change its partitioning from " +
+            s"(${tableParts.mkString(", ")}) to (${requestedPartitionBy.mkString(", ")})")
+        tableParts
+      case _ => requestedPartitionBy
+    }
     // partition values live in directory names and partitionValues
     // strings, compared byte-wise by prefix pushdown and file
     // skipping — collation-aware equality cannot reach them, so a
@@ -602,8 +617,6 @@ object DeltaWrite {
         }
       }
     }
-    val snapOpt = DeltaLog.latestVersion(spark, tablePath)
-      .map(_ => DeltaLog.snapshot(spark, tablePath))
     // overwriting away existing rows is a data-removing change —
     // refused on append-only tables (appends to them stay legal)
     if (overwrite) snapOpt.filter(_.files.nonEmpty).foreach(s =>
@@ -1069,7 +1082,7 @@ object DeltaWrite {
     // replaced DV file gets its own tombstone for vacuum retention
     commitLoop(spark, tablePath, adds, bitmaps.map { case (key, _) => byPath(key) },
       snap.metadata.schemaString, partCols, overwrite = false,
-      extraActions = DvProtocol +: cdcActions,
+      extraActions = dvProtocol(snap) +: cdcActions,
       allowMapped = true, requireBase = Some(snap.version))
   }
 
@@ -1486,16 +1499,16 @@ object DeltaWrite {
       bumpIdentityHwm(meta.schemaString, DeltaPolicy.identityColumns(meta), newAdds,
         meta.physicalName),
       partCols, overwrite = false,
-      extraActions = DvProtocol +: (txnAction(txn) ++ cdcActions),
+      extraActions = dvProtocol(snap) +: (txnAction(txn) ++ cdcActions),
       allowMapped = true, requireBase = Some(snap.version))
   }
 
-  /** The protocol every DV-writing commit restates: the DV
-    * reader+writer feature alone (the table's other features are not
-    * carried over).
+  /** The protocol a DV-writing commit states: the table's own, with
+    * the DV reader+writer feature added, so every feature the table
+    * declared stays declared.
     */
-  private val DvProtocol =
-    DeltaLog.Protocol(3, 7, Some(Seq("deletionVectors")), Some(Seq("deletionVectors")))
+  private def dvProtocol(snap: DeltaLog.Snapshot): DeltaLog.Protocol =
+    snap.protocol.withFeatures(Seq("deletionVectors"), Seq("deletionVectors"))
 
   /** ALTER TABLE SET TBLPROPERTIES: a metadata-only commit merging
     * `props` into the table configuration (schema, partitioning and
@@ -1603,7 +1616,7 @@ object DeltaWrite {
       return CommitResult(cur.version, 0, 0)
     // DV-bearing re-adds need the feature protocol in case the table
     // was created before DVs appeared
-    val extra = if (adds.exists(_.dv.isDefined)) Seq(DvProtocol) else Seq.empty
+    val extra = if (adds.exists(_.dv.isDefined)) Seq(dvProtocol(cur)) else Seq.empty
     commitLoop(spark, tablePath, adds, removes,
       old.metadata.schemaString, old.metadata.partitionColumns,
       overwrite = false, extraActions = extra,
@@ -1935,8 +1948,8 @@ object DeltaWrite {
   }
 
   /** Stage `df` as parquet files inside the table directory and move
-    * them into place; returns the add-action payloads (with per-file
-    * stats computed in one job over the staging dir).
+    * them into place; returns the add-action payloads, with the
+    * per-file stats the write tasks collected.
     */
   private def stageFiles(
       spark: SparkSession,
@@ -1953,33 +1966,23 @@ object DeltaWrite {
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(DeltaLog.logDir(tablePath))
 
-    val stagingName = s"_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    val staging = new Path(table, stagingName)
-    val writer =
-      if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-    writer.mode(SaveMode.Overwrite).parquet(staging.toString)
-
-    // an all-rows-deleted rewrite stages zero files
-    val staged = LakeFiles.listByExt(fs, staging)
-
+    val staging = new Path(table, s"_staging_${java.util.UUID.randomUUID().toString.take(8)}")
     // per-file stats (partition columns excluded — their values live in
     // partitionValues, not stats; change-data files carry none)
-    val statsCols = df.schema.fields.filterNot(f =>
-      partitionBy.contains(f.name) || statsExclude.contains(f.name))
-    val statsByFile: Map[String, String] =
-      if (staged.isEmpty || !withStats) Map.empty
-      else computeStats(spark, Seq(staging.toString), statsCols)
+    val statsCols =
+      if (!withStats) Seq.empty
+      else statsFields(df.schema.fields.filterNot(f =>
+        partitionBy.contains(f.name) || statsExclude.contains(f.name)).toSeq)
+    val staged = LakeFiles.writeStaged(spark, df, staging, partitionBy, statsCols.map(_.name))
 
     val adds = staged.map { file =>
-      val rel = LakeFiles.relativize(staging, file)
-      val dest = new Path(table, destPrefix + rel)
+      val dest = new Path(table, destPrefix + file.relPath)
       fs.mkdirs(dest.getParent)
-      if (!fs.rename(file, dest))
-        throw new IllegalStateException(s"could not move staged file $file to $dest")
-      val pv = partitionValuesFromPath(rel, partitionBy)
-      val size = fs.getFileStatus(dest).getLen
-      DeltaLog.AddFile(destPrefix + rel, pv, size,
-        statsByFile.get(DvDeleted.normalizePath(s"${staging.toString}/$rel")))
+      if (!fs.rename(new Path(staging, file.relPath), dest))
+        throw new IllegalStateException(s"could not move staged file ${file.relPath} to $dest")
+      DeltaLog.AddFile(destPrefix + file.relPath, file.partitionValues,
+        fs.getFileStatus(dest).getLen,
+        if (withStats) statsJson(statsCols, file.numRecords, file.columns) else None)
     }
     fs.delete(staging, true)
     adds
@@ -2481,16 +2484,24 @@ object DeltaWrite {
     */
   private[tables] val StringStatsPrefix = 32
 
+  /** The fields Delta keeps per-file stats for. */
+  private def statsFields(fields: Seq[StructField]): Seq[StructField] =
+    fields.filter(f => f.dataType match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+          StringType | DateType | TimestampType | BooleanType | _: DecimalType => true
+      case _ => false
+    })
+
+  /** Per-file stats of files this writer did not write (a converted
+    * parquet table), in one grouped job over `paths`, keyed by
+    * normalized full path.
+    */
   private[tables] def computeStats(
       spark: SparkSession,
       paths: Seq[String],
       fields: Seq[StructField]
   ): Map[String, String] = {
-    val statable = fields.filter(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-          StringType | DateType | TimestampType | BooleanType | _: DecimalType => true
-      case _ => false
-    })
+    val statable = statsFields(fields)
     val aggs =
       Seq(count(lit(1)).as("_nr")) ++
         statable.flatMap { f =>
@@ -2509,7 +2520,7 @@ object DeltaWrite {
       .agg(aggs.head, aggs.tail: _*)
       .collect()
 
-    statRows.map { r =>
+    statRows.flatMap { r =>
       val fileUri = r.getAs[String]("_file")
       // keyed by NORMALIZED FULL PATH: foreign layouts legitimately
       // reuse basenames across partition dirs (part=0/data_0.parquet,
@@ -2522,33 +2533,52 @@ object DeltaWrite {
       val decoded =
         try new java.net.URI(fileUri).getPath
         catch { case _: java.net.URISyntaxException => fileUri }
-      val fileKey = DvDeleted.normalizePath(decoded)
-      val node = mapper.createObjectNode()
-      node.put("numRecords", r.getAs[Long]("_nr"))
-      val minV = node.putObject("minValues")
-      val maxV = node.putObject("maxValues")
-      val nullC = node.putObject("nullCount")
-      statable.foreach { f =>
-        (r.getAs[Any](s"_min_${f.name}"), r.getAs[Any](s"_max_${f.name}")) match {
-          case (lo: String, hi: String) =>
-            // the delta-spark string discipline: 32-code-point lower
-            // prefix; upper incremented at the cap, OMITTED when no
-            // increment exists (absent max = unbounded, fail-open)
-            minV.put(f.name, IcebergStats.truncateLower(lo, StringStatsPrefix))
-            IcebergStats.truncateUpper(hi, StringStatsPrefix)
-              .foreach(u => maxV.put(f.name, u))
-          case (lo, hi) =>
-            putStat(minV, f, lo)
-            putStat(maxV, f, hi)
-        }
-        nullC.put(f.name, r.getAs[Long](s"_nc_${f.name}"))
-      }
-      fileKey -> mapper.writeValueAsString(node)
+      val cols = statable.map { f =>
+        f.name -> LakeFiles.ColumnStats(
+          Option(r.getAs[Any](s"_min_${f.name}")), Option(r.getAs[Any](s"_max_${f.name}")),
+          r.getAs[Long](s"_nc_${f.name}"))
+      }.toMap
+      statsJson(statable, r.getAs[Long]("_nr"), cols)
+        .map(DvDeleted.normalizePath(decoded) -> _)
     }.toMap
   }
 
+  /** One file's stats JSON (`numRecords`, `minValues`, `maxValues`,
+    * `nullCount`) over `fields`; a zero-row file records none.
+    */
+  private[tables] def statsJson(
+      fields: Seq[StructField],
+      numRecords: Long,
+      columns: Map[String, LakeFiles.ColumnStats]
+  ): Option[String] =
+    if (numRecords == 0) None
+    else {
+      val node = mapper.createObjectNode()
+      node.put("numRecords", numRecords)
+      val minV = node.putObject("minValues")
+      val maxV = node.putObject("maxValues")
+      val nullC = node.putObject("nullCount")
+      fields.foreach { f =>
+        columns.get(f.name).foreach { c =>
+          (c.min, c.max) match {
+            case (Some(lo: String), Some(hi: String)) =>
+              // the delta-spark string discipline: 32-code-point lower
+              // prefix; upper incremented at the cap, OMITTED when no
+              // increment exists (absent max = unbounded, fail-open)
+              minV.put(f.name, IcebergStats.truncateLower(lo, StringStatsPrefix))
+              IcebergStats.truncateUpper(hi, StringStatsPrefix)
+                .foreach(u => maxV.put(f.name, u))
+            case (lo, hi) =>
+              lo.foreach(putStat(minV, f, _))
+              hi.foreach(putStat(maxV, f, _))
+          }
+          nullC.put(f.name, c.nullCount)
+        }
+      }
+      Some(mapper.writeValueAsString(node))
+    }
+
   private def putStat(node: ObjectNode, f: StructField, v: Any): Unit = v match {
-    case null                 => ()
     case b: Byte              => node.put(f.name, b.toInt)
     case s: Short             => node.put(f.name, s.toInt)
     case i: Int               => node.put(f.name, i)
@@ -2558,25 +2588,5 @@ object DeltaWrite {
     case d: java.math.BigDecimal => node.put(f.name, d)
     case b: Boolean           => node.put(f.name, b)
     case other                => node.put(f.name, other.toString) // string/date/timestamp
-  }
-
-  /** Hive-style `col=value` segments → partitionValues; the
-    * `__HIVE_DEFAULT_PARTITION__` sentinel and %-escapes decoded per
-    * Spark's writer conventions.
-    */
-  private def partitionValuesFromPath(
-      rel: String,
-      partitionBy: Seq[String]
-  ): Map[String, Option[String]] = {
-    val segs = rel.split('/').dropRight(1)
-    val fromPath = segs.flatMap { s =>
-      s.split("=", 2) match {
-        case Array(k, v) =>
-          val dec = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-          Some(k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") None else Some(dec)))
-        case _ => None
-      }
-    }.toMap
-    partitionBy.map(c => c -> fromPath.getOrElse(c, None)).toMap
   }
 }

@@ -3,7 +3,7 @@ package graft.tables
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Native Apache Hudi COPY_ON_WRITE writer (public table spec:
@@ -874,80 +874,67 @@ object HudiWrite {
     // exactly one file (a group's rows all land in one reducer)
     val routed = if (freshGroupPerLeaf) df else df.repartition(col("_fg"))
     val stagePartCols = if (freshGroupPerLeaf) partCols else partCols :+ "_fg"
-    val writer =
-      if (stagePartCols.nonEmpty) routed.write.partitionBy(stagePartCols: _*)
-      else routed.write
-    writer.mode(SaveMode.Overwrite).parquet(staging.toString)
+    // per-file count, record-key range AND per-data-column min/max,
+    // collected by the write tasks — the key range feeds the upsert
+    // index's group pruning ([[rangePruned]]), the column ranges the
+    // read path's data-predicate slice skipping ([[colStatsMayMatch]])
+    val statFields = statFieldsOf(df.schema, stagePartCols)
+    val staged = LakeFiles.writeStaged(spark, routed, staging, stagePartCols,
+      RecordKeyCol +: statFields.map(_.name), fullStrings = Set(RecordKeyCol))
 
-    // per-file count, record-key range AND per-data-column min/max in
-    // the same job — the key range feeds the upsert index's group
-    // pruning ([[rangePruned]]), the column ranges the read path's
-    // data-predicate slice skipping ([[colStatsMayMatch]])
-    val statFields = df.schema.fields
+    // a zero-row staged file gets NO file group: an empty, rangeless
+    // group would join every future upsert's index scan and can never
+    // be range-pruned
+    val out = staged.filter(_.numRecords > 0).map { f =>
+      val segs = f.relPath.split('/').toSeq
+      val (partSegs, fileId) =
+        if (freshGroupPerLeaf)
+          (segs.dropRight(1), java.util.UUID.randomUUID().toString)
+        else {
+          val fgSeg = segs(segs.length - 2)
+          require(fgSeg.startsWith("_fg="), s"unexpected staged layout: ${f.relPath}")
+          (segs.dropRight(2), org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(fgSeg.drop(4)))
+        }
+      val partition = partSegs.mkString("/")
+      val relOut = (partSegs :+ s"${fileId}_${WriteToken}_$instant.parquet").mkString("/")
+      val dest = new Path(table, relOut)
+      fs.mkdirs(dest.getParent)
+      if (!fs.rename(new Path(staging, f.relPath), dest))
+        throw new IllegalStateException(s"could not move staged file ${f.relPath} to $dest")
+      val (n, range, ranges) = fileStatsOf(statFields, f)
+      WrittenFile(partition, fileId, relOut, n, range, ranges)
+    }
+    fs.delete(staging, true)
+    out
+  }
+
+  /** The data columns a staged write keeps ranges for: every column
+    * of a tracked type except the staging partition columns and the
+    * two meta columns.
+    */
+  private[tables] def statFieldsOf(
+      schema: org.apache.spark.sql.types.StructType,
+      stagePartCols: Seq[String]): Seq[org.apache.spark.sql.types.StructField] =
+    schema.fields
       .filterNot(f => stagePartCols.contains(f.name) ||
         f.name == CommitTimeCol || f.name == RecordKeyCol)
       .filter(f => colRangeKind(f.dataType).isDefined)
       .toSeq
-    val statAggs = statFields.flatMap { f =>
-      val c = IcebergStats.prefixCapped(
-        col("`" + f.name + "`"), f.dataType, StringRangePrefix)
-      Seq(min(c).as(s"_lo_${f.name}"), max(c).as(s"_hi_${f.name}"))
-    }
-    val baseAggs = Seq(count(lit(1)).as("_n"),
-      min(col(RecordKeyCol)).as("_kmin"), max(col(RecordKeyCol)).as("_kmax"))
-    val aggs = baseAggs ++ statAggs
-    val counts: Map[String, (Long, Option[(String, String)], Option[Map[String, ColRange]])] =
-      spark.read.parquet(staging.toString)
-        .groupBy(col("_metadata.file_path").as("_p"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val ranges = colRangesOf(statFields, n =>
-            (r.get(r.fieldIndex(s"_lo_$n")), r.get(r.fieldIndex(s"_hi_$n"))))
-          DvDeleted.decodeMetadataPath(r.getString(0)) ->
-            ((r.getLong(r.fieldIndex("_n")),
-              if (r.isNullAt(r.fieldIndex("_kmin")) || r.isNullAt(r.fieldIndex("_kmax"))) None
-              else Some((r.getString(r.fieldIndex("_kmin")),
-                r.getString(r.fieldIndex("_kmax")))),
-              ranges))
-        }.toMap
 
-    val files = LakeFiles.listByExt(fs, staging)
-    // a staged file absent from `counts` holds zero rows (every row
-    // maps to some file_path): do NOT mint a file group for it — an
-    // empty, rangeless group would join every future upsert's index
-    // scan and can never be range-pruned. The cross-check below makes
-    // a path-normalization drift (which would ALSO look like "absent
-    // from counts") fail loudly instead of silently dropping data.
-    val out = files.flatMap { f =>
-      counts.get(DvDeleted.normalizePath(f.toString)).map { case (n, range, ranges) =>
-        val rel = LakeFiles.relativize(staging, f)
-        val segs = rel.split('/').toSeq
-        val (partSegs, fileId) =
-          if (freshGroupPerLeaf)
-            (segs.dropRight(1), java.util.UUID.randomUUID().toString)
-          else {
-            val fgSeg = segs(segs.length - 2)
-            require(fgSeg.startsWith("_fg="), s"unexpected staged layout: $rel")
-            (segs.dropRight(2), org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(fgSeg.drop(4)))
-          }
-        val partition = partSegs.mkString("/")
-        val relOut = (partSegs :+ s"${fileId}_${WriteToken}_$instant.parquet").mkString("/")
-        val dest = new Path(table, relOut)
-        fs.mkdirs(dest.getParent)
-        if (!fs.rename(f, dest))
-          throw new IllegalStateException(s"could not move staged file $f to $dest")
-        WrittenFile(partition, fileId, relOut, n, range, ranges)
-      }
-    }
-    val staged = counts.values.map(_._1).sum
-    val moved = out.map(_.numWrites).sum
-    if (moved != staged)
-      throw new IllegalStateException(
-        s"staged $staged rows but moved files account for $moved — " +
-          s"file_path normalization drift between ${counts.keys.headOption} " +
-          s"and ${files.headOption.map(f => DvDeleted.normalizePath(f.toString))}")
-    fs.delete(staging, true)
-    out
+  /** One staged file's record count, record-key range and
+    * [[colRangesOf]] column ranges over `statFields`.
+    */
+  private[tables] def fileStatsOf(
+      statFields: Seq[org.apache.spark.sql.types.StructField],
+      f: LakeFiles.StagedFile
+  ): (Long, Option[(String, String)], Option[Map[String, ColRange]]) = {
+    val key = f.columns(RecordKeyCol)
+    (f.numRecords,
+      for (lo <- key.min; hi <- key.max) yield (lo.toString, hi.toString),
+      colRangesOf(statFields, n => {
+        val c = f.columns(n)
+        (c.min.orNull, c.max.orNull)
+      }))
   }
 
   /** Upstream marker names: `<instant>.<action>.requested` for every

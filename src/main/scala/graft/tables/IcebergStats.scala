@@ -43,12 +43,6 @@ object IcebergStats {
   /** Spec-recommended truncation width for string bounds. */
   val TruncateWidth = 16
 
-  /** Per-column write-side stats of one staged data file: raw Spark
-    * min/max values (encoded per type at manifest-write time) and the
-    * null count. `lower`/`upper` are None for all-null files.
-    */
-  final case class ColStat(lower: Option[Any], upper: Option[Any], nullCount: Long)
-
   /** Types stats are collected and evaluated for (timestamps compare
     * as epoch micros against parsed literals — see [[Micros]]).
     */
@@ -75,16 +69,16 @@ object IcebergStats {
         count(c).as(s"_nn_${f.name}"))
     }
 
-  /** Extract the [[ColStat]] map from one row of the grouped job
+  /** Extract the per-column stats from one row of the grouped job
     * (schema: the grouped key + `_n` + [[aggColumns]] output read by
     * NAME), given the file's total record count.
     */
-  def statsOfRow(row: org.apache.spark.sql.Row, fields: Seq[StructField], total: Long): Map[String, ColStat] =
+  def statsOfRow(row: org.apache.spark.sql.Row, fields: Seq[StructField], total: Long): Map[String, LakeFiles.ColumnStats] =
     fields.filter(f => eligible(f.dataType)).map { f =>
       val lo = Option(row.get(row.fieldIndex(s"_lo_${f.name}")))
       val hi = Option(row.get(row.fieldIndex(s"_hi_${f.name}")))
       val nn = row.getLong(row.fieldIndex(s"_nn_${f.name}"))
-      f.name -> ColStat(lo, hi, total - nn)
+      f.name -> LakeFiles.ColumnStats(lo, hi, total - nn)
     }.toMap
 
   // ------------------------------------------- single-value codec
@@ -307,7 +301,7 @@ object IcebergStats {
   def putStatsFields(
       dfr: GenericData.Record,
       dfSchema: org.apache.avro.Schema,
-      stats: Map[String, ColStat],
+      stats: Map[String, LakeFiles.ColumnStats],
       fieldIdByName: Map[String, Int],
       typeByName: Map[String, DataType],
       recordCount: Long): Unit = {
@@ -320,13 +314,13 @@ object IcebergStats {
       .sortBy(_._1)
     if (tracked.isEmpty) return
     val lowers = tracked.flatMap { case (id, dt, st) =>
-      st.lower
+      st.min
         .map { case s: String => truncateLower(s); case v => v }
         .flatMap(v => encodeSingle(dt, v))
         .map(b => id -> (ByteBuffer.wrap(b): Any))
     }
     val uppers = tracked.flatMap { case (id, dt, st) =>
-      st.upper
+      st.max
         .flatMap { case s: String => truncateUpper(s); case v => Some(v) }
         .flatMap(v => encodeSingle(dt, v))
         .map(b => id -> (ByteBuffer.wrap(b): Any))
@@ -397,15 +391,15 @@ object IcebergStats {
       val nulls = Option(root.path("nullCount").get(phys))
         .filter(_.isNumber).map(_.asLong())
       if (lo.isEmpty && hi.isEmpty && nulls.isEmpty) None
-      else Some((idOf(f.name), f.dataType, ColStat(lo, hi, nulls.getOrElse(-1L))))
+      else Some((idOf(f.name), f.dataType, LakeFiles.ColumnStats(lo, hi, nulls.getOrElse(-1L))))
     }.sortBy(_._1)
     if (tracked.isEmpty) return
     val lowers = tracked.flatMap { case (id, dt, st) =>
-      st.lower.map { case s: String => truncateLower(s); case v => v }
+      st.min.map { case s: String => truncateLower(s); case v => v }
         .flatMap(v => encodeSingle(dt, v)).map(b => id -> (ByteBuffer.wrap(b): Any))
     }
     val uppers = tracked.flatMap { case (id, dt, st) =>
-      st.upper.flatMap { case s: String => truncateUpper(s); case v => Some(v) }
+      st.max.flatMap { case s: String => truncateUpper(s); case v => Some(v) }
         .flatMap(v => encodeSingle(dt, v)).map(b => id -> (ByteBuffer.wrap(b): Any))
     }
     val nulls = tracked.collect { case (id, _, st) if st.nullCount >= 0 =>

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.export.IcebergUniform
 import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, element_at, lit, regexp_replace, typedLit}
 import org.apache.spark.sql.types.StructType
 
@@ -111,22 +111,22 @@ object IcebergWrite {
     // in-place imports get file skipping like native appends
     val dataFields = df.schema.fields.filterNot(f => partitionBy.contains(f.name)).toSeq
     val aggs = count(lit(1)).as("_n") +: IcebergStats.aggColumns(dataFields)
-    val stats: Map[String, (Long, Map[String, IcebergStats.ColStat])] = df
+    val stats: Map[String, (Long, Map[String, LakeFiles.ColumnStats])] = df
       .groupBy(col("_metadata.file_path").as("_p")).agg(aggs.head, aggs.tail: _*)
       .collect().map { r =>
         val total = r.getLong(r.fieldIndex("_n"))
-        DvDeleted.normalizePath(r.getString(r.fieldIndex("_p"))) ->
+        DvDeleted.decodeMetadataPath(r.getString(r.fieldIndex("_p"))) ->
           (total, IcebergStats.statsOfRow(r, dataFields, total))
       }.toMap
     val staged = files.map { f =>
       val rel = LakeFiles.relativize(src, f)
       val (n, cs) = stats.getOrElse(
-        DvDeleted.normalizePath(f.toString), (0L, Map.empty[String, IcebergStats.ColStat]))
+        DvDeleted.normalizePath(f.toString), (0L, Map.empty[String, LakeFiles.ColumnStats]))
       StagedFile(
         f.toUri.getPath,
         fs.getFileStatus(f).getLen,
         n,
-        partitionValuesFromRel(rel, partitionBy),
+        LakeFiles.partitionValuesOf(rel, partitionBy),
         colStats = cs,
         fileFormat = fmt)
     }
@@ -1726,7 +1726,7 @@ object IcebergWrite {
         * becomes the manifest's lower/upper_bounds + null_value_counts
         * ([[IcebergStats]]); empty for delete-file staging.
         */
-      colStats: Map[String, IcebergStats.ColStat] = Map.empty,
+      colStats: Map[String, LakeFiles.ColumnStats] = Map.empty,
       /** Manifest file_format: native staging always writes PARQUET;
         * [[addFiles]] imports keep their source encoding (ORC/AVRO).
         */
@@ -1814,6 +1814,12 @@ object IcebergWrite {
     }
   }
 
+  /** Write `df` as data files under `table/data` and return them with
+    * their record counts and the per-column min/max/null-counts that
+    * become the manifest's bounds ([[IcebergStats]]), collected inside
+    * the write tasks. Data columns only: partition values prune via
+    * the partition tuple already.
+    */
   private[tables] def stage(
       spark: SparkSession,
       df: DataFrame,
@@ -1823,63 +1829,23 @@ object IcebergWrite {
   ): Seq[StagedFile] = {
     val staging = new Path(table,
       s"_staging_iceberg_${java.util.UUID.randomUUID().toString.take(8)}")
-    val writer = if (partCols.nonEmpty) df.write.partitionBy(partCols: _*) else df.write
-    writer.mode(SaveMode.Overwrite).parquet(staging.toString)
-
-    val files = LakeFiles.listByExt(fs, staging)
-    // ONE grouped job per staging dir computes record counts AND the
-    // per-column min/max/null-counts that become the manifest's
-    // bounds (IcebergStats) — the reader's file-skipping evidence at
-    // zero extra passes. Data columns only (partition values prune
-    // via the partition tuple already); explicit schema so read-back
-    // types are exactly the written frame's.
-    val dataFields = df.schema.fields.filterNot(f => partCols.contains(f.name)).toSeq
-    val stats: Map[String, (Long, Map[String, IcebergStats.ColStat])] =
-      if (files.isEmpty) Map.empty
-      else {
-        val aggs = count(lit(1)).as("_n") +: IcebergStats.aggColumns(dataFields)
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType(dataFields))
-          .parquet(staging.toString)
-          .groupBy(col("_metadata.file_path").as("_p"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            val total = r.getLong(r.fieldIndex("_n"))
-            DvDeleted.normalizePath(r.getString(r.fieldIndex("_p"))) ->
-              (total, IcebergStats.statsOfRow(r, dataFields, total))
-          }.toMap
-      }
-
-    val out = files.map { f =>
-      val rel = LakeFiles.relativize(staging, f)
-      val dest = new Path(table, s"data/$rel")
+    val statsCols = df.schema.fields
+      .filter(f => !partCols.contains(f.name) && IcebergStats.eligible(f.dataType))
+      .map(_.name).toSeq
+    val out = LakeFiles.writeStaged(spark, df, staging, partCols, statsCols).map { f =>
+      val dest = new Path(table, s"data/${f.relPath}")
       fs.mkdirs(dest.getParent)
-      if (!fs.rename(f, dest))
-        throw new IllegalStateException(s"could not move staged file $f to $dest")
-      val (n, cs) = stats.getOrElse(
-        DvDeleted.normalizePath(f.toString), (0L, Map.empty[String, IcebergStats.ColStat]))
+      if (!fs.rename(new Path(staging, f.relPath), dest))
+        throw new IllegalStateException(s"could not move staged file ${f.relPath} to $dest")
       StagedFile(
         dest.toUri.getPath,
         fs.getFileStatus(dest).getLen,
-        n,
-        partitionValuesFromRel(rel, partCols),
-        colStats = cs)
+        f.numRecords,
+        f.partitionValues,
+        colStats = f.columns)
     }
     fs.delete(staging, true)
     out
-  }
-
-  private def partitionValuesFromRel(
-      rel: String, partCols: Seq[String]): Map[String, Option[String]] = {
-    val fromPath = rel.split('/').dropRight(1).flatMap { s =>
-      s.split("=", 2) match {
-        case Array(k, v) =>
-          val dec = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-          Some(k -> (if (dec == "__HIVE_DEFAULT_PARTITION__") None else Some(dec)))
-        case _ => None
-      }
-    }.toMap
-    partCols.map(c => c -> fromPath.getOrElse(c, None)).toMap
   }
 
   /** Highest v<N>.metadata.json by DIRECTORY SCAN — the commit loop

@@ -53,4 +53,14 @@ object Bridge {
       isStreaming: Boolean): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
+
+  /** Spark's own per-task write statistics (bytes and rows written,
+    * which feed the task output metrics); its Hadoop configuration
+    * wrapper is private[spark].
+    */
+  def basicWriteStatsTracker(hadoopConf: org.apache.hadoop.conf.Configuration)
+  : org.apache.spark.sql.execution.datasources.WriteJobStatsTracker =
+    new org.apache.spark.sql.execution.datasources.BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      org.apache.spark.sql.execution.datasources.BasicWriteJobStatsTracker.metrics)
 }

@@ -754,4 +754,62 @@ object GraftProperties extends Properties("graft") {
       linesOk && fromRows == rowForm.map(a => A.parseLine(A.json(a)).headOption)
     }
   }
+
+  property("write-time file stats equal the read-back aggregates (Delta/Iceberg/Hudi)") = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.Prop.propBoolean
+    // strings: short ASCII, past the 32/33-code-point caps in 2- and
+    // 3-byte UTF-8, surrogate pairs, and the empty string
+    val text = Gen.frequency(
+      4 -> Gen.alphaNumStr.map(_.take(8)),
+      2 -> Gen.chooseNum(30, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'é', '中', 'z')))
+        .map(_.mkString),
+      1 -> Gen.chooseNum(15, 40).map(n => new String(Character.toChars(0x1F600)) * n),
+      1 -> Gen.const(""))
+    def orNull[A](g: Gen[A]): Gen[Any] = Gen.frequency(4 -> g, 1 -> Gen.const(null))
+    val dbl = Gen.frequency(6 -> Gen.chooseNum(-1e6, 1e6),
+      2 -> Gen.oneOf(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity))
+    val flt = Gen.frequency(6 -> Gen.chooseNum(-1e3f, 1e3f), 2 -> Gen.oneOf(Float.NaN, -0.0f, 0.0f))
+    // partition values that Hive-style directory names escape or keep
+    // (ASCII: a JVM without a UTF-8 file-name encoding cannot create
+    // non-ASCII directory names)
+    val part = Gen.oneOf("a b", "x%y", "k=v", "plain", "")
+    val schema = StructType(Seq(
+      StructField("_hoodie_record_key", StringType), StructField("s", StringType),
+      StructField("d", DoubleType), StructField("f", FloatType),
+      StructField("i", IntegerType), StructField("l", LongType),
+      StructField("b", ByteType), StructField("sh", ShortType),
+      StructField("dt", DateType), StructField("ts", TimestampType),
+      StructField("dec", DecimalType(12, 3)), StructField("bool", BooleanType),
+      StructField("none", IntegerType), StructField("p", StringType), StructField("q", IntegerType)))
+    val row = for {
+      key <- orNull(text); s <- orNull(text); d <- orNull(dbl); f <- orNull(flt)
+      i <- orNull(Gen.chooseNum(Int.MinValue, Int.MaxValue))
+      l <- orNull(Gen.chooseNum(Long.MinValue, Long.MaxValue))
+      b <- orNull(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
+      sh <- orNull(Gen.chooseNum(Short.MinValue, Short.MaxValue))
+      dt <- orNull(Gen.chooseNum(-30000L, 30000L).map(n =>
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(n))))
+      ts <- orNull(Gen.chooseNum(-2000000000000L, 2000000000000L).map(new java.sql.Timestamp(_)))
+      dec <- orNull(Gen.chooseNum(-999999999L, 999999999L).map(java.math.BigDecimal.valueOf(_, 3)))
+      bool <- orNull(Gen.oneOf(true, false))
+      p <- orNull(part); q <- orNull(Gen.chooseNum(0, 2))
+    } yield Row(key, s, d, f, i, l, b, sh, dt, ts, dec, bool, null, p, q)
+    val partitionings = Gen.oneOf(Seq.empty[String], Seq("p"), Seq("p", "q"))
+    // more tasks than rows leaves tasks with zero rows
+    forAll(Gen.listOf(row), partitionings, Gen.chooseNum(1, 6)) {
+      (rows: List[Row], parts: Seq[String], tasks: Int) =>
+        val dir = java.nio.file.Files.createTempDirectory("staged-stats")
+        // the shuffle hands rows to the writer in reused buffers
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+          .repartition(tasks)
+        try {
+          val bad = graft.tables.StagedStatsOracle.mismatches(
+            spark, df, new Path(dir.toString, "staging"), parts)
+          bad.isEmpty :| bad.mkString("\n")
+        } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

@@ -78,7 +78,8 @@ class DeltaCdfSpec extends SparkSpec {
     assert(got == Set((1L, "a", "delete", 2L), (2L, "a", "delete", 3L)), s"got $got")
     // protocol: DV features + changeDataFeed writer feature coexist
     val pr = DeltaLog.snapshot(spark, dir).protocol
-    assert(pr.writerFeatures.exists(_.contains("deletionVectors")))
+    assert(pr.writerFeatures.exists(_.contains("deletionVectors")), pr)
+    assert(pr.writerFeatures.exists(_.contains("changeDataFeed")), pr)
     // table state agrees
     val t = new DeltaTable("t", dir)
     assert(t(spark, ReadArgs()).select("id").as[Long].collect().sorted.toSeq == Seq(3L))

@@ -557,6 +557,64 @@ class DeltaSpec extends SparkSpec {
       "checkConstraints", "changeDataFeed", "generatedColumns", "v2Checkpoints")), pr)
   }
 
+  test("an append without partitionBy keeps the table's partitioning") {
+    val dir = tempDir("delta-keepparts").toString + "/t"
+    DeltaWrite.append(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "p"), dir,
+      partitionBy = Seq("p"))
+    DeltaWrite.append(spark, Seq((3L, "c")).toDF("id", "p"), dir)
+    val snap = DeltaLog.snapshot(spark, dir)
+    assert(snap.metadata.partitionColumns == List("p"))
+    assert(snap.files.forall(_.partitionValues.keySet == Set("p")), snap.files)
+    val rows = new DeltaTable("t", dir)(spark).select("id", "p").as[(Long, String)]
+      .collect().sorted.toSeq
+    assert(rows == Seq((1L, "a"), (2L, "b"), (3L, "c")))
+    // a different partitioning is refused, and the table is untouched
+    val e = intercept[IllegalArgumentException] {
+      DeltaWrite.append(spark, Seq((4L, "d")).toDF("id", "p"), dir, partitionBy = Seq("id"))
+    }
+    assert(e.getMessage.contains("partitioning"), e.getMessage)
+    assert(DeltaLog.snapshot(spark, dir).version == snap.version)
+  }
+
+  test("DV commits keep every protocol feature the table declared") {
+    val dir = tempDir("delta-dvfeatures").toString + "/t"
+    DeltaWrite.append(spark, (1 to 6).map(i => (i.toLong, s"v$i")).toDF("id", "v"), dir)
+    DeltaWrite.setTableProperties(spark, dir, Map(
+      "delta.enableInCommitTimestamps" -> "true",
+      "delta.enableChangeDataFeed" -> "true",
+      "delta.enableRowTracking" -> "true"))
+    DeltaDdl.addCheckConstraint(spark, dir, "pos", "id > 0")
+    DeltaDdl.clusterBy(spark, dir, Seq("id"))
+    def features(): (Set[String], Set[String]) = {
+      val p = DeltaLog.snapshot(spark, dir).protocol
+      (p.readerFeatures.toSeq.flatten.toSet, p.writerFeatures.toSeq.flatten.toSet)
+    }
+    val (reader0, writer0) = features()
+    assert(Set("inCommitTimestamp", "changeDataFeed", "checkConstraints", "clustering",
+      "rowTracking", "domainMetadata").subsetOf(writer0), writer0)
+    def assertKept(op: String): Unit = {
+      val (reader, writer) = features()
+      assert((reader0 + "deletionVectors").subsetOf(reader), s"$op: reader $reader")
+      assert((writer0 + "deletionVectors").subsetOf(writer), s"$op: writer $writer")
+    }
+    DeltaWrite.deleteWhereDv(spark, dir, graft.core.Filters.normalize(Seq(Filter("id", "=", 1L))))
+    assertKept("deleteWhereDv")
+    DeltaWrite.updateWhereDv(spark, dir,
+      graft.core.Filters.normalize(Seq(Filter("id", "=", 2L))), Seq("v" -> "'z'"))
+    assertKept("updateWhereDv")
+    DeltaWrite.mergeDv(spark, dir, Seq((3L, "m"), (9L, "n")).toDF("id", "v"), Seq("id"))
+    assertKept("mergeDv")
+    val withDvs = DeltaLog.snapshot(spark, dir)
+    assert(withDvs.files.exists(_.dv.isDefined))
+    // an overwrite drops the DV-bearing files; restoring re-adds them
+    DeltaWrite.overwrite(spark, Seq((7L, "o")).toDF("id", "v"), dir)
+    DeltaWrite.restore(spark, dir, withDvs.version)
+    assert(DeltaLog.snapshot(spark, dir).files.exists(_.dv.isDefined))
+    assertKept("restore")
+    val ids = new DeltaTable("t", dir)(spark).select("id").as[Long].collect().sorted.toSeq
+    assert(ids == Seq(2L, 3L, 4L, 5L, 6L, 9L))
+  }
+
   test("v2 JSON-lines manifest with inline actions reads") {
     val dir = tempDir("delta-v2json").toString + "/t"
     val schema = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))

@@ -47,6 +47,26 @@ class IcebergAddFilesSpec extends SparkSpec {
     assert(pruned.inputFiles.forall(_.contains("part=1")), pruned.inputFiles.toSeq)
   }
 
+  test("record counts and bounds hold for partition directories that need URI encoding") {
+    val base = tempDir("ice-encparts").toString
+    val rows = Seq((1L, "a b"), (2L, "a b"), (3L, "x%y"), (4L, "plain")).toDF("id", "p")
+    def assertCounted(table: String): Unit = {
+      val data = IcebergMetaTables.files(spark, table).where(col("content") === 0)
+        .select("file_path", "record_count").as[(String, Long)].collect()
+      assert(data.map(_._2).sum == 4L && data.forall(_._2 > 0), data.toSeq)
+      // the id bounds prune: only p=plain holds id 4
+      val hit = new IcebergTable("t", table)(spark, ReadArgs.where(Filter("id", "=", 4L)))
+      assert(hit.inputFiles.length == 1 && hit.count() == 1)
+    }
+    // a writer commit stages the files itself
+    IcebergWrite.append(spark, rows.repartition(1), s"$base/written", partitionBy = Seq("p"))
+    assertCounted(s"$base/written")
+    // an import aggregates the foreign files it adds
+    rows.repartition(1).write.partitionBy("p").parquet(s"$base/src")
+    IcebergWrite.addFiles(spark, s"$base/src", s"$base/imported", Seq("p"))
+    assertCounted(s"$base/imported")
+  }
+
   test("extends an existing table; source rows and imported rows coexist") {
     val base = tempDir("ice-addf2").toString
     val src = s"$base/src"
