@@ -1,9 +1,11 @@
 package graft.tables
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -151,6 +153,32 @@ object DeletionVectors {
     }
   }
 
+  /** Fold dying rows' positions into one deletion bitmap per file, in
+    * ONE Spark job — the shared step of every DV-writing DML (Delta
+    * DELETE/UPDATE/MERGE, the Iceberg v3 DELETE). `positions` holds
+    * (file, row index) pairs, the file as `_metadata.file_path` spells
+    * it. The pairs fold into compressed roaring bitmaps on the
+    * executors ([[DvBitmapAgg]]), so the driver collects O(hit files)
+    * bitmaps, never raw positions. Each bitmap is keyed by the file's
+    * normalized path ([[DvDeleted.decodeMetadataPath]]) and unioned
+    * with the file's existing DV, read through `oldDv`: a file holds
+    * at most one DV, so the new one carries the old positions too.
+    */
+  private[tables] def foldPositions(
+      positions: DataFrame,
+      oldDv: String => Option[Array[Byte]]
+  ): Seq[(String, RoaringBitmapArray)] =
+    positions.toDF("file", "pos")
+      .groupBy(col("file"))
+      .agg(DvBitmapAgg.bitmap(col("pos")).as("dv"))
+      .select(col("file"), col("dv.dv"))
+      .collect().toSeq
+      .map { r =>
+        val key = DvDeleted.decodeMetadataPath(r.getString(0))
+        val fresh = RoaringBitmapArray.deserialize(r.getAs[Array[Byte]](1))
+        key -> oldDv(key).fold(fresh)(RoaringBitmapArray.deserialize(_).union(fresh))
+      }
+
   /** Write one DV file holding a bitmap per (parquet file); returns
     * the descriptor for each input key. One file per commit — the
     * protocol explicitly supports many DVs at offsets within a file.
@@ -210,6 +238,26 @@ final class RoaringBitmapArray private[tables] (
       bm.foreach(low => out += (hi.toLong << 32) | (low & 0xffffffffL))
     }
     out.result()
+  }
+
+  /** The set union with `other`: one linear merge of the two ascending
+    * position lists.
+    */
+  private[graft] def union(other: RoaringBitmapArray): RoaringBitmapArray = {
+    val a = toArray
+    val b = other.toArray
+    val out = new Array[Long](a.length + b.length)
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length || j < b.length) {
+      val v = if (j == b.length || (i < a.length && a(i) <= b(j))) a(i) else b(j)
+      if (i < a.length && a(i) == v) i += 1
+      if (j < b.length && b(j) == v) j += 1
+      out(n) = v
+      n += 1
+    }
+    fromSorted(java.util.Arrays.copyOf(out, n))
   }
 
   def serialize: Array[Byte] = {

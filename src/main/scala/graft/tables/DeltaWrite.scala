@@ -19,13 +19,13 @@ import org.apache.spark.sql.types._
   * create-if-absent semantics — on HDFS/local this IS the atomic
   * put-if-absent the protocol requires; two racing writers get one
   * winner and one retry at the next version. Per-file stats
-  * (numRecords, min/max, nullCount) are computed in ONE Spark job
-  * over the staged files (grouped by input file name), so file
-  * skipping works on read ([[DeltaFileSkipping]]).
+  * (numRecords, min/max, nullCount) are collected by the write tasks
+  * themselves ([[LakeFiles.writeStaged]]), so file skipping works on
+  * read ([[DeltaFileSkipping]]).
   *
   * The write surface spans append/overwrite (plain and column-mapped,
-  * name and id mode), copy-on-write DELETE/UPDATE/MERGE, DV-writing
-  * merge-on-read DELETE, OPTIMIZE (+ZORDER), VACUUM, RESTORE,
+  * name and id mode), DELETE/UPDATE/MERGE (copy-on-write or
+  * deletion vectors), OPTIMIZE (+ZORDER), VACUUM, RESTORE,
   * checkpoints (classic, multi-part, v2 manifest+sidecars), CDF, ICT,
   * domain metadata and row tracking — see the section headers below.
   */
@@ -106,11 +106,43 @@ object DeltaWrite {
       DeltaActions.Txn(appId, v, Some(System.currentTimeMillis()))
     }.toSeq
 
-  /** Format-level DELETE: files that cannot contain matching rows are
-    * untouched; files that may are rewritten without the matching rows
-    * (remove + add in one commit) — the standard copy-on-write delete.
-    * File skipping bounds the rewrite to the affected partitions/files.
+  // ---- row-level DML: DELETE, UPDATE, MERGE ----------------------------
+  //
+  // Each op is written once. Its body states which target rows die and
+  // which rows it writes. How the dying rows are retired — a rewrite of
+  // the candidate files, or deletion vectors — is a value chosen once per
+  // call ([[retire]]): the `*Dv` entry, or a table that sets
+  // `delta.enableDeletionVectors` (the public writer contract: same
+  // semantics, O(changed rows) writes).
+
+  /** `delta.enableDeletionVectors=true` routes DELETE / UPDATE / MERGE
+    * through deletion vectors (the `*Dv` methods stay directly callable
+    * for per-statement choice on un-flagged tables).
     */
+  private def dvRoutingEnabled(meta: DeltaLog.Metadata): Boolean =
+    meta.configuration.get("delta.enableDeletionVectors").contains("true")
+
+  /** The materialized (row id, row commit version) column names of a
+    * row-tracked table, None on an untracked one. A tracked table that
+    * names none is refused: `op` would re-mint its row ids.
+    */
+  private def materializedIds(
+      meta: DeltaLog.Metadata, tablePath: String, op: String): Option[(String, String)] =
+    if (!rowTrackingEnabled(meta)) None
+    else {
+      val conf = meta.configuration
+      require(conf.contains(MatRowIdKey) && conf.contains(MatRcvKey),
+        s"row-tracked table $tablePath names no materialized row-id columns; " +
+          s"refusing to $op (row ids would be re-minted)")
+      Some((conf(MatRowIdKey), conf(MatRcvKey)))
+    }
+
+  /** The hidden materialized row-id columns: written to the files, kept
+    * out of the per-file stats (they are not part of the schema).
+    */
+  private def statsExcluded(ids: Option[(String, String)]): Set[String] =
+    ids.map { case (id, rcv) => Set(id, rcv) }.getOrElse(Set.empty)
+
   /** Rewrite source for a file rewrite: on a row-tracked table the
     * candidates are read WITH row ids, renamed to the table's
     * materialized physical columns (config-named, per the protocol)
@@ -125,21 +157,17 @@ object DeltaWrite {
       tablePath: String,
       snap: DeltaLog.Snapshot,
       candidates: Seq[DeltaLog.AddFile]
-  ): (DataFrame, Set[String]) = {
-    val conf = snap.metadata.configuration
-    if (!rowTrackingEnabled(snap.metadata))
-      (DeltaRead.readFiles(spark, tablePath, snap.metadata, candidates), Set.empty)
-    else {
-      require(conf.contains(MatRowIdKey) && conf.contains(MatRcvKey),
-        s"row-tracked table $tablePath names no materialized row-id columns; " +
-          "refusing to rewrite files (row ids would be re-minted)")
-      val df = DeltaRead
-        .readFiles(spark, tablePath, snap.metadata, candidates, withRowIds = true)
-        .withColumnRenamed(DeltaRead.RowIdCol, conf(MatRowIdKey))
-        .withColumnRenamed(DeltaRead.RowCommitVersionCol, conf(MatRcvKey))
-      (df, Set(conf(MatRowIdKey), conf(MatRcvKey)))
+  ): (DataFrame, Set[String]) =
+    materializedIds(snap.metadata, tablePath, "rewrite files") match {
+      case None =>
+        (DeltaRead.readFiles(spark, tablePath, snap.metadata, candidates), Set.empty)
+      case ids @ Some((matId, matRcv)) =>
+        val df = DeltaRead
+          .readFiles(spark, tablePath, snap.metadata, candidates, withRowIds = true)
+          .withColumnRenamed(DeltaRead.RowIdCol, matId)
+          .withColumnRenamed(DeltaRead.RowCommitVersionCol, matRcv)
+        (df, statsExcluded(ids))
     }
-  }
 
   /** Rewrite-candidate files for a predicate: driver-side skipping
     * over the snapshot's list, or — under `distributedPlanning`, for
@@ -162,14 +190,16 @@ object DeltaWrite {
       snap.files.filter(f => DeltaFileSkipping.mayMatch(f, skipFilters, snap.metadata))
     }
 
-  /** ONE positional scan over candidate files — the frame every DV
-    * builder (DELETE/UPDATE/MERGE) filters for matching (file, row)
-    * pairs: data columns + partition columns (per-file constants via
+  /** ONE positional scan over candidate files — the frame the DV form
+    * of every DML op filters for its dying (file, row) pairs: data
+    * columns + partition columns (per-file constants via
     * [[FileConstAttr]], keyed on `_metadata.file_path`) +
     * `__graft_file`/`__graft_row`. One parquet relation regardless of
     * partition cardinality — the DeltaRead plan-width discipline on
     * the write side. `physName` maps logical→physical for
-    * column-mapped tables (partitionValues keys are physical).
+    * column-mapped tables (partitionValues keys are physical). The
+    * scan is raw: a row already dead under the file's DV may match
+    * again, and re-marking it is a no-op under the union with that DV.
     */
   private def positionalScan(
       spark: SparkSession,
@@ -215,64 +245,181 @@ object DeltaWrite {
       Seq(col("__graft_file"), col("__graft_row")): _*)
   }
 
+  /** The candidate files a row-level DML op retires: `rewritten` ones
+    * are removed whole, `hits` keep their bytes and take the paired
+    * bitmap as their new DV.
+    */
+  private final case class Retired(
+      rewritten: Seq[DeltaLog.AddFile], hits: Seq[(DeltaLog.AddFile, RoaringBitmapArray)]) {
+    def removes: Seq[DeltaLog.AddFile] = rewritten ++ hits.map(_._1)
+  }
+
+  /** Retire the dying rows of `candidates` in the op's form.
+    *
+    *  - Rewrite: every candidate is removed; the op stages its
+    *    surviving rows in the same write as its new rows.
+    *  - Deletion vectors: `dying` picks the dying rows out of the
+    *    [[positionalScan]]; their positions fold into one bitmap per
+    *    file in one Spark job, unioned with the file's existing DV
+    *    ([[DeletionVectors.foldPositions]]). Files with no dying row
+    *    are untouched; [[commitDml]] writes the bitmaps to one DV file.
+    */
+  private def retire(
+      spark: SparkSession,
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      candidates: Seq[DeltaLog.AddFile],
+      viaDv: Boolean
+  )(dying: DataFrame => DataFrame): Retired =
+    if (!viaDv || candidates.isEmpty) Retired(candidates, Seq.empty)
+    else {
+      val base = tablePath.stripSuffix("/")
+      val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // keyed by scheme-stripped absolute path (bare names collide: one
+      // partitioned write emits the same part-file name per partition dir)
+      val byPath = candidates.map(f =>
+        DvDeleted.normalizePath(DeltaLog.resolvePath(base, f.path)) -> f).toMap
+      Retired(Seq.empty, DeletionVectors.foldPositions(
+        dying(positionalScan(spark, base, snap.metadata, candidates))
+          .select(col("__graft_file"), col("__graft_row")),
+        key => byPath(key).dv.map(_.readData(fs, base)))
+        .map { case (key, bm) => byPath(key) -> bm })
+    }
+
+  /** The protocol a DV-writing commit states: the table's own, with
+    * the DV reader+writer feature added, so every feature the table
+    * declared stays declared.
+    */
+  private def dvProtocol(snap: DeltaLog.Snapshot): DeltaLog.Protocol =
+    snap.protocol.withFeatures(Seq("deletionVectors"), Seq("deletionVectors"))
+
+  /** Commit a row-level DML op against its snapshot: the rows `stage`
+    * writes, the retired files, the change-data files `cdc` and `txn`'s
+    * marker. The hits' bitmaps go to one DV file; each hit file is
+    * re-added with its new DV — the file, its stats and its
+    * `baseRowId` survive — and removed as its pre-image (old DV
+    * descriptor, so a replaced DV file gets its own tombstone for
+    * vacuum retention). On a change-feed table an op that stages no
+    * change row changed no row: it then stages and retires nothing (a
+    * bare rewrite or DV re-add would leave a version whose change rows
+    * cannot be derived). An op left with nothing to add, remove or
+    * mark makes no commit.
+    */
+  private def commitDml(
+      spark: SparkSession,
+      tablePath: String,
+      snap: DeltaLog.Snapshot,
+      viaDv: Boolean,
+      retired: Retired,
+      cdc: Seq[DeltaActions.Action],
+      txn: Option[(String, Long)] = None,
+      // identity columns whose high-water marks the staged rows advance
+      idSpecs: Seq[DeltaPolicy.IdentitySpec] = Seq.empty
+  )(stage: => Seq[DeltaLog.AddFile]): CommitResult = {
+    val meta = snap.metadata
+    val changed = !cdfEnabled(meta) || cdc.nonEmpty
+    val staged = if (changed) stage else Seq.empty
+    val effective = if (changed) retired else Retired(Seq.empty, Seq.empty)
+    if (staged.isEmpty && effective.removes.isEmpty && txn.isEmpty)
+      return CommitResult(snap.version, 0, 0)
+    val reAdds =
+      if (effective.hits.isEmpty) Seq.empty
+      else {
+        val base = tablePath.stripSuffix("/")
+        val descriptors = DeletionVectors.writeDvFile(
+          new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration), base,
+          effective.hits.map { case (f, bm) => f.path -> bm })
+        effective.hits.map { case (f, _) => f.copy(dv = Some(descriptors(f.path))) }
+      }
+    commitLoop(spark, tablePath, staged ++ reAdds, effective.removes,
+      bumpIdentityHwm(meta.schemaString, idSpecs, staged, meta.physicalName),
+      meta.partitionColumns, overwrite = false,
+      extraActions = (if (viaDv) Seq(dvProtocol(snap)) else Seq.empty) ++
+        txnAction(txn) ++ cdc,
+      allowMapped = true, requireBase = Some(snap.version))
+  }
+
+  /** Format-level DELETE of the rows where the predicate IS TRUE (rows
+    * where it evaluates to NULL are kept). Files that cannot contain
+    * matching rows are untouched: file skipping bounds the work to the
+    * affected partitions/files. The candidates are rewritten without
+    * the matching rows (remove + add in one commit, the standard
+    * copy-on-write delete), or, on a table that sets
+    * `delta.enableDeletionVectors`, keep their bytes and gain DVs
+    * ([[deleteWhereDv]]). On CDF tables the commit records exactly the
+    * rows it removes; on row-tracked tables survivors keep their ids.
+    */
   def deleteWhere(
       spark: SparkSession,
       tablePath: String,
       filters: graft.core.Filters.Normalized,
       distributedPlanning: Boolean = false,
       predicateSql: Option[String] = None
+  ): CommitResult =
+    delete(spark, tablePath, filters, distributedPlanning, predicateSql, dv = false)
+
+  /** Merge-on-read DELETE: instead of rewriting files, write a
+    * deletion-vector bitmap of the matching physical row indexes per
+    * file and re-add each affected file with its DV — the 100 TB
+    * DELETE shape (bytes written ∝ deleted-row COUNT, not ∝ the size
+    * of files containing them). Existing DVs are unioned in; the file
+    * and its `baseRowId` survive, so row ids stay stable. The commit
+    * adds the `deletionVectors` reader+writer feature to the table's
+    * protocol, per the public protocol.
+    */
+  def deleteWhereDv(
+      spark: SparkSession,
+      tablePath: String,
+      filters: graft.core.Filters.Normalized,
+      distributedPlanning: Boolean = false,
+      predicateSql: Option[String] = None
+  ): CommitResult =
+    delete(spark, tablePath, filters, distributedPlanning, predicateSql, dv = true)
+
+  private def delete(
+      spark: SparkSession,
+      tablePath: String,
+      filters: graft.core.Filters.Normalized,
+      distributedPlanning: Boolean,
+      predicateSql: Option[String],
+      dv: Boolean
   ): CommitResult = {
-    import graft.core.Filters
     val snap = DeltaLog.snapshot(spark, tablePath, withFiles = !distributedPlanning)
-    // the public writer contract: a table that sets
-    // delta.enableDeletionVectors routes its row-removing DML through
-    // deletion vectors — same semantics, O(deleted rows) writes
-    if (dvRoutingEnabled(snap.metadata))
-      return deleteWhereDv(spark, tablePath, filters, distributedPlanning,
-        predicateSql)
-    val schema = snap.schema
-    val partCols = snap.metadata.partitionColumns
-    val predicate = Filters.rowPredicate(filters, predicateSql)
-
+    val viaDv = dv || dvRoutingEnabled(snap.metadata)
     DeltaPolicy.requireNotAppendOnly(snap.metadata, "DELETE", tablePath)
+    val predicate = graft.core.Filters.rowPredicate(filters, predicateSql)
+    val dies = coalesce(predicate, lit(false))
     val candidates = candidateFiles(spark, tablePath, filters, snap, distributedPlanning)
-    if (candidates.isEmpty)
-      return CommitResult(snap.version, 0, 0)
+    if (candidates.isEmpty) return CommitResult(snap.version, 0, 0)
 
-    // surviving rows of the candidate files (partition cols re-attached
-    // so they land back in the rewritten files' partition paths; DVs
-    // applied by the shared scan path so deleted rows stay deleted;
-    // row-tracked tables keep their ids via materialized columns)
-    val (keptSrc, matEx) = readForRewrite(spark, tablePath, snap, candidates)
-    val kept = keptSrc
-      // DELETE removes rows where the predicate IS TRUE; rows where it
-      // evaluates to NULL are kept (plain !predicate would drop them)
-      .filter(!coalesce(predicate, lit(false)))
-
-    // CDF: record exactly the rows this delete removes
-    val cdcActions =
+    val retired = retire(spark, tablePath, snap, candidates, viaDv)(_.filter(dies))
+    if (retired.removes.isEmpty) return CommitResult(snap.version, 0, 0)
+    // a rewrite's surviving rows (existing DVs applied by the shared
+    // scan path; row-tracked tables keep their ids via materialized columns)
+    val kept = if (viaDv) None else Some(readForRewrite(spark, tablePath, snap, candidates))
+    // CDF: the visible rows of the retired files that die, staged
+    // before the new DVs take effect
+    val cdc =
       if (cdfEnabled(snap.metadata))
-        stageCdcDeletes(spark, tablePath, snap, candidates, predicate)
+        stageCdcDeletes(spark, tablePath, snap, retired.removes, predicate)
       else Seq.empty
-
-    val adds = stageFilesFor(spark, kept, tablePath, snap.metadata, statsExclude = matEx)
-    commitLoop(spark, tablePath, adds, candidates,
-      snap.metadata.schemaString, partCols, overwrite = false,
-      extraActions = cdcActions, allowMapped = true,
-      requireBase = Some(snap.version))
+    commitDml(spark, tablePath, snap, viaDv, retired, cdc)(kept.map { case (src, matEx) =>
+      stageFilesFor(spark, src.filter(!dies), tablePath, snap.metadata, statsExclude = matEx)
+    }.getOrElse(Seq.empty))
   }
 
-  /** UPDATE ... SET: copy-on-write rewrite of the files that may hold
-    * predicate-matching rows, applying the SET expressions (SQL
-    * strings over the OLD row — all assignments see pre-update
-    * values, per SQL UPDATE semantics) to exactly the rows where the
-    * predicate is TRUE. Stats-pruned like DELETE: untouched files are
-    * never rewritten. Table policies (constraints, invariants,
-    * generated-column equations) are validated on the result. On CDF
-    * tables the commit carries update_preimage/update_postimage rows;
-    * on row-tracked tables updated rows keep their row id and pick up
-    * this commit's version (null materialized rcv), untouched rows
-    * keep both.
+  /** UPDATE ... SET: applies the SET expressions (SQL strings over the
+    * OLD row — all assignments see pre-update values, per SQL UPDATE
+    * semantics) to exactly the rows where the predicate is TRUE.
+    * Stats-pruned like DELETE: untouched files are never read. The
+    * candidates are rewritten whole (copy-on-write), or, on a table
+    * that sets `delta.enableDeletionVectors`, only the updated rows
+    * are written ([[updateWhereDv]]). Table policies (constraints,
+    * invariants, generated-column equations) are validated on the
+    * written rows. On CDF tables the commit carries
+    * update_preimage/update_postimage rows; on row-tracked tables
+    * updated rows keep their row id and pick up this commit's version
+    * (null materialized rcv), untouched rows keep both.
     */
   def updateWhere(
       spark: SparkSession,
@@ -281,82 +428,8 @@ object DeltaWrite {
       set: Seq[(String, String)],
       distributedPlanning: Boolean = false,
       predicateSql: Option[String] = None
-  ): CommitResult = {
-    import graft.core.Filters
-    require(set.nonEmpty, "UPDATE needs at least one SET assignment")
-    val snap = DeltaLog.snapshot(spark, tablePath, withFiles = !distributedPlanning)
-    val meta = snap.metadata
-    if (dvRoutingEnabled(meta))
-      return updateWhereDv(spark, tablePath, filters, set, distributedPlanning,
-        predicateSql)
-    val schema = snap.schema
-    val partCols = meta.partitionColumns
-    DeltaPolicy.requireNotAppendOnly(meta, "UPDATE", tablePath)
-    set.foreach { case (c, _) =>
-      require(schema.fieldNames.contains(c), s"SET column $c is not in the table schema")
-    }
-    require(set.map(_._1).distinct.size == set.size, "duplicate SET column")
-    val idCols = DeltaPolicy.identityColumns(meta).map(_.column).toSet
-    set.foreach { case (c, _) =>
-      require(!idCols.contains(c), s"cannot UPDATE identity column $c")
-    }
-    val setMap = set.toMap
-    val predicate = Filters.rowPredicate(filters, predicateSql)
-    val matched = coalesce(predicate, lit(false))
-
-    val candidates = candidateFiles(spark, tablePath, filters, snap, distributedPlanning)
-    if (candidates.isEmpty) return CommitResult(snap.version, 0, 0)
-
-    val tracked = rowTrackingEnabled(meta)
-    if (tracked)
-      require(meta.configuration.contains(MatRowIdKey) &&
-        meta.configuration.contains(MatRcvKey),
-        s"row-tracked table $tablePath names no materialized row-id columns; " +
-          "refusing to UPDATE (row ids would be re-minted)")
-    val t = DeltaRead.readFiles(spark, tablePath, meta, candidates, withRowIds = tracked)
-
-    // all SETs evaluate against the OLD row (select, not chained
-    // withColumn, so one assignment cannot see another's result)
-    def updatedCols(src: DataFrame): Seq[org.apache.spark.sql.Column] = schema.fieldNames.toSeq.map { c =>
-      setMap.get(c) match {
-        case Some(sql) =>
-          when(matched, expr(sql).cast(schema(c).dataType)).otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    }
-    val content0 =
-      if (!tracked) t.select(updatedCols(t): _*)
-      else {
-        val matId = meta.configuration(MatRowIdKey)
-        val matRcv = meta.configuration(MatRcvKey)
-        t.select(updatedCols(t) ++ Seq(
-          col(DeltaRead.RowIdCol).as(matId),
-          // updated rows take this commit's version via the default
-          when(matched, lit(null).cast(org.apache.spark.sql.types.LongType))
-            .otherwise(col(DeltaRead.RowCommitVersionCol)).as(matRcv)): _*)
-      }
-    val content = DeltaPolicy.prepare(content0, meta, tablePath)
-
-    val cdcActions =
-      if (!cdfEnabled(meta)) Seq.empty
-      else {
-        val dataCols = schema.fieldNames.map(col).toSeq
-        val pre = t.where(matched).select(dataCols: _*)
-          .withColumn(DeltaChanges.ChangeTypeCol, lit("update_preimage"))
-        val post = t.where(matched).select(updatedCols(t): _*)
-          .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
-        stageFilesFor(spark, pre.unionByName(post), tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcAction)
-      }
-
-    val matEx: Set[String] =
-      if (tracked) Set(meta.configuration(MatRowIdKey), meta.configuration(MatRcvKey))
-      else Set.empty
-    val adds = stageFilesFor(spark, content, tablePath, meta, statsExclude = matEx)
-    commitLoop(spark, tablePath, adds, candidates,
-      meta.schemaString, partCols, overwrite = false, extraActions = cdcActions,
-      allowMapped = true, requireBase = Some(snap.version))
-  }
+  ): CommitResult =
+    update(spark, tablePath, filters, set, distributedPlanning, predicateSql, dv = false)
 
   /** UPDATE via DELETION VECTORS — [[updateWhere]]'s
     * low-write-amplification form (the same trade [[mergeDv]] makes
@@ -366,11 +439,10 @@ object DeltaWrite {
     * `baseRowId`s — survive untouched. A selective UPDATE on wide
     * files writes O(matched rows), not O(candidate file bytes).
     * Updated versions are computed from the DV-APPLIED read, so rows
-    * already dead under an existing DV never resurrect as updates;
-    * their positions re-unioning into the replacement bitmap is a
-    * no-op. Same CDF pre/post classification, policies, identity
-    * refusals and row-id preservation as the rewrite path. The
-    * commit stamps the `deletionVectors` feature.
+    * already dead under an existing DV never resurrect as updates.
+    * Same CDF pre/post classification, policies, identity refusals
+    * and row-id preservation as the rewrite. The commit stamps the
+    * `deletionVectors` feature.
     */
   def updateWhereDv(
       spark: SparkSession,
@@ -379,110 +451,324 @@ object DeltaWrite {
       set: Seq[(String, String)],
       distributedPlanning: Boolean = false,
       predicateSql: Option[String] = None
+  ): CommitResult =
+    update(spark, tablePath, filters, set, distributedPlanning, predicateSql, dv = true)
+
+  private def update(
+      spark: SparkSession,
+      tablePath: String,
+      filters: graft.core.Filters.Normalized,
+      set: Seq[(String, String)],
+      distributedPlanning: Boolean,
+      predicateSql: Option[String],
+      dv: Boolean
   ): CommitResult = {
-    import graft.core.Filters
     require(set.nonEmpty, "UPDATE needs at least one SET assignment")
     val snap = DeltaLog.snapshot(spark, tablePath, withFiles = !distributedPlanning)
     val meta = snap.metadata
+    val viaDv = dv || dvRoutingEnabled(meta)
     val schema = snap.schema
-    val partCols = meta.partitionColumns
     DeltaPolicy.requireNotAppendOnly(meta, "UPDATE", tablePath)
-    set.foreach { case (c, _) =>
-      require(schema.fieldNames.contains(c), s"SET column $c is not in the table schema")
-    }
-    require(set.map(_._1).distinct.size == set.size, "duplicate SET column")
     val idCols = DeltaPolicy.identityColumns(meta).map(_.column).toSet
     set.foreach { case (c, _) =>
+      require(schema.fieldNames.contains(c), s"SET column $c is not in the table schema")
       require(!idCols.contains(c), s"cannot UPDATE identity column $c")
     }
+    require(set.map(_._1).distinct.size == set.size, "duplicate SET column")
     val setMap = set.toMap
-    val predicate = Filters.rowPredicate(filters, predicateSql)
-    val matched = coalesce(predicate, lit(false))
+    val matched = coalesce(graft.core.Filters.rowPredicate(filters, predicateSql), lit(false))
 
     val candidates = candidateFiles(spark, tablePath, filters, snap, distributedPlanning)
     if (candidates.isEmpty) return CommitResult(snap.version, 0, 0)
 
-    val tracked = rowTrackingEnabled(meta)
-    if (tracked)
-      require(meta.configuration.contains(MatRowIdKey) &&
-        meta.configuration.contains(MatRcvKey),
-        s"row-tracked table $tablePath names no materialized row-id columns; " +
-          "refusing to UPDATE (row ids would be re-minted)")
-    val t = DeltaRead.readFiles(spark, tablePath, meta, candidates, withRowIds = tracked)
-    val hit = t.where(matched)
-
-    def updatedCols(src: DataFrame): Seq[org.apache.spark.sql.Column] =
-      schema.fieldNames.toSeq.map { c =>
-        setMap.get(c) match {
-          case Some(sql) => expr(sql).cast(schema(c).dataType).as(c)
-          case None      => col(c)
-        }
+    val ids = materializedIds(meta, tablePath, "UPDATE")
+    val t = DeltaRead.readFiles(spark, tablePath, meta, candidates, withRowIds = ids.isDefined)
+    // all SETs evaluate against the OLD row (select, not chained
+    // withColumn, so one assignment cannot see another's result),
+    // guarded so unmatched rows pass through as they are
+    val updatedCols: Seq[org.apache.spark.sql.Column] = schema.fieldNames.toSeq.map { c =>
+      setMap.get(c) match {
+        case Some(sql) =>
+          when(matched, expr(sql).cast(schema(c).dataType)).otherwise(col(c)).as(c)
+        case None => col(c)
       }
-    val content0 =
-      if (!tracked) hit.select(updatedCols(hit): _*)
-      else {
-        val matId = meta.configuration(MatRowIdKey)
-        val matRcv = meta.configuration(MatRcvKey)
-        hit.select(updatedCols(hit) ++ Seq(
-          col(DeltaRead.RowIdCol).as(matId),
-          lit(null).cast(org.apache.spark.sql.types.LongType).as(matRcv)): _*)
-      }
-    val content = DeltaPolicy.prepare(content0, meta, tablePath)
-
-    // matched positions → per-file bitmaps in one distributed job
-    // (raw positional scan; a pre-existing DV's dead rows re-marking
-    // is a no-op under the union below)
-    val base = tablePath.stripSuffix("/")
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val byPath = candidates.map(f =>
-      DvDeleted.normalizePath(DeltaLog.resolvePath(base, f.path)) -> f).toMap
-    val positions = positionalScan(spark, base, meta, candidates)
-      .filter(matched).select(col("__graft_file"), col("__graft_row"))
-      .groupBy(col("__graft_file"))
-      .agg(DvBitmapAgg.bitmap(col("__graft_row")).as("dv"))
-      .select(col("__graft_file"), col("dv.dv"))
-      .collect()
-      .map(r => (DvDeleted.decodeMetadataPath(r.getString(0)), r.getAs[Array[Byte]](1)))
-    if (positions.isEmpty) return CommitResult(snap.version, 0, 0)
-
-    val bitmaps: Seq[(String, RoaringBitmapArray)] = positions.toSeq.map {
-      case (key, bytes) =>
-        val fresh = RoaringBitmapArray.deserialize(bytes)
-        val bm = byPath(key).dv.map(_.readData(fs, base)) match {
-          case Some(oldBytes) =>
-            val old = RoaringBitmapArray.deserialize(oldBytes).toArray
-            RoaringBitmapArray.fromSorted((old ++ fresh.toArray).distinct.sorted)
-          case None => fresh
-        }
-        key -> bm
     }
+    // the rewrite writes every candidate row, the DV form only the
+    // updated ones
+    val written = if (viaDv) t.where(matched) else t
+    val content = DeltaPolicy.prepare(ids match {
+      case None => written.select(updatedCols: _*)
+      case Some((matId, matRcv)) =>
+        written.select(updatedCols ++ Seq(
+          col(DeltaRead.RowIdCol).as(matId),
+          // updated rows take this commit's version via the default
+          when(matched, lit(null).cast(LongType))
+            .otherwise(col(DeltaRead.RowCommitVersionCol)).as(matRcv)): _*)
+    }, meta, tablePath)
 
-    val cdcActions =
+    val retired = retire(spark, tablePath, snap, candidates, viaDv)(_.filter(matched))
+    if (retired.removes.isEmpty) return CommitResult(snap.version, 0, 0)
+    val cdc =
       if (!cdfEnabled(meta)) Seq.empty
       else {
-        val dataCols = schema.fieldNames.map(col).toSeq
-        val pre = hit.select(dataCols: _*)
+        val pre = t.where(matched).select(schema.fieldNames.map(col).toSeq: _*)
           .withColumn(DeltaChanges.ChangeTypeCol, lit("update_preimage"))
-        val post = hit.select(updatedCols(hit): _*)
+        val post = t.where(matched).select(updatedCols: _*)
           .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
         stageFilesFor(spark, pre.unionByName(post), tablePath, meta,
           destPrefix = "_change_data/", withStats = false).map(cdcAction)
       }
+    commitDml(spark, tablePath, snap, viaDv, retired, cdc)(
+      stageFilesFor(spark, content, tablePath, meta, statsExclude = statsExcluded(ids)))
+  }
 
-    val descriptors = DeletionVectors.writeDvFile(fs, base, bitmaps)
-    val dvAdds = bitmaps.map { case (key, _) =>
-      val f = byPath(key)
-      f.copy(dv = Some(descriptors(key)))
+  /** MERGE (upsert): rows of `source` replace target rows with the
+    * same key; unmatched source rows are inserted. The standard
+    * last-writer-wins MERGE INTO every ingestion pipeline runs.
+    *
+    * Scale shape: only files that MAY hold a matching key are
+    * candidates (single-column keys prune on per-file min/max stats
+    * against the source key range — one tiny driver-side agg of the
+    * source). The candidates are rewritten as kept-rows ∪ source, one
+    * shuffle join on the key, or, on a table that sets
+    * `delta.enableDeletionVectors`, keep their bytes while the dying
+    * rows gain DVs ([[mergeDv]]). Unmatched-file data is never read
+    * or written. `source` must be unique per key (the caller dedupes
+    * — at scale that is one ExtremumBy pass, see operators/Upsert).
+    *
+    * On CDF-enabled tables the commit carries cdc files classifying
+    * every change: `update_preimage`/`update_postimage` for matched
+    * keys, `insert` for new keys, `delete` for delete-matched keys —
+    * which also disambiguates the add+remove rewrite for change
+    * readers.
+    *
+    * `deleteWhenMatched` adds the standard `WHEN MATCHED AND <cond>
+    * THEN DELETE` clause: a SQL boolean over the source row's columns;
+    * TRUE deletes the matched target row instead of updating it (a
+    * FALSE/NULL condition falls through to the update clause, an
+    * unmatched delete-condition row to the insert clause). `txn`
+    * attaches a SetTransaction marker to the commit (exactly-once
+    * refreshers); `requireBase` makes the whole merge conditional on
+    * the table still being at that version — the read-modify-write
+    * guard incremental view refresh pins its CDF watermark with.
+    * An empty source returns without committing (no txn marker).
+    *
+    * `deleteKeys` is the CDC-apply delete clause (the shape a change
+    * replicator needs, where a deleted key has NO row values to put in
+    * `source`): a frame of exactly the key columns whose matched
+    * target rows are removed in the SAME atomic commit as the upsert —
+    * and, unlike a `deleteWhenMatched` row, a delete key absent from
+    * the target is IGNORED (no insert fallthrough; a replayed delete
+    * is a no-op). Null key values never match (standard `ON t.k = s.k`
+    * semantics). Single-column key pruning spans source ∪ deleteKeys,
+    * and an empty source with non-empty deleteKeys still commits.
+    */
+  def merge(
+      spark: SparkSession,
+      tablePath: String,
+      source: DataFrame,
+      keyCols: Seq[String],
+      deleteWhenMatched: Option[String] = None,
+      txn: Option[(String, Long)] = None,
+      requireBase: Option[Long] = None,
+      deleteKeys: Option[DataFrame] = None
+  ): CommitResult =
+    mergeRows(spark, tablePath, source, keyCols, deleteWhenMatched, txn, requireBase,
+      deleteKeys, dv = false)
+
+  /** MERGE via DELETION VECTORS — the low-write-amplification merge
+    * (upstream's "low-shuffle merge" shape): instead of REWRITING
+    * every candidate file (write cost ∝ file size × touched files),
+    * the matched target rows' positions fold into per-file roaring
+    * bitmaps and ONLY the source rows append as new files. Identical
+    * semantics to [[merge]] — same clauses (`deleteWhenMatched`,
+    * `deleteKeys`), same CDF classification, same policies — but:
+    * kept rows never move (their files, stats and `baseRowId`s
+    * survive untouched — row-tracked tables keep kept-row ids stable
+    * FOR FREE, where the rewrite must re-materialize them), and
+    * write amplification is O(source rows + matched-row bitmaps).
+    * Choose this for sparse upserts into wide files (the CDC-apply
+    * shape); choose [[merge]] when most of every candidate file
+    * changes (a DV'd file still scans its dead rows until OPTIMIZE
+    * rewrites it). The commit stamps the `deletionVectors` feature.
+    * Rows already dead under a PRE-existing DV never classify as
+    * matches (reads apply DVs). A merge that writes and retires
+    * nothing commits only when it carries a `txn` marker (a CDC
+    * replicator whose batch nets to deletes of absent keys must
+    * still advance its watermark).
+    */
+  def mergeDv(
+      spark: SparkSession,
+      tablePath: String,
+      source: DataFrame,
+      keyCols: Seq[String],
+      deleteWhenMatched: Option[String] = None,
+      txn: Option[(String, Long)] = None,
+      requireBase: Option[Long] = None,
+      deleteKeys: Option[DataFrame] = None
+  ): CommitResult =
+    mergeRows(spark, tablePath, source, keyCols, deleteWhenMatched, txn, requireBase,
+      deleteKeys, dv = true)
+
+  private def mergeRows(
+      spark: SparkSession,
+      tablePath: String,
+      source: DataFrame,
+      keyCols: Seq[String],
+      deleteWhenMatched: Option[String],
+      txn: Option[(String, Long)],
+      requireBase: Option[Long],
+      deleteKeys: Option[DataFrame],
+      dv: Boolean
+  ): CommitResult = {
+    require(keyCols.nonEmpty, "merge needs at least one key column")
+    deleteKeys.foreach(dk => require(dk.columns.toSet == keyCols.toSet,
+      s"deleteKeys columns ${dk.columns.mkString(",")} must be exactly the " +
+        s"merge keys (${keyCols.mkString(",")})"))
+    val snap = DeltaLog.snapshot(spark, tablePath)
+    requireBase.foreach { base =>
+      if (snap.version != base)
+        throw new ConcurrentWriteException(
+          s"table $tablePath is at version ${snap.version}, caller required $base")
     }
-    val matEx: Set[String] =
-      if (tracked) Set(meta.configuration(MatRowIdKey), meta.configuration(MatRcvKey))
-      else Set.empty
-    val newAdds = stageFilesFor(spark, content, tablePath, meta, statsExclude = matEx)
-    commitLoop(spark, tablePath, newAdds ++ dvAdds,
-      bitmaps.map { case (key, _) => byPath(key) },
-      meta.schemaString, partCols, overwrite = false,
-      extraActions = dvProtocol(snap) +: cdcActions,
-      allowMapped = true, requireBase = Some(snap.version))
+    val meta = snap.metadata
+    val viaDv = dv || dvRoutingEnabled(meta)
+    // MERGE retires matched rows (data-removing change)
+    DeltaPolicy.requireNotAppendOnly(meta, "MERGE", tablePath)
+    val ids = materializedIds(meta, tablePath, "MERGE")
+    require(source.columns.toSet == meta.schema.fieldNames.toSet,
+      s"merge source schema ${source.columns.mkString(",")} must match the table " +
+        s"(${meta.schema.fieldNames.mkString(",")})")
+    // a merge source carries every column, so identity values arrive
+    // explicit — legal only when the declaration allows it
+    val idSpecs = DeltaPolicy.identityColumns(meta)
+    idSpecs.foreach { spec =>
+      require(spec.allowExplicitInsert,
+        s"MERGE into $tablePath provides explicit values for identity column " +
+          s"${spec.column}, which is GENERATED ALWAYS (allowExplicitInsert=false)")
+    }
+    // incoming rows are subject to the table's policies (constraints,
+    // invariants, generated-column validation); surviving target rows
+    // satisfied them when they were written
+    val src = DeltaPolicy.prepare(source, meta, tablePath)
+      .select(meta.schema.fieldNames.map(col).toSeq: _*)
+    // delete keys cast to the table's key types, deduped (a CDC
+    // replicator's key frame arrives in the SOURCE table's types)
+    val dk = deleteKeys.map(d => d.select(keyCols.map(c =>
+      col(c).cast(meta.schema(c).dataType).as(c)): _*).distinct())
+    // WHEN MATCHED AND <cond> THEN DELETE: the clause fires only when
+    // the condition is TRUE (SQL clause semantics — null falls through
+    // to the update clause). Evaluated over the source row, whose
+    // columns span the full schema. A delete-condition row that
+    // matches no target row follows the standard NOT MATCHED clause
+    // and inserts.
+    val delCond = deleteWhenMatched.map(c => coalesce(expr(c), lit(false)))
+    val upsertSrc = delCond.map(c => src.where(!c)).getOrElse(src)
+    val delSrc = delCond.map(c => src.where(c))
+
+    // candidate pruning: single-column keys bound the source key range
+    // once (driver-side min/max) and skip files whose stats exclude it
+    val candidates: Seq[DeltaLog.AddFile] = keyCols match {
+      case Seq(k) =>
+        // the key range spans source ∪ deleteKeys: a file holding only
+        // delete-matched keys must stay a candidate
+        val keyVals = dk.map(d => src.select(col(k)).unionByName(d))
+          .getOrElse(src.select(col(k)))
+        val r = keyVals.agg(min(col(k)), max(col(k)), count(lit(1))).head()
+        if (r.getLong(2) == 0L) return CommitResult(snap.version, 0, 0) // empty source
+        // all-null keys: SQL equality never matches → pure insert
+        else if (r.isNullAt(0)) Seq.empty
+        else {
+          import graft.core.{Filter, Filters}
+          val f = Filters.normalize(Seq(
+            Filter(k, ">=", r.get(0)), Filter(k, "<=", r.get(1))))
+          snap.files.filter(f0 => DeltaFileSkipping.mayMatch(f0, f, meta))
+        }
+      case _ => snap.files
+    }
+
+    val targetRaw =
+      if (candidates.isEmpty) None
+      else Some(DeltaRead.readFiles(spark, tablePath, meta, candidates,
+        withRowIds = ids.isDefined))
+    // cdc/classification joins see the plain schema (no row-id cols)
+    val target = targetRaw.map(t =>
+      if (ids.isDefined) t.drop(DeltaRead.RowIdCol, DeltaRead.RowCommitVersionCol) else t)
+    val keySeq = keyCols.toSeq
+
+    // rows WRITTEN as new content: updates + inserts. Delete-matched
+    // rows vanish; a delete-condition row without a target match falls
+    // through to the insert clause.
+    val writeSrc = (delSrc, target) match {
+      case (Some(d), Some(t)) => upsertSrc.unionByName(d.join(t, keySeq, "left_anti"))
+      case (Some(d), None)    => upsertSrc.unionByName(d)
+      case _                  => upsertSrc
+    }
+    // Row tracking: updated rows materialize the matched key's old row
+    // id with a NULL commit version (readers then pick up the new
+    // file's default — exactly "same row, updated at this version";
+    // min-id tie-break if the target held duplicate keys; all-null-id
+    // matches behave as inserts — the backfill semantic); inserts
+    // materialize neither and mint fresh ids.
+    val upserts = (targetRaw, ids) match {
+      case (Some(traw), Some((matId, matRcv))) =>
+        val keyIds = traw
+          .groupBy(keySeq.map(col): _*)
+          .agg(min(col(DeltaRead.RowIdCol)).as(matId))
+        writeSrc.join(keyIds, keySeq, "left")
+          .withColumn(matRcv, lit(null).cast(LongType))
+      case _ => writeSrc
+    }
+    // the rewrite also writes the kept rows: target rows whose key has
+    // no replacement and is not delete-matched (a deleted key's row id
+    // dies with the row, like copy-on-write DELETE); on a row-tracked
+    // table they materialize BOTH old ids. The DV form leaves them in
+    // place, their files and baseRowIds untouched.
+    val content = targetRaw match {
+      case Some(traw) if !viaDv =>
+        val notReplaced = traw.join(src, keySeq, "left_anti")
+        val kept = dk.map(notReplaced.join(_, keySeq, "left_anti")).getOrElse(notReplaced)
+        ids.fold(kept) { case (matId, matRcv) =>
+          kept.withColumnRenamed(DeltaRead.RowIdCol, matId)
+            .withColumnRenamed(DeltaRead.RowCommitVersionCol, matRcv)
+        }.unionByName(upserts)
+      case _ => upserts
+    }
+
+    // DYING target rows: every visible row whose key the source
+    // matches (updates kill the old version), is delete-matched, or
+    // is a present delete key
+    val retired = retire(spark, tablePath, snap, candidates, viaDv) { scan =>
+      val dyingKeys = dk.foldLeft(src.select(keySeq.map(col): _*))(_.unionByName(_)).distinct()
+      scan.join(dyingKeys, keySeq, "left_semi")
+    }
+
+    val cdc =
+      if (!cdfEnabled(meta)) Seq.empty
+      else {
+        val changeRows = target match {
+          case Some(t) =>
+            val pre = t.join(upsertSrc, keySeq, "left_semi")
+              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_preimage"))
+            val post = upsertSrc.join(t, keySeq, "left_semi")
+              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
+            val ins = writeSrc.join(t, keySeq, "left_anti")
+              .withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
+            val del1 = delSrc.map(d => t.join(d, keySeq, "left_semi")
+              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
+            val del2 = dk.map(d => t.join(d, keySeq, "left_semi")
+              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
+            (Seq(pre.unionByName(post).unionByName(ins)) ++ del1 ++ del2)
+              .reduce(_.unionByName(_))
+          case None =>
+            writeSrc.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
+        }
+        stageFilesFor(spark, changeRows, tablePath, meta,
+          destPrefix = "_change_data/", withStats = false).map(cdcAction)
+      }
+
+    commitDml(spark, tablePath, snap, viaDv, retired, cdc, txn, idSpecs)(
+      stageFilesFor(spark, content, tablePath, meta, statsExclude = statsExcluded(ids)))
   }
 
   /** Predicate-scoped overwrite (the `replaceWhere` surface of the
@@ -519,16 +805,9 @@ object DeltaWrite {
 
     DeltaPolicy.requireNotAppendOnly(meta, "replaceWhere", tablePath)
 
-    // incoming rows go through the same preparation as append: policy
-    // validation, generated columns, identity minting, declared order
+    // incoming rows go through the same preparation as append
     val idSpecs = DeltaPolicy.identityColumns(meta)
-    val prepared0 =
-      assignIdentity(DeltaPolicy.prepare(df, meta, tablePath), idSpecs, tablePath)
-    val prepared =
-      if (prepared0.columns.toSet == snap.schema.fieldNames.toSet &&
-        prepared0.columns.toSeq != snap.schema.fieldNames.toSeq)
-        prepared0.select(snap.schema.fieldNames.map(col).toSeq: _*)
-      else prepared0
+    val prepared = prepareIncoming(df, snap, tablePath)
     // structural comparison: mapped tables carry field ids/physical
     // names as NESTED field metadata, which exact equality would trip
     require(prepared.schema.fieldNames.toSeq == snap.schema.fieldNames.toSeq &&
@@ -627,31 +906,12 @@ object DeltaWrite {
         // unmapped tables; the physical translation follows inside
         // commitMapped and the high-water mark bump reads the staged
         // stats under the PHYSICAL key
-        val idSpecs = DeltaPolicy.identityColumns(snap.metadata)
-        val p0 = assignIdentity(
-          DeltaPolicy.prepare(df, snap.metadata, tablePath), idSpecs, tablePath)
-        val prepared =
-          if (p0.columns.toSet == snap.schema.fieldNames.toSet &&
-            p0.columns.toSeq != snap.schema.fieldNames.toSeq)
-            p0.select(snap.schema.fieldNames.map(col).toSeq: _*)
-          else p0
-        commitMapped(spark, prepared, tablePath, snap, partitionBy, overwrite, txnActions,
-          requireBase = callerBase)
+        commitMapped(spark, prepareIncoming(df, snap, tablePath), tablePath, snap,
+          partitionBy, overwrite, txnActions, requireBase = callerBase)
       case None =>
         val idSpecs = snapOpt.map(s => DeltaPolicy.identityColumns(s.metadata))
           .getOrElse(Seq.empty)
-        val prepared = snapOpt match {
-          case Some(snap) =>
-            val p0 = DeltaPolicy.prepare(df, snap.metadata, tablePath)
-            val p = assignIdentity(p0, idSpecs, tablePath)
-            // align to the declared column order (generated columns
-            // materialize at the end of the frame otherwise)
-            if (p.columns.toSet == snap.schema.fieldNames.toSet &&
-              p.columns.toSeq != snap.schema.fieldNames.toSeq)
-              p.select(snap.schema.fieldNames.map(col).toSeq: _*)
-            else p
-          case None => df
-        }
+        val prepared = snapOpt.map(prepareIncoming(df, _, tablePath)).getOrElse(df)
         // an overwrite that replaces the schema would emit a
         // frame-derived schemaString and silently drop the identity
         // declaration — refuse
@@ -756,6 +1016,20 @@ object DeltaWrite {
           requireBase =
             callerBase.orElse(if (evolving) snapOpt.map(_.version) else None))
     }
+  }
+
+  /** Incoming rows prepared for a write into the table of `snap`:
+    * policy validation, generated columns, identity minting, and the
+    * declared column order (generated columns materialize at the end
+    * of the frame otherwise).
+    */
+  private def prepareIncoming(
+      df: DataFrame, snap: DeltaLog.Snapshot, tablePath: String): DataFrame = {
+    val p = assignIdentity(DeltaPolicy.prepare(df, snap.metadata, tablePath),
+      DeltaPolicy.identityColumns(snap.metadata), tablePath)
+    val names = snap.schema.fieldNames.toSeq
+    if (p.columns.toSet == names.toSet && p.columns.toSeq != names) p.select(names.map(col): _*)
+    else p
   }
 
   /** Mint identity values (writer v6 / `identityColumns`, per the
@@ -930,12 +1204,11 @@ object DeltaWrite {
     }
 
   /** `delta.enableRowTracking`: stable per-row ids. Appends and DV
-    * deletes preserve them via the per-file `baseRowId`; file
-    * rewrites (deleteWhere, OPTIMIZE, ZORDER) MATERIALIZE the old ids
-    * into hidden physical columns (named by the two config keys
-    * below, per the protocol) which readers prefer over
-    * baseRowId + index. MERGE still refuses (update row-id
-    * preservation is not implemented).
+    * DML preserve them via the per-file `baseRowId`; file rewrites
+    * (DELETE/UPDATE/MERGE, OPTIMIZE, ZORDER) and the rows UPDATE and
+    * MERGE write MATERIALIZE the old ids into hidden physical columns
+    * (named by the two config keys below, per the protocol) which
+    * readers prefer over baseRowId + index.
     */
   private[tables] def rowTrackingEnabled(meta: DeltaLog.Metadata): Boolean =
     meta.configuration.get("delta.enableRowTracking").contains("true")
@@ -947,14 +1220,6 @@ object DeltaWrite {
 
   private def cdfEnabled(meta: DeltaLog.Metadata): Boolean =
     meta.configuration.get("delta.enableChangeDataFeed").contains("true")
-
-  /** `delta.enableDeletionVectors=true` routes DELETE / UPDATE / MERGE
-    * through the deletion-vector paths (the public writer contract;
-    * the `*Dv` methods stay directly callable for per-statement
-    * choice on un-flagged tables).
-    */
-  private def dvRoutingEnabled(meta: DeltaLog.Metadata): Boolean =
-    meta.configuration.get("delta.enableDeletionVectors").contains("true")
 
   private[tables] val IctKey = "delta.enableInCommitTimestamps"
 
@@ -999,516 +1264,6 @@ object DeltaWrite {
       destPrefix = "_change_data/", withStats = false)
       .map(cdcAction)
   }
-
-  /** Merge-on-read DELETE: instead of rewriting files, write a
-    * deletion-vector bitmap of the matching physical row indexes per
-    * file and re-add each affected file with its DV — the 100 TB
-    * DELETE shape (bytes written ∝ deleted-row COUNT, not ∝ the size
-    * of files containing them). Existing DVs are unioned in. The
-    * commit upgrades the table protocol to reader 3 / writer 7 with
-    * the `deletionVectors` feature, per the public protocol.
-    */
-  def deleteWhereDv(
-      spark: SparkSession,
-      tablePath: String,
-      filters: graft.core.Filters.Normalized,
-      distributedPlanning: Boolean = false,
-      predicateSql: Option[String] = None
-  ): CommitResult = {
-    import graft.core.Filters
-    val snap = DeltaLog.snapshot(spark, tablePath, withFiles = !distributedPlanning)
-    val schema = snap.schema
-    val partCols = snap.metadata.partitionColumns
-    val predicate = Filters.rowPredicate(filters, predicateSql)
-
-    DeltaPolicy.requireNotAppendOnly(snap.metadata, "DELETE", tablePath)
-    val candidates = candidateFiles(spark, tablePath, filters, snap, distributedPlanning)
-    if (candidates.isEmpty) return CommitResult(snap.version, 0, 0)
-
-    val base = tablePath.stripSuffix("/")
-    val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // keyed by scheme-stripped absolute path (bare names collide: one
-    // partitioned write emits the same part-file name per partition dir)
-    val byPath = candidates.map(f =>
-      DvDeleted.normalizePath(DeltaLog.resolvePath(base, f.path)) -> f).toMap
-
-    // one job: matching (file, row_index) pairs are folded into a
-    // compressed roaring bitmap PER FILE on the executors
-    // ([[DvBitmapAgg]]) — the driver collects O(affected files) rows
-    // of (path, dv bytes), never the raw row indexes. A wide DELETE's
-    // driver payload is the same bytes the .bin DV file will hold.
-    val matched: Array[(String, Array[Byte])] =
-      positionalScan(spark, base, snap.metadata, candidates)
-        .filter(coalesce(predicate, lit(false)))
-        .select(col("__graft_file"), col("__graft_row"))
-        .groupBy(col("__graft_file"))
-        .agg(DvBitmapAgg.bitmap(col("__graft_row")).as("dv"))
-        .select(col("__graft_file"), col("dv.dv"))
-        .collect()
-        .map(r => (DvDeleted.decodeMetadataPath(r.getString(0)), r.getAs[Array[Byte]](1)))
-
-    if (matched.isEmpty) return CommitResult(snap.version, 0, 0)
-
-    // union with any pre-existing DV of the same file (per-file work,
-    // bounded by that file's row count)
-    val bitmaps: Seq[(String, RoaringBitmapArray)] = matched.toSeq.map {
-      case (key, bytes) =>
-        val fresh = RoaringBitmapArray.deserialize(bytes)
-        val bm = byPath(key).dv.map(_.readData(fs, base)) match {
-          case Some(oldBytes) =>
-            val old = RoaringBitmapArray.deserialize(oldBytes).toArray
-            RoaringBitmapArray.fromSorted((old ++ fresh.toArray).distinct.sorted)
-          case None => fresh
-        }
-        key -> bm
-    }
-
-    val descriptors = DeletionVectors.writeDvFile(fs, base, bitmaps)
-    val adds = bitmaps.map { case (key, _) =>
-      val f = byPath(key)
-      // DV deletes keep row ids stable: the file (and its baseRowId)
-      // survives, only the bitmap changes
-      f.copy(dv = Some(descriptors(key)))
-    }
-    // CDF rows are the VISIBLE matched rows (existing DVs applied) —
-    // staged before the new DVs take effect
-    val cdcActions =
-      if (cdfEnabled(snap.metadata))
-        stageCdcDeletes(spark, tablePath, snap,
-          bitmaps.map { case (key, _) => byPath(key) }, predicate)
-      else Seq.empty
-
-    // removes carry the PRE-update entries (old DV descriptors), so a
-    // replaced DV file gets its own tombstone for vacuum retention
-    commitLoop(spark, tablePath, adds, bitmaps.map { case (key, _) => byPath(key) },
-      snap.metadata.schemaString, partCols, overwrite = false,
-      extraActions = dvProtocol(snap) +: cdcActions,
-      allowMapped = true, requireBase = Some(snap.version))
-  }
-
-  /** MERGE (upsert): rows of `source` replace target rows with the
-    * same key; unmatched source rows are inserted. The standard
-    * last-writer-wins MERGE INTO every ingestion pipeline runs.
-    *
-    * Scale shape: only files that MAY hold a matching key are
-    * rewritten (single-column keys prune on per-file min/max stats
-    * against the source key range — one tiny driver-side agg of the
-    * source); the rewrite itself is kept-rows ∪ source, one shuffle
-    * join on the key. Unmatched-file data is never read or written.
-    * `source` must be unique per key (the caller dedupes — at scale
-    * that is one ExtremumBy pass, see operators/Upsert).
-    *
-    * On CDF-enabled tables the commit carries cdc files classifying
-    * every change: `update_preimage`/`update_postimage` for matched
-    * keys, `insert` for new keys, `delete` for delete-matched keys —
-    * which also disambiguates the add+remove rewrite for change
-    * readers.
-    *
-    * `deleteWhenMatched` adds the standard `WHEN MATCHED AND <cond>
-    * THEN DELETE` clause: a SQL boolean over the source row's columns;
-    * TRUE deletes the matched target row instead of updating it (a
-    * FALSE/NULL condition falls through to the update clause, an
-    * unmatched delete-condition row to the insert clause). `txn`
-    * attaches a SetTransaction marker to the commit (exactly-once
-    * refreshers); `requireBase` makes the whole merge conditional on
-    * the table still being at that version — the read-modify-write
-    * guard incremental view refresh pins its CDF watermark with.
-    * An empty source returns without committing (no txn marker).
-    *
-    * `deleteKeys` is the CDC-apply delete clause (the shape a change
-    * replicator needs, where a deleted key has NO row values to put in
-    * `source`): a frame of exactly the key columns whose matched
-    * target rows are removed in the SAME atomic commit as the upsert —
-    * and, unlike a `deleteWhenMatched` row, a delete key absent from
-    * the target is IGNORED (no insert fallthrough; a replayed delete
-    * is a no-op). Null key values never match (standard `ON t.k = s.k`
-    * semantics). Single-column key pruning spans source ∪ deleteKeys,
-    * and an empty source with non-empty deleteKeys still commits.
-    */
-  def merge(
-      spark: SparkSession,
-      tablePath: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      deleteWhenMatched: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      requireBase: Option[Long] = None,
-      deleteKeys: Option[DataFrame] = None
-  ): CommitResult = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    deleteKeys.foreach(dk => require(dk.columns.toSet == keyCols.toSet,
-      s"deleteKeys columns ${dk.columns.mkString(",")} must be exactly the " +
-        s"merge keys (${keyCols.mkString(",")})"))
-    val snap = DeltaLog.snapshot(spark, tablePath)
-    if (dvRoutingEnabled(snap.metadata))
-      return mergeDv(spark, tablePath, source, keyCols, deleteWhenMatched,
-        txn, requireBase, deleteKeys)
-    requireBase.foreach { base =>
-      if (snap.version != base)
-        throw new ConcurrentWriteException(
-          s"table $tablePath is at version ${snap.version}, caller required $base")
-    }
-    val meta = snap.metadata
-    // MERGE rewrites matched files (data-removing change)
-    DeltaPolicy.requireNotAppendOnly(meta, "MERGE", tablePath)
-    val tracked = rowTrackingEnabled(meta)
-    if (tracked)
-      require(meta.configuration.contains(MatRowIdKey) &&
-        meta.configuration.contains(MatRcvKey),
-        s"row-tracked table $tablePath names no materialized row-id columns; " +
-          "refusing to MERGE (row ids would be re-minted)")
-    require(source.columns.toSet == meta.schema.fieldNames.toSet,
-      s"merge source schema ${source.columns.mkString(",")} must match the table " +
-        s"(${meta.schema.fieldNames.mkString(",")})")
-    // a merge source carries every column, so identity values arrive
-    // explicit — legal only when the declaration allows it
-    DeltaPolicy.identityColumns(meta).foreach { spec =>
-      require(spec.allowExplicitInsert,
-        s"MERGE into $tablePath provides explicit values for identity column " +
-          s"${spec.column}, which is GENERATED ALWAYS (allowExplicitInsert=false)")
-    }
-    val partCols = meta.partitionColumns
-    // incoming rows are subject to the table's policies (constraints,
-    // invariants, generated-column validation); surviving target rows
-    // satisfied them when they were written
-    val src = DeltaPolicy.prepare(source, meta, tablePath)
-      .select(meta.schema.fieldNames.map(col).toSeq: _*)
-    // delete keys cast to the table's key types, deduped (a CDC
-    // replicator's key frame arrives in the SOURCE table's types)
-    val dk = deleteKeys.map(d => d.select(keyCols.map(c =>
-      col(c).cast(meta.schema(c).dataType).as(c)): _*).distinct())
-    // WHEN MATCHED AND <cond> THEN DELETE: the clause fires only when
-    // the condition is TRUE (SQL clause semantics — null falls through
-    // to the update clause). Evaluated over the source row, whose
-    // columns span the full schema. A delete-condition row that
-    // matches no target row follows the standard NOT MATCHED clause
-    // and inserts.
-    val delCond = deleteWhenMatched.map(c => coalesce(expr(c), lit(false)))
-    val upsertSrc = delCond.map(c => src.where(!c)).getOrElse(src)
-    val delSrc = delCond.map(c => src.where(c))
-
-    // candidate pruning: single-column keys bound the source key range
-    // once (driver-side min/max) and skip files whose stats exclude it
-    val candidates: Seq[DeltaLog.AddFile] = keyCols match {
-      case Seq(k) =>
-        // the key range spans source ∪ deleteKeys: a file holding only
-        // delete-matched keys must stay a rewrite candidate
-        val keyVals = dk.map(d => src.select(col(k)).unionByName(d))
-          .getOrElse(src.select(col(k)))
-        val r = keyVals.agg(min(col(k)), max(col(k)), count(lit(1))).head()
-        if (r.getLong(2) == 0L) return CommitResult(snap.version, 0, 0) // empty source
-        // all-null keys: SQL equality never matches → pure insert
-        else if (r.isNullAt(0)) Seq.empty
-        else {
-          import graft.core.{Filter, Filters}
-          val f = Filters.normalize(Seq(
-            Filter(k, ">=", r.get(0)), Filter(k, "<=", r.get(1))))
-          snap.files.filter(f0 => DeltaFileSkipping.mayMatch(f0, f, meta))
-        }
-      case _ => snap.files
-    }
-
-    val targetRaw =
-      if (candidates.isEmpty) None
-      else Some(DeltaRead.readFiles(spark, tablePath, meta, candidates,
-        withRowIds = tracked))
-    // cdc/classification joins see the plain schema (no row-id cols)
-    val target = targetRaw.map(t =>
-      if (tracked) t.drop(DeltaRead.RowIdCol, DeltaRead.RowCommitVersionCol) else t)
-    val keySeq = keyCols.toSeq
-
-    // rows WRITTEN as new content: updates + inserts. Delete-matched
-    // rows vanish; a delete-condition row without a target match falls
-    // through to the insert clause.
-    val writeSrc = (delSrc, target) match {
-      case (Some(d), Some(t)) => upsertSrc.unionByName(d.join(t, keySeq, "left_anti"))
-      case (Some(d), None)    => upsertSrc.unionByName(d)
-      case _                  => upsertSrc
-    }
-
-    // kept = target rows whose key has no replacement (and was not
-    // delete-matched); content = kept ∪ writeSrc.
-    // Row tracking: kept rows materialize BOTH old ids; updated rows
-    // materialize the matched key's old row id with a NULL commit
-    // version (readers then pick up the new file's default — exactly
-    // "same row, updated at this version"); inserts materialize
-    // neither and mint fresh ids (a delete-matched key's id dies with
-    // the row, like copy-on-write DELETE).
-    // delete-key-matched target rows vanish from the kept set (their
-    // row ids die with the rows, like delete-condition matches)
-    def dropDeleteKeys(f: DataFrame): DataFrame =
-      dk.map(d => f.join(d, keySeq, "left_anti")).getOrElse(f)
-    val content = (targetRaw, target) match {
-      case (Some(traw), Some(t)) if tracked =>
-        val matId = meta.configuration(MatRowIdKey)
-        val matRcv = meta.configuration(MatRcvKey)
-        val kept = dropDeleteKeys(traw.join(src, keySeq, "left_anti"))
-          .withColumnRenamed(DeltaRead.RowIdCol, matId)
-          .withColumnRenamed(DeltaRead.RowCommitVersionCol, matRcv)
-        // the old row id each source key replaces (min-id tie-break if
-        // the target held duplicate keys; all-null-id matches behave
-        // as inserts — the backfill semantic)
-        val keyIds = traw
-          .groupBy(keySeq.map(col): _*)
-          .agg(min(col(DeltaRead.RowIdCol)).as(matId))
-        val upserts = writeSrc.join(keyIds, keySeq, "left")
-          .withColumn(matRcv, lit(null).cast(org.apache.spark.sql.types.LongType))
-        kept.unionByName(upserts)
-      case (_, Some(t)) =>
-        dropDeleteKeys(t.join(src, keySeq, "left_anti")).unionByName(writeSrc)
-      case _            => writeSrc
-    }
-
-    val cdcActions =
-      if (!cdfEnabled(meta)) Seq.empty
-      else {
-        val changeRows = target match {
-          case Some(t) =>
-            val pre = t.join(upsertSrc, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_preimage"))
-            val post = upsertSrc.join(t, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
-            val ins = writeSrc.join(t, keySeq, "left_anti")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
-            val del1 = delSrc.map(d => t.join(d, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
-            val del2 = dk.map(d => t.join(d, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
-            (Seq(pre.unionByName(post).unionByName(ins)) ++ del1 ++ del2)
-              .reduce(_.unionByName(_))
-          case None =>
-            writeSrc.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
-        }
-        stageFilesFor(spark, changeRows, tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcAction)
-      }
-
-    val matEx: Set[String] =
-      if (tracked && target.isDefined)
-        Set(meta.configuration(MatRowIdKey), meta.configuration(MatRcvKey))
-      else Set.empty
-    val adds = stageFilesFor(spark, content, tablePath, meta, statsExclude = matEx)
-    commitLoop(spark, tablePath, adds, candidates,
-      bumpIdentityHwm(meta.schemaString, DeltaPolicy.identityColumns(meta), adds,
-        meta.physicalName),
-      partCols, overwrite = false,
-      extraActions = txnAction(txn) ++ cdcActions,
-      allowMapped = true, requireBase = Some(snap.version))
-  }
-
-  /** MERGE via DELETION VECTORS — the low-write-amplification merge
-    * (upstream's "low-shuffle merge" shape): instead of REWRITING
-    * every candidate file (write cost ∝ file size × touched files),
-    * the matched target rows' positions fold into per-file roaring
-    * bitmaps and ONLY the source rows append as new files. Identical
-    * semantics to [[merge]] — same clauses (`deleteWhenMatched`,
-    * `deleteKeys`), same CDF classification, same policies — but:
-    * kept rows never move (their files, stats and `baseRowId`s
-    * survive untouched — row-tracked tables keep kept-row ids stable
-    * FOR FREE, where the rewrite path must re-materialize them), and
-    * write amplification is O(source rows + matched-row bitmaps).
-    * Choose this for sparse upserts into wide files (the CDC-apply
-    * shape); choose [[merge]] when most of every candidate file
-    * changes (a DV'd file still scans its dead rows until OPTIMIZE
-    * rewrites it). The commit stamps the `deletionVectors` feature.
-    *
-    * Rows already dead under a PRE-existing DV never classify as
-    * matches (reads apply DVs), and their positions re-unioning into
-    * the replacement bitmap is a no-op by construction.
-    */
-  def mergeDv(
-      spark: SparkSession,
-      tablePath: String,
-      source: DataFrame,
-      keyCols: Seq[String],
-      deleteWhenMatched: Option[String] = None,
-      txn: Option[(String, Long)] = None,
-      requireBase: Option[Long] = None,
-      deleteKeys: Option[DataFrame] = None
-  ): CommitResult = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    deleteKeys.foreach(dk => require(dk.columns.toSet == keyCols.toSet,
-      s"deleteKeys columns ${dk.columns.mkString(",")} must be exactly the " +
-        s"merge keys (${keyCols.mkString(",")})"))
-    val snap = DeltaLog.snapshot(spark, tablePath)
-    requireBase.foreach { base =>
-      if (snap.version != base)
-        throw new ConcurrentWriteException(
-          s"table $tablePath is at version ${snap.version}, caller required $base")
-    }
-    val meta = snap.metadata
-    DeltaPolicy.requireNotAppendOnly(meta, "MERGE", tablePath)
-    val tracked = rowTrackingEnabled(meta)
-    if (tracked)
-      require(meta.configuration.contains(MatRowIdKey) &&
-        meta.configuration.contains(MatRcvKey),
-        s"row-tracked table $tablePath names no materialized row-id columns; " +
-          "refusing to MERGE (row ids would be re-minted)")
-    require(source.columns.toSet == meta.schema.fieldNames.toSet,
-      s"merge source schema ${source.columns.mkString(",")} must match the table " +
-        s"(${meta.schema.fieldNames.mkString(",")})")
-    DeltaPolicy.identityColumns(meta).foreach { spec =>
-      require(spec.allowExplicitInsert,
-        s"MERGE into $tablePath provides explicit values for identity column " +
-          s"${spec.column}, which is GENERATED ALWAYS (allowExplicitInsert=false)")
-    }
-    val partCols = meta.partitionColumns
-    val schema = meta.schema
-    val src = DeltaPolicy.prepare(source, meta, tablePath)
-      .select(meta.schema.fieldNames.map(col).toSeq: _*)
-    val dk = deleteKeys.map(d => d.select(keyCols.map(c =>
-      col(c).cast(meta.schema(c).dataType).as(c)): _*).distinct())
-    val delCond = deleteWhenMatched.map(c => coalesce(expr(c), lit(false)))
-    val upsertSrc = delCond.map(c => src.where(!c)).getOrElse(src)
-    val delSrc = delCond.map(c => src.where(c))
-
-    // same key-range candidate pruning as merge
-    val candidates: Seq[DeltaLog.AddFile] = keyCols match {
-      case Seq(k) =>
-        val keyVals = dk.map(d => src.select(col(k)).unionByName(d))
-          .getOrElse(src.select(col(k)))
-        val r = keyVals.agg(min(col(k)), max(col(k)), count(lit(1))).head()
-        if (r.getLong(2) == 0L) return CommitResult(snap.version, 0, 0)
-        else if (r.isNullAt(0)) Seq.empty
-        else {
-          import graft.core.{Filter, Filters}
-          val f = Filters.normalize(Seq(
-            Filter(k, ">=", r.get(0)), Filter(k, "<=", r.get(1))))
-          snap.files.filter(f0 => DeltaFileSkipping.mayMatch(f0, f, meta))
-        }
-      case _ => snap.files
-    }
-
-    val targetRaw =
-      if (candidates.isEmpty) None
-      else Some(DeltaRead.readFiles(spark, tablePath, meta, candidates,
-        withRowIds = tracked))
-    val target = targetRaw.map(t =>
-      if (tracked) t.drop(DeltaRead.RowIdCol, DeltaRead.RowCommitVersionCol) else t)
-    val keySeq = keyCols.toSeq
-
-    val writeSrc = (delSrc, target) match {
-      case (Some(d), Some(t)) => upsertSrc.unionByName(d.join(t, keySeq, "left_anti"))
-      case (Some(d), None)    => upsertSrc.unionByName(d)
-      case _                  => upsertSrc
-    }
-
-    // content = the source rows ONLY — kept rows never move. Tracked
-    // tables materialize the matched key's old row id onto the upsert
-    // (same-row-updated semantics); kept rows need nothing, their
-    // files and baseRowIds survive.
-    val content = (targetRaw, target) match {
-      case (Some(traw), Some(_)) if tracked =>
-        val matId = meta.configuration(MatRowIdKey)
-        val matRcv = meta.configuration(MatRcvKey)
-        val keyIds = traw
-          .groupBy(keySeq.map(col): _*)
-          .agg(min(col(DeltaRead.RowIdCol)).as(matId))
-        writeSrc.join(keyIds, keySeq, "left")
-          .withColumn(matRcv, lit(null).cast(org.apache.spark.sql.types.LongType))
-      case _ => writeSrc
-    }
-
-    // DYING target rows: every visible row whose key the source
-    // matches (updates kill the old version), is delete-matched, or
-    // is a present delete key. Folded to per-file bitmaps in ONE
-    // distributed job over the candidates — raw positional scan
-    // semi-joined against the dying key set (the raw scan may touch
-    // already-dead rows; the union with the file's existing DV makes
-    // re-marking them a no-op).
-    val dvUpdated: Seq[(String, RoaringBitmapArray)] = targetRaw match {
-      case None => Seq.empty
-      case Some(_) =>
-        val dyingKeys = (Seq(src.select(keySeq.map(col): _*)) ++
-          dk.map(_.select(keySeq.map(col): _*)))
-          .reduce(_.unionByName(_)).distinct()
-        val base = tablePath.stripSuffix("/")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val byPath = candidates.map(f =>
-          DvDeleted.normalizePath(DeltaLog.resolvePath(base, f.path)) -> f).toMap
-        val matched = positionalScan(spark, base, meta, candidates)
-          .join(dyingKeys, keySeq, "left_semi")
-          .select(col("__graft_file"), col("__graft_row"))
-          .groupBy(col("__graft_file"))
-          .agg(DvBitmapAgg.bitmap(col("__graft_row")).as("dv"))
-          .select(col("__graft_file"), col("dv.dv"))
-          .collect()
-          .map(r => (DvDeleted.decodeMetadataPath(r.getString(0)), r.getAs[Array[Byte]](1)))
-        matched.toSeq.map { case (key, bytes) =>
-          val fresh = RoaringBitmapArray.deserialize(bytes)
-          val bm = byPath(key).dv.map(_.readData(fs, base)) match {
-            case Some(oldBytes) =>
-              val old = RoaringBitmapArray.deserialize(oldBytes).toArray
-              RoaringBitmapArray.fromSorted((old ++ fresh.toArray).distinct.sorted)
-            case None => fresh
-          }
-          key -> bm
-        }
-    }
-
-    val cdcActions =
-      if (!cdfEnabled(meta)) Seq.empty
-      else {
-        val changeRows = target match {
-          case Some(t) =>
-            val pre = t.join(upsertSrc, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_preimage"))
-            val post = upsertSrc.join(t, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("update_postimage"))
-            val ins = writeSrc.join(t, keySeq, "left_anti")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
-            val del1 = delSrc.map(d => t.join(d, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
-            val del2 = dk.map(d => t.join(d, keySeq, "left_semi")
-              .withColumn(DeltaChanges.ChangeTypeCol, lit("delete")))
-            (Seq(pre.unionByName(post).unionByName(ins)) ++ del1 ++ del2)
-              .reduce(_.unionByName(_))
-          case None =>
-            writeSrc.withColumn(DeltaChanges.ChangeTypeCol, lit("insert"))
-        }
-        stageFilesFor(spark, changeRows, tablePath, meta,
-          destPrefix = "_change_data/", withStats = false).map(cdcAction)
-      }
-
-    val matEx: Set[String] =
-      if (tracked && target.isDefined)
-        Set(meta.configuration(MatRowIdKey), meta.configuration(MatRcvKey))
-      else Set.empty
-    val newAdds = stageFilesFor(spark, content, tablePath, meta, statsExclude = matEx)
-    val (dvAdds, dvRemoves) =
-      if (dvUpdated.isEmpty) (Seq.empty[DeltaLog.AddFile], Seq.empty[DeltaLog.AddFile])
-      else {
-        val base = tablePath.stripSuffix("/")
-        val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val byPath = candidates.map(f =>
-          DvDeleted.normalizePath(DeltaLog.resolvePath(base, f.path)) -> f).toMap
-        val descriptors = DeletionVectors.writeDvFile(fs, base, dvUpdated)
-        val adds = dvUpdated.map { case (key, _) =>
-          val f = byPath(key)
-          f.copy(dv = Some(descriptors(key)))
-        }
-        (adds, dvUpdated.map { case (key, _) => byPath(key) })
-      }
-    // nothing staged AND no marker to record → commitless no-op; with
-    // a txn the commit still lands (merge's contract: a CDC replicator
-    // whose batch nets to deletes of absent keys must still advance
-    // its watermark — dropping it would refold the same range forever)
-    if (newAdds.isEmpty && dvAdds.isEmpty && txn.isEmpty)
-      return CommitResult(snap.version, 0, 0)
-    commitLoop(spark, tablePath, newAdds ++ dvAdds, dvRemoves,
-      bumpIdentityHwm(meta.schemaString, DeltaPolicy.identityColumns(meta), newAdds,
-        meta.physicalName),
-      partCols, overwrite = false,
-      extraActions = dvProtocol(snap) +: (txnAction(txn) ++ cdcActions),
-      allowMapped = true, requireBase = Some(snap.version))
-  }
-
-  /** The protocol a DV-writing commit states: the table's own, with
-    * the DV reader+writer feature added, so every feature the table
-    * declared stays declared.
-    */
-  private def dvProtocol(snap: DeltaLog.Snapshot): DeltaLog.Protocol =
-    snap.protocol.withFeatures(Seq("deletionVectors"), Seq("deletionVectors"))
 
   /** ALTER TABLE SET TBLPROPERTIES: a metadata-only commit merging
     * `props` into the table configuration (schema, partitioning and

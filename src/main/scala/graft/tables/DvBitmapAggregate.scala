@@ -10,8 +10,8 @@ import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuffer
 
 /** Aggregates physical row indexes into a serialized portable
-  * [[RoaringBitmapArray]] — the executor-side half of a merge-on-read
-  * DELETE ([[DeltaWrite.deleteWhereDv]]).
+  * [[RoaringBitmapArray]] — the executor-side half of every
+  * deletion-vector write ([[DeletionVectors.foldPositions]]).
   *
   * Grouped by file, this turns the matched `(file, row_index)` pairs
   * into one `(dv bytes, cardinality)` row per file ON THE EXECUTORS,

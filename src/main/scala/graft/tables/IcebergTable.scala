@@ -563,8 +563,12 @@ class IcebergTable(
     val dvBytes: Map[String, Array[Byte]] = dvs.flatMap { d =>
       val ref = normalizePathStr(d.referencedDataFile.get)
       survivorSeq.get(ref) match {
+        // DvDeleted decodes the path it probes with, as it would
+        // `_metadata.file_path`; PathCol holds the raw manifest
+        // spelling, so the key takes the same decoding (a directory
+        // escaped as `p=x%23y` must not miss)
         case Some(dataSeq) if d.sequenceNumber >= dataSeq =>
-          Some(ref -> IcebergPuffin.readDvBlob(fs,
+          Some(DvDeleted.decodeMetadataPath(ref) -> IcebergPuffin.readDvBlob(fs,
             new Path(d.path), d.contentOffset.get, d.contentSizeInBytes.get))
         case _ => None
       }

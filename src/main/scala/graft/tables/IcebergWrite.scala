@@ -277,62 +277,18 @@ object IcebergWrite {
       filters: graft.core.Filters.Normalized,
       predicateSql: Option[String] = None
   ): Long = {
-    require(filters.nonEmpty || predicateSql.isDefined,
-      "deleteWhere requires a predicate; use overwrite to replace all rows")
-    import spark.implicits._
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(new Path(table, "_delta_log")),
-      s"$tablePath is a Delta table; delete via DeltaWrite")
-    val metaDir = new Path(table, "metadata")
-    val meta0 = IcebergMeta.load(fs, tablePath)
+    val plan = planDelete(spark, tablePath, filters, predicateSql, "deleteWhere")
     // the v3 spec forbids ADDING position-delete files (deletion
     // vectors replace them); ROUTE v3 tables to the DV writer — the
     // same auto-dispatch shape as Delta's enableDeletionVectors, so
     // callers (incl. SQL DELETE) keep working after the first
     // deleteWhereDv stamps the table v3. Existing v2 deletes keep
     // applying independently per the upgrade contract.
-    if (meta0.formatVersion >= 3)
-      return deleteWhereDv(spark, tablePath, filters, predicateSql)
-    val snap0 = meta0.currentSnapshotId
-      .flatMap(id => meta0.snapshots.find(_.id == id))
-      .getOrElse(throw new IllegalArgumentException(s"$tablePath has no current snapshot"))
-    val spec = meta0.specs.getOrElse(meta0.defaultSpecId, Seq.empty)
-    require(spec.forall(_.transform == "identity"),
-      s"deleteWhere supports identity partition specs only")
-    val partCols = spec.map(_.name)
-    val partFields = partCols.map(c => meta0.schema.fields.find(_.name == c).get)
-
-    val dataFiles = IcebergMeta.planFiles(fs, snap0).filter(_.content == 0)
-    val pruned = dataFiles.filter(f =>
-      IcebergMeta.mayMatch(f, spec, meta0, filters))
+    if (plan.meta0.formatVersion >= 3) return deleteByDv(spark, plan)
+    import spark.implicits._
+    import plan.{fs, metaDir, partCols, partFields, predicate, pruned, snap0, table}
     if (pruned.isEmpty) return snap0.id
 
-    // one scan of the candidates: row positions from _metadata;
-    // partition columns re-attached from the manifest tuples per
-    // file (coalesce: files that STORE the column — foreign writers —
-    // win; graft-staged hive files don't store it, so an
-    // all-or-nothing schema check would null them out in mixed tables)
-    // r15: the candidate scan follows the read path's field-id
-    // discipline (id-bearing files via the stamped schema — renamed
-    // columns bind the predicate correctly; id-less files by name,
-    // refused on renamed tables): a name-only scan would silently
-    // MISS pre-rename rows
-    var scan = IcebergTable
-      .writerSplitScan(spark, meta0, pruned, tablePath) { base =>
-        base
-          .withColumn("_del_path", PathNorm.normalizeCol(col("_metadata.file_path")))
-          .withColumn("_del_pos", col("_metadata.row_index"))
-      }
-    partFields.foreach { pf =>
-      val m: Map[String, String] = pruned.map { f =>
-        PathNorm.normalize(f.path) -> renderPartition(pf.dataType, f.partition.get(pf.name).orNull)
-      }.toMap
-      val attached = element_at(typedLit(m), col("_del_path")).cast(pf.dataType)
-      scan = scan.withColumn(pf.name,
-        org.apache.spark.sql.functions.coalesce(col(pf.name), attached))
-    }
-    val pred = graft.core.Filters.rowPredicate(filters, predicateSql)
     // delete rows must record the MANIFEST-spelled data-file path
     // byte-for-byte: external Iceberg readers compare file_path
     // exactly, so a scheme-stripped normalization (file:/ → /) would
@@ -344,7 +300,7 @@ object IcebergWrite {
     // spec ordering: position delete rows sort by (file_path, pos);
     // partition columns lead so the staged write's dynamic-partition
     // ordering requirement is already satisfied
-    val matches = scan.where(pred)
+    val matches = candidateScan(spark, plan).where(predicate)
       .join(broadcast(pathBack), "_del_path")
       .select(
         Seq(col("_mani_path").as("file_path"), col("_del_pos").as("pos")) ++
@@ -445,66 +401,91 @@ object IcebergWrite {
       tablePath: String,
       filters: graft.core.Filters.Normalized,
       predicateSql: Option[String] = None
-  ): Long = {
+  ): Long =
+    deleteByDv(spark, planDelete(spark, tablePath, filters, predicateSql, "deleteWhereDv"))
+
+  /** What a row-level DELETE works on: the table's current snapshot,
+    * its identity partition spec, every live content file, and the
+    * data files the filters may match.
+    */
+  private final case class DeletePlan(
+      tablePath: String,
+      fs: FileSystem,
+      table: Path,
+      metaDir: Path,
+      meta0: IcebergMeta.TableMeta,
+      snap0: IcebergMeta.SnapshotInfo,
+      partCols: Seq[String],
+      partFields: Seq[org.apache.spark.sql.types.StructField],
+      all0: Seq[IcebergMeta.ContentFile],
+      pruned: Seq[IcebergMeta.ContentFile],
+      predicate: org.apache.spark.sql.Column)
+
+  private def planDelete(
+      spark: SparkSession,
+      tablePath: String,
+      filters: graft.core.Filters.Normalized,
+      predicateSql: Option[String],
+      what: String
+  ): DeletePlan = {
     require(filters.nonEmpty || predicateSql.isDefined,
-      "deleteWhereDv requires a predicate; use overwrite to replace all rows")
-    import spark.implicits._
+      s"$what requires a predicate; use overwrite to replace all rows")
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!fs.exists(new Path(table, "_delta_log")),
       s"$tablePath is a Delta table; delete via DeltaWrite")
-    val metaDir = new Path(table, "metadata")
     val meta0 = IcebergMeta.load(fs, tablePath)
     val snap0 = meta0.currentSnapshotId
       .flatMap(id => meta0.snapshots.find(_.id == id))
       .getOrElse(throw new IllegalArgumentException(s"$tablePath has no current snapshot"))
     val spec = meta0.specs.getOrElse(meta0.defaultSpecId, Seq.empty)
     require(spec.forall(_.transform == "identity"),
-      s"deleteWhereDv supports identity partition specs only")
+      s"$what supports identity partition specs only")
     val partCols = spec.map(_.name)
-    val partFields = partCols.map(c => meta0.schema.fields.find(_.name == c).get)
-
     val all0 = IcebergMeta.planFiles(fs, snap0)
-    val dataFiles = all0.filter(_.content == 0)
-    val pruned = dataFiles.filter(f => IcebergMeta.mayMatch(f, spec, meta0, filters))
+    DeletePlan(tablePath, fs, table, new Path(table, "metadata"), meta0, snap0, partCols,
+      partCols.map(c => meta0.schema.fields.find(_.name == c).get), all0,
+      all0.filter(f => f.content == 0 && IcebergMeta.mayMatch(f, spec, meta0, filters)),
+      graft.core.Filters.rowPredicate(filters, predicateSql))
+  }
+
+  /** ONE scan of a DELETE's candidate files, with each row's
+    * normalized file path (`_del_path`) and position (`_del_pos`).
+    * Partition columns are re-attached from the manifest tuples per
+    * file (coalesce: files that STORE the column — foreign writers —
+    * win; graft-staged hive files don't store it, so an
+    * all-or-nothing schema check would null them out in mixed
+    * tables). The scan follows the read path's field-id discipline
+    * (id-bearing files via the stamped schema — renamed columns bind
+    * the predicate correctly; id-less files by name, refused on
+    * renamed tables): a name-only scan would silently MISS
+    * pre-rename rows.
+    */
+  private def candidateScan(spark: SparkSession, plan: DeletePlan): DataFrame = {
+    import plan._
+    partFields.foldLeft(IcebergTable
+      .writerSplitScan(spark, meta0, pruned, tablePath) { base =>
+        base
+          .withColumn("_del_path", PathNorm.normalizeCol(col("_metadata.file_path")))
+          .withColumn("_del_pos", col("_metadata.row_index"))
+      }) { (scan, pf) =>
+      val m: Map[String, String] = pruned.map { f =>
+        PathNorm.normalize(f.path) -> renderPartition(pf.dataType, f.partition.get(pf.name).orNull)
+      }.toMap
+      val attached = element_at(typedLit(m), col("_del_path")).cast(pf.dataType)
+      scan.withColumn(pf.name, org.apache.spark.sql.functions.coalesce(col(pf.name), attached))
+    }
+  }
+
+  private def deleteByDv(spark: SparkSession, plan: DeletePlan): Long = {
+    import plan._
     if (pruned.isEmpty) return snap0.id
     require(pruned.forall(_.specId == meta0.defaultSpecId),
       s"deleteWhereDv targets files under evolved partition specs in $tablePath; " +
         "rewrite them to the current spec first")
 
-    // one job: matching (file, row_index) → per-file roaring bitmaps
-    // on the executors; the scan mirrors deleteWhere's (partition
-    // columns re-attached from manifest tuples, stored values win)
-    // r15: the candidate scan follows the read path's field-id
-    // discipline (id-bearing files via the stamped schema — renamed
-    // columns bind the predicate correctly; id-less files by name,
-    // refused on renamed tables): a name-only scan would silently
-    // MISS pre-rename rows
-    var scan = IcebergTable
-      .writerSplitScan(spark, meta0, pruned, tablePath) { base =>
-        base
-          .withColumn("_del_path", PathNorm.normalizeCol(col("_metadata.file_path")))
-          .withColumn("_del_pos", col("_metadata.row_index"))
-      }
-    partFields.foreach { pf =>
-      val m: Map[String, String] = pruned.map { f =>
-        PathNorm.normalize(f.path) -> renderPartition(pf.dataType, f.partition.get(pf.name).orNull)
-      }.toMap
-      val attached = element_at(typedLit(m), col("_del_path")).cast(pf.dataType)
-      scan = scan.withColumn(pf.name,
-        org.apache.spark.sql.functions.coalesce(col(pf.name), attached))
-    }
-    val pred = graft.core.Filters.rowPredicate(filters, predicateSql)
-    val matched: Array[(String, Array[Byte])] = scan.where(pred)
-      .groupBy(col("_del_path"))
-      .agg(DvBitmapAgg.bitmap(col("_del_pos")).as("dv"))
-      .select(col("_del_path"), col("dv.dv"))
-      .collect()
-      .map(r => (r.getString(0), r.getAs[Array[Byte]](1)))
-    if (matched.isEmpty) return snap0.id
-
-    // replacement: union in the file's CURRENT DV positions (the new
-    // DV must carry them — at most one DV per file after the commit)
+    // replacement: the new DV of a file carries its CURRENT DV's
+    // positions too (at most one DV per file after the commit)
     val dvByRef: Map[String, IcebergMeta.ContentFile] = all0
       .filter(_.isDeletionVector)
       .flatMap(d => d.referencedDataFile.map(r => PathNorm.normalize(r) -> d)).toMap
@@ -514,18 +495,15 @@ object IcebergWrite {
       IcebergPuffin.readDvBlob(fs, new Path(d.path),
         d.contentOffset.get, d.contentSizeInBytes.get)
     }
+    // one job: matching (file, row_index) → per-file roaring bitmaps
+    // on the executors, each unioned with the file's current DV
     val prunedByNorm = pruned.map(f => PathNorm.normalize(f.path) -> f).toMap
     val targets: Seq[(IcebergMeta.ContentFile, RoaringBitmapArray)] =
-      matched.toSeq.map { case (key, bytes) =>
-        val fresh = RoaringBitmapArray.deserialize(bytes)
-        val bm = dvByRef.get(key) match {
-          case Some(old) =>
-            val prev = RoaringBitmapArray.deserialize(dvBytesOf(old)).toArray
-            RoaringBitmapArray.fromSorted((prev ++ fresh.toArray).distinct.sorted)
-          case None => fresh
-        }
-        prunedByNorm(key) -> bm
-      }
+      DeletionVectors.foldPositions(
+        candidateScan(spark, plan).where(predicate).select(col("_del_path"), col("_del_pos")),
+        key => dvByRef.get(key).map(dvBytesOf))
+        .map { case (key, bm) => prunedByNorm(key) -> bm }
+    if (targets.isEmpty) return snap0.id
     val targetKeys = targets.map { case (f, _) => PathNorm.normalize(f.path) }.toSet
 
     // ---- optimistic commit --------------------------------------

@@ -20,21 +20,26 @@ object GraftProperties extends Properties("graft") {
 
   private val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
 
-  property("RoaringBitmapArray round-trips arbitrary row-index sets") =
-    forAll(Gen.listOf(Gen.frequency(
+  property("RoaringBitmapArray round-trips arbitrary row-index sets") = {
+    val rowIndexes = Gen.listOf(Gen.frequency(
       8 -> Gen.chooseNum(0L, 5000L),          // dense low range
       2 -> Gen.chooseNum(0L, 200000L),        // several 16-bit keys
-      1 -> Gen.chooseNum(0L, 1L << 34)))) {   // multiple 32-bit bitmaps
-      (ixs: List[Long]) =>
-        import graft.tables.RoaringBitmapArray
-        val sorted = ixs.distinct.sorted.toArray
-        val bm = RoaringBitmapArray.fromSorted(sorted)
-        val back = RoaringBitmapArray.deserialize(bm.serialize)
-        back.cardinality == sorted.length &&
-          back.toArray.toSeq == sorted.toSeq &&
-          sorted.forall(back.contains) &&
-          !back.contains(if (sorted.isEmpty) 7L else sorted.max + 1)
+      1 -> Gen.chooseNum(0L, 1L << 34)))      // multiple 32-bit bitmaps
+    forAll(rowIndexes, rowIndexes) { (ixs: List[Long], more: List[Long]) =>
+      import graft.tables.RoaringBitmapArray
+      val sorted = ixs.distinct.sorted.toArray
+      val bm = RoaringBitmapArray.fromSorted(sorted)
+      val back = RoaringBitmapArray.deserialize(bm.serialize)
+      // the union a DV replacement writes equals the set union
+      val union = back.union(RoaringBitmapArray.fromSorted(more.distinct.sorted.toArray))
+      back.cardinality == sorted.length &&
+        back.toArray.toSeq == sorted.toSeq &&
+        sorted.forall(back.contains) &&
+        !back.contains(if (sorted.isEmpty) 7L else sorted.max + 1) &&
+        union.toArray.toSeq == (ixs ++ more).distinct.sorted &&
+        union.cardinality == (ixs ++ more).distinct.size
     }
+  }
 
   property("eq/neq filters partition any dataset") =
     forAll(Gen.nonEmptyListOf(Gen.chooseNum(-50, 50)), Gen.chooseNum(-50, 50)) {

@@ -61,6 +61,15 @@ class EscapedPartitionSpec extends SparkSpec {
     }
   }
 
+  test("Iceberg: a DV DELETE by a data-column predicate reaches escaped dirs") {
+    val dir = tempDir("esc-ice-dv").toString + "/t"
+    IcebergWrite.append(spark, rows, dir, Seq("part"))
+    IcebergWrite.deleteWhereDv(spark, dir, Filters.normalize(Seq(Filter("id", ">=", 0L))),
+      predicateSql = Some("id % 2 = 0"))
+    val got = new IcebergTable("t", dir)(spark).select("id").as[Long].collect().sorted.toSeq
+    assert(got == values.indices.map(_.toLong).filter(_ % 2 == 1))
+  }
+
   test("Hudi: escaped partition dirs resolve their file group (MOR log merge)") {
     val dir = tempDir("esc-hudi").toString + "/t"
     val vRows = values.zipWithIndex.map { case (p, i) => (i.toLong, s"v$i", p) }

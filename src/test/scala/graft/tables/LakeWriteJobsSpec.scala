@@ -3,12 +3,15 @@ package graft.tables
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
-/** Spark jobs launched by an append and an upsert on each lake format.
-  * Per-file statistics ride the write job itself
-  * ([[LakeFiles.writeStaged]]), so a query that reads the staged files
-  * back shows up here as extra jobs. The budgets are the counts
-  * measured on this code; an op may come in under its budget. (With
-  * the read-back they were 6, 9, 3, 7, 4 and 21.)
+/** Spark jobs launched by an append and an upsert on each lake format,
+  * and by the row-level DELETE/UPDATE/MERGE of Delta (rewrite and
+  * deletion-vector forms) and the Iceberg DELETE (v2 position deletes
+  * and v3 deletion vectors). Per-file statistics ride the write job
+  * itself ([[LakeFiles.writeStaged]]), so a query that reads the
+  * staged files back shows up here as extra jobs. The budgets are the
+  * counts measured on this code; an op may come in under its budget.
+  * (With the read-back the append/upsert ones were 6, 9, 3, 7, 4 and
+  * 21.)
   */
 class LakeWriteJobsSpec extends SparkSpec {
   import spark.implicits._
@@ -77,5 +80,35 @@ class LakeWriteJobsSpec extends SparkSpec {
     assertWithin("hudi bulkInsert", 1)(HudiWrite.bulkInsert(spark, batch(40, 20), dir, "id"))
     assertWithin("hudi upsert", 18)(HudiWrite.upsert(spark, batch(30, 20), dir))
     assert(new HudiTable("t", dir)(spark).count() == 60)
+  }
+
+  test("Delta DELETE, UPDATE and MERGE in the rewrite and deletion-vector forms") {
+    import graft.core.{Filter, Filters}
+    val dir = tempDir("jobs-delta-dml").toString + "/t"
+    DeltaWrite.append(spark, batch(0, 40), dir)
+    DeltaWrite.append(spark, batch(40, 40), dir)
+    def lt(n: Int) = Filters.normalize(Seq(Filter("id", "<", n)))
+    def ge(n: Int) = Filters.normalize(Seq(Filter("id", ">=", n)))
+    assertWithin("delta deleteWhere", 1)(DeltaWrite.deleteWhere(spark, dir, lt(5)))
+    assertWithin("delta updateWhere", 3)(
+      DeltaWrite.updateWhere(spark, dir, lt(10), Seq("v" -> "upper(v)")))
+    assertWithin("delta deleteWhereDv", 2)(DeltaWrite.deleteWhereDv(spark, dir, ge(75)))
+    assertWithin("delta updateWhereDv", 5)(
+      DeltaWrite.updateWhereDv(spark, dir, ge(70), Seq("v" -> "lower(v)")))
+    assertWithin("delta mergeDv", 9)(
+      DeltaWrite.mergeDv(spark, dir, batch(60, 20), Seq("id")))
+    assert(new DeltaTable("t", dir)(spark).count() == 75)
+  }
+
+  test("Iceberg v2 position-delete and v3 deletion-vector DELETE") {
+    import graft.core.{Filter, Filters}
+    val dir = tempDir("jobs-iceberg-dml").toString + "/t"
+    IcebergWrite.append(spark, batch(0, 40), dir)
+    IcebergWrite.append(spark, batch(40, 40), dir)
+    assertWithin("iceberg deleteWhere", 2)(IcebergWrite.deleteWhere(spark, dir,
+      Filters.normalize(Seq(Filter("id", "<", 5)))))
+    assertWithin("iceberg deleteWhereDv", 2)(IcebergWrite.deleteWhereDv(spark, dir,
+      Filters.normalize(Seq(Filter("id", ">=", 75)))))
+    assert(new IcebergTable("t", dir)(spark).count() == 70)
   }
 }

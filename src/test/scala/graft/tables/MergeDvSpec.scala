@@ -243,23 +243,91 @@ class MergeDvSpec extends SparkSpec {
   }
 
   test("PARITY property: random merges via DV and rewrite converge identically") {
-    val rnd = new scala.util.Random(17)
-    val dvDir = mkTable("prop")
-    val rwDir = mkTable("prop-rw")
-    (1 to 4).foreach { _ =>
-      val ups = Seq.fill(4)((rnd.nextInt(30).toLong, s"u${rnd.nextInt(100)}",
-        rnd.nextInt(1000).toLong)).groupBy(_._1).map(_._2.head).toSeq
-        .toDF("id", "name", "v")
-      val dels = Seq.fill(2)(rnd.nextInt(30).toLong).distinct.toDF("id")
-      DeltaWrite.mergeDv(spark, dvDir, ups, Seq("id"), deleteKeys = Some(dels))
-      DeltaWrite.merge(spark, rwDir, ups, Seq("id"), deleteKeys = Some(dels))
-      assert(readState(dvDir) == readState(rwDir), "divergence mid-sequence")
+    // twin tables with CDF and row tracking on, one of them flagged
+    // delta.enableDeletionVectors, driven through the SAME public
+    // deleteWhere/updateWhere/merge calls (the flag routes the DV twin)
+    def twin(tag: String, dv: Boolean): String = {
+      val dir = tempDir(s"mergedv-prop-$tag").toString + "/t"
+      DeltaWrite.append(spark, Seq.empty[(Long, String, java.lang.Long,
+        java.lang.Long, Int)].toDF("id", "name", "v", "w", "p"), dir, partitionBy = Seq("p"))
+      DeltaWrite.setTableProperties(spark, dir, Map(
+        "delta.enableRowTracking" -> "true", "delta.enableChangeDataFeed" -> "true") ++
+        (if (dv) Map("delta.enableDeletionVectors" -> "true") else Map.empty))
+      DeltaWrite.append(spark, Seq.tabulate(24)(i => (i.toLong, s"n$i",
+        java.lang.Long.valueOf(i * 10L),
+        if (i % 4 == 0) null else java.lang.Long.valueOf(i * 7L % 50), i % 3))
+        .toDF("id", "name", "v", "w", "p"), dir)
+      dir
     }
+    val rwDir = twin("rw", dv = false)
+    val dvDir = twin("dv", dv = true)
+    val v0 = DeltaLog.snapshot(spark, rwDir, withFiles = false).version
+    assert(DeltaLog.snapshot(spark, dvDir, withFiles = false).version == v0)
+    type Row5 = (Long, String, Option[Long], Option[Long], Int)
+    def rows(dir: String): Seq[Row5] =
+      new DeltaTable("t", dir)(spark).select("id", "name", "v", "w", "p").collect()
+        .map(r => (r.getLong(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+          Option(r.get(3)).map(_.asInstanceOf[Long]), r.getInt(4))).toSeq.sorted
+    def rowIds(dir: String): Map[Long, Long] = {
+      val t = new DeltaTable("t", dir)
+      t(spark, ReadArgs(extra = Map(t.RowIdsKey -> true)))
+        .select(col("id").as[Long], col("_row_id").as[Long]).collect().toMap
+    }
+    val startIds = rowIds(rwDir)
+    assert(rowIds(dvDir) == startIds)
+    var living = startIds.keySet
+
+    val rnd = new scala.util.Random(17)
+    (1 to 12).foreach { step =>
+      val op = rnd.nextInt(3)
+      def both(f: String => Unit): Unit = { f(rwDir); f(dvDir) }
+      op match {
+        case 0 =>
+          // the predicate is NULL where w is null: those rows survive
+          val hi = 8 + rnd.nextInt(30)
+          val t = rnd.nextInt(50)
+          both(d => DeltaWrite.deleteWhere(spark, d,
+            Filters.normalize(Seq(Filter("id", "<", hi))),
+            predicateSql = Some(s"id < $hi AND w > $t")))
+        case 1 =>
+          // a swapped pair (every SET reads the old row) and a move to
+          // another partition
+          val lo = rnd.nextInt(30)
+          both(d => DeltaWrite.updateWhere(spark, d,
+            Filters.normalize(Seq(Filter("id", ">=", lo))), Seq("v" -> "w", "w" -> "v",
+              "p" -> "(p + 1) % 3", "name" -> s"concat(name, '-u$step')")))
+        case _ =>
+          val keys = rnd.shuffle((0L until 40L).toList)
+          val ups = keys.take(4).map(k => (k, if (rnd.nextBoolean()) "DEL" else s"m$step",
+            java.lang.Long.valueOf(rnd.nextInt(1000).toLong),
+            if (rnd.nextBoolean()) null else java.lang.Long.valueOf(rnd.nextInt(50).toLong),
+            (k % 3).toInt))
+          // delete keys disjoint from the source, some absent
+          val dels = keys.slice(4, 6) :+ (1000L + step)
+          both(d => DeltaWrite.merge(spark, d,
+            ups.toDF("id", "name", "v", "w", "p"), Seq("id"),
+            deleteWhenMatched = Some("name = 'DEL'"), deleteKeys = Some(dels.toDF("id"))))
+      }
+      val got = rows(dvDir)
+      assert(got == rows(rwDir), s"divergence after step $step (op $op)")
+      living = living.intersect(got.map(_._1).toSet)
+      val (rwIds, dvIds) = (rowIds(rwDir), rowIds(dvDir))
+      living.foreach { id =>
+        assert(rwIds(id) == startIds(id) && dvIds(id) == startIds(id),
+          s"row $id changed its row id after step $step (op $op)")
+      }
+    }
+    def feed(dir: String): Map[(Row5, String), Int] =
+      DeltaChanges.between(spark, dir, v0 + 1)
+        .select("id", "name", "v", "w", "p", "_change_type").collect()
+        .map(r => ((r.getLong(0), r.getString(1), Option(r.get(2)).map(_.asInstanceOf[Long]),
+          Option(r.get(3)).map(_.asInstanceOf[Long]), r.getInt(4)), r.getString(5)))
+        .groupBy(identity).map { case (k, v) => k -> v.length }
+    assert(feed(dvDir) == feed(rwDir), "the change feeds differ")
     // the DV table still prunes and time-travels
     val t = new DeltaTable("t", dvDir)
-    assert(t(spark, ReadArgs(extra = Map(t.VersionKey -> 1L))).count() == 20)
+    assert(t(spark, ReadArgs(extra = Map(t.VersionKey -> v0))).count() == 24)
     val f = Filters.normalize(Seq(Filter("id", "<", 5)))
-    assert(t(spark, ReadArgs(filters = f)).count() ==
-      readState(dvDir).count(_._1 < 5))
+    assert(t(spark, ReadArgs(filters = f)).count() == rows(dvDir).count(_._1 < 5))
   }
 }
