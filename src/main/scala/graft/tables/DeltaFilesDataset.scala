@@ -1,8 +1,8 @@
 package graft.tables
 
-import graft.core.{Filter, FilterOp, Filters}
+import graft.core.Filters
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -149,13 +149,15 @@ object DeltaFilesDataset {
   }
 
   /** [[filesDataset]] filtered to the files that MAY contain rows
-    * matching `filters` — the distributed twin of driver-side
-    * [[DeltaFileSkipping.mayMatch]] over the replayed list, completing
-    * the 10⁷-file scale path: listing, reconciliation AND pruning run
-    * as Spark jobs, so the driver only ever holds the SURVIVING files
-    * (plus O(commits) metadata from the metadata-only replay).
-    * Base-column filters prune generated-column partitions here too
-    * ([[GeneratedPruning]]).
+    * matching `filters` — the distributed form of the driver-side
+    * pruning over the replayed list, completing the 10⁷-file scale
+    * path: listing, reconciliation AND pruning run as Spark jobs, so
+    * the driver only ever holds the SURVIVING files (plus O(commits)
+    * metadata from the metadata-only replay). The tasks evaluate the
+    * same predicate the driver does ([[DeltaFileSkipping.mayMatch]]
+    * over each row's partition values and stats JSON), as Iceberg's
+    * and Hudi's distributed planners do. Base-column filters prune
+    * generated-column partitions here too ([[GeneratedPruning]]).
     */
   def prunedFiles(
       spark: SparkSession,
@@ -165,7 +167,10 @@ object DeltaFilesDataset {
   ): DataFrame = {
     val meta = DeltaLog.snapshot(spark, tablePath, versionAsOf, withFiles = false).metadata
     val derived = GeneratedPruning.withDerived(spark, filters, meta)
-    filesDataset(spark, tablePath, versionAsOf).where(mayMatchColumn(derived, meta))
+    val files = filesDataset(spark, tablePath, versionAsOf)
+    if (derived.isEmpty) files
+    else files.filter((r: Row) => DeltaFileSkipping.mayMatch(
+      partitionValuesOf(r), Option(r.getAs[String]("stats")), derived, meta))
   }
 
   /** [[prunedFiles]] collected back to replay form — O(surviving
@@ -183,7 +188,7 @@ object DeltaFilesDataset {
         val i = r.fieldIndex(field)
         if (r.isNullAt(i)) None else Some(r.getLong(i))
       }
-      val dv = Option(r.getAs[org.apache.spark.sql.Row]("deletionVector")).map(d =>
+      val dv = Option(r.getAs[Row]("deletionVector")).map(d =>
         DeletionVectors.DvDescriptor(
           d.getAs[String]("storageType"),
           d.getAs[String]("pathOrInlineDv"),
@@ -192,9 +197,7 @@ object DeltaFilesDataset {
           d.getAs[Long]("cardinality")))
       DeltaLog.AddFile(
         r.getAs[String]("path"),
-        Option(r.getAs[scala.collection.Map[String, String]]("partitionValues"))
-          .map(_.toMap.map { case (k, v) => k -> Option(v) })
-          .getOrElse(Map.empty),
+        partitionValuesOf(r),
         r.getAs[Long]("size"),
         Option(r.getAs[String]("stats")),
         dv,
@@ -204,136 +207,13 @@ object DeltaFilesDataset {
         defaultRowCommitVersion = optLong("defaultRowCommitVersion"))
     }
 
-  /** The may-match predicate of [[DeltaFileSkipping]] as a Column over
-    * [[filesDataset]] rows, mirrored clause for clause (the parity is
-    * spec-enforced): partition values evaluate exactly (a null
-    * partition value rejects — every operator is null-rejecting);
-    * stats prune by min/max/nullCount through `get_json_object` (whose
-    * scalar-as-text rendering matches the driver's `asText`
-    * comparisons); anything missing, unparseable or uncomparable
-    * fails OPEN to may-match. Numeric comparisons run as
-    * decimal(38,18) — a value outside that range falls open where the
-    * driver's BigDecimal would compare, which only ever KEEPS a file.
+  /** A [[filesDataset]] row's partition values in replay form (a
+    * null value — every row NULL in the column — as None).
     */
-  private[tables] def mayMatchColumn(
-      filters: Filters.Normalized,
-      meta: DeltaLog.Metadata
-  ): Column =
-    if (filters.isEmpty) lit(true)
-    else filters.map(conj =>
-      conj.map(f => filterMayMatchCol(f, meta)).foldLeft(lit(true))(_ && _)
-    ).reduce(_ || _)
-
-  private def filterMayMatchCol(f: Filter, meta: DeltaLog.Metadata): Column =
-    meta.schema.fields.find(_.name == f.column).map(_.dataType) match {
-      case None => lit(true) // unknown column: never prune here
-      case Some(dt) =>
-        // partitionValues and stats are keyed by PHYSICAL column name
-        val phys = meta.physicalName(f.column)
-        if (meta.partitionColumns.contains(f.column)) {
-          val present = map_contains_key(col("partitionValues"), lit(phys))
-          val pv = col("partitionValues").getItem(phys)
-          when(not(present), lit(true)) // no value recorded: don't prune
-            .when(pv.isNull, lit(false)) // all-NULL column: null-rejecting ops
-            .otherwise(partitionPred(pv, f, dt))
-        } else statsPred(f, phys, dt)
-    }
-
-  private def partitionPred(pv: Column, f: Filter, dt: DataType): Column = {
-    def rel(r: (Column, Column) => Column, v: Any = f.value): Column =
-      relCol(pv, dt, v, r, ifUncomparable = true)
-    f.op match {
-      case FilterOp.Eq  => rel(_ === _)
-      case FilterOp.Neq => rel(_ =!= _)
-      case FilterOp.Lt  => rel(_ < _)
-      case FilterOp.Le  => rel(_ <= _)
-      case FilterOp.Gt  => rel(_ > _)
-      case FilterOp.Ge  => rel(_ >= _)
-      case FilterOp.In =>
-        valuesOf(f.value).map(x => rel(_ === _, x)).foldLeft(lit(false))(_ || _)
-      case FilterOp.NotIn =>
-        valuesOf(f.value).map(x => rel(_ =!= _, x)).foldLeft(lit(true))(_ && _)
-      case FilterOp.Contains if dt == StringType => pv.contains(lit(f.value.toString))
-      case _ => lit(true) // includes*: not applicable to partition scalars
-    }
-  }
-
-  private def statsPred(f: Filter, phys: String, dt: DataType): Column = {
-    // bracket-notation JSON paths take the physical name verbatim;
-    // a name that would break the path quoting fails open
-    if (phys.contains("'") || phys.contains("[") || phys.contains("]"))
-      return lit(true)
-    val s = col("stats")
-    def jpath(section: String): Column =
-      get_json_object(s, s"$$['$section']['$phys']")
-    val numRecords = get_json_object(s, "$['numRecords']").try_cast(LongType)
-    val nullCount = jpath("nullCount").try_cast(LongType)
-    val minS = jpath("minValues")
-    val maxS = jpath("maxValues")
-    val allNull = numRecords.isNotNull && nullCount.isNotNull && (nullCount >= numRecords)
-    def rel(sv: Column, r: (Column, Column) => Column, v: Any = f.value): Column =
-      relCol(sv, dt, v, r, ifUncomparable = true)
-    def is0(sv: Column, v: Any): Column =
-      relCol(sv, dt, v, _ === _, ifUncomparable = false)
-    val noNulls = coalesce(nullCount === 0L, lit(false))
-    f.op match {
-      case FilterOp.Eq => not(allNull) && rel(minS, _ <= _) && rel(maxS, _ >= _)
-      case FilterOp.In =>
-        not(allNull) && valuesOf(f.value)
-          .map(x => rel(minS, _ <= _, x) && rel(maxS, _ >= _, x))
-          .foldLeft(lit(false))(_ || _)
-      case FilterOp.Lt => not(allNull) && rel(minS, _ < _) // some row < v ⇔ min < v
-      case FilterOp.Le => not(allNull) && rel(minS, _ <= _)
-      case FilterOp.Gt => not(allNull) && rel(maxS, _ > _)
-      case FilterOp.Ge => not(allNull) && rel(maxS, _ >= _)
-      case FilterOp.Neq =>
-        // only skippable when every row equals v: min == max == v, no nulls
-        not(noNulls && is0(minS, f.value) && is0(maxS, f.value))
-      case FilterOp.NotIn =>
-        not(noNulls && valuesOf(f.value).map(x => is0(minS, x) && is0(maxS, x))
-          .foldLeft(lit(false))(_ || _))
-      case _ => lit(true) // contains/includes: no stats semantics
-    }
-  }
-
-  private val CmpDecimal = DecimalType(38, 18)
-
-  private def valuesOf(v: Any): Seq[Any] = v match {
-    case xs: Seq[_]      => xs
-    case xs: Array[_]    => xs.toSeq
-    case xs: Iterable[_] => xs.toSeq
-    case other           => Seq(other)
-  }
-
-  /** `rel(storedText, filterValue)` under the driver's compare()
-    * typing: numerics as arbitrary-precision decimals, strings and
-    * ISO dates lexically; a missing/uncastable side yields
-    * `ifUncomparable` (true = fail open for may-match clauses, false
-    * for the equality probes of Neq/NotIn skipping).
-    */
-  private def relCol(
-      sv: Column,
-      dt: DataType,
-      fv: Any,
-      rel: (Column, Column) => Column,
-      ifUncomparable: Boolean
-  ): Column = {
-    val miss = lit(ifUncomparable)
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-          _: DecimalType =>
-        (try Some(BigDecimal(fv.toString)) catch { case _: NumberFormatException => None }) match {
-          case None => miss
-          case Some(bd) =>
-            val sc = sv.try_cast(CmpDecimal)
-            val vc = lit(bd).try_cast(CmpDecimal)
-            when(sv.isNull || sc.isNull || vc.isNull, miss).otherwise(rel(sc, vc))
-        }
-      case StringType | DateType => // ISO dates compare lexically
-        when(sv.isNull, miss).otherwise(rel(sv, lit(fv.toString)))
-      case _ => miss // timestamps/booleans/complex: don't prune
-    }
-  }
+  private def partitionValuesOf(r: Row): Map[String, Option[String]] =
+    Option(r.getAs[scala.collection.Map[String, String]]("partitionValues"))
+      .map(_.toMap.map { case (k, v) => k -> Option(v) })
+      .getOrElse(Map.empty)
 
   /** `add.path` decoding with URI semantics, declaratively: '+' is
     * protected (URI path decoding does not space-ify it), %XX decodes,

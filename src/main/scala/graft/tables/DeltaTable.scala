@@ -382,13 +382,13 @@ private[graft] object DeltaRead {
   }
 }
 
-/** File-level pruning over the replayed `add` list: partition-value
-  * pruning (exact, on the partitionValues strings cast per the table
-  * schema) and min/max stats skipping from the per-file `stats` JSON.
-  * Both are MAY-MATCH tests — a kept file can still contain zero
-  * matching rows; the exact predicate is always re-applied on data.
-  * DNF semantics: a file survives if ANY conjunction may match; an
-  * empty conjunction means TRUE (consistent with Filters.toColumn).
+/** Delta's decoder for [[FileSkipping]]: partition values and the
+  * per-file `stats` JSON (numRecords/minValues/maxValues/nullCount,
+  * keyed by PHYSICAL column name) of an `add`, evaluated for the
+  * replayed list on the driver and for [[DeltaFilesDataset]] rows
+  * inside the distributed planner's tasks. Numerics decode as
+  * BigDecimal (floats as Float), strings and ISO dates as text;
+  * timestamps are left undecoded and never prune.
   */
 object DeltaFileSkipping {
 
@@ -398,120 +398,36 @@ object DeltaFileSkipping {
       file: DeltaLog.AddFile,
       filters: Filters.Normalized,
       meta: DeltaLog.Metadata
+  ): Boolean = mayMatch(file.partitionValues, file.stats, filters, meta)
+
+  /** [[mayMatch]] over the two fields of an `add` that pruning reads. */
+  def mayMatch(
+      partitionValues: Map[String, Option[String]],
+      stats: Option[String],
+      filters: Filters.Normalized,
+      meta: DeltaLog.Metadata
   ): Boolean = {
-    if (filters.isEmpty) return true
-    lazy val stats = file.stats.flatMap(s =>
+    lazy val root = stats.flatMap(s =>
       try Option(mapper.readTree(s)) catch { case _: Exception => None })
-    filters.exists(conj => conj.forall(f => filterMayMatch(file, f, meta, stats)))
-  }
-
-  private def filterMayMatch(
-      file: DeltaLog.AddFile,
-      f: Filter,
-      meta: DeltaLog.Metadata,
-      stats: => Option[JsonNode]
-  ): Boolean = {
-    val dt = meta.schema.fields.find(_.name == f.column).map(_.dataType)
-    if (dt.isEmpty) return true // unknown column: never prune here
-    // partitionValues and stats are keyed by PHYSICAL column name
-    val phys = meta.physicalName(f.column)
-    if (meta.partitionColumns.contains(f.column))
-      file.partitionValues.get(phys) match {
-        case None     => true // no value recorded in the log: don't prune
-        case Some(pv) => partitionMayMatch(pv, f, dt.get)
+    FileSkipping.mayMatch(filters) { f =>
+      // unknown column: never prune here
+      meta.schema.fields.find(_.name == f.column).forall { field =>
+        // partitionValues and stats are keyed by PHYSICAL column name
+        val phys = meta.physicalName(f.column)
+        if (meta.partitionColumns.contains(f.column))
+          // no value recorded in the log: don't prune
+          partitionValues.get(phys).forall(FileSkipping.partitionMayMatch(_, f, field.dataType))
+        else root.forall(s => FileSkipping.statsMayMatch(f, bounds(s, phys, field.dataType)))
       }
-    else
-      stats.forall(s => statsMayMatch(s, f.copy(column = phys), dt.get))
-  }
-
-  /** Exact evaluation on a single partition value. A None value means
-    * every row of the file has SQL NULL in the column — all of the
-    * reference's operators are null-rejecting (NULL op x is never
-    * TRUE), so the file is prunable for any filter on that column.
-    * Shared with [[IcebergMeta]]'s identity-transform pruning (same
-    * semantics on stringified partition values).
-    */
-  private[tables] def partitionMayMatch(pv: Option[String], f: Filter, dt: DataType): Boolean =
-    (pv, f.op) match {
-      case (None, _) => false
-      case (Some(v), op) =>
-        val cmp = compare(v, f.value, dt)
-        op match {
-          case FilterOp.Eq  => cmp.forall(_ == 0)
-          case FilterOp.Neq => cmp.forall(_ != 0)
-          case FilterOp.Lt  => cmp.forall(_ < 0)
-          case FilterOp.Le  => cmp.forall(_ <= 0)
-          case FilterOp.Gt  => cmp.forall(_ > 0)
-          case FilterOp.Ge  => cmp.forall(_ >= 0)
-          case FilterOp.In =>
-            values(f.value).exists(x => compare(v, x, dt).forall(_ == 0))
-          case FilterOp.NotIn =>
-            values(f.value).forall(x => compare(v, x, dt).forall(_ != 0))
-          case FilterOp.Contains if dt == StringType => v.contains(f.value.toString)
-          case _ => true // includes*: not applicable to partition scalars
-        }
-    }
-
-  private def statsMayMatch(stats: JsonNode, f: Filter, dt: DataType): Boolean = {
-    val numRecords = Option(stats.get("numRecords")).map(_.asLong())
-    val nullCount = Option(stats.path("nullCount").get(f.column)).map(_.asLong())
-    val minN = Option(stats.path("minValues").get(f.column)).filterNot(_.isNull)
-    val maxN = Option(stats.path("maxValues").get(f.column)).filterNot(_.isNull)
-
-    // all-null file: no comparison can hold
-    val allNull = (for { n <- numRecords; nc <- nullCount } yield nc >= n).getOrElse(false)
-    f.op match {
-      case FilterOp.Eq | FilterOp.Lt | FilterOp.Le | FilterOp.Gt | FilterOp.Ge | FilterOp.In
-          if allNull => false
-      case FilterOp.Eq =>
-        inRange(f.value, minN, maxN, dt)
-      case FilterOp.In =>
-        values(f.value).exists(v => inRange(v, minN, maxN, dt))
-      case FilterOp.Lt => // need some row < v  ⇔  min < v
-        minN.flatMap(m => compareNode(m, f.value, dt)).forall(_ < 0)
-      case FilterOp.Le =>
-        minN.flatMap(m => compareNode(m, f.value, dt)).forall(_ <= 0)
-      case FilterOp.Gt => // need some row > v  ⇔  max > v
-        maxN.flatMap(m => compareNode(m, f.value, dt)).forall(_ > 0)
-      case FilterOp.Ge =>
-        maxN.flatMap(m => compareNode(m, f.value, dt)).forall(_ >= 0)
-      case FilterOp.Neq =>
-        // only skippable when every row equals v: min == max == v, no nulls
-        !(nullCount.contains(0L) &&
-          minN.flatMap(m => compareNode(m, f.value, dt)).contains(0) &&
-          maxN.flatMap(m => compareNode(m, f.value, dt)).contains(0))
-      case FilterOp.NotIn =>
-        !(nullCount.contains(0L) && values(f.value).exists(v =>
-          minN.flatMap(m => compareNode(m, v, dt)).contains(0) &&
-            maxN.flatMap(m => compareNode(m, v, dt)).contains(0)))
-      case _ => true // contains/includes: no stats semantics
     }
   }
 
-  private def inRange(v: Any, minN: Option[JsonNode], maxN: Option[JsonNode], dt: DataType): Boolean =
-    minN.flatMap(m => compareNode(m, v, dt)).forall(_ <= 0) &&
-      maxN.flatMap(m => compareNode(m, v, dt)).forall(_ >= 0)
-
-  /** compare(stat/partition value, filter value) sign; None = not
-    * comparable (never prune on it).
-    */
-  private def compareNode(node: JsonNode, fv: Any, dt: DataType): Option[Int] =
-    compare(node.asText(), fv, dt)
-
-  private def compare(sv: String, fv: Any, dt: DataType): Option[Int] =
-    try dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-          _: DecimalType =>
-        Some(BigDecimal(sv).compare(BigDecimal(fv.toString)))
-      case StringType =>
-        // CODE-POINT order, not String.compareTo: the stats were
-        // min/max'd under Spark's UTF8String binary order (= code
-        // point), and UTF-16 unit order disagrees above the BMP —
-        // comparing in a different order could wrongly prune a file
-        Some(IcebergStats.codePointCompare(sv, fv.toString))
-      case DateType => Some(sv.compareTo(fv.toString)) // ISO dates compare lexically
-      case _        => None // timestamps/booleans/complex: don't prune
-    } catch { case _: NumberFormatException => None }
-
-  private def values(v: Any): Seq[Any] = IcebergStats.inValues(v)
+  private def bounds(stats: JsonNode, phys: String, dt: DataType): FileSkipping.Bounds = {
+    def bound(section: String): Option[Any] =
+      Option(stats.path(section).get(phys)).filterNot(_.isNull)
+        .flatMap(n => FileSkipping.decodeText(dt, n.asText()))
+    FileSkipping.Bounds(bound("minValues"), bound("maxValues"),
+      Option(stats.path("nullCount").get(phys)).map(_.asLong()),
+      Option(stats.get("numRecords")).map(_.asLong()))
+  }
 }

@@ -146,7 +146,7 @@ object GeneratedPruning {
     f.op match {
       case FilterOp.Eq => g(f.value).map(Filter(partCol, FilterOp.Eq, _)).toSeq
       case FilterOp.In =>
-        val vs = valuesOf(f.value).map(g)
+        val vs = IcebergStats.inValues(f.value).map(g)
         // all members must evaluate, else the derived IN would wrongly
         // exclude partitions of the unevaluated members
         if (vs.nonEmpty && vs.forall(_.isDefined))
@@ -179,11 +179,4 @@ object GeneratedPruning {
         if (row.isNullAt(0)) None else Option(row.get(0))
       }
     } catch { case NonFatal(_) => None }
-
-  private def valuesOf(v: Any): Seq[Any] = v match {
-    case xs: Seq[_]      => xs
-    case xs: Array[_]    => xs.toSeq
-    case xs: Iterable[_] => xs.toSeq
-    case other           => Seq(other)
-  }
 }

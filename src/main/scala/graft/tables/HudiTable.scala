@@ -377,14 +377,16 @@ object HudiTable {
 
   /** Partition + column-stats pruning of one slice — the SAME
     * predicate the driver path filters with and the distributed
-    * planner evaluates executor-side (both delegate to the static
-    * [[HudiWrite]] matchers, so the two paths cannot drift). Lives on
+    * planner evaluates executor-side (the partition-path matcher of
+    * [[HudiWrite]], and [[FileSkipping]] over the slice's decoded
+    * column ranges, so the two paths cannot drift). Lives on
     * the companion so the partial application captures only the
     * filters, never a table instance (task serialization).
     */
   private[tables] def keepSlice(filters: Filters.Normalized)(s: HudiWrite.FileSlice): Boolean =
     HudiWrite.partitionMayMatch(s.partition, filters) &&
-      HudiWrite.colStatsMayMatch(s.colStats, filters)
+      s.colStats.forall(m => FileSkipping.mayMatch(filters)(f =>
+        m.get(f.column).forall(r => FileSkipping.statsMayMatch(f, HudiWrite.bounds(r)))))
 
   /** The incremental query's slice predicate: the file group was
     * TOUCHED in the range (base or any log written after `from`) AND

@@ -877,7 +877,7 @@ object HudiWrite {
     // per-file count, record-key range AND per-data-column min/max,
     // collected by the write tasks — the key range feeds the upsert
     // index's group pruning ([[rangePruned]]), the column ranges the
-    // read path's data-predicate slice skipping ([[colStatsMayMatch]])
+    // read path's data-predicate slice skipping ([[HudiTable.keepSlice]])
     val statFields = statFieldsOf(df.schema, stagePartCols)
     val staged = LakeFiles.writeStaged(spark, routed, staging, stagePartCols,
       RecordKeyCol +: statFields.map(_.name), fullStrings = Set(RecordKeyCol))
@@ -1682,23 +1682,15 @@ object HudiWrite {
         case _ => None
       }
     }.toMap
-    // DNF: OR over conjunctions; a partition survives if ANY
-    // conjunction may match
-    filters.exists { conj =>
-      conj.forall { f =>
-        values.get(f.column) match {
-          case None => true // not a partition column (or missing) — keep
-          case Some(v) =>
-            f.op match {
-              case FilterOp.Eq => segmentMayEqual(v, f.value)
-              case FilterOp.In => f.value match {
-                case xs: Iterable[_] => xs.exists(x => segmentMayEqual(v, x))
-                case xs: Array[_] => xs.exists(x => segmentMayEqual(v, x))
-                case other => segmentMayEqual(v, other)
-              }
-              case _ => true // conservative may-match
-            }
-        }
+    FileSkipping.mayMatch(filters) { f =>
+      values.get(f.column) match {
+        case None => true // not a partition column (or missing) — keep
+        case Some(v) =>
+          f.op match {
+            case FilterOp.Eq => segmentMayEqual(v, f.value)
+            case FilterOp.In => IcebergStats.inValues(f.value).exists(segmentMayEqual(v, _))
+            case _ => true // conservative may-match
+          }
       }
     }
   }
@@ -1834,40 +1826,16 @@ object HudiWrite {
     if (r.isNumeric) BigDecimal(a).compare(BigDecimal(b))
     else IcebergStats.codePointCompare(a, b)
 
-  /** DNF may-match of the Filter algebra against a slice's recorded
-    * column ranges — [[DeltaFileSkipping]] semantics restricted to
-    * what a sound MOR range can answer (no null counts: Neq/NotIn/
-    * Contains never prune). Untracked columns fail open.
+  /** Hudi's decoder for [[FileSkipping.statsMayMatch]]: a slice's
+    * recorded column range, with no null or row count (null counts
+    * are not sound to union under MOR), so Neq/NotIn/Contains never
+    * prune here.
     */
-  private[tables] def colStatsMayMatch(
-      stats: Option[Map[String, ColRange]],
-      filters: graft.core.Filters.Normalized): Boolean = stats match {
-    case None => true
-    case Some(m) =>
-      filters.isEmpty ||
-        filters.exists(conj => conj.forall(f => rangeMayMatch(m.get(f.column), f)))
-  }
-
-  private def rangeMayMatch(r: Option[ColRange], f: graft.core.Filter): Boolean = r match {
-    case None => true
-    case Some(cr) =>
-      import graft.core.FilterOp
-      def cmp(bound: String, v: Any): Option[Int] =
-        try Some(
-          if (cr.isNumeric) BigDecimal(bound).compare(BigDecimal(v.toString))
-          else IcebergStats.codePointCompare(bound, v.toString))
-        catch { case _: NumberFormatException => None }
-      def inRange(v: Any): Boolean =
-        cmp(cr.min, v).forall(_ <= 0) && cmp(cr.max, v).forall(_ >= 0)
-      f.op match {
-        case FilterOp.Eq => inRange(f.value)
-        case FilterOp.In => IcebergStats.inValues(f.value).exists(inRange)
-        case FilterOp.Lt => cmp(cr.min, f.value).forall(_ < 0)
-        case FilterOp.Le => cmp(cr.min, f.value).forall(_ <= 0)
-        case FilterOp.Gt => cmp(cr.max, f.value).forall(_ > 0)
-        case FilterOp.Ge => cmp(cr.max, f.value).forall(_ >= 0)
-        case _ => true
-      }
+  private[tables] def bounds(r: ColRange): FileSkipping.Bounds = {
+    def value(s: String): Option[Any] =
+      if (!r.isNumeric) Some(s)
+      else try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
+    FileSkipping.Bounds(value(r.min), value(r.max), nullCount = None, rowCount = None)
   }
 
   /** Slices whose key range may intersect `[lo, hi]` — the

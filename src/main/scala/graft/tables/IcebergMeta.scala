@@ -533,31 +533,28 @@ object IcebergMeta {
       mi: ManifestInfo,
       spec: Seq[SpecField],
       meta: TableMeta,
-      filters: Filters.Normalized): Boolean = {
-    if (filters.isEmpty || mi.content != 0) return true
-    mi.summaries match {
-      case None => true
-      case Some(sums) =>
-        filters.exists(conj => conj.forall { f =>
-          spec.zip(sums).forall { case (sf, sum) =>
-            val source = meta.schemaFieldIds.getOrElse(sf.sourceId, sf.name)
-            if (sf.transform != "identity" || source != f.column) true
-            else meta.topFieldsByName.get(source).forall { case (_, dt) =>
-              if (sum.lower.isEmpty && sum.upper.isEmpty)
-                // per the spec, absent bounds mean the values are all
-                // null OR NaN: prune only when the writer RECORDED
-                // no-NaN (Spark's NaN = NaN / NaN > x are TRUE, so a
-                // hidden NaN could match)
-                !(sum.containsNull && sum.containsNan.contains(false))
-              else IcebergStats.statsMayMatch(f, dt, 1,
-                sum.lower.map(1 -> _).toMap, sum.upper.map(1 -> _).toMap,
-                nullCounts = if (sum.containsNull) Map.empty else Map(1 -> 0L),
-                valueCounts = Map.empty, recordCount = -1L)
-            }
+      filters: Filters.Normalized): Boolean =
+    mi.content != 0 || mi.summaries.forall { sums =>
+      FileSkipping.mayMatch(filters) { f =>
+        spec.zip(sums).forall { case (sf, sum) =>
+          val source = meta.schemaFieldIds.getOrElse(sf.sourceId, sf.name)
+          if (sf.transform != "identity" || source != f.column) true
+          else meta.topFieldsByName.get(source).forall { case (_, dt) =>
+            if (sum.lower.isEmpty && sum.upper.isEmpty)
+              // per the spec, absent bounds mean the values are all
+              // null OR NaN: prune only when the writer RECORDED
+              // no-NaN (Spark's NaN = NaN / NaN > x are TRUE, so a
+              // hidden NaN could match)
+              !(sum.containsNull && sum.containsNan.contains(false))
+            else FileSkipping.statsMayMatch(f, FileSkipping.Bounds(
+              sum.lower.flatMap(IcebergStats.decodeSingle(dt, _)),
+              sum.upper.flatMap(IcebergStats.decodeSingle(dt, _)),
+              nullCount = if (sum.containsNull) None else Some(0L),
+              rowCount = None))
           }
-        })
+        }
+      }
     }
-  }
 
   /** Live (non-DELETED-status) content files of ONE manifest, with v2
     * sequence-number inheritance (a null entry sequence number
@@ -612,14 +609,15 @@ object IcebergMeta {
     manifestInfos(fs, snapshot).flatMap(contentFilesOfManifest(fs, _))
   }
 
-  /** Partition pruning on manifest entries with the exact semantics
-    * of [[DeltaFileSkipping]]'s partition matcher (DNF may-match; a
-    * file survives if any conjunction may match; unknown columns and
-    * unknown transforms never prune). Identity transforms compare the
-    * recorded value directly; `bucket`/`truncate`/`year`/`month`/
-    * `day`/`hour` evaluate the transform on the filter literal via
-    * [[IcebergTransforms]] — equality pruning for bucket, full range
-    * pruning for the order-preserving transforms.
+  /** Partition pruning on manifest entries through [[FileSkipping]]
+    * (DNF may-match; a file survives if any conjunction may match;
+    * unknown columns and unknown transforms never prune). Identity
+    * transforms compare the recorded value with
+    * [[FileSkipping.partitionMayMatch]], as Delta's partitions do;
+    * `bucket`/`truncate`/`year`/`month`/`day`/`hour` evaluate the
+    * transform on the filter literal via [[IcebergTransforms]] —
+    * equality pruning for bucket, full range pruning for the
+    * order-preserving transforms.
     *
     * A spec field's SOURCE column resolves through the spec's
     * source-id (the partition field name differs from the column for
@@ -631,9 +629,8 @@ object IcebergMeta {
       spec: Seq[SpecField],
       meta: TableMeta,
       filters: Filters.Normalized
-  ): Boolean = {
-    if (filters.isEmpty) return true
-    filters.exists(conj => conj.forall { f =>
+  ): Boolean =
+    FileSkipping.mayMatch(filters) { f =>
       val partitionOk = spec.forall { sf =>
         val source = meta.schemaFieldIds.getOrElse(sf.sourceId, sf.name)
         if (source != f.column || !file.partition.contains(sf.name)) true
@@ -643,7 +640,7 @@ object IcebergMeta {
           dtOpt.forall { dt =>
             IcebergTransforms.parse(sf.transform) match {
               case Some(IcebergTransforms.Identity) =>
-                DeltaFileSkipping.partitionMayMatch(stringValue(v, dt), f, dt)
+                FileSkipping.partitionMayMatch(stringValue(v, dt), f, dt)
               case Some(t) => IcebergTransforms.mayMatch(t, dt, v, f)
               case None    => true
             }
@@ -654,16 +651,16 @@ object IcebergMeta {
       // recorded min/max/null-count evidence — the non-partition
       // complement of the spec check above, fail-open throughout
       def statsOk: Boolean = meta.topFieldsByName.get(f.column).forall { case (id, dt) =>
-        IcebergStats.statsMayMatch(f, dt, id,
+        FileSkipping.statsMayMatch(f, IcebergStats.bounds(dt, id,
           file.lowerBounds, file.upperBounds, file.nullCounts, file.valueCounts,
-          file.recordCount)
+          file.recordCount))
       }
       partitionOk && statsOk
-    })
-  }
+    }
 
-  /** Avro partition value → the string form [[DeltaFileSkipping]]
-    * compares with (dates arrive as epoch-day ints → ISO).
+  /** Avro partition value → the string form
+    * [[FileSkipping.partitionMayMatch]] compares with (dates arrive
+    * as epoch-day ints → ISO).
     */
   private def stringValue(v: Any, dt: DataType): Option[String] = v match {
     case null => None

@@ -1,6 +1,5 @@
 package graft.tables
 
-import graft.core.{Filter, FilterOp}
 import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -12,12 +11,12 @@ import java.nio.charset.StandardCharsets
 /** Iceberg per-file COLUMN STATISTICS: the manifest `data_file`
   * fields `value_counts` (109), `null_value_counts` (110),
   * `lower_bounds` (125) and `upper_bounds` (128) of the public
-  * Iceberg table spec, written by [[IcebergWrite]] and evaluated by
-  * [[IcebergMeta.mayMatch]] so a selective NON-partition predicate
-  * prunes data files before any of them opens — the format-parity
-  * complement of Delta's per-file stats skipping
-  * ([[DeltaFileSkipping]], R23). On a sorted table (R50 sort orders)
-  * a range probe collapses to the few files whose bounds overlap it.
+  * Iceberg table spec, written by [[IcebergWrite]] and decoded here
+  * ([[bounds]]) for [[FileSkipping]], the evaluator Delta and Hudi
+  * prune through too, so a selective NON-partition predicate prunes
+  * data files before any of them opens ([[IcebergMeta.mayMatch]]).
+  * On a sorted table (R50 sort orders) a range probe collapses to the
+  * few files whose bounds overlap it.
   *
   * Bounds use the spec's single-value binary serialization
   * (Appendix D): little-endian fixed width for int/long/float/double
@@ -28,15 +27,9 @@ import java.nio.charset.StandardCharsets
   * last code point incremented (yielding a value ≥ every truncated
   * string), omitted entirely when no increment exists.
   *
-  * Everything here is FAIL-OPEN: a missing field, an unknown type, an
-  * undecodable buffer, or a NaN all mean "may match" — pruning can
+  * Decoding is FAIL-OPEN: a missing field, an unknown type, an
+  * undecodable buffer, or a NaN all decode to no bound — pruning can
   * only remove files proven irrelevant, never rows.
-  *
-  * String comparison is by CODE POINT (identical to the unsigned
-  * UTF-8 byte order the bounds were min/max'd under, both by Spark's
-  * UTF8String ordering and by foreign writers following the spec) —
-  * `String.compareTo`'s UTF-16 order disagrees above the BMP and
-  * could prune a matching file.
   */
 object IcebergStats {
 
@@ -136,35 +129,10 @@ object IcebergStats {
     }
   }
 
-  /** Filter literal → epoch micros; None = unparseable (fail-open).
-    * Strings accept ISO instants and the engine's session-UTC
-    * `yyyy-MM-dd HH:mm:ss[.fff]` spelling.
-    */
-  private def literalMicros(v: Any): Option[Long] =
-    try v match {
-      case t: java.sql.Timestamp =>
-        Some(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L)
-      case i: java.time.Instant =>
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      case l: java.time.LocalDateTime =>
-        Some(l.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + l.getNano / 1000L)
-      case s: String =>
-        val t = s.trim
-        val inst =
-          try java.time.Instant.parse(t)
-          catch {
-            case _: Exception =>
-              java.time.LocalDateTime.parse(t.replace(' ', 'T'))
-                .toInstant(java.time.ZoneOffset.UTC)
-          }
-        Some(inst.getEpochSecond * 1000000L + inst.getNano / 1000L)
-      case _ => None
-    } catch { case _: Exception => None }
-
-  /** Decode a bound buffer to a COMPARABLE value: BigDecimal for
-    * numerics, [[Micros]] for timestamps, ISO string for dates,
-    * String for strings. None = type this reader does not prune on
-    * (booleans, unknowns).
+  /** Decode a bound buffer to a [[FileSkipping]] comparable value:
+    * BigDecimal for numerics (Float for floats), [[Micros]] for
+    * timestamps, ISO string for dates, String for strings. None =
+    * type this reader does not prune on (booleans, unknowns).
     */
   def decodeSingle(dt: DataType, bytes: Array[Byte]): Option[Any] =
     try dt match {
@@ -177,7 +145,7 @@ object IcebergStats {
         Some(BigDecimal(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getLong))
       case FloatType =>
         val f = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getFloat
-        if (f.isNaN || f.isInfinite) None else Some(BigDecimal(f.toDouble))
+        if (f.isNaN || f.isInfinite) None else Some(f)
       case DoubleType =>
         val d = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getDouble
         if (d.isNaN || d.isInfinite) None else Some(BigDecimal(d))
@@ -501,21 +469,10 @@ object IcebergStats {
     Integer.compare(x.length, y.length)
   }
 
-  /** compare(decoded bound, filter literal) sign; None = not
-    * comparable → never prune. Same coercions as
-    * [[DeltaFileSkipping]] (numerics via BigDecimal, ISO dates
-    * lexically), strings by code point.
-    */
-  private def compareValues(bound: Any, fv: Any): Option[Int] =
-    try (bound, fv) match {
-      case (b: BigDecimal, v) => Some(b.compare(BigDecimal(v.toString)))
-      case (b: String, v)     => Some(codePointCompare(b, v.toString))
-      case (Micros(b, _), v)  => literalMicros(v).map(java.lang.Long.compare(b, _))
-      case _                  => None
-    } catch { case _: Exception => None }
-
-  /** IN-list coercion shared by every stats matcher (Delta, Iceberg,
-    * Hudi) so the engines cannot drift on list-shaped literals.
+  /** IN-list coercion: the one place a list-shaped literal (Seq,
+    * Array, any Iterable, or a lone value) becomes a Seq, shared by
+    * [[FileSkipping]], the partition matchers and the transform and
+    * generated-column pruners so they cannot drift.
     */
   private[tables] def inValues(v: Any): Seq[Any] = v match {
     case xs: Seq[_]      => xs
@@ -524,52 +481,22 @@ object IcebergStats {
     case other           => Seq(other)
   }
 
-  /** May-match of ONE filter against a file's recorded bounds/counts.
-    * Exactly [[DeltaFileSkipping]]'s stats semantics: `Lt` needs some
-    * row < v ⇔ min < v, `Neq` prunes only a no-null constant file,
-    * all-null files fail every null-rejecting operator. `Contains`
-    * prunes by bounds when the PREFIX-FREE part allows: skipped here
-    * (no stats semantics), kept may-match.
+  /** Iceberg's decoder for [[FileSkipping.statsMayMatch]]: one
+    * column's bounds and counts off a manifest entry (fields
+    * 125/128/110/109); the row count is the column's value count, or
+    * the file's record count when the writer recorded none.
     */
-  def statsMayMatch(
-      f: Filter,
+  def bounds(
       dt: DataType,
       fieldId: Int,
       lowerBounds: Map[Int, Array[Byte]],
       upperBounds: Map[Int, Array[Byte]],
       nullCounts: Map[Int, Long],
       valueCounts: Map[Int, Long],
-      recordCount: Long): Boolean = {
-    val minV = lowerBounds.get(fieldId).flatMap(decodeSingle(dt, _))
-    val maxV = upperBounds.get(fieldId).flatMap(decodeSingle(dt, _))
-    val nullCount = nullCounts.get(fieldId)
-    val total = valueCounts.get(fieldId).orElse(Option(recordCount).filter(_ >= 0))
-    val allNull = (for { n <- total; nc <- nullCount } yield nc >= n).getOrElse(false)
-    def inRange(v: Any): Boolean =
-      minV.flatMap(compareValues(_, v)).forall(_ <= 0) &&
-        maxV.flatMap(compareValues(_, v)).forall(_ >= 0)
-    f.op match {
-      // every operator of the filter algebra is null-rejecting (NULL
-      // op x is never TRUE), so an all-null file fails them ALL —
-      // including Neq/NotIn/Contains, which min/max can rarely prune
-      case FilterOp.Eq | FilterOp.Lt | FilterOp.Le | FilterOp.Gt | FilterOp.Ge |
-          FilterOp.In | FilterOp.Neq | FilterOp.NotIn | FilterOp.Contains
-          if allNull => false
-      case FilterOp.Eq => inRange(f.value)
-      case FilterOp.In => inValues(f.value).exists(inRange)
-      case FilterOp.Lt => minV.flatMap(compareValues(_, f.value)).forall(_ < 0)
-      case FilterOp.Le => minV.flatMap(compareValues(_, f.value)).forall(_ <= 0)
-      case FilterOp.Gt => maxV.flatMap(compareValues(_, f.value)).forall(_ > 0)
-      case FilterOp.Ge => maxV.flatMap(compareValues(_, f.value)).forall(_ >= 0)
-      case FilterOp.Neq =>
-        !(nullCount.contains(0L) &&
-          minV.flatMap(compareValues(_, f.value)).contains(0) &&
-          maxV.flatMap(compareValues(_, f.value)).contains(0))
-      case FilterOp.NotIn =>
-        !(nullCount.contains(0L) && inValues(f.value).exists(v =>
-          minV.flatMap(compareValues(_, v)).contains(0) &&
-            maxV.flatMap(compareValues(_, v)).contains(0)))
-      case _ => true
-    }
-  }
+      recordCount: Long): FileSkipping.Bounds =
+    FileSkipping.Bounds(
+      lowerBounds.get(fieldId).flatMap(decodeSingle(dt, _)),
+      upperBounds.get(fieldId).flatMap(decodeSingle(dt, _)),
+      nullCounts.get(fieldId),
+      valueCounts.get(fieldId).orElse(Option(recordCount).filter(_ >= 0)))
 }

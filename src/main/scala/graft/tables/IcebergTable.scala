@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *    bounded work; the data scan is a plain distributed parquet read
   *    with Catalyst pushdown,
   *  - partition pruning runs on manifest entries before any data file
-  *    opens (exact may-match, shared semantics with
-  *    [[DeltaFileSkipping]]): identity transforms compare recorded
+  *    opens (exact may-match through [[FileSkipping]], the evaluator
+  *    Delta and Hudi prune with): identity transforms compare recorded
   *    values; bucket/truncate/year/month/day/hour evaluate the
   *    transform on the filter literals ([[IcebergTransforms]]) —
   *    equality pruning for bucket, range pruning for the ordered

@@ -293,17 +293,10 @@ object IcebergTransforms {
     def cmp(value: Any): Option[Int] = out(value).flatMap(tv => comparePartition(p, tv, dt))
     f.op match {
       case FilterOp.Eq => cmp(f.value).forall(_ == 0)
-      case FilterOp.In => seqValues(f.value).exists(x => cmp(x).forall(_ == 0))
+      case FilterOp.In => IcebergStats.inValues(f.value).exists(x => cmp(x).forall(_ == 0))
       case FilterOp.Lt | FilterOp.Le if ordered(t) => cmp(f.value).forall(_ <= 0)
       case FilterOp.Gt | FilterOp.Ge if ordered(t) => cmp(f.value).forall(_ >= 0)
       case _ => true // Neq/NotIn (many-to-one), contains/includes, unordered ranges
     }
-  }
-
-  private def seqValues(v: Any): Seq[Any] = v match {
-    case xs: Seq[_]      => xs
-    case xs: Array[_]    => xs.toSeq
-    case xs: Iterable[_] => xs.toSeq
-    case other           => Seq(other)
   }
 }

@@ -7,6 +7,7 @@ import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, element_at, lit, regexp_replace, typedLit}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Native Iceberg APPEND with the Hadoop-catalog commit protocol —
@@ -293,9 +294,9 @@ object IcebergWrite {
     // byte-for-byte: external Iceberg readers compare file_path
     // exactly, so a scheme-stripped normalization (file:/ → /) would
     // make them silently skip the deletes on scheme-qualified tables.
-    // The normalized _del_path maps back through a broadcast
+    // The decoded _del_path maps back through a broadcast
     // (normalized → manifest path) frame — map-side, order-preserving
-    val pathBack = pruned.map(f => (PathNorm.normalize(f.path), f.path))
+    val pathBack = pruned.map(f => (DvDeleted.normalizePath(f.path), f.path))
       .toDF("_del_path", "_mani_path")
     // spec ordering: position delete rows sort by (file_path, pos);
     // partition columns lead so the staged write's dynamic-partition
@@ -449,8 +450,12 @@ object IcebergWrite {
       graft.core.Filters.rowPredicate(filters, predicateSql))
   }
 
-  /** ONE scan of a DELETE's candidate files, with each row's
-    * normalized file path (`_del_path`) and position (`_del_pos`).
+  /** ONE scan of a DELETE's candidate files, with each row's file as
+    * the scan spells it (`_del_file`, URI-encoded), the same file in
+    * the manifest's on-disk spelling (`_del_path`, decoded once by
+    * [[MetadataPathDecode]] — every driver-side map keys it by
+    * [[DvDeleted.normalizePath]], so partition directories whose
+    * names need encoding resolve) and its position (`_del_pos`).
     * Partition columns are re-attached from the manifest tuples per
     * file (coalesce: files that STORE the column — foreign writers —
     * win; graft-staged hive files don't store it, so an
@@ -466,11 +471,14 @@ object IcebergWrite {
     partFields.foldLeft(IcebergTable
       .writerSplitScan(spark, meta0, pruned, tablePath) { base =>
         base
-          .withColumn("_del_path", PathNorm.normalizeCol(col("_metadata.file_path")))
+          .withColumn("_del_file", col("_metadata.file_path"))
+          .withColumn("_del_path", Bridge.column(MetadataPathDecode(
+            Bridge.expression(col("_metadata.file_path")))))
           .withColumn("_del_pos", col("_metadata.row_index"))
       }) { (scan, pf) =>
       val m: Map[String, String] = pruned.map { f =>
-        PathNorm.normalize(f.path) -> renderPartition(pf.dataType, f.partition.get(pf.name).orNull)
+        DvDeleted.normalizePath(f.path) ->
+          renderPartition(pf.dataType, f.partition.get(pf.name).orNull)
       }.toMap
       val attached = element_at(typedLit(m), col("_del_path")).cast(pf.dataType)
       scan.withColumn(pf.name, org.apache.spark.sql.functions.coalesce(col(pf.name), attached))
@@ -488,7 +496,7 @@ object IcebergWrite {
     // positions too (at most one DV per file after the commit)
     val dvByRef: Map[String, IcebergMeta.ContentFile] = all0
       .filter(_.isDeletionVector)
-      .flatMap(d => d.referencedDataFile.map(r => PathNorm.normalize(r) -> d)).toMap
+      .flatMap(d => d.referencedDataFile.map(r => DvDeleted.normalizePath(r) -> d)).toMap
     def dvBytesOf(d: IcebergMeta.ContentFile): Array[Byte] = {
       require(d.contentOffset.isDefined && d.contentSizeInBytes.isDefined,
         s"unreadable deletion vector entry ${d.path} (missing offset/size)")
@@ -497,10 +505,10 @@ object IcebergWrite {
     }
     // one job: matching (file, row_index) → per-file roaring bitmaps
     // on the executors, each unioned with the file's current DV
-    val prunedByNorm = pruned.map(f => PathNorm.normalize(f.path) -> f).toMap
+    val prunedByNorm = pruned.map(f => DvDeleted.normalizePath(f.path) -> f).toMap
     val targets: Seq[(IcebergMeta.ContentFile, RoaringBitmapArray)] =
       DeletionVectors.foldPositions(
-        candidateScan(spark, plan).where(predicate).select(col("_del_path"), col("_del_pos")),
+        candidateScan(spark, plan).where(predicate).select(col("_del_file"), col("_del_pos")),
         key => dvByRef.get(key).map(dvBytesOf))
         .map { case (key, bm) => prunedByNorm(key) -> bm }
     if (targets.isEmpty) return snap0.id

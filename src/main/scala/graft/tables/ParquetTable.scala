@@ -310,8 +310,8 @@ class ParquetTable(
               f.op match {
                 case FilterOp.Eq    => v == f.value.toString
                 case FilterOp.Neq   => v != f.value.toString
-                case FilterOp.In    => f.value.asInstanceOf[Iterable[Any]].exists(_.toString == v)
-                case FilterOp.NotIn => !f.value.asInstanceOf[Iterable[Any]].exists(_.toString == v)
+                case FilterOp.In    => IcebergStats.inValues(f.value).exists(_.toString == v)
+                case FilterOp.NotIn => !IcebergStats.inValues(f.value).exists(_.toString == v)
                 case _              => true // range ops on strings: don't prune
               }
           }

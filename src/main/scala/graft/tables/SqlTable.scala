@@ -84,9 +84,9 @@ class SqlTable(
     case FilterOp.Ge  => s"${q(f.column)} >= ${fmt(f.value)}"
     case FilterOp.Le  => s"${q(f.column)} <= ${fmt(f.value)}"
     case FilterOp.In =>
-      s"${q(f.column)} IN (${f.value.asInstanceOf[Iterable[Any]].map(fmt).mkString(", ")})"
+      s"${q(f.column)} IN (${IcebergStats.inValues(f.value).map(fmt).mkString(", ")})"
     case FilterOp.NotIn =>
-      s"${q(f.column)} NOT IN (${f.value.asInstanceOf[Iterable[Any]].map(fmt).mkString(", ")})"
+      s"${q(f.column)} NOT IN (${IcebergStats.inValues(f.value).map(fmt).mkString(", ")})"
     case FilterOp.Contains | FilterOp.Includes | FilterOp.IncludesAny | FilterOp.IncludesAll =>
       s"${q(f.column)} LIKE ${fmt(f.value)}"
   }

@@ -675,10 +675,10 @@ object GraftProperties extends Properties("graft") {
       // Eq may-match of a single-value file against the LITERAL path
       // (ISO string, as the Filter algebra carries it) is true iff
       // the instants are equal
-      val viaLiteral = IcebergStats.statsMayMatch(
+      val viaLiteral = graft.tables.FileSkipping.statsMayMatch(
         Filter("c", "=", new java.sql.Timestamp(bms).toInstant.toString),
-        TimestampType, 1, Map(1 -> bound), Map(1 -> bound),
-        Map(1 -> 0L), Map(1 -> 1L), 1L)
+        IcebergStats.bounds(TimestampType, 1, Map(1 -> bound), Map(1 -> bound),
+          Map(1 -> 0L), Map(1 -> 1L), 1L))
       roundTrip && viaLiteral == (ams == bms)
     }
     longs && micros
@@ -760,61 +760,111 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
-  property("write-time file stats equal the read-back aggregates (Delta/Iceberg/Hudi)") = {
-    import org.apache.hadoop.fs.Path
+  /** Frames of every type a lake writer collects file statistics for:
+    * nulls, NaN and ±0, long and non-BMP strings, partition values
+    * that directory names escape, and an all-null column.
+    */
+  private object StagedFrames {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    import org.scalacheck.Prop.propBoolean
     // strings: short ASCII, past the 32/33-code-point caps in 2- and
     // 3-byte UTF-8, surrogate pairs, and the empty string
-    val text = Gen.frequency(
+    private val text = Gen.frequency(
       4 -> Gen.alphaNumStr.map(_.take(8)),
       2 -> Gen.chooseNum(30, 40).flatMap(n => Gen.listOfN(n, Gen.oneOf('a', 'é', '中', 'z')))
         .map(_.mkString),
       1 -> Gen.chooseNum(15, 40).map(n => new String(Character.toChars(0x1F600)) * n),
       1 -> Gen.const(""))
-    def orNull[A](g: Gen[A]): Gen[Any] = Gen.frequency(4 -> g, 1 -> Gen.const(null))
-    val dbl = Gen.frequency(6 -> Gen.chooseNum(-1e6, 1e6),
+    private def orNull[A](g: Gen[A]): Gen[Any] = Gen.frequency(4 -> g, 1 -> Gen.const(null))
+    private val dbl = Gen.frequency(6 -> Gen.chooseNum(-1e6, 1e6),
       2 -> Gen.oneOf(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity))
-    val flt = Gen.frequency(6 -> Gen.chooseNum(-1e3f, 1e3f), 2 -> Gen.oneOf(Float.NaN, -0.0f, 0.0f))
+    private val flt = Gen.frequency(6 -> Gen.chooseNum(-1e3f, 1e3f), 2 -> Gen.oneOf(Float.NaN, -0.0f, 0.0f))
     // partition values that Hive-style directory names escape or keep
     // (ASCII: a JVM without a UTF-8 file-name encoding cannot create
     // non-ASCII directory names)
-    val part = Gen.oneOf("a b", "x%y", "k=v", "plain", "")
-    val schema = StructType(Seq(
-      StructField("_hoodie_record_key", StringType), StructField("s", StringType),
-      StructField("d", DoubleType), StructField("f", FloatType),
-      StructField("i", IntegerType), StructField("l", LongType),
-      StructField("b", ByteType), StructField("sh", ShortType),
-      StructField("dt", DateType), StructField("ts", TimestampType),
-      StructField("dec", DecimalType(12, 3)), StructField("bool", BooleanType),
-      StructField("none", IntegerType), StructField("p", StringType), StructField("q", IntegerType)))
-    val row = for {
-      key <- orNull(text); s <- orNull(text); d <- orNull(dbl); f <- orNull(flt)
-      i <- orNull(Gen.chooseNum(Int.MinValue, Int.MaxValue))
-      l <- orNull(Gen.chooseNum(Long.MinValue, Long.MaxValue))
-      b <- orNull(Gen.chooseNum(Byte.MinValue, Byte.MaxValue))
-      sh <- orNull(Gen.chooseNum(Short.MinValue, Short.MaxValue))
-      dt <- orNull(Gen.chooseNum(-30000L, 30000L).map(n =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(n))))
-      ts <- orNull(Gen.chooseNum(-2000000000000L, 2000000000000L).map(new java.sql.Timestamp(_)))
-      dec <- orNull(Gen.chooseNum(-999999999L, 999999999L).map(java.math.BigDecimal.valueOf(_, 3)))
-      bool <- orNull(Gen.oneOf(true, false))
-      p <- orNull(part); q <- orNull(Gen.chooseNum(0, 2))
-    } yield Row(key, s, d, f, i, l, b, sh, dt, ts, dec, bool, null, p, q)
+    private val part = Gen.oneOf("a b", "x%y", "k=v", "plain", "")
+    /** Each column with the generator of its non-null values. */
+    val columns: Seq[(StructField, Gen[Any])] = Seq(
+      StructField("_hoodie_record_key", StringType) -> text,
+      StructField("s", StringType) -> text,
+      StructField("d", DoubleType) -> dbl,
+      StructField("f", FloatType) -> flt,
+      StructField("i", IntegerType) -> Gen.chooseNum(Int.MinValue, Int.MaxValue),
+      StructField("l", LongType) -> Gen.chooseNum(Long.MinValue, Long.MaxValue),
+      StructField("b", ByteType) -> Gen.chooseNum(Byte.MinValue, Byte.MaxValue),
+      StructField("sh", ShortType) -> Gen.chooseNum(Short.MinValue, Short.MaxValue),
+      StructField("dt", DateType) -> Gen.chooseNum(-30000L, 30000L).map(n =>
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(n))),
+      StructField("ts", TimestampType) ->
+        Gen.chooseNum(-2000000000000L, 2000000000000L).map(new java.sql.Timestamp(_)),
+      StructField("dec", DecimalType(12, 3)) ->
+        Gen.chooseNum(-999999999L, 999999999L).map(java.math.BigDecimal.valueOf(_, 3)),
+      StructField("bool", BooleanType) -> Gen.oneOf(true, false),
+      StructField("none", IntegerType) -> Gen.chooseNum(-5, 5), // always null in rows
+      StructField("p", StringType) -> part,
+      StructField("q", IntegerType) -> Gen.chooseNum(0, 2))
+    val schema = StructType(columns.map(_._1))
+    val row: Gen[Row] = Gen.sequence[List[Any], Any](columns.map {
+      case (f, _) if f.name == "none" => Gen.const(null)
+      case (_, g) => orNull(g)
+    }).map(Row.fromSeq)
     val partitionings = Gen.oneOf(Seq.empty[String], Seq("p"), Seq("p", "q"))
+
+    /** A filter of the algebra on a random column, its literal of the
+      * column's type, drawn mostly from the values the rows hold.
+      */
+    def filter(rows: Seq[Row]): Gen[Filter] = for {
+      i <- Gen.choose(0, columns.size - 1)
+      (field, gen) = columns(i)
+      seen = rows.map(_.get(i)).filter(_ != null)
+      value = if (seen.isEmpty) gen else Gen.frequency(1 -> gen, 2 -> Gen.oneOf(seen))
+      op <- Gen.oneOf(Seq("=", "!=", "<", "<=", ">", ">=", "in", "not in") ++
+        (if (field.dataType == StringType) Seq("contains") else Nil))
+      v <- op match {
+        case "in" | "not in" => Gen.listOf(value).map(_.take(3))
+        case "contains" => value.flatMap(x => Gen.choose(0, x.toString.length)
+          .map(n => x.toString.take(n)))
+        case _ => value
+      }
+    } yield Filter(field.name, op, v)
+  }
+
+  property("write-time file stats equal the read-back aggregates (Delta/Iceberg/Hudi)") = {
+    import org.apache.hadoop.fs.Path
+    import org.scalacheck.Prop.propBoolean
     // more tasks than rows leaves tasks with zero rows
-    forAll(Gen.listOf(row), partitionings, Gen.chooseNum(1, 6)) {
-      (rows: List[Row], parts: Seq[String], tasks: Int) =>
+    forAll(Gen.listOf(StagedFrames.row), StagedFrames.partitionings, Gen.chooseNum(1, 6)) {
+      (rows: List[org.apache.spark.sql.Row], parts: Seq[String], tasks: Int) =>
         val dir = java.nio.file.Files.createTempDirectory("staged-stats")
         // the shuffle hands rows to the writer in reused buffers
-        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), StagedFrames.schema)
           .repartition(tasks)
         try {
           val bad = graft.tables.StagedStatsOracle.mismatches(
             spark, df, new Path(dir.toString, "staging"), parts)
           bad.isEmpty :| bad.mkString("\n")
         } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
+  property("a file the evaluator prunes holds no matching row (Delta/Iceberg/Hudi stats)") = {
+    import org.apache.hadoop.fs.Path
+    import org.scalacheck.Prop.propBoolean
+    val frame = for {
+      rows <- Gen.listOf(StagedFrames.row).map(_.take(40))
+      parts <- StagedFrames.partitionings
+      tasks <- Gen.chooseNum(1, 4)
+      filters <- Gen.listOfN(60, StagedFrames.filter(rows))
+    } yield (rows, parts, tasks, filters)
+    forAll(frame) { case (rows, parts, tasks, filters) =>
+      val dir = java.nio.file.Files.createTempDirectory("skip-sound")
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), StagedFrames.schema)
+        .repartition(tasks)
+      try {
+        val bad = graft.tables.SkippingSoundnessOracle.violations(
+          spark, df, new Path(dir.toString, "staging"), parts, filters)
+        bad.isEmpty :| bad.mkString("\n")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 }

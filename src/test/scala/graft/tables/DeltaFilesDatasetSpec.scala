@@ -144,15 +144,17 @@ class DeltaFilesDatasetSpec extends SparkSpec {
     // partitioned by a string column (incl. an all-NULL partition),
     // data columns covering the numeric / string / date compare paths,
     // with per-column nulls so nullCount skipping is exercised
-    def batch(cat: String, base: Long) =
+    def batch(cat: String, base: Long, nullNames: Boolean = false) =
       Seq.tabulate(20) { j =>
         val id = base + j
         (Option(cat).orNull, id,
-          if (j % 7 == 0) null else s"name-${id % 13}",
+          if (nullNames || j % 7 == 0) null else s"name-${id % 13}",
           java.sql.Date.valueOf(f"2024-01-${id % 27 + 1}%02d"))
       }.toDF("cat", "id", "name", "d")
     Seq("a" -> 0L, "b" -> 100L, "a" -> 200L, null.asInstanceOf[String] -> 300L)
       .foreach { case (c, b) => DeltaWrite.append(spark, batch(c, b), dir, Seq("cat")) }
+    // partition 'c' holds files whose `name` column is all null
+    DeltaWrite.append(spark, batch("c", 400L, nullNames = true), dir, Seq("cat"))
 
     val snap = DeltaLog.snapshot(spark, dir)
     import graft.core.{Filter, Filters}
@@ -203,6 +205,30 @@ class DeltaFilesDatasetSpec extends SparkSpec {
       .prunedFiles(spark, dir, Filters.normalize(Seq(Filter("cat", "=", "b"))))
       .count()
     assert(pruned < snap.files.size, "partition pruning should drop files")
+
+    // an all-null column fails every null-rejecting operator, so both
+    // paths prune those files under !=, not in and contains too, and
+    // read the same files and rows
+    val allNull = snap.files.filter(_.partitionValues.get("cat").flatten.contains("c"))
+      .map(_.path).toSet
+    assert(allNull.nonEmpty)
+    val t = new DeltaTable("t", dir)
+    Seq(Filter("name", "!=", "name-3"), Filter("name", "not in", Seq("name-3")),
+      Filter("name", "contains", "name")).foreach { f =>
+      val dnf = Filters.normalize(Seq(f))
+      val driver = snap.files
+        .filter(DeltaFileSkipping.mayMatch(_, dnf, snap.metadata)).map(_.path).toSet
+      val dist = DeltaFilesDataset.prunedFiles(spark, dir, dnf)
+        .select("path").collect().map(_.getString(0)).toSet
+      assert(dist == driver, s"pruning mismatch for $f")
+      assert((driver intersect allNull).isEmpty, s"$f kept an all-null file")
+      val args = ReadArgs(filters = dnf)
+      val onDriver = t(spark, args)
+      val distributed = t(spark, args.copy(extra = args.extra + (t.DistributedPlanningKey -> true)))
+      assert(onDriver.inputFiles.toSet == distributed.inputFiles.toSet)
+      val rows = onDriver.collect().toSet
+      assert(rows.nonEmpty && rows == distributed.collect().toSet)
+    }
   }
 
   test("metadata-only replay matches the full replay, without the files") {

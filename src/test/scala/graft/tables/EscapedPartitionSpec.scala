@@ -70,6 +70,20 @@ class EscapedPartitionSpec extends SparkSpec {
     assert(got == values.indices.map(_.toLong).filter(_ % 2 == 1))
   }
 
+  test("Iceberg: a v2 position DELETE reaches escaped dirs, by data and partition predicates") {
+    val dir = tempDir("esc-ice-v2").toString + "/t"
+    val parts = Seq("a b", "plain", "x%y")
+    IcebergWrite.append(spark,
+      Seq((0L, "a b"), (1L, "plain"), (2L, "x%y"), (3L, "x%y")).toDF("id", "p"), dir, Seq("p"))
+    val t = new IcebergTable("t", dir)
+    def ids = t(spark).select("id").as[Long].collect().sorted.toSeq
+    val v0 = IcebergWrite.deleteWhere(spark, dir, Filters.normalize(Seq(Filter("id", "<=", 1L))))
+    assert(ids == Seq(2L, 3L))
+    val v1 = IcebergWrite.deleteWhere(spark, dir, Filters.normalize(Seq(Filter("p", "=", "x%y"))))
+    assert(v1 != v0 && ids.isEmpty)
+    assert(parts.forall(p => t(spark, ReadArgs.where(Filter("p", "=", p))).count() == 0))
+  }
+
   test("Hudi: escaped partition dirs resolve their file group (MOR log merge)") {
     val dir = tempDir("esc-hudi").toString + "/t"
     val vRows = values.zipWithIndex.map { case (p, i) => (i.toLong, s"v$i", p) }

@@ -186,6 +186,9 @@ class HudiColStatsSpec extends SparkSpec {
       == Some(Map("v" -> ColRange(true, "9", "10"))))
 
     def f(op: String, v: Any) = Filters.normalize(Seq(Filter("v", op, v)))
+    // a slice's column ranges prune through FileSkipping (keepSlice)
+    def colStatsMayMatch(st: Option[Map[String, ColRange]], fs: Filters.Normalized) =
+      HudiTable.keepSlice(fs)(FileSlice("", "fg", "0", "fg.parquet", colStats = st))
     val st = Some(Map("v" -> ColRange(true, "10", "20")))
     assert(!colStatsMayMatch(st, f("=", 25)))
     assert(colStatsMayMatch(st, f("=", 15)))
